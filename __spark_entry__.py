@@ -1834,40 +1834,36 @@ def q47_stratified_sample(spark, sf_dir):
     return text.stratified_sample(d, ["lang"], "doc_id", cap=40)
 
 
-# -- portable-hash twins (ARCHITECTURE 7b) -------
+# -- probabilistic sketches (ARCHITECTURE 7b) -------
 
 def q21_minhash_pairs(spark, sf_dir):
-    """MinHash-LSH near-dup pairs, portable-hash variant: every hash is
-    seeded int64 arithmetic replicated literally in the DuckDB oracle, so
-    the WHOLE pipeline — signatures, band buckets, candidate set, exact
-    Jaccard verify — is oracle-checked bit-for-bit (not rows-only).  The
-    production kernel impl (crc32+numpy, ~2x faster) is benchmarked
-    separately in bench.py."""
+    """MinHash-LSH near-dup pairs — the operator bench.py times.  Its
+    hashes are seeded int64 arithmetic the DuckDB oracle replays, so
+    signatures, band buckets, candidates and Jaccard are all checked."""
     d = _t(spark, sf_dir, "documents")
-    out = dedup.minhash_lsh_pairs_portable(
-        d, "text", "doc_id", num_perm=64, bands=8, shingle=6, threshold=0.5)
-    return out.select("id_a", "id_b", "jaccard")
+    out = dedup.minhash_lsh_pairs(
+        d, "text", "doc_id", num_perm=64, bands=8, shingle=6, threshold=0.5,
+        max_bucket=None)
+    return out.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
 
 
 def q22_simhash_pairs(spark, sf_dir):
-    """SimHash near-dup pairs, portable-hash variant: signatures, band
-    blocking and positional hamming are seeded int64 arithmetic replicated
-    literally in the DuckDB oracle — oracle-checked bit-for-bit.  The
-    production kernel impl (blake2b+numpy) stays the library default."""
+    """SimHash near-dup pairs; signatures, band blocking and hamming are
+    replayed by the DuckDB oracle."""
     d = _t(spark, sf_dir, "documents")
-    return dedup.simhash_near_pairs_portable(d, "text", "doc_id", max_hamming=8)
+    out = dedup.simhash_near_pairs(d, "text", "doc_id", max_hamming=8,
+                                   max_bucket=None)
+    return out.select("id_a", "id_b", F.col("hamming").cast("long").alias("hamming"))
 
 
 def q23_lsh_topk(spark, sf_dir):
-    """Hyperplane-LSH ANN top-k, portable variant: Rademacher planes over
-    floor-quantized components give bit-identical bucket assignments in
-    Spark and DuckDB (exact integer-valued double arithmetic), so the
-    approximate candidate set itself is oracle-checked — not rows-only."""
+    """Hyperplane-LSH ANN top-k; bucket assignment is exact integer
+    arithmetic, so the oracle checks the approximate candidate set."""
     e = _t(spark, sf_dir, "embeddings")
     queries = e.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_embedding"))
     vectors = e.where(F.col("vec_id") >= 5)
-    out = similarity.lsh_topk_portable(vectors, queries, k=5, dim=64, nbits=4)
+    out = similarity.lsh_topk(vectors, queries, k=5, dim=64, nbits=4)
     return out.select("query_id", "vec_id", F.round("cosine", 6).alias("cosine"),
                       F.col("rank").cast("long").alias("rank"))
 

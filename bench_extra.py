@@ -20,6 +20,8 @@ import os
 import sys
 import time
 
+import __spark_entry__ as entry
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf1.0")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -29,20 +31,6 @@ HEADLINE = [
     "q14_dedup_exact", "q17_ngram_jaccard", "q18_cosine_topk",
     "q21_minhash_pairs", "q25_pip_join_full",
 ]
-
-
-def _qs(spark):
-    import __spark_entry__ as entry
-    from karta_spark.operators import dedup as _dedup
-
-    qs = dict(entry.queries())
-
-    def _q21_kernel(spark, sf_dir):
-        d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        return _dedup.minhash_lsh_pairs(d, "text", "doc_id", num_perm=64,
-                                        bands=8, shingle=6, threshold=0.5)
-    qs["q21_minhash_pairs"] = _q21_kernel
-    return qs
 
 
 def _noop(df):
@@ -57,7 +45,7 @@ def get_session():
 
 def time_queries(only=None, runs=2):
     spark = get_session()
-    qs = _qs(spark)
+    qs = entry.queries()
     names = [n for n in HEADLINE if only is None or n == only]
     spark.read.parquet(f"{SF_DIR}/lineitem.parquet").count()
     times = {}
@@ -79,7 +67,7 @@ def time_queries(only=None, runs=2):
 def dump_plans(tag: str, only=None):
     os.makedirs("plans/r08", exist_ok=True)
     spark = get_session()
-    qs = _qs(spark)
+    qs = entry.queries()
     names = [n for n in HEADLINE if only is None or n == only]
     for name in names:
         df = qs[name](spark, SF_DIR)
@@ -93,7 +81,7 @@ def dump_plans(tag: str, only=None):
 
 
 def stages_q21():
-    """Per-stage timing for the q21 minhash kernel pipeline."""
+    """Per-stage timing for the q21 MinHash-LSH pipeline."""
     from karta_spark.operators import dedup as _dedup
     from pyspark.sql import functions as F
 

@@ -148,119 +148,102 @@ def ngram_jaccard_pairs(
 # ---------------------------------------------------------------------------
 # MinHash + LSH
 # ---------------------------------------------------------------------------
+#
+# Every hash is plain int64 arithmetic over character code points, so an
+# external SQL engine can replay it literally (minhash_portable_sql is the
+# DuckDB twin the q21 gate checks against):
+#
+#   gram hash   h(g)   = (sum_i code(g_i) * 131^(n-i)) mod (2^31 - 1)
+#   permutation h_j(g) = (a_j * h(g) + b_j) mod (2^31 - 1)
+#
+# over the distinct rpad(substr(t, i, n), n, chr(1)) grams of
+# coalesce(t, ''), with (a_j, b_j) drawn from a seeded PRNG.  The same
+# family drives the signature kernel, the band buckets, the candidate set
+# and the exact-Jaccard verify.
 
-def _minhash_params(num_perm: int, seed: int = 42):
-    rng = np.random.default_rng(seed)
-    a = rng.integers(1, 1 << 62, size=num_perm, dtype=np.uint64) | np.uint64(1)  # odd
-    b = rng.integers(0, 1 << 62, size=num_perm, dtype=np.uint64)
+_PORTABLE_P = 2147483647  # 2^31 - 1: a_j*h + b_j < 2^62 — no int64 overflow
+_P64 = np.uint64(_PORTABLE_P)
+_SIG_CHUNK = 128  # docs per kernel call: the flat temporaries stay cache-resident
+
+
+def _portable_perm_params(num_perm: int, seed: int):
+    import random as _random
+    rng = _random.Random(seed)
+    a = [rng.randrange(1, _PORTABLE_P) for _ in range(num_perm)]
+    b = [rng.randrange(0, _PORTABLE_P) for _ in range(num_perm)]
     return a, b
 
 
-_SHINGLE_P = np.uint64(1099511628211)  # FNV-64 prime, odd => bijective mults
-_SHINGLE_POWS: dict[int, np.ndarray] = {}
+def portable_gram_hash_sql(gram: str, n: int) -> str:
+    """Polynomial rolling hash over the n chars of an rpad'ed gram — the
+    SAME fragment parses as a Spark SQL expression and as DuckDB SQL.
+    The mod at EVERY step keeps the accumulator < 2^31 * 131 + 0xFFFF
+    < 2^63 for any n (without it, n >= 8 overflows int64 — silently
+    wrapping in non-ANSI Spark while DuckDB errors)."""
+    expr = f"CAST(ascii(substr({gram},1,1)) AS BIGINT)"
+    for i in range(2, n + 1):
+        expr = f"((({expr}) % {_PORTABLE_P})*131 + ascii(substr({gram},{i},1)))"
+    return f"(({expr}) % {_PORTABLE_P})"
 
 
-def _shingle_hashes(text: str, n: int) -> np.ndarray:
-    """Distinct character n-gram hashes — vectorized uint64 polynomial
-    hash h(g) = sum g[k] * P^k (wraparound): one strided multiply-add
-    pass over the byte array + np.unique, measured 2.2x faster than the
-    previous per-gram crc32 loop (and 64-bit, so gram collisions are
-    negligible at any corpus size)."""
-    raw = (text or "").encode("utf-8", "ignore")
-    # pad AFTER encoding: 'ignore' can shrink the bytes below n even when
-    # the str was long enough (lone surrogates encode to b''), and a
-    # negative L would crash np.zeros below
-    if len(raw) < n:
-        raw = raw + b"\x00" * (n - len(raw))
-    bs = np.frombuffer(raw, dtype=np.uint8)
-    L = len(bs) - n + 1
-    pows = _SHINGLE_POWS.get(n)
-    if pows is None:
-        pows = _SHINGLE_P ** np.arange(n, dtype=np.uint64)
-        _SHINGLE_POWS[n] = pows
-    acc = np.zeros(L, dtype=np.uint64)
+def _gram_hashes(texts, n: int):
+    """Portable hashes of every n-char window of every text, concatenated
+    doc-major, plus each doc's start offset into that flat array.
+
+    A text shorter than n (empty and null included) is padded with
+    chr(1) to exactly one window, as the SQL rpad does.  The per-step mod
+    of ``portable_gram_hash_sql`` equals one mod of the whole polynomial;
+    each term is < 2^21 * 2^31, so up to 4096 terms sum without uint64
+    overflow.  Windows are not deduplicated: a min over a multiset equals
+    the min over its distinct values."""
+    if n > 4096:
+        raise ValueError("shingle must be <= 4096")
+    padded = [(t or "").ljust(n, "\x01") for t in texts]
+    lens = np.fromiter(map(len, padded), dtype=np.int64, count=len(padded))
+    # surrogatepass: a lone surrogate hashes as its code point
+    cps = np.frombuffer("".join(padded).encode("utf-32-le", "surrogatepass"),
+                        dtype=np.uint32).astype(np.uint64)
+    n_win = cps.shape[0] - n + 1
+    acc = np.zeros(n_win, dtype=np.uint64)
     for k in range(n):
-        acc += bs[k:k + L].astype(np.uint64) * pows[k]
-    return np.unique(acc)
+        acc += cps[k:k + n_win] * np.uint64(pow(131, n - 1 - k, _PORTABLE_P))
+    acc %= _P64
+    # keep only windows that lie inside one doc
+    win = lens - n + 1
+    seg = np.cumsum(win) - win
+    doc_start = np.cumsum(lens) - lens
+    return acc[np.arange(win.sum()) + np.repeat(doc_start - seg, win)], seg
 
 
 def _minhash_sig_batch(texts, shingle: int, a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """(n_docs, num_perm) int64 signature matrix for a whole Arrow batch —
-    bit-identical to the per-doc form min((a*h + b) mod 2^64) over
-    ``_shingle_hashes`` (pinned by test_minhash_batch_kernel).
+    """(n_docs, num_perm) int64 signatures of a whole Arrow batch:
+    sig[d, j] = min over doc d's grams of (a_j * h + b_j) mod (2^31 - 1).
 
-    Vectorization (guide §4.2), with the exactness argument per step:
-
-    - every doc's utf-8 bytes concatenate into ONE buffer and the
-      polynomial window hash runs over it in ``shingle`` strided passes;
-      only within-doc window positions are gathered, so each doc sees
-      exactly the hash values ``_shingle_hashes`` computes (same pows,
-      same uint64 wraparound), minus the np.unique — dropping distinct-
-      ness cannot change a MIN over the same multiset;
-    - docs are processed in length-bucketed groups as 2D padded matrices
-      (padding repeats the doc's LAST window hash — a duplicate of a real
-      value, again invisible to min), bounding padding waste at 2x and
-      amortizing the numpy dispatch the per-doc loop paid 64 times per
-      doc (measured 84 -> 52 us/doc on the 50k-doc bench corpus);
-    - the affine min uses in-place temporaries per 256-row block (cache-
-      resident; measured 81 -> 46 us/doc on an unbucketed matrix)."""
-    # process in ~1k-doc chunks: the concatenated-buffer temporaries stay
-    # L2-resident, so 32 concurrent workers do not fight for DRAM bandwidth
-    # (the first whole-batch form was 2.6x faster single-process but
-    # bandwidth-bound at task concurrency)
-    if len(texts) > 1024:
-        parts = [_minhash_sig_batch(texts[i:i + 1024], shingle, a, b)
-                 for i in range(0, len(texts), 1024)]
-        return np.concatenate(parts, axis=0)
-    D = len(texts)
-    num_perm = len(a)
-    if D == 0:
-        # an empty Arrow batch (empty partition / upstream filter) must not
-        # reach the concatenated-buffer math (n_win would go negative)
-        return np.empty((0, num_perm), dtype=np.int64)
-    blobs = []
-    for t in texts:
-        raw = (t or "").encode("utf-8", "ignore")
-        if len(raw) < shingle:
-            # pad AFTER encoding — same rule (and reason) as _shingle_hashes
-            raw = raw + b"\x00" * (shingle - len(raw))
-        blobs.append(raw)
-    lens = np.fromiter((len(x) for x in blobs), dtype=np.int64, count=D)
-    buf = np.frombuffer(b"".join(blobs), dtype=np.uint8)
-    starts = np.zeros(D, dtype=np.int64)
-    np.cumsum(lens[:-1], out=starts[1:])
-    n_win = buf.shape[0] - shingle + 1
-    pows = _SHINGLE_POWS.get(shingle)
-    if pows is None:
-        pows = _SHINGLE_P ** np.arange(shingle, dtype=np.uint64)
-        _SHINGLE_POWS[shingle] = pows
-    acc = np.zeros(n_win, dtype=np.uint64)
-    b64 = buf.astype(np.uint64)
-    for k in range(shingle):
-        acc += b64[k:k + n_win] * pows[k]
-    win_per_doc = lens - shingle + 1  # >= 1 after padding
-    sig = np.empty((D, num_perm), dtype=np.uint64)
-    order = np.argsort(win_per_doc, kind="stable")
-    g = 0
-    while g < D:
-        w_min = win_per_doc[order[g]]
-        lim = max(w_min * 2, w_min + 16)
-        e = g
-        while e < D and win_per_doc[order[e]] <= lim and e - g < 256:
-            e += 1
-        sel = order[g:e]
-        m = int(win_per_doc[sel].max())
-        col = np.arange(m, dtype=np.int64)[None, :]
-        idx = starts[sel][:, None] + np.minimum(col, (win_per_doc[sel] - 1)[:, None])
-        hv = acc[idx]
-        tmp = np.empty_like(hv)
-        out = sig[sel]
-        for j in range(num_perm):
-            np.multiply(hv, a[j], out=tmp)
-            np.add(tmp, b[j], out=tmp)
-            tmp.min(axis=1, out=out[:, j])
-        sig[sel] = out
-        g = e
+    a_j*h + b_j < 2^62, and the Mersenne fold y = (t & p) + (t >> 31) is
+    congruent to it with y <= 2p - 2.  Per-doc mins are reduceats over the
+    flat doc-major hash array."""
+    if len(texts) > _SIG_CHUNK:
+        return np.concatenate(
+            [_minhash_sig_batch(texts[i:i + _SIG_CHUNK], shingle, a, b)
+             for i in range(0, len(texts), _SIG_CHUNK)], axis=0)
+    sig = np.empty((len(texts), len(a)), dtype=np.uint64)
+    if len(texts) == 0:
+        # an empty Arrow batch (empty partition / upstream filter)
+        return sig.view(np.int64)
+    hv, seg = _gram_hashes(texts, shingle)
+    t = np.empty_like(hv)
+    y = np.empty_like(hv)
+    for j in range(len(a)):
+        np.multiply(hv, a[j], out=t)
+        t += b[j]
+        np.bitwise_and(t, _P64, out=y)
+        t >>= np.uint64(31)
+        y += t
+        # y is r or r + p: min(y) is right unless some y >= p holds a smaller
+        # r, and y - p (wrapping far above p when y < p) finds those
+        m = np.minimum.reduceat(y, seg)
+        np.subtract(y, _P64, out=t)
+        np.minimum(m, np.minimum.reduceat(t, seg), out=sig[:, j])
     return sig.view(np.int64)
 
 
@@ -268,13 +251,10 @@ def minhash_signatures(
     df: DataFrame, text_col: str, id_col: str,
     num_perm: int = 64, shingle: int = 3, seed: int = 42,
 ) -> DataFrame:
-    """(id, sig: array<long>) MinHash signatures.
-
-    Permutation family: odd-multiplier wraparound affine maps on uint64
-    ((a*h + b) mod 2^64) — a standard practical MinHash family, computed
-    batch-at-a-time by ``_minhash_sig_batch`` (bit-identical to the
-    per-doc num_perm x n_shingles matrix form it replaced)."""
-    a, b = _minhash_params(num_perm, seed)
+    """(id, sig: array<long>) MinHash signatures of the portable family
+    (section note), computed batch-at-a-time by ``_minhash_sig_batch``."""
+    a, b = (np.array(v, dtype=np.uint64)
+            for v in _portable_perm_params(num_perm, seed))
 
     @F.pandas_udf(ArrayType(LongType()))
     def sig_udf(texts: pd.Series) -> pd.Series:
@@ -282,54 +262,6 @@ def minhash_signatures(
         return pd.Series(list(sig))
 
     return df.select(F.col(id_col).alias("id"), sig_udf(F.col(text_col)).alias("sig"))
-
-
-def minhash_signatures_expr(
-    df: DataFrame, text_col: str, id_col: str,
-    num_perm: int = 64, shingle: int = 3,
-) -> DataFrame:
-    """(id, sig: array<long>) MinHash signatures — pure Catalyst, zero
-    Python.
-
-    Permutation family: independent seeded hashes h_j(g) =
-    xxhash64(j, gram) — the 'one hash function per permutation' MinHash
-    formulation; min is taken in UNSIGNED order by flipping the sign bit
-    (longs compare signed in the JVM).  The whole sketch is
-    explode(ngrams) -> groupBy(id) with num_perm min-aggregates: map-side
-    partial aggregation means the shuffle carries num_perm longs per doc
-    per mapper, never the grams.  Under ANSI mode (overflow throws) this
-    family also avoids the wraparound multiply the affine family needs."""
-    sh = df.select(F.col(id_col).alias("id"),
-                   F.explode(ngrams(F.col(text_col), shingle)).alias("gram"))
-    sign = F.lit(-0x8000000000000000)
-    aggs = [
-        F.min(F.xxhash64(F.lit(j), F.col("gram")).bitwiseXOR(sign)).alias(f"_m{j}")
-        for j in range(num_perm)
-    ]
-    sigs = sh.groupBy("id").agg(*aggs)
-    return sigs.select(
-        "id", F.array(*[F.col(f"_m{j}") for j in range(num_perm)]).alias("sig"))
-
-
-def _drop_oversized_buckets(banded: DataFrame, keys, max_bucket: int | None) -> DataFrame:
-    """Degenerate-bucket guard shared by every banded-LSH self-join: a
-    bucket holding f rows emits f^2/2 candidate pairs, so one
-    boilerplate-heavy bucket with 10^6 near-identical members is quadratic
-    death at corpus scale.  Buckets above *max_bucket* are dropped via a
-    broadcast anti-join on the (tiny) oversized-key set — mass that large
-    belongs to exact_dedup/cluster_representatives, not pairwise LSH.
-    Normal corpora never hit the cap; None disables.
-
-    NOTE: dropping a bucket makes the callers' recall guarantees
-    conditional — a qualifying pair whose only agreeing band sits in a
-    dropped bucket is silently lost.  Callers document this; audit with
-    ``oversized_bucket_stats`` when recall matters."""
-    if max_bucket is None:
-        return banded
-    keys = list(keys)
-    oversized = (banded.groupBy(*keys).agg(F.count("*").alias("_n"))
-                 .where(F.col("_n") > max_bucket).select(*keys))
-    return banded.join(F.broadcast(oversized), keys, "left_anti")
 
 
 def oversized_bucket_stats(banded: DataFrame, keys, max_bucket: int) -> DataFrame:
@@ -388,48 +320,31 @@ def minhash_lsh_pairs(
     df: DataFrame, text_col: str, id_col: str,
     num_perm: int = 64, bands: int = 16, shingle: int = 3,
     threshold: float = 0.5, seed: int = 42, verify: bool = True,
-    impl: str = "kernel", max_bucket: int | None = 4096,
+    max_bucket: int | None = 4096,
 ) -> DataFrame:
     """Near-dup pairs via banded MinHash LSH, optionally verified with exact
     n-gram Jaccard on candidates only (the classic shingle->minhash->band->
-    bucket-join pipeline).
-
-    impl="kernel" (default): Arrow/numpy signatures — MEASURED 2x faster
-    end-to-end than the pure-Catalyst variant on this box (numpy's SIMD
-    affine mins beat 64 JVM string hashes per gram; sig stage 0.15 s vs
-    2.8 s at sf0.1).  impl="expr" stays available for zero-Python
-    deployments (no Python workers / streaming state contexts).
+    bucket-join pipeline).  ``minhash_portable_sql`` replays it in DuckDB.
 
     ``max_bucket``: a (band, bucket) holding f docs emits f^2/2 candidate
-    pairs from the self-join — one boilerplate-heavy bucket with 10^6
-    near-identical docs is quadratic death at corpus scale.  Buckets
-    larger than max_bucket are dropped (broadcast anti-join on the tiny
-    oversized-bucket set) before the self-join; a bucket that size means
-    near-identical mass that exact_dedup/cluster_representatives should
-    absorb first.  Normal corpora never hit the cap, so pairs are
-    unchanged; None disables the guard."""
+    pairs — one boilerplate-heavy bucket with 10^6 near-identical docs is
+    quadratic death at corpus scale.  Buckets larger than max_bucket
+    contribute no pairs; a bucket that size means near-identical mass that
+    exact_dedup/cluster_representatives should absorb first.  Normal
+    corpora never hit the cap, so pairs are unchanged; None disables the
+    guard (as the SQL twin has none)."""
     from karta_spark.plans.layout import ensure_min_parallelism
 
     # an unsplittable single-file corpus scans as ONE task, serializing
-    # the Arrow signature kernel (and the gram explode of the expr path);
-    # no-op when the input is already parallel
+    # the Arrow signature kernel; no-op when the input is already parallel
     df = ensure_min_parallelism(df)
-    if impl == "expr":
-        sigs = minhash_signatures_expr(df, text_col, id_col, num_perm, shingle)
-    else:
-        sigs = minhash_signatures(df, text_col, id_col, num_perm, shingle, seed)
+    sigs = minhash_signatures(df, text_col, id_col, num_perm, shingle, seed)
     banded = _band_buckets(sigs, num_perm, bands)
     # Grouped posting-list candidate plan (same shape as the q17 n-gram
     # pipeline): ONE groupBy((band, bucket)) builds the sorted member
     # list, the size filter applies the oversized-bucket guard in the
     # same pass, and a HOF pair explosion emits each bucket's f*(f-1)/2
-    # pairs.  Replaces the former self-join plan (localCheckpoint of the
-    # banded table + oversized groupBy + broadcast anti-join + two-sided
-    # shuffle join): one shuffle instead of three and no materialization
-    # barrier — the signature stage now feeds a single consumer.
-    # MEASURED (sf1.0, 50k docs): candidate stage 2.24 s -> 0.6 s; the
-    # candidate SET is identical (same buckets, same a<b ordering, same
-    # guard semantics — a bucket over max_bucket contributes nothing).
+    # pairs — one shuffle, and the signature stage feeds a single consumer.
     size_ok = F.size(F.col("ids")) >= 2
     if max_bucket is not None:
         size_ok = size_ok & (F.size(F.col("ids")) <= max_bucket)
@@ -444,21 +359,21 @@ def minhash_lsh_pairs(
             .select("p.id_a", "p.id_b").distinct())
     if not verify:
         return cand
-    texts = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("t"))
+    # exact-Jaccard verify as pure Catalyst set algebra over the same
+    # distinct rpad'ed grams the signatures hash — zero Python.  Texts are
+    # padded below the joins: inside the transform lambda the pad would be
+    # re-evaluated for every gram.
+    t = F.coalesce(F.col(text_col), F.lit(""))
+    texts = df.select(F.col(id_col).alias("id"), F.rpad(
+        t, F.greatest(F.length(t), F.lit(shingle)), F.lit("\x01")).alias("t"))
     pairs = (
         cand.join(texts.withColumnRenamed("id", "id_a").withColumnRenamed("t", "t_a"), "id_a")
         .join(texts.withColumnRenamed("id", "id_b").withColumnRenamed("t", "t_b"), "id_b")
     )
 
-    # exact-Jaccard verify as pure Catalyst set algebra (array_intersect /
-    # array_union on distinct shingle arrays) — zero Python on the verify
-    # path; a short text (len < shingle) contributes its single truncated
-    # gram, identical to the previous kernel's frozenset rule
     def gram_set(col):
-        t = F.coalesce(col, F.lit(""))
-        idx = F.sequence(F.lit(1),
-                         F.greatest(F.length(t) - (shingle - 1), F.lit(1)))
-        return F.array_distinct(F.transform(idx, lambda i: t.substr(i, F.lit(shingle))))
+        idx = F.sequence(F.lit(1), F.length(col) - (shingle - 1))
+        return F.array_distinct(F.transform(idx, lambda i: col.substr(i, F.lit(shingle))))
 
     ga, gb = gram_set(F.col("t_a")), gram_set(F.col("t_b"))
     jac = (F.size(F.array_intersect(ga, gb)).cast("double")
@@ -470,128 +385,14 @@ def minhash_lsh_pairs(
     )
 
 
-# ---------------------------------------------------------------------------
-# MinHash + LSH, portable-hash variant (engine-agnostic arithmetic)
-# ---------------------------------------------------------------------------
-#
-# The kernel/expr variants above hash with crc32/xxhash64 — fast but
-# engine-specific, so their candidate sets can't be replicated by an
-# external SQL engine.  The *portable* variant below derives every hash
-# from plain int64 arithmetic over character codes:
-#
-#   gram hash   h(g)   = (sum_i code(g_i) * 131^(n-i)) mod (2^31 - 1)
-#   permutation h_j(g) = (a_j * h(g) + b_j) mod (2^31 - 1)
-#
-# with (a_j, b_j) drawn from a seeded PRNG at plan-build time and embedded
-# as literals.  Every step — gram extraction, hashing, min-aggregation,
-# band bucketing, candidate join, exact-Jaccard verify — is expressible
-# identically in Spark SQL and ANSI SQL (DuckDB), so the FULL pipeline,
-# including which near-threshold pairs the LSH probabilistically finds,
-# is bit-reproducible across engines.  That moves the whole operator
-# under an exact external oracle instead of a rows-only check.
-
-_PORTABLE_P = 2147483647  # 2^31 - 1: a_j*h + b_j < 2^62 — no int64 overflow
-
-
-def _portable_perm_params(num_perm: int, seed: int):
-    import random as _random
-    rng = _random.Random(seed)
-    a = [rng.randrange(1, _PORTABLE_P) for _ in range(num_perm)]
-    b = [rng.randrange(0, _PORTABLE_P) for _ in range(num_perm)]
-    return a, b
-
-
-def portable_gram_hash_sql(gram: str, n: int) -> str:
-    """Polynomial rolling hash over the n chars of an rpad'ed gram — the
-    SAME fragment parses as a Spark SQL expression and as DuckDB SQL.
-    The mod at EVERY step keeps the accumulator < 2^31 * 131 + 0xFFFF
-    < 2^63 for any n (without it, n >= 8 overflows int64 — silently
-    wrapping in non-ANSI Spark while DuckDB errors, which would break
-    the cross-engine bit-reproducibility this family exists for)."""
-    expr = f"CAST(ascii(substr({gram},1,1)) AS BIGINT)"
-    for i in range(2, n + 1):
-        expr = f"((({expr}) % {_PORTABLE_P})*131 + ascii(substr({gram},{i},1)))"
-    return f"(({expr}) % {_PORTABLE_P})"
-
-
-def _portable_grams(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
-    """(id, gram) distinct rpad'ed char n-grams; text shorter than n yields
-    one chr(1)-padded gram (mirrors _shingle_hashes' padding rule)."""
-    gram_expr = (
-        f"transform(sequence(1, greatest(length(coalesce({text_col}, '')) - {n - 1}, 1)),"
-        f" i -> rpad(substring(coalesce({text_col}, ''), i, {n}), {n}, chr(1)))"
-    )
-    return (
-        df.select(F.col(id_col).alias("id"), F.explode(F.expr(gram_expr)).alias("gram"))
-        .distinct()
-    )
-
-
-def minhash_lsh_pairs_portable(
-    df: DataFrame, text_col: str, id_col: str,
-    num_perm: int = 64, bands: int = 8, shingle: int = 6,
-    threshold: float = 0.5, seed: int = 42,
-) -> DataFrame:
-    """minhash_lsh_pairs with engine-portable hashing (see section note).
-
-    Pure Catalyst end-to-end: explode grams -> hash -> num_perm min-aggs
-    (map-side partial agg: the shuffle carries num_perm ints per doc) ->
-    band-bucket equi-join -> exact-Jaccard verify on candidates only via a
-    gram equi-join.  Zero Python rows; zero UDFs."""
-    p = _PORTABLE_P
-    a, b = _portable_perm_params(num_perm, seed)
-    r = num_perm // bands
-    grams = _portable_grams(df, text_col, id_col, shingle)
-    hashed = grams.withColumn("h", F.expr(portable_gram_hash_sql("gram", shingle)))
-    sig = hashed.groupBy("id").agg(*[
-        F.min((F.lit(a[j]) * F.col("h") + F.lit(b[j])) % F.lit(p)).alias(f"m{j}")
-        for j in range(num_perm)
-    ])
-    banded = sig.select(
-        "id",
-        F.explode(F.array(*[
-            F.struct(
-                F.lit(i).alias("band"),
-                F.concat_ws(",", *[F.col(f"m{i * r + k}") for k in range(r)]).alias("bucket"),
-            )
-            for i in range(bands)
-        ])).alias("bb"),
-    ).select("id", "bb.band", "bb.bucket")
-    ba, bb = banded.alias("a"), banded.alias("b")
-    cand = (
-        ba.join(bb, (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.bucket") == F.col("b.bucket"))
-                & (F.col("a.id") < F.col("b.id")))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
-    sz = grams.groupBy("id").agg(F.count("*").alias("sz"))
-    ga = grams.select(F.col("id").alias("id_a"), F.col("gram").alias("_ga"))
-    gb = grams.select(F.col("id").alias("_gid_b"), F.col("gram").alias("_gb"))
-    inter = (
-        cand.join(ga, "id_a")
-        .join(gb, (F.col("id_b") == F.col("_gid_b")) & (F.col("_ga") == F.col("_gb")))
-        .groupBy("id_a", "id_b").agg(F.count("*").alias("_i"))
-    )
-    jac = F.round(
-        F.col("_i").cast("double")
-        / (F.col("sa.sz") + F.col("sb.sz") - F.col("_i")), 6)
-    return (
-        inter
-        .join(sz.alias("sa"), F.col("id_a") == F.col("sa.id"))
-        .join(sz.alias("sb"), F.col("id_b") == F.col("sb.id"))
-        .select("id_a", "id_b", jac.alias("jaccard"))
-        .where(F.col("jaccard") >= threshold)
-    )
-
-
 def minhash_portable_sql(
     table: str, text_col: str, id_col: str,
     num_perm: int = 64, bands: int = 8, shingle: int = 6,
     threshold: float = 0.5, seed: int = 42,
 ) -> str:
-    """DuckDB twin of minhash_lsh_pairs_portable — same literals, same
-    arithmetic, bit-identical candidates and Jaccard values."""
+    """DuckDB twin of minhash_lsh_pairs (max_bucket=None) — same literals,
+    same arithmetic, identical signatures, candidates and Jaccard values
+    (Jaccard rounded to 6 digits)."""
     p = _PORTABLE_P
     a, b = _portable_perm_params(num_perm, seed)
     r = num_perm // bands
@@ -641,152 +442,13 @@ WHERE round(CAST(i.i AS DOUBLE) / (sa.sz + sb.sz - i.i), 6) >= {threshold}
 # ---------------------------------------------------------------------------
 # SimHash
 # ---------------------------------------------------------------------------
-
-def simhash(df: DataFrame, text_col: str, id_col: str,
-            impl: str = "kernel") -> DataFrame:
-    """64-bit SimHash over whitespace tokens: sign of the per-bit weighted
-    sum of token hashes. Returns (id, simhash long).
-
-    impl="kernel" (default): Arrow/numpy (blake2b token hashes) — MEASURED
-    10x faster than the pure-Catalyst variant here (0.14 s vs 1.35 s at
-    sf0.1: vectorized bit unpack beats 64 per-bit CASE sums).
-    impl="expr": zero-Python Catalyst twin — explode tokens, xxhash64, 64
-    per-bit CASE sums in one map-side-combinable groupBy, bits OR'd back;
-    empty docs get simhash 0."""
-    if impl == "expr":
-        toks = df.select(
-            F.col(id_col).alias("id"),
-            F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("tok"),
-        ).where(F.length("tok") > 0)
-        h = F.xxhash64("tok")
-        aggs = [
-            F.sum(F.when(F.shiftrightunsigned(h, b).bitwiseAND(F.lit(1)) == 1,
-                         1).otherwise(-1)).alias(f"_b{b}")
-            for b in range(64)
-        ]
-        per = toks.groupBy("id").agg(*aggs)
-        val = F.lit(0).cast("long")
-        for b in range(64):
-            bit = F.when(F.col(f"_b{b}") > 0, F.lit(1).cast("long")) \
-                   .otherwise(F.lit(0).cast("long"))
-            val = val.bitwiseOR(F.shiftleft(bit, b))
-        sigs = per.select("id", val.alias("simhash"))
-        ids = df.select(F.col(id_col).alias("id"))
-        return ids.join(sigs, "id", "left").select(
-            "id", F.coalesce("simhash", F.lit(0).cast("long")).alias("simhash"))
-    return simhash_kernel(df, text_col, id_col)
-
-
-def simhash_kernel(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """Arrow/numpy simhash twin (blake2b token hashes)."""
-    import hashlib
-
-    shifts = np.arange(64, dtype=np.uint64)
-
-    @F.pandas_udf(LongType())
-    def sim_udf(texts: pd.Series) -> pd.Series:
-        out = np.empty(len(texts), dtype=np.int64)
-        for i, t in enumerate(texts):
-            toks = (t or "").split()
-            if not toks:
-                out[i] = 0
-                continue
-            hs = np.fromiter(
-                (int.from_bytes(hashlib.blake2b(tok.encode("utf-8", "ignore"),
-                                                digest_size=8).digest(), "little")
-                 for tok in toks),
-                dtype=np.uint64, count=len(toks))
-            bits = ((hs[:, None] >> shifts[None, :]) & np.uint64(1)).astype(np.int64)
-            acc = np.where(bits == 1, 1, -1).sum(axis=0)
-            val = np.uint64(0)
-            for bit in range(64):
-                if acc[bit] > 0:
-                    val |= np.uint64(1) << np.uint64(bit)
-            out[i] = val.astype(np.int64) if hasattr(val, "astype") else np.int64(val)
-        return pd.Series(out)
-
-    return df.select(F.col(id_col).alias("id"), sim_udf(F.col(text_col)).alias("simhash"))
-
-
-def simhash_near_pairs(df: DataFrame, text_col: str, id_col: str,
-                       max_hamming: int = 3,
-                       max_bucket: int | None = 4096) -> DataFrame:
-    """Near-dup pairs with hamming(simhash) <= max_hamming via banded
-    exact-match blocking.
-
-    Recall guarantee is pigeonhole: splitting 64 bits into
-    ``bands = max_hamming + 1`` bands, any pair differing in <= max_hamming
-    bits must agree exactly on at least one band — so the band blocking
-    itself never drops a qualifying pair (b bands only cover b-1 flips,
-    which is why a fixed 4-band split silently lost hamming 4..8 pairs).
-
-    The guarantee is CONDITIONAL on the degenerate-bucket guard: with the
-    default ``max_bucket=4096``, a band bucket holding more members than
-    the cap is dropped wholesale (see _drop_oversized_buckets), so pairs
-    whose only agreeing band lands in such a bucket are lost.  Pass
-    ``max_bucket=None`` for unconditional recall (quadratic risk on
-    boilerplate-heavy corpora)."""
-    sh = simhash(df, text_col, id_col)
-    return hamming_near_pairs(sh, "simhash", "id", max_hamming, max_bucket)
-
-
-def hamming_near_pairs(df: DataFrame, sig_col: str, id_col: str,
-                       max_hamming: int = 3,
-                       max_bucket: int | None = 4096) -> DataFrame:
-    """Near-dup pairs by hamming distance over ANY precomputed 64-bit
-    signature column — e.g. the image **phash** of the BASELINE input
-    table (perceptual near-dup image dedup at corpus scale), or a
-    simhash.  Banded pigeonhole blocking: bands = max_hamming + 1, so a
-    qualifying pair must agree exactly on >= 1 band; the self-join is an
-    equi-join on (band, key) with the shared degenerate-bucket guard."""
-    n_bands = max_hamming + 1
-    if n_bands > 64:
-        raise ValueError("max_hamming must be < 64 for 64-bit blocking")
-    # band widths: distribute 64 bits as evenly as possible (wider first)
-    base, extra = divmod(64, n_bands)
-    widths = [base + (1 if i < extra else 0) for i in range(n_bands)]
-    offsets = [sum(widths[:i]) for i in range(n_bands)]
-    sh = df.select(F.col(id_col).alias("id"), F.col(sig_col).alias("_sig"))
-    bands = sh.select(
-        "id", "_sig",
-        F.explode(F.array(*[
-            F.struct(F.lit(i).alias("band"),
-                     F.shiftrightunsigned("_sig", offsets[i])
-                     .bitwiseAND(F.lit((1 << widths[i]) - 1)).alias("key"))
-            for i in range(n_bands)
-        ])).alias("bb"),
-    ).select("id", "_sig", "bb.band", "bb.key")
-    # grouped posting-list candidates (see minhash_lsh_pairs): ONE
-    # groupBy builds each bucket's sorted (id, sig) member list with the
-    # oversized guard folded into the size filter, and a HOF pair
-    # explosion replaces the former localCheckpoint + anti-join +
-    # two-sided self-join — one shuffle instead of three, identical
-    # candidate set
-    size_ok = F.size(F.col("ms")) >= 2
-    if max_bucket is not None:
-        size_ok = size_ok & (F.size(F.col("ms")) <= max_bucket)
-    grp = (bands.groupBy("band", "key")
-           .agg(F.array_sort(F.collect_list(F.struct("id", "_sig")))
-                .alias("ms"))
-           .where(size_ok).select("ms"))
-    ms = F.col("ms")
-    pair_structs = F.flatten(F.transform(ms, lambda x, i: F.transform(
-        F.slice(ms, i + F.lit(2), F.size(ms)),
-        lambda y: F.struct(x["id"].alias("id_a"), y["id"].alias("id_b"),
-                           x["_sig"].alias("sh_a"),
-                           y["_sig"].alias("sh_b")))))
-    cand = (grp.select(F.explode(pair_structs).alias("p"))
-            .select("p.id_a", "p.id_b", "p.sh_a", "p.sh_b").distinct())
-    hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    return cand.withColumn("hamming", hamming).where(F.col("hamming") <= max_hamming) \
-               .select("id_a", "id_b", "hamming")
-
-
-# ---------------------------------------------------------------------------
-# SimHash, portable-hash variant (engine-agnostic arithmetic — see the
-# MinHash portable section note; same design goal: the q22 gate query is
-# bit-reproducible in DuckDB, moving it from rows-only to oracle-exact)
-# ---------------------------------------------------------------------------
+#
+# Same portable arithmetic as MinHash (simhash_portable_sql is the DuckDB
+# twin the q22 gate checks against): tokens are the non-empty pieces of
+# split(trim(coalesce(t, '')), ' '), each hashed by the polynomial over
+# its rpad'ed 12-char prefix; token hash h votes +1 on bit k when
+# ((a_k*h + b_k) mod p) is odd, else -1, and bit k is set iff its summed
+# vote is > 0 (ties -> 0, so a doc without tokens has simhash 0).
 
 _SIMHASH_TOKLEN = 12  # token hash covers the first 12 chars (prefix hash)
 
@@ -807,41 +469,115 @@ def _simhash_bit_params(seed: int = 7):
     return _portable_perm_params(64, seed)
 
 
-def simhash_portable(df: DataFrame, text_col: str, id_col: str,
-                     seed: int = 7) -> DataFrame:
-    """(id, bits: 64-char '0'/'1' string) portable SimHash.
+def _simhash_batch(texts, a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """int64 SimHash per text, bit k driven by parameters (a_k, b_k)."""
+    if len(texts) > _SIG_CHUNK:  # bounds the (tokens, 64) temporaries
+        return np.concatenate([_simhash_batch(texts[i:i + _SIG_CHUNK], a, b)
+                               for i in range(0, len(texts), _SIG_CHUNK)])
+    toks = [[w for w in (t or "").split(" ") if w] for t in texts]
+    ntok = np.fromiter((len(ts) for ts in toks), dtype=np.int64, count=len(toks))
+    out = np.zeros((len(toks), 8), dtype=np.uint8)
+    has = np.flatnonzero(ntok)
+    if len(has):
+        # a prefix pads to exactly one window: one gram hash per token
+        h, _ = _gram_hashes([w[:_SIMHASH_TOKLEN] for ts in toks for w in ts],
+                            _SIMHASH_TOKLEN)
+        odd = ((h[:, None] * a + b) % _P64 & np.uint64(1)).astype(np.int64)
+        seg = np.cumsum(ntok[has]) - ntok[has]
+        votes = np.add.reduceat(odd, seg, axis=0)  # odd-vote count per bit
+        out[has] = np.packbits(2 * votes > ntok[has, None], axis=1,
+                               bitorder="little")
+    return out.view("<i8")[:, 0]
 
-    Tokens: split on single spaces, empties dropped (frequency-weighted —
-    token multiplicity counts, like the kernel impl).  Bit b's weight for
-    a token with hash h is 2*(((a_b*h + b_b) mod p) mod 2) - 1; the doc's
-    bit is 1 iff the summed weight is > 0 (ties -> 0).  Pure Catalyst."""
-    a, b = _simhash_bit_params(seed)
-    p = _PORTABLE_P
-    toks = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.split(F.trim(F.coalesce(F.col(text_col), F.lit(""))), " ")).alias("tok"),
-    ).where(F.length("tok") > 0)
-    h = F.expr(portable_token_hash_sql("tok"))
-    aggs = [
-        F.sum((F.lit(a[k]) * h + F.lit(b[k])) % p % 2 * 2 - 1).alias(f"_s{k}")
-        for k in range(64)
-    ]
-    per = toks.groupBy("id").agg(*aggs)
-    bits = F.concat(*[
-        F.when(F.col(f"_s{k}") > 0, F.lit("1")).otherwise(F.lit("0"))
-        for k in range(64)
-    ])
-    sigs = per.select("id", bits.alias("bits"))
-    ids = df.select(F.col(id_col).alias("id"))
-    return ids.join(sigs, "id", "left").select(
-        "id", F.coalesce("bits", F.lit("0" * 64)).alias("bits"))
+
+def simhash(df: DataFrame, text_col: str, id_col: str,
+            seed: int = 7) -> DataFrame:
+    """(id, simhash long) 64-bit SimHash over space-separated tokens (see
+    the section note), one numpy kernel per Arrow batch."""
+    a, b = (np.array(v, dtype=np.uint64) for v in _simhash_bit_params(seed))
+
+    @F.pandas_udf(LongType())
+    def sim_udf(texts: pd.Series) -> pd.Series:
+        return pd.Series(_simhash_batch(texts.tolist(), a, b))
+
+    return df.select(F.col(id_col).alias("id"), sim_udf(F.col(text_col)).alias("simhash"))
+
+
+def simhash_near_pairs(df: DataFrame, text_col: str, id_col: str,
+                       max_hamming: int = 3,
+                       max_bucket: int | None = 4096) -> DataFrame:
+    """Near-dup pairs with hamming(simhash) <= max_hamming via banded
+    exact-match blocking.
+
+    Recall guarantee is pigeonhole: splitting 64 bits into
+    ``bands = max_hamming + 1`` bands, any pair differing in <= max_hamming
+    bits must agree exactly on at least one band — so the band blocking
+    itself never drops a qualifying pair (b bands only cover b-1 flips,
+    which is why a fixed 4-band split silently lost hamming 4..8 pairs).
+
+    The guarantee is CONDITIONAL on the degenerate-bucket guard: with the
+    default ``max_bucket=4096``, a band bucket holding more members than
+    the cap contributes no pairs, so pairs whose only agreeing band lands
+    in such a bucket are lost.  Pass ``max_bucket=None`` for unconditional
+    recall (quadratic risk on boilerplate-heavy corpora)."""
+    sh = simhash(df, text_col, id_col)
+    return hamming_near_pairs(sh, "simhash", "id", max_hamming, max_bucket)
 
 
 def _band_layout(n_bands: int, nbits: int = 64):
+    """Band widths (wider first) and bit offsets splitting nbits as evenly
+    as possible — shared by the Spark blocking and the SQL twin."""
     base, extra = divmod(nbits, n_bands)
     widths = [base + (1 if i < extra else 0) for i in range(n_bands)]
     offsets = [sum(widths[:i]) for i in range(n_bands)]
     return widths, offsets
+
+
+def hamming_near_pairs(df: DataFrame, sig_col: str, id_col: str,
+                       max_hamming: int = 3,
+                       max_bucket: int | None = 4096) -> DataFrame:
+    """Near-dup pairs by hamming distance over ANY precomputed 64-bit
+    signature column — e.g. the image **phash** of the BASELINE input
+    table (perceptual near-dup image dedup at corpus scale), or a
+    simhash.  Banded pigeonhole blocking: bands = max_hamming + 1, so a
+    qualifying pair must agree exactly on >= 1 band; candidates come from
+    one groupBy on (band, key) with the shared degenerate-bucket guard."""
+    n_bands = max_hamming + 1
+    if n_bands > 64:
+        raise ValueError("max_hamming must be < 64 for 64-bit blocking")
+    widths, offsets = _band_layout(n_bands)
+    sh = df.select(F.col(id_col).alias("id"), F.col(sig_col).alias("_sig"))
+    bands = sh.select(
+        "id", "_sig",
+        F.explode(F.array(*[
+            F.struct(F.lit(i).alias("band"),
+                     F.shiftrightunsigned("_sig", offsets[i])
+                     .bitwiseAND(F.lit((1 << widths[i]) - 1)).alias("key"))
+            for i in range(n_bands)
+        ])).alias("bb"),
+    ).select("id", "_sig", "bb.band", "bb.key")
+    # grouped posting-list candidates (see minhash_lsh_pairs): ONE
+    # groupBy builds each bucket's sorted (id, sig) member list with the
+    # oversized guard folded into the size filter, and a HOF pair
+    # explosion emits the pairs
+    size_ok = F.size(F.col("ms")) >= 2
+    if max_bucket is not None:
+        size_ok = size_ok & (F.size(F.col("ms")) <= max_bucket)
+    grp = (bands.groupBy("band", "key")
+           .agg(F.array_sort(F.collect_list(F.struct("id", "_sig")))
+                .alias("ms"))
+           .where(size_ok).select("ms"))
+    ms = F.col("ms")
+    pair_structs = F.flatten(F.transform(ms, lambda x, i: F.transform(
+        F.slice(ms, i + F.lit(2), F.size(ms)),
+        lambda y: F.struct(x["id"].alias("id_a"), y["id"].alias("id_b"),
+                           x["_sig"].alias("sh_a"),
+                           y["_sig"].alias("sh_b")))))
+    cand = (grp.select(F.explode(pair_structs).alias("p"))
+            .select("p.id_a", "p.id_b", "p.sh_a", "p.sh_b").distinct())
+    hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
+    return cand.withColumn("hamming", hamming).where(F.col("hamming") <= max_hamming) \
+               .select("id_a", "id_b", "hamming")
 
 
 def _hamming_sql(a: str, b: str, nbits: int = 64) -> str:
@@ -851,46 +587,13 @@ def _hamming_sql(a: str, b: str, nbits: int = 64) -> str:
     return f"CAST(({terms}) AS BIGINT)"
 
 
-def simhash_near_pairs_portable(
-    df: DataFrame, text_col: str, id_col: str,
-    max_hamming: int = 3, seed: int = 7,
-) -> DataFrame:
-    """simhash_near_pairs with portable hashing: banded exact-match blocking
-    over the bit string (pigeonhole: bands = max_hamming + 1 never drops a
-    qualifying pair), hamming verified positionally.  Zero UDFs."""
-    n_bands = max_hamming + 1
-    widths, offsets = _band_layout(n_bands)
-    sh = simhash_portable(df, text_col, id_col, seed)
-    bands = sh.select(
-        "id", "bits",
-        F.explode(F.array(*[
-            F.struct(F.lit(i).alias("band"),
-                     F.substring("bits", offsets[i] + 1, widths[i]).alias("key"))
-            for i in range(n_bands)
-        ])).alias("bb"),
-    ).select("id", "bits", "bb.band", "bb.key")
-    # see minhash_lsh_pairs: avoid recomputing the 64 sum-aggs per side
-    bands = bands.localCheckpoint(eager=False)
-    ba, bb = bands.alias("a"), bands.alias("b")
-    cand = (
-        ba.join(bb, (F.col("a.band") == F.col("b.band")) & (F.col("a.key") == F.col("b.key"))
-                & (F.col("a.id") < F.col("b.id")))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
-                F.col("a.bits").alias("_ba"), F.col("b.bits").alias("_bb"))
-        .distinct()
-    )
-    hamming = F.expr(_hamming_sql("_ba", "_bb"))
-    return (cand.withColumn("hamming", hamming)
-            .where(F.col("hamming") <= max_hamming)
-            .select("id_a", "id_b", "hamming"))
-
-
 def simhash_portable_sql(
     table: str, text_col: str, id_col: str,
     max_hamming: int = 3, seed: int = 7,
 ) -> str:
-    """DuckDB twin of simhash_near_pairs_portable — same literals, same
-    tokenization, bit-identical signatures, candidates and hamming."""
+    """DuckDB twin of simhash_near_pairs (max_bucket=None) — same literals,
+    same tokenization, bit-identical signatures, candidates and hamming
+    (the signature as a '0'/'1' string, char k+1 = bit k)."""
     a, b = _simhash_bit_params(seed)
     p = _PORTABLE_P
     n_bands = max_hamming + 1
@@ -1152,8 +855,8 @@ def semantic_dedup(vectors: DataFrame, vec_col: str, id_col: str,
     is gate-scale only.  As a hard backstop, clusters larger than
     ``max_cluster`` are EXCLUDED from the pairwise comparison entirely
     (their members return kept=True) via a broadcast anti-join on the
-    tiny oversized-cluster id set — the same degenerate-bucket guard as
-    ``_drop_oversized_buckets``: one mega-cluster must be split with a
+    tiny oversized-cluster id set — the same degenerate-bucket policy as
+    minhash_lsh_pairs' ``max_bucket``: one mega-cluster must be split with a
     finer codebook, not brute-forced at |cluster|^2.  None disables.
 
     Assignment uses the exact-integer static-codebook argmin

@@ -3,7 +3,7 @@
 - ``cosine_topk``      — exact brute-force top-k per query: cosine computed
   with Catalyst higher-order functions (zip_with + aggregate — JVM-side,
   no Python), window top-k.  The correctness baseline.
-- ``hyperplane_lsh``   — random-hyperplane signatures (sign sketch) for
+- ``lsh_topk``         — random-hyperplane signatures (sign sketch) for
   bucketed ANN: candidates only within matching buckets; the 100 TB path.
 - ``ivf_topk``         — inverted-file ANN: coarse quantize to the nearest
   of C centroids (broadcast), probe the query's nprobe nearest lists.
@@ -72,59 +72,18 @@ def cosine_topk(
     )
 
 
-def _hyperplanes(dim: int, nbits: int, seed: int = 7) -> np.ndarray:
-    rng = np.random.default_rng(seed)
-    return rng.standard_normal((nbits, dim))
-
-
-def hyperplane_signature(df: DataFrame, vec_col: str, dim: int,
-                         nbits: int = 16, seed: int = 7, out: str = "lsh_bucket") -> DataFrame:
-    """Sign-sketch bucket id per vector (random hyperplane LSH)."""
-    H = _hyperplanes(dim, nbits, seed)
-
-    @F.pandas_udf(IntegerType())
-    def bucket(vecs: pd.Series) -> pd.Series:
-        M = np.array([np.asarray(v, dtype=np.float64) for v in vecs])
-        bits = (M @ H.T) > 0
-        vals = np.zeros(len(M), dtype=np.int64)
-        for b in range(nbits):
-            vals |= bits[:, b].astype(np.int64) << b
-        return pd.Series(vals.astype(np.int32))
-
-    return df.withColumn(out, bucket(F.col(vec_col)))
-
-
-def lsh_topk(
-    vectors: DataFrame, queries: DataFrame, k: int, dim: int,
-    vec_col: str = "embedding", vid: str = "vec_id",
-    q_vec: str = "q_embedding", qid: str = "query_id",
-    nbits: int = 8, seed: int = 7,
-) -> DataFrame:
-    """Approximate top-k: candidates share the query's LSH bucket. Recall is
-    tunable via nbits (fewer bits = bigger buckets = higher recall)."""
-    v = hyperplane_signature(vectors, vec_col, dim, nbits, seed)
-    q = hyperplane_signature(queries, q_vec, dim, nbits, seed)
-    joined = v.join(q, "lsh_bucket").withColumn("cosine", cosine_expr(vec_col, q_vec))
-    w = Window.partitionBy(qid).orderBy(F.col("cosine").desc(), F.col(vid).asc())
-    return (
-        joined.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(qid, vid, "cosine", "rank")
-    )
-
-
 # ---------------------------------------------------------------------------
-# hyperplane LSH, portable variant (engine-agnostic arithmetic)
+# hyperplane LSH (engine-agnostic arithmetic)
 # ---------------------------------------------------------------------------
 #
 # Gaussian hyperplanes need float dot products whose sign near zero can
-# differ across engines (summation order).  The portable variant uses
-# seeded Rademacher (+/-1) hyperplanes over floor-quantized components
-# s_i = floor(v_i * 2^20): every intermediate is an integer far below
-# 2^53, so double arithmetic on them is EXACT and order-independent —
-# identical bucket assignments in Spark and DuckDB, which moves the LSH
-# top-k gate query under the exact oracle.  Multiplying by 2^20 is itself
-# exact (power of two), as is float32 -> double widening.
+# differ across engines (summation order).  These are seeded Rademacher
+# (+/-1) hyperplanes over floor-quantized components s_i =
+# floor(v_i * 2^20): every intermediate is an integer far below 2^53, so
+# double arithmetic on them is EXACT and order-independent — identical
+# bucket assignments in Spark and DuckDB, which puts the LSH top-k gate
+# query under the exact oracle.  Multiplying by 2^20 is itself exact
+# (power of two), as is float32 -> double widening.
 
 _Q_SCALE = 1 << 20
 
@@ -149,15 +108,16 @@ def portable_bucket_expr(vec_col, dim: int, nbits: int, seed: int = 7):
     return F.concat(*bits)
 
 
-def lsh_topk_portable(
+def lsh_topk(
     vectors: DataFrame, queries: DataFrame, k: int, dim: int,
     vec_col: str = "embedding", vid: str = "vec_id",
     q_vec: str = "q_embedding", qid: str = "query_id",
     nbits: int = 8, seed: int = 7,
 ) -> DataFrame:
-    """lsh_topk with portable (Rademacher/quantized) bucketing — identical
-    semantics, oracle-replicable candidates.  Cosine + ranking follow the
-    proven q18 discipline (double HOF dot product, ties by vec id)."""
+    """Approximate top-k: candidates share the query's hyperplane-LSH
+    bucket (``portable_bucket_expr``).  Recall is tunable via nbits (fewer
+    bits = bigger buckets = higher recall).  Cosine + ranking follow the
+    q18 discipline (double HOF dot product, ties by vec id)."""
     v = vectors.withColumn("_bk", portable_bucket_expr(vec_col, dim, nbits, seed))
     q = queries.withColumn("_bk", portable_bucket_expr(q_vec, dim, nbits, seed))
     joined = v.join(q, "_bk").withColumn("cosine", cosine_expr(vec_col, q_vec))
@@ -174,7 +134,7 @@ def lsh_topk_portable_sql(
     table: str = "embeddings", vec_col: str = "embedding", vid: str = "vec_id",
     query_filter: str = "vec_id < 5", vector_filter: str = "vec_id >= 5",
 ) -> str:
-    """DuckDB twin of lsh_topk_portable: same planes, same quantization,
+    """DuckDB twin of lsh_topk: same planes, same quantization,
     bit-identical buckets; cosine/rank mirror the q18 oracle form."""
     planes = _rademacher_planes(dim, nbits, seed)
 

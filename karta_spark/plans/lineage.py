@@ -33,7 +33,6 @@ import json
 import os
 import time
 
-import pandas as pd
 from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -133,24 +132,11 @@ def resume_or_run(build, root: str, stage: str,
 
 
 def lineage_table(spark: SparkSession, root: str, stage: str) -> DataFrame:
-    """Read the per-partition lineage metrics for a stage.
-
-    Primary format is the parquet written by run_stage; per-partition JSON
-    side-files (the pre-accumulator layout) are still readable for old
-    checkpoints."""
+    """Read the per-partition lineage metrics run_stage wrote for a stage
+    (an empty table when the stage has none)."""
     path = os.path.join(root, stage, "_lineage")
-    if os.path.isdir(path):
-        if any(fn.endswith(".parquet") for fn in os.listdir(path)):
-            return spark.read.parquet(path)
-        rows = []
-        for fn in sorted(os.listdir(path)):
-            if fn.endswith(".json"):
-                with open(os.path.join(path, fn)) as f:
-                    rows.append(json.load(f))
-        if rows:
-            return spark.createDataFrame(
-                pd.DataFrame(rows, columns=["stage", "part_id", "row_count",
-                                            "wall_ms", "finished_at"]))
+    if os.path.isdir(path) and any(fn.endswith(".parquet") for fn in os.listdir(path)):
+        return spark.read.parquet(path)
     return spark.createDataFrame([], LINEAGE_SCHEMA)
 
 

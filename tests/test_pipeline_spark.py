@@ -113,28 +113,34 @@ class TestDedup:
         assert (0, 1) in pairs or (1, 3) in pairs  # near dup
         assert all(a not in (2, 4) and b not in (2, 4) for a, b in pairs)
 
-    def test_minhash_portable_matches_kernel(self, spark):
-        """The portable-hash pipeline (engine-agnostic arithmetic, the q21
-        oracle twin) finds the same verified near-dup pairs as the crc32
-        kernel impl — different hash families, same exact-Jaccard verify, so
-        pair sets agree wherever LSH recall does (planted dups at j~1.0)."""
-        kw = dict(num_perm=64, bands=16, shingle=3, threshold=0.5)
-        docs = self._docs(spark)
-        portable = {(r["id_a"], r["id_b"]): r["jaccard"] for r in
-                    dedup.minhash_lsh_pairs_portable(docs, "text", "doc_id", **kw).collect()}
-        assert (0, 3) in portable and portable[(0, 3)] == pytest.approx(1.0)
-        kernel = {(r["id_a"], r["id_b"]) for r in dedup.minhash_lsh_pairs(
-            docs, "text", "doc_id", **kw).collect()}
-        assert set(portable) == kernel
+    def _docs_unicode(self, spark):
+        """The planted-dup fixture plus accented, CJK, short, empty and
+        null documents: the cases where code points, padding and
+        coalesce decide the hashes."""
+        rows = [(r["doc_id"], r["text"]) for r in self._docs(spark).collect()]
+        rows += [
+            (5, "héllo wörld café naïve résumé über straße"),
+            (6, "héllo wörld café naïve résumé über strasse"),
+            (7, "日本語のテキスト 東京 大阪 京都 日本語のテキスト"),
+            (8, "日本語のテキスト 東京 大阪 京都 日本語の文章"),
+            (9, "ab"),
+            (10, ""),
+            (11, None),
+            (12, "ab"),
+        ]
+        return spark.createDataFrame(rows, "doc_id long, text string")
 
     def test_minhash_portable_sql_twin(self, spark):
-        """The DuckDB twin reproduces the Spark pipeline bit-for-bit:
-        same candidates (probabilistic LSH included), same Jaccard."""
+        """The DuckDB twin reproduces the operator bit-for-bit: same
+        candidates (probabilistic LSH included), same Jaccard."""
         import duckdb
         kw = dict(num_perm=64, bands=16, shingle=3, threshold=0.5)
-        docs = self._docs(spark)
-        got = sorted((r["id_a"], r["id_b"], r["jaccard"]) for r in
-                     dedup.minhash_lsh_pairs_portable(docs, "text", "doc_id", **kw).collect())
+        docs = self._docs_unicode(spark)
+        got = sorted((r["id_a"], r["id_b"], round(r["jaccard"], 6)) for r in
+                     dedup.minhash_lsh_pairs(docs, "text", "doc_id",
+                                             max_bucket=None, **kw).collect())
+        assert (0, 3, 1.0) in got and (9, 12, 1.0) in got
+        assert any(a == 5 for a, _, _ in got) and any(a == 7 for a, _, _ in got)
         con = duckdb.connect()
         con.register("documents", docs.toPandas())
         sql = dedup.minhash_portable_sql("documents", "text", "doc_id", **kw)
@@ -148,16 +154,16 @@ class TestDedup:
         assert pairs.get((0, 3)) == 0  # identical docs -> identical simhash
 
     def test_simhash_portable_and_sql_twin(self, spark):
-        """Portable simhash: identical docs collide at hamming 0, unrelated
-        docs are excluded at a tight threshold, and the DuckDB twin
+        """SimHash: identical docs collide at hamming 0, and the DuckDB twin
         reproduces the full pipeline (signatures, blocking, hamming)
-        bit-for-bit."""
+        bit-for-bit, non-ASCII, empty and null documents included."""
         import duckdb
-        docs = self._docs(spark)
+        docs = self._docs_unicode(spark)
         got = sorted((r["id_a"], r["id_b"], r["hamming"]) for r in
-                     dedup.simhash_near_pairs_portable(
-                         docs, "text", "doc_id", max_hamming=6).collect())
-        assert (0, 3, 0) in got  # identical docs -> identical signature
+                     dedup.simhash_near_pairs(
+                         docs, "text", "doc_id", max_hamming=6,
+                         max_bucket=None).collect())
+        assert (0, 3, 0) in got and (10, 11, 0) in got
         con = duckdb.connect()
         con.register("documents", docs.toPandas())
         sql = dedup.simhash_portable_sql("documents", "text", "doc_id", max_hamming=6)
@@ -172,14 +178,13 @@ class TestDedup:
         rows.append((100, "alpha beta gamma delta epsilon zeta eta theta"))
         rows.append((101, "alpha beta gamma delta epsilon zeta eta iota"))
         df = spark.createDataFrame(rows, "doc_id long, text string")
-        sigs = {r["id"]: r["bits"] for r in
-                dedup.simhash_portable(df, "text", "doc_id").collect()}
-        brute = sorted(
-            (a, b, sum(ca != cb for ca, cb in zip(sigs[a], sigs[b])))
-            for a in sigs for b in sigs if a < b)
+        sigs = {r["id"]: r["simhash"] for r in
+                dedup.simhash(df, "text", "doc_id").collect()}
+        brute = sorted((a, b, bin((sigs[a] ^ sigs[b]) & (2**64 - 1)).count("1"))
+                       for a in sigs for b in sigs if a < b)
         want = [(a, b, h) for a, b, h in brute if h <= 8]
         got = sorted((r["id_a"], r["id_b"], r["hamming"]) for r in
-                     dedup.simhash_near_pairs_portable(
+                     dedup.simhash_near_pairs(
                          df, "text", "doc_id", max_hamming=8).collect())
         assert got == want
         assert any(4 <= h <= 8 for _, _, h in got) or (100, 101) in {
@@ -190,6 +195,108 @@ class TestDedup:
                dedup.ngram_jaccard_pairs(self._docs(spark), "text", "doc_id",
                                          n=3, threshold=0.5).collect()}
         assert got[(0, 3)] == pytest.approx(1.0)
+
+
+P31 = 2**31 - 1
+# every edge case the kernels must hash like the SQL twins: null, empty,
+# shorter than any shingle, lone surrogates, accented and CJK text,
+# chr(1) (the pad character itself), and a length outlier
+KERNEL_TEXTS = [None, "", "a", "ab", "\ud800\ud801", "aaaaaa", "ab\x01",
+                "héllo wörld café", "日本語のテキスト 東京", "  two  spaces  "]
+_rng = np.random.default_rng(7)
+KERNEL_TEXTS += [" ".join(_rng.choice(["batch", "part", "spark", "小", "héllo",
+                                       "straße"], size=int(k)))
+                 for k in _rng.integers(1, 40, size=60)]
+KERNEL_TEXTS += [" ".join(["batch", "小", "héllo"] * 300)]
+
+
+def _ref_gram_hash(g):
+    """Scalar portable hash, mod at every step as the SQL fragment does."""
+    h = ord(g[0])
+    for ch in g[1:]:
+        h = (h % P31) * 131 + ord(ch)
+    return h % P31
+
+
+def _ref_minhash(t, n, a, b):
+    t = (t or "").ljust(n, "\x01")
+    hs = {_ref_gram_hash(t[i:i + n]) for i in range(len(t) - n + 1)}
+    return [min((aj * h + bj) % P31 for h in hs) for aj, bj in zip(a, b)]
+
+
+def _ref_simhash(t, a, b):
+    hs = [_ref_gram_hash(w[:12].ljust(12, "\x01"))
+          for w in (t or "").split(" ") if w]
+    val = sum(1 << k for k in range(64)
+              if sum(2 * ((a[k] * h + b[k]) % P31 % 2) - 1 for h in hs) > 0)
+    return val - 2**64 if val >= 2**63 else val
+
+
+def _sql_cte(sql, name):
+    """The twin's SQL cut after CTE *name* (the CTE before ``banded``)."""
+    head = sql.split("banded AS (")[0].rstrip().rstrip(",")
+    return f"{head}\nSELECT * FROM {name}"
+
+
+def _kernel_docs():
+    """KERNEL_TEXTS as a documents table DuckDB accepts (valid UTF-8)."""
+    import pandas as pd
+    texts = [t for t in KERNEL_TEXTS if t is None or "\ud800" not in t]
+    return pd.DataFrame({"doc_id": np.arange(len(texts)), "text": texts})
+
+
+class TestMinHashKernel:
+    @pytest.mark.parametrize("n", [3, 6, 9])
+    def test_minhash_batch_kernel_bit_equal(self, n):
+        """_minhash_sig_batch equals the scalar per-doc reference on every
+        edge case and across chunk boundaries."""
+        a, b = dedup._portable_perm_params(64, 42)
+        ua, ub = np.array(a, dtype=np.uint64), np.array(b, dtype=np.uint64)
+        assert dedup._minhash_sig_batch([], n, ua, ub).shape == (0, 64)
+        texts = KERNEL_TEXTS * 4  # > one kernel chunk
+        got = dedup._minhash_sig_batch(texts, n, ua, ub)
+        assert got.shape == (len(texts), 64)
+        for i, t in enumerate(texts):
+            assert list(got[i]) == _ref_minhash(t, n, a, b), (n, i, t)
+
+    def test_minhash_kernel_matches_sql_sig(self):
+        """The kernel reproduces every column of the DuckDB twin's sig CTE."""
+        import duckdb
+        docs = _kernel_docs()
+        a, b = (np.array(v, dtype=np.uint64)
+                for v in dedup._portable_perm_params(64, 42))
+        got = dedup._minhash_sig_batch(docs["text"].tolist(), 6, a, b)
+        con = duckdb.connect()
+        con.register("documents", docs)
+        sql = _sql_cte(dedup.minhash_portable_sql("documents", "text", "doc_id"), "sig")
+        rows = con.execute(sql).fetchall()
+        assert len(rows) == len(docs)
+        for r in rows:
+            assert list(r[1:]) == list(got[r[0]]), r[0]
+
+
+class TestSimHashKernel:
+    def test_simhash_batch_kernel_bit_equal(self):
+        a, b = dedup._simhash_bit_params(7)
+        ua, ub = np.array(a, dtype=np.uint64), np.array(b, dtype=np.uint64)
+        assert dedup._simhash_batch([], ua, ub).shape == (0,)
+        texts = KERNEL_TEXTS * 4  # > one kernel chunk
+        got = dedup._simhash_batch(texts, ua, ub)
+        assert [int(v) for v in got] == [_ref_simhash(t, a, b) for t in texts]
+
+    def test_simhash_kernel_matches_sql_sigs(self):
+        """Bit k of the kernel's long is char k+1 of the twin's bit string."""
+        import duckdb
+        docs = _kernel_docs()
+        a, b = (np.array(v, dtype=np.uint64) for v in dedup._simhash_bit_params(7))
+        got = dedup._simhash_batch(docs["text"].tolist(), a, b)
+        con = duckdb.connect()
+        con.register("documents", docs)
+        sql = _sql_cte(dedup.simhash_portable_sql("documents", "text", "doc_id"), "sigs")
+        rows = dict(con.execute(sql).fetchall())
+        assert len(rows) == len(docs)
+        for i, v in enumerate(got):
+            assert "".join(str((int(v) >> k) & 1) for k in range(64)) == rows[i], i
 
 
 class TestTextPipeline:
@@ -342,16 +449,15 @@ class TestSimilarity:
         assert recall >= 0.5  # 2-bit buckets: high recall expected
 
     def test_lsh_portable_recall_and_sql_twin(self, spark):
-        """Portable (Rademacher/quantized) LSH: recall comparable to the
-        Gaussian variant, and the DuckDB twin reproduces buckets, candidates,
-        cosine and ranks bit-for-bit."""
+        """Rademacher/quantized LSH: the DuckDB twin reproduces buckets,
+        candidates, cosine and ranks bit-for-bit."""
         import duckdb
         v = self._vectors(spark, 300, 16)
         q = v.where(F.col("vec_id") < 10).select(
             F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_embedding"))
         brute = {(r["query_id"], r["vec_id"])
                  for r in similarity.cosine_topk(v, q, k=5, qid="query_id").collect()}
-        out = similarity.lsh_topk_portable(v, q, k=5, dim=16, nbits=2)
+        out = similarity.lsh_topk(v, q, k=5, dim=16, nbits=2)
         got = sorted((r["query_id"], r["vec_id"], round(r["cosine"], 6), r["rank"])
                      for r in out.collect())
         recall = len(brute & {(a, b) for a, b, _, _ in got}) / len(brute)
@@ -423,14 +529,11 @@ class TestResumePartial:
         root = str(tmp_path / "ck2")
         src = spark.range(100).select(
             (F.col("id") % 10).alias("part_key"), F.col("id"))
-        # simulate a partially completed stage: lineage rows for parts 0-4
-        import json as _json, os as _os
-        lpath = _os.path.join(root, "stage_x", "_lineage")
-        _os.makedirs(lpath, exist_ok=True)
-        for p in range(5):
-            with open(_os.path.join(lpath, f"part-{p}.json"), "w") as f:
-                _json.dump({"stage": "stage_x", "part_id": p, "row_count": 10,
-                            "wall_ms": 1.0, "finished_at": 0.0}, f)
+        # simulate a partially completed stage: lineage rows for parts 0-4,
+        # in the parquet layout run_stage writes
+        spark.createDataFrame(
+            [("stage_x", p, 10, 1.0, 0.0) for p in range(5)], lineage.LINEAGE_SCHEMA
+        ).write.parquet(os.path.join(root, "stage_x", "_lineage"))
         todo = lineage.missing_partitions(src, spark, root, "stage_x", "part_key")
         keys = {r["part_key"] for r in todo.select("part_key").distinct().collect()}
         assert keys == {5, 6, 7, 8, 9}

@@ -146,19 +146,23 @@ class TestOversizedBucketStats:
 
     def test_stats_match_guard(self, spark):
         import pandas as pd
-        from pyspark.sql import functions as F
         from karta_spark.operators.dedup import (
-            _drop_oversized_buckets, oversized_bucket_stats)
+            hamming_near_pairs, oversized_bucket_stats)
         rows = [("a%d" % i, 0, 7) for i in range(10)] + \
-               [("b%d" % i, 1, 9) for i in range(3)]
+               [("b%d" % i, 0, 9) for i in range(3)]
         banded = spark.createDataFrame(
             pd.DataFrame(rows, columns=["id", "band", "key"]))
         stats = oversized_bucket_stats(banded, ("band", "key"), 5).collect()
         assert len(stats) == 1
-        assert stats[0].band == 0 and stats[0].members == 10
+        assert stats[0].key == 7 and stats[0].members == 10
         assert stats[0].dropped_pairs == 45
-        kept = _drop_oversized_buckets(banded, ("band", "key"), 5)
-        assert kept.count() == 3
+        # as signatures, the keys' low 32-bit band reproduces the buckets
+        # above (the all-zero high band only adds 7-vs-9 pairs, which the
+        # hamming filter rejects): the guard drops exactly the 45 pairs
+        sigs = banded.withColumnRenamed("key", "sig")
+        full = hamming_near_pairs(sigs, "sig", "id", 1, max_bucket=None).count()
+        kept = hamming_near_pairs(sigs, "sig", "id", 1, max_bucket=5).count()
+        assert (full, kept) == (45 + 3, 3)
         assert oversized_bucket_stats(banded, ("band", "key"), 100).count() == 0
 
 

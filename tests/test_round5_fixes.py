@@ -64,28 +64,29 @@ class TestKnnBoundaryTies:
 
 
 class TestShingleHashesSurrogates:
-    """ADVICE r4 (low): utf-8 'ignore' encoding can SHRINK below n (lone
-    surrogates encode to b''), which made L negative and np.zeros crash."""
+    """ADVICE r4 (low): lone surrogates must not crash the gram hash, and
+    every doc (empty, short and null included) yields >= 1 gram."""
 
     def test_lone_surrogate_text(self):
-        from karta_spark.operators.dedup import _shingle_hashes
-        out = _shingle_hashes("\ud800\ud801\ud802\ud803\ud804", 3)
-        assert isinstance(out, np.ndarray)
-        assert out.dtype == np.uint64
-        assert len(out) >= 1  # padded NUL gram, not a crash
+        from karta_spark.operators.dedup import _gram_hashes
+        hv, seg = _gram_hashes(["\ud800\ud801\ud802\ud803\ud804"], 3)
+        assert isinstance(hv, np.ndarray)
+        assert hv.dtype == np.uint64
+        assert len(hv) == 3 and list(seg) == [0]
 
     def test_empty_and_short_text(self):
-        from karta_spark.operators.dedup import _shingle_hashes
-        assert len(_shingle_hashes("", 3)) == 1
-        assert len(_shingle_hashes("a", 3)) == 1
+        from karta_spark.operators.dedup import _gram_hashes
+        hv, seg = _gram_hashes(["", "a", None], 3)
+        assert len(hv) == 3 and list(seg) == [0, 1, 2]  # one padded gram each
+        assert hv[0] != hv[1] and hv[0] == hv[2]  # null hashes like ''
 
     def test_normal_text_unchanged(self):
-        from karta_spark.operators.dedup import _shingle_hashes
-        h1 = _shingle_hashes("hello world", 3)
-        h2 = _shingle_hashes("hello world", 3)
+        from karta_spark.operators.dedup import _gram_hashes
+        h1, _ = _gram_hashes(["hello world"], 3)
+        h2, _ = _gram_hashes(["hello world"], 3)
         assert np.array_equal(h1, h2)
-        assert len(h1) == len(set("hello world"[i:i + 3]
-                                  for i in range(len("hello world") - 2)))
+        assert len(set(h1.tolist())) == len(set("hello world"[i:i + 3]
+                                                for i in range(len("hello world") - 2)))
 
 
 class TestPseudoMercatorWkt:

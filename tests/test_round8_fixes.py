@@ -186,28 +186,3 @@ class TestBatchedDecodeStats:
             assert g["pix_mean"] == float(pix.mean())
             assert g["pix_std"] == float(pix.std())
             assert g["psnr_vs_ref"] == im.psnr(pix, ref)
-
-    def test_minhash_batch_kernel_bit_equal(self):
-        """_minhash_sig_batch must reproduce the per-doc reference form
-        min((a*h + b) mod 2^64) over _shingle_hashes EXACTLY, including
-        the padding rules (empty text, text shorter than the shingle,
-        lone surrogates that utf-8-'ignore' away) and length outliers
-        that cross the kernel's bucket boundaries."""
-        from karta_spark.operators.dedup import (_minhash_params,
-                                                 _minhash_sig_batch,
-                                                 _shingle_hashes)
-        a, b = _minhash_params(64, 42)
-        rng = np.random.default_rng(7)
-        vocab = ["batch", "part", "spark", "line", "order", "小", "héllo"]
-        texts = [None, "", "a", "ab", "\ud800\ud801", "aaaaaa"]
-        texts += [" ".join(rng.choice(vocab, size=int(k)))
-                  for k in rng.integers(1, 40, size=120)]
-        texts += [" ".join(rng.choice(vocab, size=900))]  # length outlier
-        assert _minhash_sig_batch([], 6, a, b).shape == (0, 64)
-        for n in (3, 6):
-            got = _minhash_sig_batch(texts, n, a, b)
-            assert got.shape == (len(texts), 64)
-            for i, t in enumerate(texts):
-                hv = _shingle_hashes(t or "", n)
-                ref = (hv[None, :] * a[:, None] + b[:, None]).min(axis=1)
-                assert np.array_equal(got[i], ref.view(np.int64)), (n, i, t)

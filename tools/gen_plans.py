@@ -62,10 +62,10 @@ nv = knn.nearest_vertex(
 sections.append(("nearest_vertex (TakeOrderedAndProject — per-partition "
                  "top-1 + driver merge, no global sort)", plan_of(nv, 15)))
 
-# 8. q21 portable minhash: the whole LSH pipeline (grams, 64 min-aggs,
-# band buckets, candidate join, exact-Jaccard verify) with zero Python
-sections.append(("q21 portable MinHash LSH (zero-Python: explode -> 64 "
-                 "map-side min-aggs -> bucket equi-join -> gram-join verify)",
+# 8. q21 minhash: Arrow signature kernel, band buckets, grouped
+# posting-list candidates, Catalyst exact-Jaccard verify
+sections.append(("q21 MinHash LSH (Arrow signature kernel -> band buckets "
+                 "-> one groupBy + HOF pair explosion -> array-set verify)",
                  plan_of(m.q21_minhash_pairs(spark, sf), 45)))
 
 # 9. q47 stratified sample: hash-threshold prefilter keeps the per-stratum

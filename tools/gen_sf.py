@@ -8,13 +8,17 @@ events + documents + embeddings); layout matches the driver's too: ONE
 parquet file with ONE row group per table, which is exactly the
 single-task-scan shape the round-8 operator guards must handle.
 
-Usage:  python tools/gen_sf.py 1.0 /root/testdata/sf1.0
+Usage:  python tools/gen_sf.py 1.0 [OUT_DIR]
+
+OUT_DIR defaults to sf<N> under the system temp directory, never the
+read-only shipped test data.
 """
 
 from __future__ import annotations
 
 import os
 import sys
+import tempfile
 
 import numpy as np
 import pandas as pd
@@ -167,6 +171,8 @@ def generate(sf: float, out_dir: str, seed: int = 42) -> None:
 
 
 if __name__ == "__main__":
-    sf = float(sys.argv[1]) if len(sys.argv) > 1 else 1.0
-    out = sys.argv[2] if len(sys.argv) > 2 else f"/root/testdata/sf{sys.argv[1]}"
+    sf_arg = sys.argv[1] if len(sys.argv) > 1 else "1.0"
+    sf = float(sf_arg)
+    out = (sys.argv[2] if len(sys.argv) > 2
+           else os.path.join(tempfile.gettempdir(), f"sf{sf_arg}"))
     generate(sf, out)
