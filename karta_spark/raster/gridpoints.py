@@ -12,29 +12,10 @@ banker's rounding — replicated here as an expression).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from karta_spark.raster.sampling import position_exprs
-
-
-def round_half_even(c: Column) -> Column:
-    """np.round (banker's) to integer as a Catalyst expression.
-
-    Float-algebra form instead of F.bround: Spark's BRound allocates a
-    BigDecimal per row (measured r8: 0.6 s of the 1.0 s q11 aggregate at
-    6M rows); this CASE form is pure double/long codegen.  Exactness: the
-    fraction f = p - floor(p) is computed EXACTLY for every double p —
-    for p >= 0 and for p <= -0.5 by Sterbenz's lemma (floor(p) is within
-    a factor 2 of p), and for p in (-0.5, 0) the true f lies in (0.5, 1)
-    where any representation rounding stays strictly on the same side of
-    0.5 — so the >0.5 / <0.5 / ==0.5 classification, and hence the
-    half-even result, matches BigDecimal rounding of the exact double
-    value on every input (verified exceptAll-equal over the 6M-row q11
-    grid, ties included)."""
-    r = F.floor(c)
-    f = c - r
-    return F.when(f > 0.5, r + 1).when(f < 0.5, r).otherwise(r + F.pmod(r, 2))
+from karta_spark.raster.sampling import position_exprs, round_half_even
 
 
 def gridpoints(
@@ -44,14 +25,21 @@ def gridpoints(
 
     Grid shape follows the reference: ny/nx implied by the data maxima
     (grid.py:1275-1276); empty cells are simply absent (the dense nodata
-    fill is a presentation concern — see tiles_from_cells)."""
+    fill is a presentation concern — see tiles_from_cells).  Points whose
+    cell index is not an int (null, NaN, infinite or far-off coordinates)
+    are dropped."""
     i, j = position_exprs(transform, F.col(px), F.col(py))
     return (
         points
-        .withColumn("cell_i", round_half_even(i).cast("int"))
-        .withColumn("cell_j", round_half_even(j).cast("int"))
+        .withColumns({"cell_i": round_half_even(i).try_cast("int"),
+                      "cell_j": round_half_even(j).try_cast("int")})
         .groupBy("cell_i", "cell_j")
         .agg(F.avg(pz).alias("value"), F.count("*").alias("n"))
+        # drop the null-index group here, once per cell: reading n keeps
+        # Catalyst from pushing the predicate below the aggregate, where
+        # a Filter (no subexpression elimination) would re-evaluate the
+        # index expressions on every input row (q11 ran 30x slower)
+        .where(F.when(F.col("n") > 0, F.col("cell_i").isNotNull() & F.col("cell_j").isNotNull()))
     )
 
 

@@ -4,22 +4,24 @@
 become: compute fractional (i, j) for every point with *pure column
 expressions* (the closed-form inverse affine of crfuncs.pyx:12-33, -0.5
 convention), key each point by the tile containing its clamped floor index,
-hash-join to the tile table, and run the exact numpy kernel per tile group.
+inner-join the points to the tile table on that key, and gather the one
+(nearest) or four (bilinear) cell values out of the joined ``block`` with
+``get`` — all Catalyst, no Python worker.  The join carries no hint, so
+Spark's size statistics decide which side it builds: a small point batch
+is broadcast against a large cached tile table, not the other way round.
 
 The tile halo (tiles.py) makes bilinear tile-local — no neighbor exchange at
-query time; validity is decided against *global* indices so boundary
-semantics match the reference kernels bit-for-bit (nearest: round then
-bounds-check, grid.py:830-892; bilinear: split-index bounds, crfuncs.pyx).
+query time; rounding, splitting and validity are decided on *global*
+indices so boundary semantics match the reference kernels bit-for-bit
+(nearest: banker's round then bounds-check, grid.py:830-892; bilinear:
+split-index bounds, crfuncs.pyx; ``kernels.sample_nearest`` /
+``kernels.sample_bilinear`` are the numpy twins the tests compare with).
 """
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-from karta_spark.functions.kernels import _split_index
-from karta_spark.raster.tiles import DEFAULT_TILE
 
 
 def position_exprs(transform, x: Column, y: Column):
@@ -31,6 +33,37 @@ def position_exprs(transform, x: Column, y: Column):
     return i - 0.5, j - 0.5
 
 
+def round_half_even(c: Column) -> Column:
+    """np.round (banker's) to integer as a Catalyst expression.
+
+    Float-algebra form instead of F.bround: Spark's BRound allocates a
+    BigDecimal per row (measured r8: 0.6 s of the 1.0 s q11 aggregate at
+    6M rows); this CASE form is pure double/long codegen.  Exactness: the
+    fraction f = p - floor(p) is computed EXACTLY for every double p —
+    for p >= 0 and for p <= -0.5 by Sterbenz's lemma (floor(p) is within
+    a factor 2 of p), and for p in (-0.5, 0) the true f lies in (0.5, 1)
+    where any representation rounding stays strictly on the same side of
+    0.5 — so the >0.5 / <0.5 / ==0.5 classification, and hence the
+    half-even result, matches BigDecimal rounding of the exact double
+    value on every input (verified exceptAll-equal over the 6M-row q11
+    grid, ties included).
+
+    Null for null, NaN, infinite and beyond-long input: floor() saturates
+    there, so r + 1 would raise under ANSI (and NaN > 0.5 holds in Spark)."""
+    r = F.floor(c)
+    f = c - r
+    return F.when(F.abs(c) < float(2 ** 63),
+                  F.when(f > 0.5, r + 1).when(f < 0.5, r).otherwise(r + F.pmod(r, 2)))
+
+
+def _split_low(v: Column) -> Column:
+    """Lower bilinear neighbor of global position *v* (crfuncs.pyx:49-67,
+    ``kernels._split_index``): floor(v), or v-1 at a nonzero integer v;
+    the upper neighbor is always this plus one."""
+    fl = F.floor(v)
+    return F.when((fl == v) & (v != 0), fl - 1).otherwise(fl)
+
+
 def sample_join(
     points: DataFrame, tiles: DataFrame, transform,
     method: str = "bilinear", px: str = "x", py: str = "y",
@@ -39,15 +72,19 @@ def sample_join(
 ) -> DataFrame:
     """Sample a (single-grid, single-band) tile table at point locations.
 
-    Returns *points* plus ``value_col`` (nodata where outside the grid).
-    The tile size is inferred from the table (max core extent) unless
-    overridden.
+    Returns *points* plus ``value_col``, one row per point: nodata where
+    the sample is off the grid, and SQL NULL wherever the value is NaN
+    (NaN nodata, NaN cells).  The tile size is inferred from the table
+    (max core extent); an explicit *tile* must agree with it.
 
     When *point_crs* differs from *grid_crs* the query coordinates are
     reprojected into the grid's CRS first — pure column math via
     functions.crs — mirroring the reference's ``sample`` CRS transform
     (grid.py:1018-1021: points are converted to the grid CRS before the
     inverse-affine positions lookup)."""
+    if method not in ("bilinear", "linear", "nearest"):
+        raise ValueError(f"unknown sampling method {method!r}")
+    use_bilinear = method in ("bilinear", "linear")  # reference names it 'linear'
     if point_crs is not None and grid_crs is not None:
         from karta_spark.functions import crs as kcrs
         src = kcrs.lookup(point_crs)
@@ -59,89 +96,74 @@ def sample_join(
             out = sample_join(points, tiles, transform, method=method,
                               px="_gx", py="_gy", tile=tile, value_col=value_col)
             return out.drop("_gx", "_gy")
-    meta = tiles.agg(
+    # one task over the scalar columns: a single-stage job, no exchange
+    meta = tiles.coalesce(1).agg(
         F.first("gny").alias("gny"), F.first("gnx").alias("gnx"),
-        F.first("nodata").alias("nodata"),
+        F.first("nodata").alias("nodata"), F.min("halo").alias("halo"),
         F.max("ny").alias("tny"), F.max("nx").alias("tnx"),
         F.count("*").alias("n_tiles")).first()
-    gny, gnx, nodata = int(meta["gny"]), int(meta["gnx"]), float(meta["nodata"])
-    if tile is None:
-        tile = max(int(meta["tny"]), int(meta["tnx"]))
-    # broadcast only when the tile table is genuinely small: a continental
-    # raster must shuffle-join on (_ti, _tj) instead of shipping every
-    # block to every executor
-    est_bytes = int(meta["n_tiles"]) * (int(meta["tny"]) + 2) * (int(meta["tnx"]) + 2) * 8
-    small_enough = est_bytes < 256 * (1 << 20)
+    gny, gnx = int(meta["gny"]), int(meta["gnx"])
+    # tiles_from_cells tables carry their NaN nodata as null
+    nodata = float("nan") if meta["nodata"] is None else float(meta["nodata"])
+    # the keys use the table's own tile size, its largest core extent (a
+    # one-tile table may be smaller than the size it was cut with)
+    size = max(int(meta["tny"]), int(meta["tnx"]))
+    if tile is not None and tile != size and (size < max(gny, gnx) or tile < size):
+        raise ValueError(f"tile={tile} does not match the table's {size}-cell tiles")
+    if int(meta["halo"]) < 1:
+        raise ValueError("sampling needs tiles with a halo of at least one cell")
 
+    # both methods answer every position outside [-1, n] with nodata, so
+    # a null, NaN, infinite or off-grid one becomes -2: the integer math
+    # below then stays small and cannot overflow under ANSI
     i, j = position_exprs(transform, F.col(px), F.col(py))
-    pts = points.withColumn("_i", i).withColumn("_j", j)
-    clamp_i = F.greatest(F.lit(0), F.least(F.lit(gny - 1), F.floor("_i")))
-    clamp_j = F.greatest(F.lit(0), F.least(F.lit(gnx - 1), F.floor("_j")))
-    pts = pts.withColumn("_ti", (clamp_i / tile).cast("int")) \
-             .withColumn("_tj", (clamp_j / tile).cast("int"))
-
+    pts = points.select("*", *(
+        F.when((c >= -1) & (c <= n), c).otherwise(-2.0).alias(name)
+        for c, n, name in ((i, gny, "_i"), (j, gnx, "_j"))))
+    low = _split_low if use_bilinear else round_half_even  # np.round is banker's
+    pts = pts.withColumns({
+        "_r": low(F.col("_i")), "_c": low(F.col("_j")),
+        "_ti": (F.greatest(F.lit(0), F.least(F.lit(gny - 1), F.floor("_i"))) / size).cast("int"),
+        "_tj": (F.greatest(F.lit(0), F.least(F.lit(gnx - 1), F.floor("_j"))) / size).cast("int"),
+    })
     t = tiles.select(
         F.col("tile_i").alias("_ti"), F.col("tile_j").alias("_tj"),
-        "i0", "j0", "ny", "nx", "halo", "block",
+        (F.col("i0") - F.col("halo")).alias("_oi"),
+        (F.col("j0") - F.col("halo")).alias("_oj"),
+        (F.col("nx") + 2 * F.col("halo")).alias("_w"), "block",
     )
-    cand = pts.join(F.broadcast(t) if small_enough else t, ["_ti", "_tj"], "left")
 
-    out_fields = [f"`{f.name}` {f.dataType.simpleString()}" for f in points.schema.fields]
-    out_schema = ", ".join(out_fields + [f"`{value_col}` double"])
-    keep = [f.name for f in points.schema.fields]
-    if method not in ("bilinear", "linear", "nearest"):
-        raise ValueError(f"unknown sampling method {method!r}")
-    use_bilinear = method in ("bilinear", "linear")  # reference names it 'linear'
+    r, c, w = F.col("_r"), F.col("_c"), F.col("_w")
+    at = (r - F.col("_oi")) * w + (c - F.col("_oj"))  # flat index in the halo'd block
+    if use_bilinear:
+        # the kernel's exact product and sum order, weights in float64
+        gi, gj = F.col("_i"), F.col("_j")
+        wi0, wi1, wj0, wj1 = (r + 1) - gi, gi - r, (c + 1) - gj, gj - c
+        val = (F.get("block", at) * wi0 * wj0
+               + F.get("block", at + w) * wi1 * wj0
+               + F.get("block", at + 1) * wi0 * wj1
+               + F.get("block", at + w + 1) * wi1 * wj1)
+        ok = (r >= 0) & (r + 1 < gny) & (c >= 0) & (c + 1 < gnx)
+    else:
+        val = F.get("block", at)
+        ok = (r >= 0) & (r < gny) & (c >= 0) & (c < gnx)
 
-    def kernel(pdf_iter):
-        for pdf in pdf_iter:
-            if len(pdf) == 0:
-                continue
-            pdf = pdf.reset_index(drop=True)
-            vals = np.full(len(pdf), nodata, dtype=np.float64)
-            has_tile = pdf["block"].notna().to_numpy()
-            sub = pdf[has_tile]
-            for (i0, j0), grp in sub.groupby(["i0", "j0"]):
-                r0 = grp.iloc[0]
-                h, ny, nx = int(r0["halo"]), int(r0["ny"]), int(r0["nx"])
-                blk = np.asarray(r0["block"], dtype=np.float64).reshape(ny + 2 * h, nx + 2 * h)
-                gi = grp["_i"].to_numpy(dtype=np.float64)
-                gj = grp["_j"].to_numpy(dtype=np.float64)
-                # round/split on GLOBAL indices (banker's rounding and the
-                # integer split rule are not shift-invariant: a half-integer
-                # shifted by the odd local offset i0-h rounds to the other
-                # neighbor, and global 0 would split to local (0,1) =
-                # global (-1,0) — the NaN halo row); only the final gather
-                # maps global ints to the halo'd block
-                off_i = int(i0) - h
-                off_j = int(j0) - h
-                m, n = blk.shape
-                if use_bilinear:
-                    gi0, gi1 = _split_index(gi)
-                    gj0, gj1 = _split_index(gj)
-                    ok = (gi0 >= 0) & (gi1 < gny) & (gj0 >= 0) & (gj1 < gnx)
-                    i0c = np.clip(gi0 - off_i, 0, m - 1)
-                    i1c = np.clip(gi1 - off_i, 0, m - 1)
-                    j0c = np.clip(gj0 - off_j, 0, n - 1)
-                    j1c = np.clip(gj1 - off_j, 0, n - 1)
-                    got = (
-                        blk[i0c, j0c] * (gi1 - gi) * (gj1 - gj)
-                        + blk[i1c, j0c] * (gi - gi0) * (gj1 - gj)
-                        + blk[i0c, j1c] * (gi1 - gi) * (gj - gj0)
-                        + blk[i1c, j1c] * (gi - gi0) * (gj - gj0)
-                    )
-                else:
-                    ri = np.round(gi).astype(np.int64)
-                    rj = np.round(gj).astype(np.int64)
-                    ok = (ri >= 0) & (ri < gny) & (rj >= 0) & (rj < gnx)
-                    got = blk[np.clip(ri - off_i, 0, m - 1),
-                              np.clip(rj - off_j, 0, n - 1)]
-                vals[grp.index.to_numpy()] = np.where(ok, got, nodata)
-            res = pdf[keep].copy()
-            res[value_col] = vals
-            yield res
+    def no_nan(v):
+        # a NaN sample leaves as SQL NULL; a NaN cell that a tile table
+        # stores as a null element gathers null already
+        return F.nanvl(v, F.lit(None).cast("double")).alias(value_col)
 
-    return cand.mapInPandas(kernel, out_schema)
+    keep = [F.col(f"`{f.name}`") for f in points.schema.fields]
+    out = pts.join(t, ["_ti", "_tj"]).select(
+        *keep, no_nan(F.when(ok, val).otherwise(nodata)))
+    n_ti, n_tj = -(-gny // size), -(-gnx // size)
+    if int(meta["n_tiles"]) < n_ti * n_tj:
+        # a sparse table (tiles_from_cells keeps only tiles with data):
+        # points keyed to an absent tile get nodata; clamped keys always
+        # hit in a dense table, which is therefore scanned once
+        miss = pts.join(t.select("_ti", "_tj"), ["_ti", "_tj"], "left_anti")
+        out = out.unionByName(miss.select(*keep, no_nan(F.lit(nodata))))
+    return out
 
 
 def sample_join_multiband(
@@ -150,8 +172,7 @@ def sample_join_multiband(
     tile: int | None = None, value_prefix: str = "band",
 ) -> DataFrame:
     """Multiband sampling (reference returns a value per band,
-    grid.py:830-969): one sampling join per band on the same point keys —
-    each band's tiles broadcast independently, no cross-band shuffle."""
+    grid.py:830-969): one sampling join per band on the same point keys."""
     bands = sorted(r["band"] for r in tiles.select("band").distinct().collect())
     out = points
     for b in bands:
@@ -179,7 +200,7 @@ def profile(
 
 def resample(
     tiles: DataFrame, transform, shape: tuple, dx: float, dy: float,
-    method: str = "nearest", tile: int = DEFAULT_TILE,
+    method: str = "nearest", tile: int | None = None,
 ):
     """Resample a grid to spacing (dx, dy), origin preserved at cell edge —
     reference grid.py:724-760: new transform
@@ -228,7 +249,7 @@ def resample(
 
 def resample_transform(
     tiles: DataFrame, transform, shape: tuple, t_new,
-    method: str = "nearest", tile: int = DEFAULT_TILE,
+    method: str = "nearest", tile: int | None = None,
 ):
     """Resample the grid onto a NEW transform of the same shape (reference
     grid.py:670-694 _resample_transform): every target pixel center of
@@ -254,7 +275,7 @@ def resample_transform(
 
 def align_origin(
     tiles: DataFrame, transform, shape: tuple, x: float, y: float,
-    method: str = "nearest", tile: int = DEFAULT_TILE,
+    method: str = "nearest", tile: int | None = None,
 ):
     """Snap the transform anchor to an integer multiple of (x, y) and
     resample onto it (reference grid.py:696-722 _align_origin; python

@@ -1,12 +1,16 @@
 """Spark raster tests — goldens from reference tests/grid_tests.py."""
 
+import math
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from karta_spark.functions.kernels import sample_bilinear, sample_nearest
 from karta_spark.raster import algebra, sampling, tiles
 from karta_spark.raster.gridpoints import gridpoints
 from karta_spark.raster.mask import mask_by_poly
+from karta_spark.raster.sampling import round_half_even
 
 T1 = (0.0, 0.0, 1.0, 1.0, 0.0, 0.0)
 
@@ -78,6 +82,184 @@ class TestSampling:
         assert row["max"] == pytest.approx(8.075173545159231)
 
 
+def _bits(v):
+    """Bit pattern of a sample; NaN and NULL (how NaN leaves sample_join)
+    both read None."""
+    return None if v is None or math.isnan(v) else np.float64(v).view(np.int64).item()
+
+
+def assert_samples_match_kernels(spark, grid_df, transform, Z, nodata, rows):
+    """sample_join returns one row per (pid, x, y) point, bit-equal to the
+    numpy kernels on the dense array *Z* for both methods."""
+    pts = spark.createDataFrame(rows, "pid long, x double, y double")
+    x0, y0, dx, dy, _, _ = transform  # unskewed: i = (y - y0)/dy - 0.5
+    xs = np.array([np.nan if r[1] is None else r[1] for r in rows])
+    ys = np.array([np.nan if r[2] is None else r[2] for r in rows])
+    with np.errstate(invalid="ignore", over="ignore"):
+        gi, gj = (ys - y0) / dy - 0.5, (xs - x0) / dx - 0.5
+        for method, kernel in (("bilinear", sample_bilinear), ("nearest", sample_nearest)):
+            got = sampling.sample_join(pts, grid_df, transform, method=method).collect()
+            assert sorted(r["pid"] for r in got) == sorted(r[0] for r in rows)
+            got = {r["pid"]: r["value"] for r in got}
+            want = kernel(gi, gj, Z, nodata)
+            for k, (pid, x, y) in enumerate(rows):
+                assert _bits(got[pid]) == _bits(want[k]), (method, x, y, got[pid], want[k])
+
+
+class TestSampleJoinGlobalIndex:
+    """Rounding and splitting happen on GLOBAL fractional indices.  Tile
+    size 4 with halo 1 makes the local offset odd, which would flip
+    banker's rounding at every half-integer; and global index 0 split
+    locally would hit the NaN halo row."""
+
+    def _tiles(self, spark, Z, tile=4):
+        return tiles.grid_to_df(spark, "g", Z, T1, tile=tile, halo=1)
+
+    def test_matches_full_array_kernels(self, spark):
+        rng = np.random.default_rng(2)
+        Z = rng.uniform(0, 100, size=(8, 8)).round(3)
+        tl = self._tiles(spark, Z)
+        # world coords hitting: exact cell centers (integer global index,
+        # incl. global 0 at the grid edge), half-integers, and interior
+        # fractional positions in tiles with odd local offsets
+        iis = [0.0, 0.5, 1.5, 2.5, 3.5, 4.0, 4.5, 5.5, 6.5, 7.0, 3.0, 6.0]
+        pts_rows = []
+        pid = 0
+        for gi in iis:
+            for gj in iis:
+                # world = forward affine of (index + 0.5) (the -0.5 conv.)
+                pts_rows.append((pid, gj + 0.5, gi + 0.5))
+                pid += 1
+        pts = spark.createDataFrame(pts_rows, "pid long, x double, y double")
+
+        for method, kernel in (("nearest", sample_nearest),
+                               ("bilinear", sample_bilinear)):
+            got = {r["pid"]: r["value"] for r in
+                   sampling.sample_join(pts, tl, T1, method=method).collect()}
+            gi = np.array([r[2] - 0.5 for r in pts_rows])
+            gj = np.array([r[1] - 0.5 for r in pts_rows])
+            want = kernel(gi, gj, Z, float("nan"))
+            for k, r in enumerate(pts_rows):
+                w, g = float(want[k]), got[r[0]]
+                assert (math.isnan(w) and math.isnan(g)) or abs(w - g) < 1e-12, (
+                    f"{method} mismatch at global ({gi[k]},{gj[k]}): {g} != {w}")
+
+    def test_edge_zero_bilinear_not_nan(self, spark):
+        Z = np.arange(64, dtype=np.float64).reshape(8, 8)
+        tl = self._tiles(spark, Z)
+        # global fractional index exactly 0 -> split (0,1), valid edge sample
+        pts = spark.createDataFrame([(0, 0.5, 0.5)], "pid long, x double, y double")
+        got = sampling.sample_join(pts, tl, T1, method="bilinear").collect()[0]["value"]
+        assert not math.isnan(got)
+        assert abs(got - float(sample_bilinear(
+            np.array([0.0]), np.array([0.0]), Z, float("nan"))[0])) < 1e-12
+
+
+class TestSampleJoinEdges:
+    """Bit-equality with the numpy kernels on a 7x9 grid with NaN cells:
+    half-integers, exact 0, both grid edges, and null/NaN/+-inf/huge
+    coordinates (nodata, never an ANSI overflow), over several tilings."""
+
+    Z = np.where(np.isin(np.arange(63).reshape(7, 9), [21, 53]), np.nan,
+                 np.arange(63, dtype=np.float64).reshape(7, 9) * 1.37 - 20.0)
+    COORDS = ([k / 2.0 for k in range(-4, 22)]
+              + [-0.0, 0.25, 3.3, 6.75, 8.75, 1e-300]
+              + [float("nan"), float("inf"), -float("inf"), None, 1e300, -1e300, 1e10, 2e9, -1e9])
+
+    @pytest.mark.parametrize("tile", [2, 3, 16])
+    @pytest.mark.parametrize("nodata", [float("nan"), -9999.0])
+    def test_bit_equal_to_kernels(self, spark, nodata, tile):
+        g = tiles.grid_to_df(spark, "g", self.Z, T1, nodata=nodata, tile=tile)
+        rows = [(k, x, y) for k, (x, y) in enumerate(
+            (x, y) for x in self.COORDS for y in self.COORDS)]
+        assert_samples_match_kernels(spark, g, T1, self.Z, nodata, rows)
+
+    def test_sparse_tables_from_cells_and_resize(self, spark):
+        """tiles_from_cells keeps only tiles with data and stores NaN cells
+        and its NaN nodata as nulls; resize() goes through it too."""
+        rng = np.random.default_rng(11)
+        gny, gnx = 20, 30
+        mask = rng.uniform(size=(gny, gnx)) < 0.6
+        mask[:10, :15] = False  # tiles with no data are absent
+        vals = rng.standard_normal((gny, gnx)).round(4)
+        cdf = spark.createDataFrame(
+            [(int(i), int(j), float(vals[i, j])) for i, j in zip(*np.nonzero(mask))],
+            "cell_i int, cell_j int, value double")
+        sparse = tiles.tiles_from_cells(cdf, T1, (gny, gnx), tile=5)
+        assert sparse.count() < 4 * 6
+        xy = np.vstack([rng.uniform(-1.0, 32.0, (300, 2)),
+                        np.mgrid[0:32:2.5, 0:24:1.5].reshape(2, -1).T])
+        rows = [(k, float(x), float(y)) for k, (x, y) in enumerate(xy)]
+        assert_samples_match_kernels(spark, sparse, T1, np.where(mask, vals, np.nan),
+                                     float("nan"), rows)
+        resized = tiles.resize(sparse, (-3.0, 2.0, 27.0, 25.0), tile=8)
+        Zr, tr, nodata = tiles.df_to_grid(resized)
+        assert Zr.shape == (23, 30) and math.isnan(nodata)
+        assert_samples_match_kernels(spark, resized, tr, Zr, nodata, rows)
+
+
+class TestSampleJoinPlan:
+    def test_catalyst_join_builds_the_point_side(self, spark):
+        """No Python worker anywhere in the plan, and a small point batch
+        against a larger cached tile table is the join's build side."""
+        rng = np.random.default_rng(4)
+        g = tiles.grid_to_df(spark, "g", rng.uniform(0, 1, (128, 128)), T1, tile=16).cache()
+        g.count()
+        # a source with size statistics, as a parquet scan has
+        pts = spark.range(20).select(F.col("id").alias("pid"),
+                                     (F.col("id") * 37 % 128 + 0.3).alias("x"),
+                                     (F.col("id") * 53 % 128 + 0.7).alias("y"))
+        try:
+            for method in ("bilinear", "nearest"):
+                out = sampling.sample_join(pts, g, T1, method=method)
+                assert len(out.collect()) == 20
+                plan = out._jdf.queryExecution().executedPlan().toString()
+                for node in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
+                    assert node not in plan
+                assert "BroadcastHashJoin" in plan
+                assert "BuildLeft" in plan and "BuildRight" not in plan
+        finally:
+            g.unpersist()
+
+    def test_tile_size_and_halo_checked(self, spark):
+        g = tiles.grid_to_df(spark, "g", np.ones((40, 40)), T1, tile=16)
+        pts = spark.createDataFrame([(0, 1.0, 1.0)], "pid long, x double, y double")
+        assert sampling.sample_join(pts, g, T1, tile=16).first()["value"] == 1.0
+        with pytest.raises(ValueError, match="16-cell tiles"):
+            sampling.sample_join(pts, g, T1, tile=256)
+        bare = tiles.grid_to_df(spark, "g", np.ones((40, 40)), T1, tile=16, halo=0)
+        with pytest.raises(ValueError, match="halo"):
+            sampling.sample_join(pts, bare, T1)
+
+
+class TestSampleCrsTransform:
+    def test_points_reprojected_to_grid_crs(self, spark):
+        """reference grid.py:1018-1021: sample() converts query points to
+        the grid CRS before the inverse-affine lookup."""
+        from karta_spark.functions import crs as kcrs
+        rng = np.random.default_rng(3)
+        Z = rng.uniform(0, 10, (8, 8)).round(3)
+        # grid lives in web-mercator meters around (0,0)
+        t = (-40000.0, -40000.0, 10000.0, 10000.0, 0.0, 0.0)
+        g = tiles.grid_to_df(spark, "g", Z, t, tile=8)
+        lons = rng.uniform(-0.3, 0.3, 40)
+        lats = rng.uniform(-0.3, 0.3, 40)
+        pts = spark.createDataFrame(
+            [(i, float(lons[i]), float(lats[i])) for i in range(40)],
+            "pid long, x double, y double")
+        got = {r["pid"]: r["value"] for r in sampling.sample_join(
+            pts, g, t, method="nearest",
+            point_crs="lonlat", grid_crs="webmercator").collect()}
+        # twin: project manually, sample in grid coords
+        mx, my = kcrs.forward_np(kcrs.WEB_MERCATOR, lons, lats)
+        ptsm = spark.createDataFrame(
+            [(i, float(mx[i]), float(my[i])) for i in range(40)],
+            "pid long, x double, y double")
+        want = {r["pid"]: r["value"] for r in sampling.sample_join(
+            ptsm, g, t, method="nearest").collect()}
+        assert got == want and len(got) == 40
+
+
 class TestResample:
     def test_resample_linear_exact(self, spark):
         # grid_tests.py:162-192: linear field exact under resampling
@@ -139,6 +321,24 @@ class TestGridpoints:
         for r in got[:200]:
             want = float(np.mean(acc[(r["cell_i"], r["cell_j"])]))
             assert r["value"] == pytest.approx(want, rel=1e-12)
+
+    def test_non_finite_points_dropped(self, spark):
+        """A NaN/inf/null coordinate neither aborts the job (ANSI overflow)
+        nor lands in a real cell: gridpoints skips the row."""
+        good = [(0.5, 0.5, 1.0), (0.9, 0.9, 3.0), (1.5, 0.5, 7.0), (2.5, 2.5, 4.0)]
+        bad = [(float("nan"), 0.5, 50.0), (0.5, float("nan"), 60.0),
+               (float("inf"), 0.5, 70.0), (0.5, -float("inf"), 80.0),
+               (float("nan"), float("nan"), 90.0), (None, 1.5, 95.0)]
+        schema = "x double, y double, z double"
+        want = gridpoints(spark.createDataFrame(good, schema), T1).collect()
+        got = gridpoints(spark.createDataFrame(good + bad, schema), T1).collect()
+        assert sorted(got) == sorted(want) and len(want) == 3
+
+    def test_round_half_even_null_off_the_long_range(self, spark):
+        vals = [float("nan"), float("inf"), -float("inf"), None, 1e300, -1e19, 2.5, -2.5]
+        df = spark.createDataFrame([(v,) for v in vals], "p double")
+        got = [r[0] for r in df.select(round_half_even(F.col("p"))).collect()]
+        assert got == [None] * 6 + [2, -2]
 
 
 class TestMergeAlgebra:

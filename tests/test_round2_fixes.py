@@ -5,20 +5,14 @@ Each test pins one defect named in VERDICT.md / ADVICE.md round 1:
 - nearest_vertex distributed top-1 plan (no single-task global window)
 - simhash banded blocking recall for max_hamming > 3
 - embedding near-dup via LSH candidates (no all-pairs join)
-- sample_join global-index rounding/splitting at half-integers and edges
 - ngram_jaccard_pairs hot-shingle df cap
 """
-
-import math
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from karta_spark.functions.kernels import sample_bilinear, sample_nearest
 from karta_spark.operators import dedup, knn
-from karta_spark.raster.sampling import sample_join
-from karta_spark.raster.tiles import grid_to_df
 
 
 class TestKnnGuarantee:
@@ -145,58 +139,6 @@ class TestEmbeddingLshNearDup:
         cand = dedup.embedding_near_dup_candidates(
             df, "embedding", "vec_id", dim=dim).count()
         assert cand < n * (n - 1) / 2 / 5  # bucketing prunes >80% of pairs
-
-
-class TestSampleJoinGlobalIndex:
-    """ADVICE round 1 (medium): rounding/splitting must happen on GLOBAL
-    fractional indices.  Tile size 4 with halo 1 makes the local offset odd,
-    flipping banker's rounding at every half-integer; and global index 0
-    split locally hit the NaN halo row."""
-
-    def _tiles(self, spark, Z, tile=4):
-        return grid_to_df(spark, "g", Z, (0.0, 0.0, 1.0, 1.0, 0.0, 0.0),
-                          tile=tile, halo=1)
-
-    def test_matches_full_array_kernels(self, spark):
-        rng = np.random.default_rng(2)
-        Z = rng.uniform(0, 100, size=(8, 8)).round(3)
-        tiles = self._tiles(spark, Z)
-        # world coords hitting: exact cell centers (integer global index,
-        # incl. global 0 at the grid edge), half-integers, and interior
-        # fractional positions in tiles with odd local offsets
-        iis = [0.0, 0.5, 1.5, 2.5, 3.5, 4.0, 4.5, 5.5, 6.5, 7.0, 3.0, 6.0]
-        pts_rows = []
-        pid = 0
-        for gi in iis:
-            for gj in iis:
-                # world = forward affine of (index + 0.5) (the -0.5 conv.)
-                pts_rows.append((pid, gj + 0.5, gi + 0.5))
-                pid += 1
-        pts = spark.createDataFrame(pts_rows, "pid long, x double, y double")
-
-        for method, kernel in (("nearest", sample_nearest),
-                               ("bilinear", sample_bilinear)):
-            got = {r["pid"]: r["value"] for r in
-                   sample_join(pts, tiles, (0.0, 0.0, 1.0, 1.0, 0.0, 0.0),
-                               method=method).collect()}
-            gi = np.array([r[2] - 0.5 for r in pts_rows])
-            gj = np.array([r[1] - 0.5 for r in pts_rows])
-            want = kernel(gi, gj, Z, float("nan"))
-            for k, r in enumerate(pts_rows):
-                w, g = float(want[k]), got[r[0]]
-                assert (math.isnan(w) and math.isnan(g)) or abs(w - g) < 1e-12, (
-                    f"{method} mismatch at global ({gi[k]},{gj[k]}): {g} != {w}")
-
-    def test_edge_zero_bilinear_not_nan(self, spark):
-        Z = np.arange(64, dtype=np.float64).reshape(8, 8)
-        tiles = self._tiles(spark, Z)
-        # global fractional index exactly 0 -> split (0,1), valid edge sample
-        pts = spark.createDataFrame([(0, 0.5, 0.5)], "pid long, x double, y double")
-        got = sample_join(pts, tiles, (0.0, 0.0, 1.0, 1.0, 0.0, 0.0),
-                          method="bilinear").collect()[0]["value"]
-        assert not math.isnan(got)
-        assert abs(got - float(sample_bilinear(
-            np.array([0.0]), np.array([0.0]), Z, float("nan"))[0])) < 1e-12
 
 
 class TestNgramDfCap:
@@ -608,36 +550,6 @@ class TestConnectedComponents:
                                       "id_a long, id_b long")
         comp = {r["id"]: r["comp"] for r in connected_components(pairs).collect()}
         assert set(comp.values()) == {0} and len(comp) == n + 1
-
-
-class TestSampleCrsTransform:
-    def test_points_reprojected_to_grid_crs(self, spark):
-        """reference grid.py:1018-1021: sample() converts query points to
-        the grid CRS before the inverse-affine lookup."""
-        from karta_spark.functions import crs as kcrs
-        from karta_spark.raster.tiles import grid_to_df
-        from karta_spark.raster.sampling import sample_join
-        rng = np.random.default_rng(3)
-        Z = rng.uniform(0, 10, (8, 8)).round(3)
-        # grid lives in web-mercator meters around (0,0)
-        t = (-40000.0, -40000.0, 10000.0, 10000.0, 0.0, 0.0)
-        tiles = grid_to_df(spark, "g", Z, t, tile=8)
-        lons = rng.uniform(-0.3, 0.3, 40)
-        lats = rng.uniform(-0.3, 0.3, 40)
-        pts = spark.createDataFrame(
-            [(i, float(lons[i]), float(lats[i])) for i in range(40)],
-            "pid long, x double, y double")
-        got = {r["pid"]: r["value"] for r in sample_join(
-            pts, tiles, t, method="nearest",
-            point_crs="lonlat", grid_crs="webmercator").collect()}
-        # twin: project manually, sample in grid coords
-        mx, my = kcrs.forward_np(kcrs.WEB_MERCATOR, lons, lats)
-        ptsm = spark.createDataFrame(
-            [(i, float(mx[i]), float(my[i])) for i in range(40)],
-            "pid long, x double, y double")
-        want = {r["pid"]: r["value"] for r in sample_join(
-            ptsm, tiles, t, method="nearest").collect()}
-        assert got == want and len(got) == 40
 
 
 class TestZonalStats:
