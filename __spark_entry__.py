@@ -3200,148 +3200,6 @@ FROM dl ORDER BY doc_id
 """
 
 
-def q84_warc_census(spark, sf_dir):
-    """WARC crawl-archive census (round 6): write the documents table
-    as 8 sharded `.warc.gz` files (per-record gzip members, the
-    splittable layout Common Crawl publishes; fixture built from
-    closed-form payloads — sources/warc.py write_warc), re-read them
-    with the DISTRIBUTED scan (binaryFile: one task per archive file,
-    zero driver bytes; executors gunzip members and parse WARC + HTTP
-    headers locally), and census per record type.
-
-    Value-oracle-exact: every payload is integer closed form (body
-    lengths derive from doc_id), so DuckDB regenerates the per-type
-    record counts, payload-byte sums and HTTP-200 counts — a gzip
-    member, Content-Length, HTTP-split, or record-ordering slip moves
-    a sum and fails the hash gate."""
-    import os
-    import tempfile
-    from karta_spark.sources.warc import (
-        http_response_payload, read_warc_distributed, write_warc,
-    )
-    ids = [int(r["doc_id"])
-           for r in _t(spark, sf_dir, "documents").select("doc_id")
-           .collect()]  # fixture construction: ids only, bounded table
-    root = os.path.join(tempfile.gettempdir(), "karta_q84_warc")
-    os.makedirs(root, exist_ok=True)
-    shards: dict[int, list] = {s: [] for s in range(8)}
-    for d in sorted(ids):
-        body = (f"<html><body>doc {d}:" + "x" * (d % 53)
-                + "</body></html>").encode()
-        text = (f"doc {d}:" + "y" * (d % 31)).encode()
-        shards[d % 8].append(dict(
-            warc_type="response", target_uri=f"https://ex.org/{d}",
-            content_type="application/http; msgtype=response",
-            payload=http_response_payload(body)))
-        shards[d % 8].append(dict(
-            warc_type="conversion", target_uri=f"https://ex.org/{d}",
-            content_type="text/plain", payload=text))
-    for s, recs in shards.items():
-        with open(os.path.join(root, f"part-{s}.warc.gz"), "wb") as f:
-            f.write(write_warc(recs, gzip_members=True))
-    rows = read_warc_distributed(spark, root)
-    return rows.groupBy("warc_type").agg(
-        F.count("*").cast("long").alias("n_records"),
-        F.sum(F.length("payload")).alias("payload_bytes"),
-        F.sum(F.coalesce((F.col("http_status") == 200).cast("long"),
-                         F.lit(0))).alias("n_http_200"))
-
-
-Q84_SQL = """
-WITH d AS (SELECT doc_id AS d FROM documents), per AS (
-  SELECT 'response' AS warc_type,
-         16 + length(CAST(d AS VARCHAR)) + 1 + d % 53 + 14 AS nbytes,
-         1 AS h FROM d
-  UNION ALL
-  SELECT 'conversion',
-         4 + length(CAST(d AS VARCHAR)) + 1 + d % 31, 0 FROM d
-)
-SELECT warc_type, CAST(count(*) AS BIGINT) AS n_records,
-       CAST(sum(nbytes) AS BIGINT) AS payload_bytes,
-       CAST(sum(h) AS BIGINT) AS n_http_200
-FROM per GROUP BY warc_type
-"""
-
-
-def q85_crawl_to_training(spark, sf_dir):
-    """End-to-end crawl -> training-data pipeline (round 6): the full
-    WET-production chain composed from this round's operators — WARC
-    distributed scan (q84 machinery) -> HTTP-200 filter -> HTML-to-text
-    extraction (q79 chain, pure Catalyst) -> C4-rule line dedup (q83,
-    one corpus frequency agg) -> per-bucket census.  Every page plants
-    a boilerplate 'FOLLOW US ON SOCIAL' paragraph that line-dedup must
-    strip corpus-wide while each page's unique content line survives.
-
-    Value-oracle-exact: the fixture payloads are closed form, and
-    DuckDB replays the IDENTICAL extraction + dedup algebra
-    (html_to_text_sql + dedup_lines_sql) over the regenerated pages —
-    a slip in any stage (WARC parse, HTTP split, tag strip, frequency
-    threshold, reassembly) moves sum_chars/sum_tokens and fails the
-    hash gate."""
-    import os
-    import tempfile
-    from karta_spark.operators.text import (
-        dedup_lines, html_to_text, token_count,
-    )
-    from karta_spark.sources.warc import (
-        http_response_payload, read_warc_distributed, write_warc,
-    )
-    ids = [int(r["doc_id"])
-           for r in _t(spark, sf_dir, "documents").select("doc_id")
-           .collect()]  # fixture construction: ids only
-    root = os.path.join(tempfile.gettempdir(), "karta_q85_warc")
-    os.makedirs(root, exist_ok=True)
-    shards: dict[int, list] = {s: [] for s in range(8)}
-    for d in sorted(ids):
-        body = (f"<html><body><p>doc {d}:" + "x" * (d % 53)
-                + "</p><p>FOLLOW US ON SOCIAL</p></body></html>").encode()
-        shards[d % 8].append(dict(
-            warc_type="response", target_uri=f"https://ex.org/p/{d}",
-            content_type="application/http; msgtype=response",
-            payload=http_response_payload(body)))
-    for s, recs in shards.items():
-        with open(os.path.join(root, f"part-{s}.warc.gz"), "wb") as f:
-            f.write(write_warc(recs, gzip_members=True))
-    pages = (read_warc_distributed(spark, root)
-             .where((F.col("warc_type") == "response")
-                    & (F.col("http_status") == 200))
-             .select(F.regexp_extract("target_uri", r"(\d+)$", 1)
-                     .cast("long").alias("doc_id"),
-                     html_to_text(F.decode(F.col("payload"), "UTF-8"))
-                     .alias("text")))
-    cleaned = dedup_lines(pages, max_df=3, hashed=True)
-    return (cleaned.groupBy(F.pmod(F.col("doc_id"), F.lit(4))
-                            .cast("long").alias("bucket"))
-            .agg(F.count("*").cast("long").alias("n_pages"),
-                 F.sum(F.length("text")).alias("sum_chars"),
-                 F.sum(token_count(F.col("text")).cast("long"))
-                 .alias("sum_tokens"),
-                 F.sum("n_lines_removed").alias("n_boilerplate")))
-
-
-def _q85_sql():
-    from karta_spark.operators.text import (
-        dedup_lines_sql, html_to_text_sql,
-    )
-    html = ("('<html><body><p>doc ' || CAST(doc_id AS VARCHAR) || ':' "
-            "|| repeat('x', doc_id % 53) "
-            "|| '</p><p>FOLLOW US ON SOCIAL</p></body></html>')")
-    inner = dedup_lines_sql("pages", max_df=3)
-    return f"""
-WITH pages AS (
-  SELECT doc_id, {html_to_text_sql(html)} AS text FROM documents
-), dl AS ({inner})
-SELECT CAST(doc_id % 4 AS BIGINT) AS bucket,
-       CAST(count(*) AS BIGINT) AS n_pages,
-       CAST(sum(length(text)) AS BIGINT) AS sum_chars,
-       CAST(sum(CASE WHEN length(trim(text)) = 0 THEN 0
-                ELSE len(string_split(trim(text), ' ')) END) AS BIGINT)
-         AS sum_tokens,
-       CAST(sum(n_lines_removed) AS BIGINT) AS n_boilerplate
-FROM dl GROUP BY 1
-"""
-
-
 def q86_webdataset_census(spark, sf_dir):
     """WebDataset shard-ingest census (round 6): write the documents
     table as 6 `.tar` shards in the WebDataset convention (one sample
@@ -4511,132 +4369,6 @@ FROM u GROUP BY codec
 """
 
 
-def q101_pdf_text_census(spark, sf_dir):
-    """PDF text-extraction census (round 7): a crawl corpus is full of
-    PDFs, and a training pipeline needs their text.  Synthesize eight
-    documents with closed-form page/line content, encode half in the
-    classic xref-table layout and half in the PDF 1.5+ layout (object
-    streams + PNG-Up-predicted xref STREAM), extract per-page text
-    DISTRIBUTED (sources/pdf.py pdf_page_text — Arrow-batched
-    mapInPandas, robust err contract), and census characters per doc.
-
-    Value-oracle-exact: the text is a closed form over (doc, page,
-    line), so DuckDB regenerates every line length — any xref, filter,
-    ObjStm, content-tokenizer, or line-assembly slip moves total_chars
-    or the page-weighted checksum and fails the hash gate.  (The
-    reference has no document layer — GDAL reads PDFs as rasters only;
-    this is LLM-pipeline surface like WARC q84 / WebDataset q86.)"""
-    from karta_spark.sources.pdf import encode_pdf, pdf_page_text
-    rows = []
-    for d in range(8):
-        n_pages = (d % 3) + 1
-        pages = []
-        for p in range(n_pages):
-            n_lines = ((d + p) % 4) + 1
-            pages.append("\n".join(
-                f"doc{d} page{p} line{t} " + "x" * ((d * 7 + p * 5 + t * 3) % 11)
-                for t in range(n_lines)))
-        rows.append((d, bytearray(encode_pdf(pages,
-                                             xref_stream=(d % 2 == 1),
-                                             compress=(d % 3 != 0)))))
-    docs = spark.createDataFrame(rows, "doc_id long, content binary")
-    ext = pdf_page_text(docs).where(F.col("err").isNull())
-    nc = F.col("n_chars").cast("long")
-    return (ext.groupBy("doc_id")
-            .agg(F.count("*").cast("long").alias("n_pages"),
-                 F.sum(nc).alias("total_chars"),
-                 F.sum((F.col("page") + 1).cast("long") * nc)
-                  .alias("checksum")))
-
-
-Q101_SQL = """
-WITH docs AS (
-  SELECT i AS d, (i % 3) + 1 AS n_pages FROM range(8) t(i)
-), pages AS (
-  SELECT d, j AS p, ((d + j) % 4) + 1 AS n_lines
-  FROM docs, range(3) s(j) WHERE j < n_pages
-), lines AS (
-  SELECT d, p,
-         length('doc' || d || ' page' || p || ' line' || k || ' ')
-           + (d*7 + p*5 + k*3) % 11 AS len
-  FROM pages, range(4) r(k) WHERE k < n_lines
-), ptext AS (
-  SELECT d, p, sum(len) + count(*) - 1 AS n_chars
-  FROM lines GROUP BY d, p
-)
-SELECT CAST(d AS BIGINT) AS doc_id,
-       CAST(count(*) AS BIGINT) AS n_pages,
-       CAST(sum(n_chars) AS BIGINT) AS total_chars,
-       CAST(sum((p + 1) * n_chars) AS BIGINT) AS checksum
-FROM ptext GROUP BY d
-"""
-
-
-def q102_warc_content_encoding(spark, sf_dir):
-    """WARC HTTP content-decoding census (round 7): real crawls store
-    responses as the server sent them — gzip / deflate / brotli
-    Content-Encoding and chunked Transfer-Encoding.  Synthesize 60
-    responses with closed-form bodies, wrap each in one of five wire
-    shapes (identity, gzip, deflate, br, chunked+gzip), shard into 4
-    `.warc.gz` files, re-read DISTRIBUTED (executors gunzip members,
-    split HTTP, de-chunk and content-decode locally —
-    sources/warc.py decode_http_body), and census per wire shape.
-
-    Value-oracle-exact: body text is a closed form over doc index, so
-    DuckDB regenerates decoded byte counts per encoding — a dechunk,
-    zlib-window, or brotli slip moves payload_bytes and fails the
-    hash gate."""
-    import os
-    import tempfile
-    from karta_spark.sources.warc import (
-        http_response_payload, read_warc_distributed, write_warc,
-    )
-    encs = [("identity", None, False), ("gzip", "gzip", False),
-            ("deflate", "deflate", False), ("br", "br", False),
-            ("chunked_gzip", "gzip", True)]
-    root = os.path.join(tempfile.gettempdir(), "karta_q102_warc")
-    os.makedirs(root, exist_ok=True)
-    shards: dict[int, list] = {s: [] for s in range(4)}
-    for d in range(60):
-        label, ce, ch = encs[d % 5]
-        body = (f"<html><body>doc {d}: " + "z" * ((d * 13) % 97)
-                + "</body></html>").encode()
-        shards[d % 4].append(dict(
-            warc_type="response",
-            target_uri=f"https://ex.org/{label}/{d}",
-            content_type="application/http; msgtype=response",
-            payload=http_response_payload(body, content_encoding=ce,
-                                          chunked=ch)))
-    for s, recs in shards.items():
-        with open(os.path.join(root, f"part-{s}.warc.gz"), "wb") as f:
-            f.write(write_warc(recs, gzip_members=True))
-    rows = read_warc_distributed(spark, root)
-    wire = F.split(F.col("target_uri"), "/").getItem(3)
-    return (rows.groupBy(wire.alias("wire"))
-            .agg(F.count("*").cast("long").alias("n_records"),
-                 F.sum(F.length("payload")).alias("payload_bytes"),
-                 F.sum(F.coalesce(
-                     (F.col("http_status") == 200).cast("long"),
-                     F.lit(0))).alias("n_http_200")))
-
-
-Q102_SQL = """
-WITH d AS (
-  SELECT i,
-         CASE i % 5 WHEN 0 THEN 'identity' WHEN 1 THEN 'gzip'
-                    WHEN 2 THEN 'deflate' WHEN 3 THEN 'br'
-                    ELSE 'chunked_gzip' END AS wire,
-         length('<html><body>doc ' || i || ': ') + (i*13) % 97
-           + length('</body></html>') AS body_len
-  FROM range(60) t(i)
-)
-SELECT wire, CAST(count(*) AS BIGINT) AS n_records,
-       CAST(sum(body_len) AS BIGINT) AS payload_bytes,
-       CAST(count(*) AS BIGINT) AS n_http_200
-FROM d GROUP BY wire
-"""
-
-
 def _q103_defs():
     """The three round-7 projection variants, built from the same
     proj.4 strings on both engines (sources of truth in crs.py):
@@ -4947,67 +4679,6 @@ WHERE d.doc_id % 13 <> 0
 """
 
 
-_Q108_ROBOTS = [
-    # host 0: agent-specific group shadows the catch-all deny
-    ("User-agent: kartabot\nDisallow: /private/\nAllow: /private/ok/\n"
-     "\nUser-agent: *\nDisallow: /\n"),
-    # host 1: wildcard + $ anchor, prefix rule
-    ("User-agent: *\nDisallow: /tmp/*.bin$\nDisallow: /admin\n"),
-    # host 2: no rules at all
-    "",
-]
-
-
-def q108_robots_eval(spark, sf_dir):
-    """robots.txt permission census (round 7): a crawl→training
-    pipeline must honor robots.txt (RFC 9309); sources/robots.py
-    implements group selection (longest agent match, * fallback),
-    longest-rule-match-wins with allow-on-tie, wildcard + $ anchors,
-    and the Arrow-batched (robots, url) evaluator with per-blob parse
-    caching.  60 closed-form URLs across three host rule-sets are
-    evaluated distributed for agent 'kartabot'.
-
-    Value-oracle-exact: every decision is re-derived in DuckDB from
-    the DESIGNED rule semantics (CASE over the url shapes), so a
-    group-selection, longest-match, anchor, or tie-break slip flips
-    an `allowed` and fails the hash gate."""
-    from karta_spark.sources.robots import robots_allowed
-    rows = []
-    for i in range(60):
-        h = i % 3
-        kind = i % 5
-        path = [f"/private/p{i}", f"/private/ok/p{i}", f"/tmp/f{i}.bin",
-                f"/admin/x{i}", f"/page/{i}"][kind]
-        rb = _Q108_ROBOTS[h]
-        rows.append((i, h, rb, path))
-    df = spark.createDataFrame(
-        rows, "url_id long, host long, robots_txt string, url string")
-    out = robots_allowed(df, agent="kartabot")
-    return out.select("url_id", "host", "url", "allowed")
-
-
-Q108_SQL = """
-WITH u AS (
-  SELECT i, i % 3 AS h, i % 5 AS kind,
-         CASE i % 5
-           WHEN 0 THEN '/private/p' || i
-           WHEN 1 THEN '/private/ok/p' || i
-           WHEN 2 THEN '/tmp/f' || i || '.bin'
-           WHEN 3 THEN '/admin/x' || i
-           ELSE '/page/' || i END AS url
-  FROM range(60) t(i)
-)
-SELECT CAST(i AS BIGINT) AS url_id, CAST(h AS BIGINT) AS host, url,
-       CASE
-         WHEN h = 0 THEN kind <> 0        -- kartabot group: only
-                                          -- /private/ (not ok/) denied
-         WHEN h = 1 THEN kind NOT IN (2, 3)  -- *.bin$ and /admin denied
-         ELSE TRUE                        -- empty robots: all allowed
-       END AS allowed
-FROM u
-"""
-
-
 def q109_bpe_roundtrip(spark, sf_dir):
     """BPE tokenizer roundtrip census (round 7): train 60 merges over
     the documents corpus (operators/bpe.py — word counting is the one
@@ -5122,119 +4793,6 @@ SELECT 'img' || lpad(CAST(m.i AS VARCHAR), 12, '0') AS image_id,
              / 1000000.0, 6) AS laplacian_var,
        round(e.entropy, 6) AS entropy
 FROM mom m JOIN lmom lm ON lm.i = m.i JOIN ent e ON e.i = m.i
-"""
-
-
-def q111_sitemap_frontier(spark, sf_dir):
-    """Sitemap frontier census (round 7): the crawl-seed source that
-    pairs with robots.txt (q108) — XML urlsets (one gzipped), a
-    sitemapindex, and a plain-text sitemap, parsed DISTRIBUTED
-    (sources/sitemap.py: binaryFile scan, namespace-agnostic XML,
-    gzip sniff, on_error contract), censused per file kind.
-
-    Value-oracle-exact: entry counts, lastmod coverage, and the
-    priority sum (x100 as BIGINT) are closed form over (file, entry),
-    so DuckDB regenerates them — an XML-namespace, gzip, or
-    text-fallback slip moves a count and fails the hash gate."""
-    import os
-    import tempfile
-    from karta_spark.sources.sitemap import (sitemap_urls_distributed,
-                                             write_sitemap)
-    root = os.path.join(tempfile.gettempdir(), "karta_q111_sitemap")
-    os.makedirs(root, exist_ok=True)
-    for s in range(2):  # two urlsets, the second gzipped
-        urls = [{"loc": f"https://ex.org/s{s}/p{i}",
-                 "lastmod": f"2024-01-{i + 1:02d}" if i % 2 == 0 else None,
-                 "priority": f"0.{(i % 5) + 1}"} for i in range(8 + s)]
-        with open(os.path.join(root, f"map{s}.xml"
-                               + (".gz" if s else "")), "wb") as f:
-            f.write(write_sitemap(urls, compress=bool(s)))
-    with open(os.path.join(root, "index.xml"), "wb") as f:
-        f.write(write_sitemap([f"https://ex.org/shard{k}.xml"
-                               for k in range(5)], index=True))
-    with open(os.path.join(root, "plain.txt"), "wb") as f:
-        f.write(b"".join(f"https://ex.org/t/{i}\n".encode()
-                         for i in range(6)))
-    rows = sitemap_urls_distributed(spark, root)
-    return (rows.groupBy("kind")
-            .agg(F.count("*").cast("long").alias("n_entries"),
-                 F.sum(F.col("lastmod").isNotNull().cast("long"))
-                 .alias("n_lastmod"),
-                 F.coalesce(F.sum(F.round(F.col("priority") * 100, 0)
-                                  .cast("long")), F.lit(0))
-                 .alias("priority_x100")))
-
-
-Q111_SQL = """
-WITH u AS (  -- the two urlsets
-  SELECT s, i, (i % 2 = 0) AS has_lm, ((i % 5) + 1) * 10 AS px100
-  FROM range(2) t(s), range(9) r(i) WHERE i < 8 + s
-)
-SELECT 'urlset' AS kind, CAST(count(*) AS BIGINT) AS n_entries,
-       CAST(sum(has_lm::INT) AS BIGINT) AS n_lastmod,
-       CAST(sum(px100) AS BIGINT) AS priority_x100
-FROM u
-UNION ALL
-SELECT 'sitemapindex', 5, 0, 0
-UNION ALL
-SELECT 'text', 6, 0, 0
-"""
-
-
-def q112_warc_cdx_index(spark, sf_dir):
-    """CDX index build (round 7): the Common Crawl index convention —
-    per-record (offset, length, sha1 digest) rows enabling O(1) range
-    requests into petabyte archives (sources/warc.py warc_cdx, gzip
-    members tracked via decompressobj unused_data).  Four `.warc.gz`
-    shards indexed DISTRIBUTED, then censused per shard with the
-    structural invariants: members start at 0 and TILE the file
-    (min(offset)=0 ∧ Σlength = max(offset+length) ⇒ contiguous), and
-    every record's digest is non-empty.
-
-    DuckDB regenerates counts + pins the invariants TRUE; offsets
-    themselves are compression-dependent, so the tiling booleans (not
-    raw offsets) are the cross-engine contract; digest bytes are
-    pinned against hashlib in tests/test_round7_formats.py."""
-    import os
-    import tempfile
-    from karta_spark.sources.warc import (http_response_payload,
-                                          warc_cdx_distributed,
-                                          write_warc)
-    root = os.path.join(tempfile.gettempdir(), "karta_q112_cdx")
-    os.makedirs(root, exist_ok=True)
-    for s in range(4):
-        recs = [dict(warc_type="response",
-                     target_uri=f"https://ex.org/{s}/{i}",
-                     content_type="application/http; msgtype=response",
-                     payload=http_response_payload(
-                         (f"<html>doc {s}/{i} "
-                          + "y" * ((s * 11 + i * 7) % 41)
-                          + "</html>").encode()))
-                for i in range(6 + s)]
-        with open(os.path.join(root, f"part-{s}.warc.gz"), "wb") as f:
-            f.write(write_warc(recs, gzip_members=True))
-    cdx = warc_cdx_distributed(spark, root)
-    shard = F.regexp_extract(F.col("path"), r"part-(\d+)\.warc\.gz", 1) \
-        .cast("long")
-    span = F.max(F.col("offset") + F.col("length"))
-    return (cdx.groupBy(shard.alias("shard_id"))
-            .agg(F.count("*").cast("long").alias("n_records"),
-                 ((F.min("offset") == 0)
-                  & (F.sum("length") == span)).alias("members_tile_file"),
-                 F.sum((F.length("digest") == 32).cast("long"))
-                 .alias("n_digest_ok"),
-                 F.sum(F.coalesce(
-                     (F.col("http_status") == 200).cast("long"),
-                     F.lit(0))).alias("n_http_200")))
-
-
-Q112_SQL = """
-SELECT CAST(s AS BIGINT) AS shard_id,
-       CAST(6 + s AS BIGINT) AS n_records,
-       TRUE AS members_tile_file,
-       CAST(6 + s AS BIGINT) AS n_digest_ok,
-       CAST(6 + s AS BIGINT) AS n_http_200
-FROM range(4) t(s)
 """
 
 
@@ -5559,49 +5117,6 @@ SELECT 3, 20, (1000 + 1019) * 20 // 2
 """
 
 
-def q119_docx_text_census(spark, sf_dir):
-    """DOCX text-extraction census (round 7): office documents are a
-    steady fraction of any crawl; sources/docx.py walks the OOXML
-    package (stdlib zip + XML: w:p/w:r/w:t runs, w:tab/w:br inline
-    breaks, table rows flattened) with the robust err-row contract.
-    Eight documents with closed-form paragraphs, XML-escapable
-    characters included, extracted DISTRIBUTED and censused per doc.
-
-    Value-oracle-exact: paragraph text is a closed form over (doc,
-    para), so DuckDB regenerates n_chars — an XML-namespace, escape,
-    or run-concatenation slip moves a length and fails the gate."""
-    from karta_spark.sources.docx import docx_text_distributed, encode_docx
-    rows = []
-    for d in range(8):
-        paras = [f"doc {d} para {p} <&> " + "w" * ((d * 5 + p * 3) % 13)
-                 for p in range((d % 4) + 2)]
-        rows.append((d, bytearray(encode_docx(paras))))
-    docs = spark.createDataFrame(rows, "doc_id long, content binary")
-    ext = docx_text_distributed(docs).where(F.col("err").isNull())
-    nc = F.col("n_chars").cast("long")
-    return (ext.groupBy("doc_id")
-            .agg(F.count("*").cast("long").alias("n_paras"),
-                 F.sum(nc).alias("total_chars"),
-                 F.sum((F.col("para") + 1).cast("long") * nc)
-                 .alias("checksum")))
-
-
-Q119_SQL = """
-WITH paras AS (
-  SELECT d, p,
-         length('doc ' || d || ' para ' || p || ' <&> ')
-           + (d*5 + p*3) % 13 AS plen
-  FROM range(8) t(d), range(6) r(p)
-  WHERE p < (d % 4) + 2
-)
-SELECT CAST(d AS BIGINT) AS doc_id,
-       CAST(count(*) AS BIGINT) AS n_paras,
-       CAST(sum(plen) AS BIGINT) AS total_chars,
-       CAST(sum((p + 1) * plen) AS BIGINT) AS checksum
-FROM paras GROUP BY d
-"""
-
-
 def q120_jpeg_quality_estimate(spark, sf_dir):
     """JPEG encoder-quality recovery (round 7): the standard corpus
     quality signal — the IJG quality knob is recoverable from the DQT
@@ -5866,58 +5381,6 @@ FROM scored GROUP BY doc_id
 """
 
 
-def q125_epub_text_census(spark, sf_dir):
-    """EPUB text-extraction census (round 7): ebooks are a major
-    pretraining source; sources/epub.py walks the OPF spine (stdlib
-    zip + XML) and normalizes each XHTML chapter through the SAME
-    html_to_text chain as crawl HTML (q79) — EPUB and web text land in
-    one normal form.  Six books with closed-form chapters extracted
-    distributed, censused per book.
-
-    Value-oracle-exact: chapter paragraph lengths are closed form, so
-    DuckDB regenerates n_chars — a container/OPF/spine-order or
-    HTML-chain slip moves a sum and fails the gate."""
-    from karta_spark.sources.epub import (encode_epub,
-                                          epub_text_distributed)
-    rows = []
-    for b in range(6):
-        chs = []
-        for c in range((b % 3) + 1):
-            paras = "".join(
-                f"<p>book {b} chapter {c} para {p} "
-                + "y" * ((b * 7 + c * 5 + p * 3) % 11 + 1) + "</p>"
-                for p in range((b + c) % 3 + 1))
-            chs.append((f"t{c}", paras))
-        rows.append((b, bytearray(encode_epub(chs))))
-    docs = spark.createDataFrame(rows, "book_id long, content binary")
-    ext = epub_text_distributed(docs).where(F.col("err").isNull())
-    nc = F.col("n_chars").cast("long")
-    return (ext.groupBy("book_id")
-            .agg(F.count("*").cast("long").alias("n_chapters"),
-                 F.sum(nc).alias("total_chars"),
-                 F.sum((F.col("chapter") + 1).cast("long") * nc)
-                 .alias("checksum")))
-
-
-Q125_SQL = """
-WITH paras AS (
-  SELECT b, c, p,
-         length('book ' || b || ' chapter ' || c || ' para ' || p
-                || ' ') + (b*7 + c*5 + p*3) % 11 + 1 AS plen
-  FROM range(6) t(b), range(3) s(c), range(3) r(p)
-  WHERE c < (b % 3) + 1 AND p < (b + c) % 3 + 1
-), chaps AS (
-  SELECT b, c, sum(plen) + count(*) - 1 AS clen
-  FROM paras GROUP BY b, c
-)
-SELECT CAST(b AS BIGINT) AS book_id,
-       CAST(count(*) AS BIGINT) AS n_chapters,
-       CAST(sum(clen) AS BIGINT) AS total_chars,
-       CAST(sum((c + 1) * clen) AS BIGINT) AS checksum
-FROM chaps GROUP BY b
-"""
-
-
 def q126_sentence_segmentation(spark, sf_dir):
     """Sentence segmentation census (round 7): the chunking step
     before sequence packing (q61) — rule-based splitting with
@@ -6109,96 +5572,6 @@ UNION ALL SELECT 4, 300, (0 + 299) * 300 // 2, 2, 'compact'
 """
 
 
-def q130_crawl_to_training_v2(spark, sf_dir):
-    """Crawl→training pipeline v2 (round 7 capstone, the q85 pattern
-    over THIS round's layers): gzip-content-encoded HTML responses in
-    sharded `.warc.gz` → distributed WARC read with HTTP decoding
-    (q102) → main-content boilerplate removal (q113) → sentence
-    segmentation (q126) → BPE trained on the EXTRACTED corpus and
-    round-tripped through Catalyst detokenization (q109).  One gate
-    proving the new layers compose.
-
-    Value-oracle-exact: article paragraphs are closed form (each
-    exactly two sentences), so DuckDB regenerates per-doc content
-    length and sentence count; bpe_roundtrip_ok pins lossless
-    tokenization of the EXTRACTED (not synthetic) text."""
-    import os
-    import tempfile
-    from karta_spark.operators import bpe
-    from karta_spark.operators.text import main_content, sentence_split
-    from karta_spark.sources.warc import (http_response_payload,
-                                          read_warc_distributed,
-                                          write_warc)
-    root = os.path.join(tempfile.gettempdir(), "karta_q130_crawl")
-    os.makedirs(root, exist_ok=True)
-    shards: dict[int, list] = {0: [], 1: []}
-    for d in range(24):
-        paras = []
-        for p in range((d % 3) + 1):
-            body = "word " * (6 + (d + p) % 5)
-            paras.append(f"<p>Doc {d} para {p} has {body}now. "
-                         f"It ends here {p} ok.</p>")
-        html = ("<html><head><script>x=1;</script></head><body>"
-                '<nav><a href="/">Home</a> <a href="/a">About</a> '
-                '<a href="/c">Contact</a></nav>'
-                "<article>" + "".join(paras) + "</article>"
-                '<footer><a href="/t">Terms</a> | '
-                '<a href="/p">Priv</a></footer></body></html>')
-        shards[d % 2].append(dict(
-            warc_type="response",
-            target_uri=f"https://ex.org/d/{d}",
-            content_type="application/http; msgtype=response",
-            payload=http_response_payload(html.encode(),
-                                          content_encoding="gzip")))
-    for s, recs in shards.items():
-        with open(os.path.join(root, f"part-{s}.warc.gz"), "wb") as f:
-            f.write(write_warc(recs, gzip_members=True))
-    rows = read_warc_distributed(spark, root)
-    docs = rows.select(
-        F.regexp_extract("target_uri", r"/d/(\d+)$", 1).cast("long")
-        .alias("doc_id"),
-        F.col("payload").cast("string").alias("html"))
-    content = main_content(docs, "html", "doc_id") \
-        .select(F.col("id").alias("doc_id"), "content",
-                "n_blocks_kept")
-    sents = (sentence_split(content, "content", "doc_id")
-             .groupBy(F.col("id").alias("doc_id"))
-             .agg(F.count("*").cast("long").alias("n_sentences")))
-    merges = bpe.train_bpe(content, "content", n_merges=40)
-    enc = bpe.encode_texts(content, "content", "doc_id", merges) \
-        .withColumnRenamed("id", "doc_id")
-    dec = F.trim(F.regexp_replace(F.array_join("tokens", ""),
-                                  "</w>", " "))
-    norm = F.trim(F.regexp_replace(F.trim(F.col("content")),
-                                   r"\s+", " "))
-    return (content.join(sents, "doc_id").join(enc, "doc_id")
-            .select("doc_id",
-                    F.col("n_blocks_kept").cast("long")
-                    .alias("n_blocks_kept"),
-                    F.length("content").cast("long")
-                    .alias("content_chars"),
-                    "n_sentences",
-                    (dec == norm).alias("bpe_roundtrip_ok")))
-
-
-Q130_SQL = """
-WITH paras AS (
-  SELECT d, p,
-         length('Doc ' || d || ' para ' || p || ' has ')
-           + 5 * (6 + (d + p) % 5)
-           + length('now. It ends here ' || p || ' ok.') AS plen
-  FROM range(24) t(d), range(3) r(p)
-  WHERE p < (d % 3) + 1
-)
-SELECT CAST(d AS BIGINT) AS doc_id,
-       CAST(count(*) AS BIGINT) AS n_blocks_kept,
-       CAST(sum(plen) + count(*) - 1 AS BIGINT) AS content_chars,
-       CAST(2 * count(*) AS BIGINT) AS n_sentences,
-       TRUE AS bpe_roundtrip_ok
-FROM paras GROUP BY d
-"""
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
         "q01_pricing_summary": q01_pricing_summary,
@@ -6284,8 +5657,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q81_g711_audio_census": q81_g711_audio_census,
         "q82_webp_cog_census": q82_webp_cog_census,
         "q83_line_dedup": q83_line_dedup,
-        "q84_warc_census": q84_warc_census,
-        "q85_crawl_to_training": q85_crawl_to_training,
         "q86_webdataset_census": q86_webdataset_census,
         "q87_exif_gps_tiles": q87_exif_gps_tiles,
         "q88_apng_frame_sampling": q88_apng_frame_sampling,
@@ -6301,36 +5672,28 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q98_eqdc_conus": q98_eqdc_conus,
         "q99_multimodal_pipeline_resume": q99_multimodal_pipeline_resume,
         "q100_zstd_lzma_cog_census": q100_zstd_lzma_cog_census,
-        "q101_pdf_text_census": q101_pdf_text_census,
-        "q102_warc_content_encoding": q102_warc_content_encoding,
         "q103_projection_variants": q103_projection_variants,
         "q104_flac_audio_census": q104_flac_audio_census,
         "q105_zipshard_census": q105_zipshard_census,
         "q106_audio_metadata_census": q106_audio_metadata_census,
         "q107_bloom_decontaminate": q107_bloom_decontaminate,
-        "q108_robots_eval": q108_robots_eval,
         "q109_bpe_roundtrip": q109_bpe_roundtrip,
         "q110_image_quality_census": q110_image_quality_census,
-        "q111_sitemap_frontier": q111_sitemap_frontier,
-        "q112_warc_cdx_index": q112_warc_cdx_index,
         "q113_main_content_extraction": q113_main_content_extraction,
         "q114_tile_render_census": q114_tile_render_census,
         "q115_code_language_routing": q115_code_language_routing,
         "q116_pq_adc_topk": q116_pq_adc_topk,
         "q117_simplify_dp": q117_simplify_dp,
         "q118_snapshot_time_travel": q118_snapshot_time_travel,
-        "q119_docx_text_census": q119_docx_text_census,
         "q120_jpeg_quality_estimate": q120_jpeg_quality_estimate,
         "q121_mojibake_repair": q121_mojibake_repair,
         "q122_blocklist_filter": q122_blocklist_filter,
         "q123_semantic_dedup": q123_semantic_dedup,
         "q124_lm_perplexity_filter": q124_lm_perplexity_filter,
-        "q125_epub_text_census": q125_epub_text_census,
         "q126_sentence_segmentation": q126_sentence_segmentation,
         "q127_subtitle_census": q127_subtitle_census,
         "q128_audio_segments": q128_audio_segments,
         "q129_snapshot_compaction": q129_snapshot_compaction,
-        "q130_crawl_to_training_v2": q130_crawl_to_training_v2,
     }
 
 
@@ -6401,8 +5764,6 @@ def oracle_sql() -> dict[str, str]:
         "q81_g711_audio_census": Q81_SQL,
         "q82_webp_cog_census": Q82_SQL,
         "q83_line_dedup": _q83_sql(),
-        "q84_warc_census": Q84_SQL,
-        "q85_crawl_to_training": _q85_sql(),
         "q86_webdataset_census": Q86_SQL,
         "q87_exif_gps_tiles": Q87_SQL,
         "q88_apng_frame_sampling": _q88_sql(),
@@ -6418,36 +5779,28 @@ def oracle_sql() -> dict[str, str]:
         "q98_eqdc_conus": _q98_sql(),
         "q99_multimodal_pipeline_resume": _q99_sql(),
         "q100_zstd_lzma_cog_census": Q100_SQL,
-        "q101_pdf_text_census": Q101_SQL,
-        "q102_warc_content_encoding": Q102_SQL,
         "q103_projection_variants": _q103_sql(),
         "q104_flac_audio_census": Q104_SQL,
         "q105_zipshard_census": Q105_SQL,
         "q106_audio_metadata_census": Q106_SQL,
         "q107_bloom_decontaminate": Q107_SQL,
-        "q108_robots_eval": Q108_SQL,
         "q109_bpe_roundtrip": Q109_SQL,
         "q110_image_quality_census": _q110_sql(),
-        "q111_sitemap_frontier": Q111_SQL,
-        "q112_warc_cdx_index": Q112_SQL,
         "q113_main_content_extraction": Q113_SQL,
         "q114_tile_render_census": _q114_sql(),
         "q115_code_language_routing": _q115_sql(),
         "q116_pq_adc_topk": similarity.pq_adc_sql(k=5, dim=64, m=8),
         "q117_simplify_dp": Q117_SQL,
         "q118_snapshot_time_travel": Q118_SQL,
-        "q119_docx_text_census": Q119_SQL,
         "q120_jpeg_quality_estimate": Q120_SQL,
         "q121_mojibake_repair": Q121_SQL,
         "q122_blocklist_filter": Q122_SQL,
         "q123_semantic_dedup": _q123_sql(),
         "q124_lm_perplexity_filter": Q124_SQL,
-        "q125_epub_text_census": Q125_SQL,
         "q126_sentence_segmentation": Q126_SQL,
         "q127_subtitle_census": Q127_SQL,
         "q128_audio_segments": Q128_SQL,
         "q129_snapshot_compaction": Q129_SQL,
-        "q130_crawl_to_training_v2": Q130_SQL,
         "q18_cosine_topk": Q18_SQL,
         "q19_embedding_neardup": Q19_SQL,
         "q20_events_window": Q20_SQL,

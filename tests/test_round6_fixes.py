@@ -1427,71 +1427,6 @@ class TestDedupLines:
                    for r in got)
 
 
-class TestWarc:
-    """WARC container (round 6): the Common Crawl interchange format."""
-
-    def _recs(self):
-        from karta_spark.sources.warc import http_response_payload
-        return [
-            dict(warc_type="response", target_uri="https://a.ex/1",
-                 content_type="application/http; msgtype=response",
-                 payload=http_response_payload(b"<html>one</html>")),
-            dict(warc_type="conversion", target_uri="https://a.ex/1",
-                 content_type="text/plain", payload=b"one"),
-            dict(warc_type="response", target_uri="https://a.ex/2",
-                 content_type="application/http; msgtype=response",
-                 payload=http_response_payload(b"{}", "application/json",
-                                               status=404)),
-        ]
-
-    @pytest.mark.parametrize("gz", [True, False])
-    def test_roundtrip(self, gz):
-        from karta_spark.sources.warc import parse_warc, write_warc
-        out = parse_warc(write_warc(self._recs(), gzip_members=gz))
-        assert [r["warc_type"] for r in out] == ["response", "conversion",
-                                                 "response"]
-        assert out[0]["http_status"] == 200
-        assert out[0]["http_content_type"] == "text/html"
-        assert out[0]["payload"] == b"<html>one</html>"
-        assert out[1]["http_status"] is None
-        assert out[2]["http_status"] == 404
-
-    def test_binary_payload_with_crlf(self):
-        # payloads containing WARC-looking bytes must not confuse the
-        # parser (Content-Length framing, not scanning)
-        from karta_spark.sources.warc import parse_warc, write_warc
-        evil = b"\r\n\r\nWARC/1.0\r\nWARC-Type: fake\r\n" + bytes(range(256))
-        out = parse_warc(write_warc(
-            [dict(warc_type="resource", payload=evil)]))
-        assert len(out) == 1
-        assert out[0]["payload"] == evil
-
-    def test_truncated_gzip_raises(self):
-        from karta_spark.sources.warc import parse_warc, write_warc
-        data = write_warc(self._recs())
-        with pytest.raises(ValueError):
-            parse_warc(data[:len(data) // 2])
-
-    def test_distributed_scan(self, spark, tmp_path):
-        from karta_spark.sources.warc import (
-            read_warc_distributed, write_warc,
-        )
-        for s in range(3):
-            recs = [dict(warc_type="conversion",
-                         target_uri=f"https://b.ex/{s}/{k}",
-                         payload=f"doc {s}-{k}".encode())
-                    for k in range(4)]
-            (tmp_path / f"p{s}.warc.gz").write_bytes(write_warc(recs))
-        rows = read_warc_distributed(spark, str(tmp_path)).collect()
-        assert len(rows) == 12
-        uris = {r["target_uri"] for r in rows}
-        assert "https://b.ex/2/3" in uris
-        by_file = {}
-        for r in rows:
-            by_file.setdefault(r["path"], []).append(r["record_idx"])
-        assert all(sorted(v) == [0, 1, 2, 3] for v in by_file.values())
-
-
 class TestWebDataset:
     """WebDataset tar shards (round 6): multimodal training's standard
     sample container (key = basename up to the FIRST period)."""
@@ -1967,53 +1902,10 @@ class TestContainerFuzz:
     errors on corrupt input (zlib/tarfile internals never leak), and the
     distributed readers honor on_error='skip'."""
 
-    def test_warc_corrupt_raises_valueerror(self):
-        from karta_spark.sources.warc import parse_warc, write_warc
-        w = bytearray(write_warc(
-            [dict(warc_type="conversion", payload=b"x" * 50)]))
-        w[15] ^= 0xFF
-        with pytest.raises(ValueError):
-            parse_warc(bytes(w))
-
-    def test_warc_fuzz_error_types(self):
-        from karta_spark.sources.warc import parse_warc, write_warc
-        rng = np.random.default_rng(3)
-        base = write_warc([dict(warc_type="conversion",
-                                payload=b"hello world " * 5)])
-        for k in range(120):
-            b = bytearray(base)
-            mode = k % 3
-            if mode == 0:
-                b = b[:int(rng.integers(0, len(b)))]
-            elif mode == 1:
-                for _ in range(3):
-                    b[int(rng.integers(0, len(b)))] ^= 0xFF
-            else:
-                b = bytearray(rng.integers(0, 256, 80, dtype=np.uint8))
-            try:
-                parse_warc(bytes(b))
-            except (ValueError, NotImplementedError):
-                pass  # the contract
-
     def test_wds_corrupt_raises_valueerror(self):
         from karta_spark.sources.webdataset import parse_shard
         with pytest.raises(ValueError):
             parse_shard(b"definitely not a tar" * 40)
-
-    def test_warc_skip_policy(self, spark, tmp_path):
-        from karta_spark.sources.warc import (
-            read_warc_distributed, write_warc,
-        )
-        good = write_warc([dict(warc_type="conversion",
-                                target_uri="https://ok.ex/1",
-                                payload=b"fine")])
-        (tmp_path / "good.warc.gz").write_bytes(good)
-        bad = bytearray(good)
-        bad[12] ^= 0xFF
-        (tmp_path / "bad.warc.gz").write_bytes(bytes(bad))
-        rows = read_warc_distributed(spark, str(tmp_path),
-                                     on_error="skip").collect()
-        assert [r["target_uri"] for r in rows] == ["https://ok.ex/1"]
 
     def test_wds_skip_policy(self, spark, tmp_path):
         from karta_spark.sources.webdataset import (

@@ -92,181 +92,6 @@ class TestTiffZstdLzma:
         assert int(got) == int(Z.astype(np.int64).sum())
 
 
-class TestPdf:
-    """PDF text extraction (sources/pdf.py) — both xref layouts, the
-    filter chain, ToUnicode CMaps, and the malformed-input contract."""
-
-    PAGES = ["hello world\nsecond line", "page two (with) \\ specials"]
-
-    @pytest.mark.parametrize("xref_stream", [False, True])
-    @pytest.mark.parametrize("compress", [False, True])
-    def test_roundtrip(self, xref_stream, compress):
-        from karta_spark.sources.pdf import encode_pdf, extract_text
-        d = encode_pdf(self.PAGES, xref_stream=xref_stream,
-                       compress=compress)
-        assert extract_text(d) == self.PAGES
-
-    def test_many_pages_large_offsets(self):
-        from karta_spark.sources.pdf import encode_pdf, extract_text
-        big = [f"page {i}\n" + "x" * 200 for i in range(40)]
-        assert extract_text(encode_pdf(big, xref_stream=True)) == big
-        assert extract_text(encode_pdf(big, xref_stream=False)) == big
-
-    def test_malformed_raises_valueerror(self):
-        from karta_spark.sources.pdf import encode_pdf, extract_text
-        with pytest.raises(ValueError):
-            extract_text(b"not a pdf at all")
-        good = encode_pdf(["x"])
-        with pytest.raises(ValueError):
-            extract_text(good[:60])  # truncated mid-structure
-        with pytest.raises(ValueError):
-            extract_text(good.replace(b"startxref", b"startxre_"))
-
-    def test_filters_asciihex_ascii85(self):
-        from karta_spark.sources.pdf import _apply_filters, _Name
-        raw = b"training data pipeline"
-        import binascii, base64
-        hx = binascii.hexlify(raw) + b">"
-        assert _apply_filters(hx, _Name("ASCIIHexDecode"), None) == raw
-        a85 = base64.a85encode(raw) + b"~>"
-        assert _apply_filters(a85, _Name("ASCII85Decode"), None) == raw
-
-    def test_filter_chain_with_predictor(self):
-        # Flate + PNG Up predictor — the xref-stream DecodeParms shape
-        import zlib
-        from karta_spark.sources.pdf import _apply_filters, _Name
-        rows = [bytes([1, 2, 3, 4]), bytes([5, 6, 7, 8])]
-        pred = bytearray()
-        prev = bytes(4)
-        for r in rows:
-            pred.append(2)
-            pred.extend((r[i] - prev[i]) & 0xFF for i in range(4))
-            prev = r
-        got = _apply_filters(zlib.compress(bytes(pred)),
-                             _Name("FlateDecode"),
-                             {"Predictor": 12, "Columns": 4})
-        assert got == b"".join(rows)
-
-    def test_tounicode_cmap(self):
-        from karta_spark.sources.pdf import parse_tounicode, \
-            _decode_text_string
-        cmap = (b"/CIDInit /ProcSet findresource begin\n"
-                b"1 begincodespacerange <0000> <FFFF> endcodespacerange\n"
-                b"2 beginbfchar <0041> <0048> <0042> <0069> endbfchar\n"
-                b"1 beginbfrange <0050> <0052> <0061> endbfrange\n"
-                b"endcmap end")
-        width, table = parse_tounicode(cmap)
-        assert width == 2
-        # bfchar: 0x41->H 0x42->i ; bfrange: 0x50..0x52 -> a,b,c
-        got = _decode_text_string(b"\x00\x41\x00\x42\x00\x50\x00\x52",
-                                  (width, table))
-        assert got == "Hiac"
-
-    def test_tj_kerning_space_heuristic(self):
-        from karta_spark.sources.pdf import extract_content_text
-        content = (b"BT /F1 12 Tf 72 720 Td "
-                   b"[(Hel) -20 (lo) -250 (world)] TJ ET")
-        assert extract_content_text(content) == "Hello world"
-
-    def test_inline_image_skipped(self):
-        from karta_spark.sources.pdf import extract_content_text
-        content = (b"BT (before) Tj ET "
-                   b"BI /W 2 /H 2 ID \x00\xff(\xde\xad EI "
-                   b"BT 0 -14 Td (after) Tj ET")
-        assert extract_content_text(content) == "before\nafter"
-
-    def test_incremental_update_prev_chain(self):
-        """Appended update section overriding page 1's content: the
-        newest xref wins, /Prev still resolves the untouched objects."""
-        from karta_spark.sources.pdf import encode_pdf, extract_text
-        base = encode_pdf(["old text", "keep me"], compress=False)
-        startxref_old = int(base.rsplit(b"startxref", 1)[1].split()[0])
-        upd = bytearray(base)
-        new_body = b"BT /F1 12 Tf 72 720 Td (new text) Tj ET"
-        off = len(upd)
-        upd += (b"4 0 obj\n<< /Length %d >>\nstream\n" % len(new_body)
-                + new_body + b"\nendstream\nendobj\n")
-        xoff = len(upd)
-        upd += b"xref\n4 1\n%010d 00000 n \ntrailer\n" % off
-        upd += (b"<< /Size 8 /Root 1 0 R /Prev %d >>\nstartxref\n%d\n%%%%EOF\n"
-                % (startxref_old, xoff))
-        assert extract_text(bytes(upd)) == ["new text", "keep me"]
-
-    def test_distributed_pdf_page_text(self, spark):
-        from karta_spark.sources.pdf import encode_pdf, pdf_page_text
-        rows = []
-        for d in range(4):
-            pages = [f"doc{d} page{p}" for p in range((d % 2) + 1)]
-            rows.append((d, bytearray(encode_pdf(pages,
-                                                 xref_stream=d % 2 == 1))))
-        rows.append((99, bytearray(b"%PDF-1.4 broken")))
-        df = spark.createDataFrame(rows, "doc_id long, content binary")
-        out = pdf_page_text(df).toPandas().sort_values(
-            ["doc_id", "page"]).reset_index(drop=True)
-        good = out[out["err"].isnull()]
-        bad = out[out["err"].notnull()]
-        assert len(good) == 1 + 2 + 1 + 2
-        assert list(bad["doc_id"]) == [99] and list(bad["page"]) == [-1]
-        assert good.iloc[0]["text"] == "doc0 page0"
-
-
-class TestWarcContentEncoding:
-    """HTTP payload decoding in the WARC path: chunked transfer coding
-    and gzip/deflate/br content encodings (what real crawls store)."""
-
-    BODY = ("<html><body>" + "payload text " * 20 + "</body></html>"
-            ).encode()
-
-    def _one(self, **kw):
-        from karta_spark.sources.warc import (http_response_payload,
-                                              parse_warc, write_warc)
-        payload = http_response_payload(self.BODY, **kw)
-        blob = write_warc([{"warc_type": "response",
-                            "target_uri": "http://x.example/",
-                            "payload": payload}])
-        recs = parse_warc(blob)
-        assert len(recs) == 1
-        return recs[0]
-
-    @pytest.mark.parametrize("enc", ["gzip", "deflate", "br"])
-    def test_content_encoding_decoded(self, enc):
-        r = self._one(content_encoding=enc)
-        assert r["payload"] == self.BODY
-
-    def test_chunked(self):
-        r = self._one(chunked=True)
-        assert r["payload"] == self.BODY
-
-    def test_chunked_plus_gzip(self):
-        r = self._one(content_encoding="gzip", chunked=True)
-        assert r["payload"] == self.BODY
-
-    def test_raw_deflate_fallback(self):
-        # wild servers send raw-deflate under "deflate"
-        import zlib
-        from karta_spark.sources.warc import decode_http_body
-        co = zlib.compressobj(6, zlib.DEFLATED, -15)
-        raw = co.compress(self.BODY) + co.flush()
-        assert decode_http_body(raw, "deflate") == self.BODY
-
-    def test_bad_encoding_keeps_raw_bytes(self):
-        # corrupt gzip body: parse_warc must keep the raw bytes, not die
-        from karta_spark.sources.warc import (http_response_payload,
-                                              parse_warc, write_warc)
-        payload = http_response_payload(self.BODY, content_encoding="gzip")
-        payload = payload.replace(b"\x1f\x8b", b"\x00\x00", 1)
-        blob = write_warc([{"warc_type": "response",
-                            "target_uri": "http://x.example/",
-                            "payload": payload}])
-        r = parse_warc(blob)[0]
-        assert r["payload"].startswith(b"\x00\x00")  # surfaced as-is
-
-    def test_bad_chunk_framing_raises_in_decode(self):
-        from karta_spark.sources.warc import decode_http_body
-        with pytest.raises(ValueError):
-            decode_http_body(b"zz\r\nnot hex\r\n", None, "chunked")
-
-
 class TestFlac:
     """FLAC codec (sources/flac.py): encoder/decoder roundtrips plus
     hand-built frames for the decode paths the fixture encoder does
@@ -602,30 +427,6 @@ class TestAudioMeta:
             ogg_meta(og[:50])
 
 
-class TestWarcZstd:
-    def test_zstd_members_roundtrip(self):
-        from karta_spark.sources.warc import parse_warc, write_warc
-        recs = [{"warc_type": "conversion",
-                 "target_uri": f"https://x.example/{i}",
-                 "payload": f"doc {i} ".encode() * 10} for i in range(5)]
-        blob = write_warc(recs, compression="zstd")
-        assert blob[:4] == b"\x28\xb5\x2f\xfd"  # zstd frame magic
-        out = parse_warc(blob)
-        assert len(out) == 5
-        assert out[3]["payload"] == recs[3]["payload"]
-
-    def test_corrupt_zstd_raises(self):
-        from karta_spark.sources.warc import parse_warc, write_warc
-        blob = write_warc([{"payload": b"x" * 100}], compression="zstd")
-        with pytest.raises(ValueError):
-            parse_warc(blob[:10])
-
-    def test_dictionary_frame_rejected(self):
-        from karta_spark.sources.warc import parse_warc
-        with pytest.raises(ValueError, match="dictionary"):
-            parse_warc(b"\x50\x2a\x4d\x18\x04\x00\x00\x00dict" + b"\x00" * 8)
-
-
 class TestBloomDecontaminate:
     """Bloom-filter decontamination (operators/text.py): the
     constant-size scale path must equal the exact gram semi-join."""
@@ -666,67 +467,6 @@ class TestBloomDecontaminate:
         bs = build_gram_bloom(bench, "text", n=5, m_bits=1 << 16)
         assert bs.nbytes == (1 << 16) // 8
         assert bs.sum() > 0  # bits actually set
-
-
-class TestRobots:
-    """robots.txt evaluation (sources/robots.py, RFC 9309 + the
-    wildcard/$ extensions both major engines ship)."""
-
-    R = ("# example\n"
-         "User-agent: kartabot\n"
-         "User-agent: otherbot\n"
-         "Disallow: /private/\n"
-         "Allow: /private/ok/\n"
-         "Disallow: /tmp/*.bin$\n"
-         "Crawl-delay: 2.5\n"
-         "\n"
-         "User-agent: *\n"
-         "Disallow: /admin\n"
-         "Allow:\n"
-         "\n"
-         "Sitemap: https://x.example/sitemap.xml\n")
-
-    @pytest.mark.parametrize("agent,url,want", [
-        ("kartabot", "/private/x", False),
-        ("kartabot", "/private/ok/page", True),  # longer Allow wins
-        ("kartabot", "/public", True),           # no rule -> allowed
-        ("kartabot", "/tmp/a.bin", False),       # wildcard + $ anchor
-        ("kartabot", "/tmp/a.bin.txt", True),    # $ must anchor
-        ("unknown", "/admin/x", False),          # falls to * group
-        ("unknown", "/other", True),
-        ("kartabot", "https://h.example/private/z?q=1", False),
-    ])
-    def test_decisions(self, agent, url, want):
-        from karta_spark.sources.robots import is_allowed
-        assert is_allowed(self.R, agent, url) is want
-
-    def test_group_selection_longest_match_and_delay(self):
-        from karta_spark.sources.robots import (crawl_delay,
-                                                parse_robots,
-                                                select_group)
-        p = parse_robots(self.R)
-        assert select_group(p, "KartaBot/1.0")["agents"] == \
-            ["kartabot", "otherbot"]
-        assert crawl_delay(self.R, "kartabot") == 2.5
-        assert crawl_delay(self.R, "unknown") is None
-        assert p["sitemaps"] == ["https://x.example/sitemap.xml"]
-
-    def test_tie_goes_to_allow_and_empty_disallow(self):
-        from karta_spark.sources.robots import is_allowed
-        r = "User-agent: *\nDisallow: /x\nAllow: /x"
-        assert is_allowed(r, "any", "/x/page") is True
-        assert is_allowed("User-agent: *\nDisallow:", "a", "/any") is True
-        assert is_allowed("", "a", "/any") is True  # no groups -> allowed
-
-    def test_distributed_eval(self, spark):
-        from karta_spark.sources.robots import robots_allowed
-        rows = [(i, self.R, f"/private/p{i}" if i % 2 else "/ok")
-                for i in range(20)]
-        df = spark.createDataFrame(
-            rows, "url_id long, robots_txt string, url string")
-        out = robots_allowed(df, agent="kartabot").toPandas()
-        assert (out[out.url_id % 2 == 1]["allowed"] == False).all()  # noqa: E712
-        assert (out[out.url_id % 2 == 0]["allowed"] == True).all()   # noqa: E712
 
 
 class TestBpe:
@@ -830,82 +570,6 @@ class TestImageQualityStats:
         assert out.loc["flat", "laplacian_var"] == 0.0
         assert out.loc["noisy", "laplacian_var"] > 100.0
         assert out.loc["flat", "entropy"] == 0.0
-
-
-class TestSitemap:
-    def test_urlset_roundtrip_gz(self):
-        from karta_spark.sources.sitemap import (parse_sitemap,
-                                                 write_sitemap)
-        sm = write_sitemap(
-            [{"loc": "https://a/1", "lastmod": "2024-01-02",
-              "priority": "0.8", "changefreq": "daily"},
-             "https://a/2"], compress=True)
-        p = parse_sitemap(sm)
-        assert p["kind"] == "urlset" and len(p["entries"]) == 2
-        e0 = p["entries"][0]
-        assert e0["priority"] == 0.8 and e0["changefreq"] == "daily"
-        assert e0["lastmod"] == "2024-01-02"
-
-    def test_index_text_and_malformed(self):
-        from karta_spark.sources.sitemap import (parse_sitemap,
-                                                 write_sitemap)
-        idx = write_sitemap(["https://a/s1.xml"], index=True)
-        assert parse_sitemap(idx)["kind"] == "sitemapindex"
-        t = parse_sitemap(b"https://a/x\nhttps://a/y\njunk line\n")
-        assert t["kind"] == "text" and len(t["entries"]) == 2
-        for bad in (b"<html><body>x</body></html>", b"\x1f\x8bnope",
-                    b"just words no urls"):
-            with pytest.raises(ValueError):
-                parse_sitemap(bad)
-
-    def test_namespace_prefixed_tags(self):
-        from karta_spark.sources.sitemap import parse_sitemap
-        xml = (b'<?xml version="1.0"?>'
-               b'<sm:urlset xmlns:sm="http://www.sitemaps.org/schemas/'
-               b'sitemap/0.9"><sm:url><sm:loc>https://a/p</sm:loc>'
-               b'</sm:url></sm:urlset>')
-        p = parse_sitemap(xml)
-        assert p["entries"][0]["loc"] == "https://a/p"
-
-
-class TestWarcCdx:
-    def _recs(self):
-        return [{"warc_type": "conversion",
-                 "target_uri": f"https://x/{i}",
-                 "payload": f"body {i} ".encode() * (3 + i)}
-                for i in range(5)]
-
-    @pytest.mark.parametrize("gz", [True, False])
-    def test_offsets_tile_file_and_digest(self, gz):
-        import base64
-        import hashlib
-        from karta_spark.sources.warc import warc_cdx, write_warc
-        recs = self._recs()
-        blob = write_warc(recs, gzip_members=gz)
-        cdx = warc_cdx(blob)
-        assert [r["offset"] for r in cdx] == sorted(
-            r["offset"] for r in cdx)
-        assert cdx[0]["offset"] == 0
-        assert sum(r["length"] for r in cdx) == len(blob)
-        want = base64.b32encode(
-            hashlib.sha1(recs[2]["payload"]).digest()).decode()
-        assert cdx[2]["digest"] == want
-
-    def test_range_request_slice_parses(self):
-        # THE point of a CDX index: a member slice is independently
-        # parseable (range requests into a petabyte archive)
-        from karta_spark.sources.warc import (parse_warc, warc_cdx,
-                                              write_warc)
-        blob = write_warc(self._recs())
-        r = warc_cdx(blob)[3]
-        one = parse_warc(blob[r["offset"]:r["offset"] + r["length"]])
-        assert one[0]["target_uri"] == "https://x/3"
-
-    def test_corrupt_raises(self):
-        from karta_spark.sources.warc import warc_cdx, write_warc
-        blob = write_warc(self._recs())
-        with pytest.raises(ValueError):
-            warc_cdx(blob[:25])
 
 
 class TestMainContent:
@@ -1222,68 +886,6 @@ class TestSnapshotTable:
             t.manifest(9)
 
 
-class TestDocx:
-    """DOCX text extraction (sources/docx.py)."""
-
-    def test_roundtrip_with_escapes(self):
-        from karta_spark.sources.docx import docx_text, encode_docx
-        paras = ["Title paragraph", "Body with <angle> & amp",
-                 "tab\there"]
-        assert docx_text(encode_docx(paras)) == paras
-
-    def test_tables_flatten_to_rows(self):
-        import io
-        import zipfile
-        from karta_spark.sources.docx import docx_text
-        W = ('xmlns:w="http://schemas.openxmlformats.org/'
-             'wordprocessingml/2006/main"')
-        doc = (f"<w:document {W}><w:body>"
-               "<w:p><w:r><w:t>before</w:t></w:r></w:p>"
-               "<w:tbl><w:tr>"
-               "<w:tc><w:p><w:r><w:t>a1</w:t></w:r></w:p></w:tc>"
-               "<w:tc><w:p><w:r><w:t>b1</w:t></w:r></w:p></w:tc>"
-               "</w:tr></w:tbl>"
-               "<w:p><w:r><w:t>after</w:t></w:r></w:p>"
-               "</w:body></w:document>")
-        buf = io.BytesIO()
-        with zipfile.ZipFile(buf, "w") as zf:
-            zf.writestr("word/document.xml", doc)
-        assert docx_text(buf.getvalue()) == ["before", "a1\tb1", "after"]
-
-    def test_split_runs_concatenate(self):
-        import io
-        import zipfile
-        from karta_spark.sources.docx import docx_text
-        W = ('xmlns:w="http://schemas.openxmlformats.org/'
-             'wordprocessingml/2006/main"')
-        doc = (f"<w:document {W}><w:body><w:p>"
-               "<w:r><w:t>Hel</w:t></w:r><w:r><w:t>lo </w:t></w:r>"
-               "<w:r><w:t>world</w:t></w:r>"
-               "</w:p></w:body></w:document>")
-        buf = io.BytesIO()
-        with zipfile.ZipFile(buf, "w") as zf:
-            zf.writestr("word/document.xml", doc)
-        assert docx_text(buf.getvalue()) == ["Hello world"]
-
-    def test_malformed_raises(self):
-        from karta_spark.sources.docx import docx_text, encode_docx
-        for bad in (b"PK\x03\x04junk", b"not a zip",
-                    encode_docx(["x"])[:40]):
-            with pytest.raises(ValueError):
-                docx_text(bad)
-
-    def test_distributed_err_contract(self, spark):
-        from karta_spark.sources.docx import (docx_text_distributed,
-                                              encode_docx)
-        rows = [(0, bytearray(encode_docx(["a", "bb"]))),
-                (1, bytearray(b"broken"))]
-        df = spark.createDataFrame(rows, "doc_id long, content binary")
-        out = docx_text_distributed(df).toPandas()
-        good = out[out["err"].isnull()]
-        assert len(good) == 2 and set(good["text"]) == {"a", "bb"}
-        assert (out[out["err"].notnull()]["doc_id"] == 1).all()
-
-
 class TestJpegQualityEstimate:
     def test_recovers_ijg_quality_exactly(self):
         import numpy as np
@@ -1507,41 +1109,6 @@ class TestCharLmPerplexity:
         r = lm_nll(probe, "text", "doc_id", model, default).collect()[0]
         assert r["n_grams"] == 2
         assert abs(r["nll"] - (-default / 1e6)) < 1e-6
-
-
-class TestEpub:
-    def test_roundtrip_spine_order(self):
-        from karta_spark.sources.epub import encode_epub, epub_chapters
-        chs = [("One", "<p>First chapter text.</p>"
-                       "<p>Second para &amp; more.</p>"),
-               ("Two", "<h1>Head</h1><p>Body of chapter two.</p>")]
-        out = epub_chapters(encode_epub(chs))
-        assert [h for h, _ in out] == ["ch000.xhtml", "ch001.xhtml"]
-        assert out[0][1] == "First chapter text.\nSecond para & more."
-        assert out[1][1] == "Head\nBody of chapter two."
-
-    def test_head_title_not_duplicated(self):
-        from karta_spark.sources.epub import encode_epub, epub_chapters
-        out = epub_chapters(encode_epub([("TITLE", "<p>body only</p>")]))
-        assert out[0][1] == "body only"
-
-    def test_malformed_raises(self):
-        from karta_spark.sources.epub import encode_epub, epub_chapters
-        good = encode_epub([("t", "<p>x</p>")])
-        for bad in (b"PK\x03\x04junk", b"nope", good[:60]):
-            with pytest.raises(ValueError):
-                epub_chapters(bad)
-
-    def test_distributed_err_contract(self, spark):
-        from karta_spark.sources.epub import (encode_epub,
-                                              epub_text_distributed)
-        rows = [(0, bytearray(encode_epub([("a", "<p>hello there</p>")]))),
-                (1, bytearray(b"broken"))]
-        df = spark.createDataFrame(rows, "book_id long, content binary")
-        out = epub_text_distributed(df).toPandas()
-        good = out[out["err"].isnull()]
-        assert list(good["text"]) == ["hello there"]
-        assert (out[out["err"].notnull()]["book_id"] == 1).all()
 
 
 class TestSentenceSplit:

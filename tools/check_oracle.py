@@ -4,6 +4,9 @@ schema shape, and order-insensitive values.
 
 Usage: python tools/check_oracle.py [--json OUT.json] [sf_dir] [query ...]
 
+A query name that queries() does not define exits with status 2 before
+Spark starts, so a typo cannot pass with nothing checked.
+
 --json writes a per-query record (status/rows/secs) — used to commit the
 round's replica artifact (CORRECTNESS_local_rNN.json) so the gates past
 the driver's 50-row snapshot leave a recorded trail.
@@ -11,6 +14,7 @@ the driver's 50-row snapshot leave a recorded trail.
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
@@ -18,7 +22,8 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from karta_spark.session import get_spark  # noqa: E402
 import __spark_entry__ as entrymod  # noqa: E402
@@ -76,13 +81,17 @@ def main():
         argv = argv[2:]
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
     only = set(argv[1:])
+    qs = entrymod.queries()
+    unknown = sorted(only - qs.keys())
+    if unknown:
+        print(f"unknown query name(s): {' '.join(unknown)}", file=sys.stderr)
+        sys.exit(2)
     records: dict[str, dict] = {}
     spark = get_spark("oracle-check")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
 
-    qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     ok = fail = weak = 0
     for name, fn in qs.items():

@@ -1,5 +1,6 @@
-import sys, io, re
-sys.path.insert(0, "/root/repo")
+import sys, io, os, re
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 from contextlib import redirect_stdout
 from karta_spark.session import get_spark
 from pyspark.sql import functions as F
@@ -122,7 +123,7 @@ sections.append(("q62 token-budget mixture (bucketed two-pass: windowless "
                  "bulk + boundary-bucket sliver window)",
                  plan_of(m.q62_token_budget_mixture(spark, sf), 40)))
 
-with open("/root/repo/PLANS.md", "w") as f:
+with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
     f.write("""# PLANS — physical plan review (.explain) of the headline operators
 
 Generated against sf0.01 on local[8] (`python tools/gen_plans.py` regenerates).
