@@ -4046,8 +4046,8 @@ FROM proj
 
 def q99_multimodal_pipeline_resume(spark, sf_dir):
     """End-to-end multimodal pipeline with lineage checkpoints (round
-    7): the image twin of q85's crawl chain, composing this repo's
-    multimodal operators through plans/lineage.resume_or_run so every
+    7), composing this repo's multimodal operators through
+    plans/lineage.resume_or_run so every
     stage checkpoints with per-partition lineage and a killed job
     resumes stage-granular (north rule; stage-resume behavior pinned by
     tests/test_pipeline_resume.py).

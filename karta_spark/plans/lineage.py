@@ -9,17 +9,24 @@ catalog via ``spark.table``):
 
     <root>/<stage>/data/           partitioned parquet, bucketable by cell_id
     <root>/<stage>/_lineage/       (stage, part_id, row_count, wall_ms,
-                                    finished_at) one row per input partition
+                                    finished_at) one row per partition that
+                                    committed a file in the last write
     <root>/<stage>/_SUCCESS_STAGE  stage-complete marker
 
-``run_stage`` computes per-partition metrics *in the same pass* as the data
-write: the mapInPandas auditor counts rows/latency per physical partition
-and ships them to the driver through a Spark **accumulator** (cluster-safe —
-accumulator updates ride task-completion RPCs, unlike executor-local side
-files which land on each worker's own disk and are invisible to the
-driver).  The driver then writes the lineage parquet in one tiny job.
-Speculative/retried tasks can double-report; lineage keeps the first report
-per partition id.
+``run_stage`` checkpoints with a plain ``df.write.parquet`` — no Python runs
+in the write — and counts rows from committed footers: the driver lists the
+data files this write added (a before/after diff, so ``mode="append"`` and
+``partition_by`` work), takes ``part_id`` from the ``part-NNNNN-`` file name
+(the writing task's partition id) and ``row_count`` from the parquet footers,
+summed per part id.  Only committed task attempts leave files, so retried and
+speculative tasks cannot double-count and nothing has to be polled: the
+counts are exact.  ``wall_ms`` is measured from the write's start to the
+file's commit, read as the file's modification time, which is also
+``finished_at`` (the latest one when a task wrote several files).  A
+partition that wrote no file (Spark skips empty tasks other than partition
+0) gets no lineage row.  The driver reads the footers and writes the
+lineage parquet itself with pyarrow, so *root* must be driver-visible —
+the same contract as the ``_SUCCESS_STAGE`` marker.
 
 ``resume_or_run`` returns the checkpointed DataFrame when the stage marker
 exists — a killed pipeline restarted with the same root skips completed
@@ -31,25 +38,21 @@ from __future__ import annotations
 
 import json
 import os
+import re
+import shutil
 import time
 
-from pyspark.accumulators import AccumulatorParam
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 LINEAGE_SCHEMA = ("stage string, part_id long, row_count long, "
                   "wall_ms double, finished_at double")
-
-
-class _MetricsAccum(AccumulatorParam):
-    """Accumulates lists of per-partition metric tuples on the driver."""
-
-    def zero(self, value):
-        return []
-
-    def addInPlace(self, a, b):
-        a.extend(b)
-        return a
+_ARROW_SCHEMA = pa.schema([
+    ("stage", pa.string()), ("part_id", pa.int64()), ("row_count", pa.int64()),
+    ("wall_ms", pa.float64()), ("finished_at", pa.float64())])
+_PART_ID = re.compile(r"part-(\d+)-")
 
 
 def _marker(root: str, stage: str) -> str:
@@ -58,6 +61,17 @@ def _marker(root: str, stage: str) -> str:
 
 def stage_complete(root: str, stage: str) -> bool:
     return os.path.exists(_marker(root, stage))
+
+
+def _data_files(path: str) -> set[str]:
+    """Data files under *path*, partition subdirectories included; skips the
+    ``_``/``.``-prefixed entries (``_SUCCESS``, ``_temporary``, ``.crc``)."""
+    out = set()
+    for d, dirs, files in os.walk(path):
+        dirs[:] = [x for x in dirs if not x.startswith(("_", "."))]
+        out.update(os.path.join(d, f) for f in files
+                   if not f.startswith(("_", ".")))
+    return out
 
 
 def run_stage(
@@ -72,47 +86,28 @@ def run_stage(
     data_path = os.path.join(root, stage, "data")
     lineage_path = os.path.join(root, stage, "_lineage")
 
-    schema = df.schema
-    acc = spark.sparkContext.accumulator([], _MetricsAccum())
-
-    def audited(pdf_iter):
-        from pyspark import TaskContext
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx else -1
-        t0 = time.monotonic()
-        n = 0
-        for pdf in pdf_iter:
-            n += len(pdf)
-            yield pdf
-        wall = (time.monotonic() - t0) * 1000.0
-        acc.add([(stage, pid, n, wall, time.time())])
-
-    writer = df.mapInPandas(audited, schema).write.mode(mode)
+    before = _data_files(data_path)
+    t0 = time.time()
+    writer = df.write.mode(mode)
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(data_path)
 
-    # Python-accumulator updates are delivered by an async handler thread,
-    # so a late task's report can still be in flight when the write action
-    # returns.  Poll until the report set stops growing (quiet period), so
-    # lineage is complete in practice; it remains best-effort by contract —
-    # resume correctness never depends on it (the _SUCCESS_STAGE marker and
-    # the data itself gate resume; lineage is metrics/observability).
-    deadline = time.monotonic() + 5.0
-    prev = -1
-    while time.monotonic() < deadline:
-        cur = len(acc.value)
-        if cur == prev:
-            break
-        prev = cur
-        time.sleep(0.05)
-    # dedup retried tasks (first report wins) and persist lineage as parquet
-    seen: dict[int, tuple] = {}
-    for rec in acc.value:
-        seen.setdefault(rec[1], rec)
-    rows = sorted(seen.values(), key=lambda r: r[1])
-    spark.createDataFrame(rows or [], LINEAGE_SCHEMA) \
-        .coalesce(1).write.mode("overwrite").parquet(lineage_path)
+    rows: dict[int, int] = {}
+    done: dict[int, float] = {}
+    for f in _data_files(data_path) - before:
+        pid = int(_PART_ID.match(os.path.basename(f)).group(1))
+        rows[pid] = rows.get(pid, 0) + pq.read_metadata(f).num_rows
+        done[pid] = max(done.get(pid, 0.0), os.path.getmtime(f))
+    # max(0, ·): the file system's clock can trail the driver's (coarse
+    # mtimes, a shared store's own clock)
+    table = pa.Table.from_pylist([
+        {"stage": stage, "part_id": p, "row_count": rows[p],
+         "wall_ms": max(0.0, (done[p] - t0) * 1000.0), "finished_at": done[p]}
+        for p in sorted(rows)], schema=_ARROW_SCHEMA)
+    shutil.rmtree(lineage_path, ignore_errors=True)
+    os.makedirs(lineage_path)
+    pq.write_table(table, os.path.join(lineage_path, "part-00000.parquet"))
 
     with open(_marker(root, stage), "w") as f:
         f.write(json.dumps({"stage": stage, "completed_at": time.time()}))

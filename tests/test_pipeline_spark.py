@@ -1,13 +1,10 @@
-"""Image table, lineage/resume, dedup & similarity Spark tests."""
-
-import os
+"""Image table, dedup & similarity Spark tests."""
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from karta_spark.operators import dedup, similarity
-from karta_spark.plans import lineage
 from karta_spark.sources import images
 
 
@@ -62,28 +59,6 @@ class TestImages:
         b = images.synth_images(spark, 20, partitions=4).orderBy("image_id").collect()
         assert [(r["image_id"], r["phash"], bytes(r["bytes"])) for r in a] == \
                [(r["image_id"], r["phash"], bytes(r["bytes"])) for r in b]
-
-
-class TestLineage:
-    def test_checkpoint_and_resume(self, spark, tmp_path):
-        root = str(tmp_path / "ckpt")
-        calls = []
-
-        def build():
-            calls.append(1)
-            return spark.range(100).select(
-                F.col("id"), (F.col("id") * 2).alias("doubled"))
-
-        out1 = lineage.resume_or_run(build, root, "stage1", spark)
-        assert out1.count() == 100 and len(calls) == 1
-        out2 = lineage.resume_or_run(build, root, "stage1", spark)
-        assert out2.count() == 100 and len(calls) == 1  # not rebuilt
-
-        lt = lineage.lineage_table(spark, root, "stage1")
-        rows = lt.collect()
-        assert sum(r["row_count"] for r in rows) == 100
-        assert all(r["wall_ms"] >= 0 for r in rows)
-        assert os.path.exists(os.path.join(root, "stage1", "_SUCCESS_STAGE"))
 
 
 class TestDedup:
@@ -522,21 +497,6 @@ class TestLayout:
         want = pts.where((F.col("x") >= bbox[0]) & (F.col("x") <= bbox[2])
                          & (F.col("y") >= bbox[1]) & (F.col("y") <= bbox[3])).count()
         assert q.count() == want and want > 0
-
-
-class TestResumePartial:
-    def test_missing_partitions_antijoin(self, spark, tmp_path):
-        root = str(tmp_path / "ck2")
-        src = spark.range(100).select(
-            (F.col("id") % 10).alias("part_key"), F.col("id"))
-        # simulate a partially completed stage: lineage rows for parts 0-4,
-        # in the parquet layout run_stage writes
-        spark.createDataFrame(
-            [("stage_x", p, 10, 1.0, 0.0) for p in range(5)], lineage.LINEAGE_SCHEMA
-        ).write.parquet(os.path.join(root, "stage_x", "_lineage"))
-        todo = lineage.missing_partitions(src, spark, root, "stage_x", "part_key")
-        keys = {r["part_key"] for r in todo.select("part_key").distinct().collect()}
-        assert keys == {5, 6, 7, 8, 9}
 
 
 class TestStreamingCheckpoint:

@@ -173,31 +173,6 @@ class TestNgramDfCap:
         assert got == want
 
 
-class TestClusterSafeLineage:
-    def test_lineage_via_accumulator_not_side_files(self, spark, tmp_path):
-        """VERDICT item 6: executor-local side files are invisible to the
-        driver on a real cluster.  Lineage must arrive through Spark
-        (accumulator -> driver-written parquet), with no per-partition JSON
-        side files."""
-        from karta_spark.plans import lineage
-        import os
-        root = str(tmp_path / "ck3")
-        df = spark.range(1000).repartition(6).select(
-            F.col("id"), (F.col("id") * 3).alias("tripled"))
-        out = lineage.run_stage(df, root, "s1")
-        assert out.count() == 1000
-
-        lpath = os.path.join(root, "s1", "_lineage")
-        files = os.listdir(lpath)
-        assert not any(f.endswith(".json") for f in files)
-        assert any(f.endswith(".parquet") for f in files)
-
-        lt = lineage.lineage_table(spark, root, "s1").collect()
-        assert sum(r["row_count"] for r in lt) == 1000
-        assert len({r["part_id"] for r in lt}) == len(lt)  # deduped
-        assert all(r["wall_ms"] >= 0 for r in lt)
-
-
 class TestBatchedCover:
     """VERDICT item 10: cover building must not stall the driver at 10k
     polygons, and the conservative full/boundary split must stay sound."""
