@@ -1527,14 +1527,6 @@ def sphere_contains(px, py, ring_lonlat) -> np.ndarray:
     return np.abs(total) <= 1e-4
 
 
-def crosses_dateline(x0, x1) -> bool:
-    """Does the lon pair straddle the dateline? (dateline.pyx:5-17; sign of
-    0.0 is +1 per vectorgeo fsign)."""
-    s0 = 1.0 if x0 == 0 else np.sign(x0)
-    s1 = 1.0 if x1 == 0 else np.sign(x1)
-    return (s0 != s1) and abs(x0 - x1) > 180.0
-
-
 def bndlat_sph(x0, y0, x1, y1):
     """Bounding latitudes of a great-circle segment on a sphere — exact
     replica of vectorgeo.pyx:64-106. Returns (ymin, ymax) or None for a
@@ -1618,11 +1610,13 @@ def ispolar(ring_lonlat) -> bool:
     geometry.py:1050-1076: each dateline-crossing step contributes
     360 + (lon1 - lon0) regardless of direction; |sum| > 1e-4 => polar."""
     ring = np.asarray(ring_lonlat, dtype=np.float64)
-    lon = np.mod(ring[:, 0] + 180.0, 360.0) - 180.0  # reduce_deg to [-180,180)
-    total = 0.0
-    lon0 = lon[-1]
-    for lon1 in lon:
-        d = lon1 - lon0
-        total += (360.0 + d) if crosses_dateline(lon0, lon1) else d
-        lon0 = lon1
-    return bool(abs(total) > 1e-4)
+    lon1 = np.mod(ring[:, 0] + 180.0, 360.0) - 180.0  # reduce_deg to [-180,180)
+    lon0 = np.roll(lon1, 1)
+    d = lon1 - lon0
+    # the step straddles the dateline (dateline.pyx:5-17; sign of 0.0 is +1
+    # per vectorgeo fsign); cumsum adds the steps in ring order, as the
+    # reference loop does
+    cross = ((np.where(lon0 == 0, 1.0, np.sign(lon0))
+              != np.where(lon1 == 0, 1.0, np.sign(lon1)))
+             & (np.abs(lon0 - lon1) > 180.0))
+    return bool(abs(np.cumsum(np.where(cross, 360.0 + d, d))[-1]) > 1e-4)

@@ -173,266 +173,6 @@ class TestNgramDfCap:
         assert got == want
 
 
-class TestBatchedCover:
-    """VERDICT item 10: cover building must not stall the driver at 10k
-    polygons, and the conservative full/boundary split must stay sound."""
-
-    def _star(self, cx, cy, r, k=9):
-        ang = np.linspace(0, 2 * np.pi, 2 * k, endpoint=False)
-        rad = np.where(np.arange(2 * k) % 2 == 0, r, r * 0.45)
-        return np.column_stack([cx + rad * np.cos(ang), cy + rad * np.sin(ang)])
-
-    def test_full_cells_are_truly_full(self, spark):
-        from karta_spark.fixtures import flagship_polys
-        from karta_spark.functions import cells as kcells
-        from karta_spark.operators.pip_join import PolygonSpec, cover_cells
-        rng = np.random.default_rng(8)
-        polys = list(flagship_polys()) + [
-            PolygonSpec("star", self._star(20.0, 30.0, 14.0), crs="lonlat")]
-        for p in polys:
-            cover = cover_cells(p, 6)
-            n_full = 0
-            for cid, full in cover:
-                if not full:
-                    continue
-                n_full += 1
-                z, x, y = cid >> 58, (cid >> 29) & ((1 << 29) - 1), cid & ((1 << 29) - 1)
-                w, s, e, n = kcells.tile_bbox_py(z, x, y)
-                sx = rng.uniform(w, e, 50)
-                sy = rng.uniform(s, n, 50)
-                assert p.contains(sx, sy).all(), (p.poly_id, cid)
-            assert n_full > 0, f"{p.poly_id}: cover produced no full cells"
-
-    def test_join_matches_bruteforce_many_polys(self, spark):
-        from karta_spark.operators.pip_join import PolygonSpec, point_in_polygon_join
-        rng = np.random.default_rng(12)
-        polys = []
-        for i in range(120):
-            cx, cy = rng.uniform(-150, 150), rng.uniform(-60, 60)
-            polys.append(PolygonSpec(f"p{i:03d}", self._star(cx, cy, rng.uniform(2, 8)),
-                                     crs="lonlat"))
-        pts = [(j, float(x), float(y)) for j, (x, y) in enumerate(
-            zip(rng.uniform(-170, 170, 3000), rng.uniform(-70, 70, 3000)))]
-        df = spark.createDataFrame(pts, "pid long, x double, y double")
-        got = {(r["pid"], r["poly_id"]) for r in
-               point_in_polygon_join(df, polys, zoom=6).collect()}
-        want = set()
-        xs = np.array([p[1] for p in pts])
-        ys = np.array([p[2] for p in pts])
-        for p in polys:
-            inside = p.contains(xs, ys)
-            for j in np.flatnonzero(inside):
-                want.add((j, p.poly_id))
-        assert got == want
-
-    def test_distributed_cover_equals_driver_cover(self, spark):
-        """Above DISTRIBUTED_COVER_THRESHOLD cover rows are produced by a
-        mapInPandas stage; the table must be identical to the driver-side
-        build (same ids, same full/boundary classification)."""
-        from karta_spark.operators import pip_join as pj
-        rng = np.random.default_rng(5)
-        polys = [
-            pj.PolygonSpec(f"d{i:03d}", self._star(
-                rng.uniform(-150, 150), rng.uniform(-55, 55),
-                rng.uniform(2, 7)), crs="lonlat")
-            for i in range(pj.DISTRIBUTED_COVER_THRESHOLD + 24)
-        ]
-        # force one polygon through the holes arm too
-        sq = np.array([[-10.0, -10.0], [10.0, -10.0], [10.0, 10.0], [-10.0, 10.0]])
-        polys.append(pj.PolygonSpec("dhole", sq * 2.0, holes=(sq,), crs="lonlat"))
-        dist = {(r["poly_id"], r["cell_id"], r["full"])
-                for r in pj.cover_df(spark, polys, zoom=6).collect()}
-        driver = set()
-        for p in polys:
-            for cid, full in pj.cover_cells(p, 6):
-                driver.add((p.poly_id, cid, full))
-        assert dist == driver
-
-    def test_distributed_cover_planar_equals_driver(self, spark):
-        """The planar (cartesian-CRS) arm of the distributed cover build
-        must match the driver build too."""
-        from karta_spark.operators import pip_join as pj
-        rng = np.random.default_rng(9)
-        polys = [
-            pj.PolygonSpec(f"c{i:03d}", self._star(
-                rng.uniform(-1000, 1000), rng.uniform(-1000, 1000),
-                rng.uniform(20, 90)), crs="cartesian")
-            for i in range(pj.DISTRIBUTED_COVER_THRESHOLD + 10)
-        ]
-        size = 25.0
-        dist = {(r["poly_id"], r["cell_id"], r["full"]) for r in
-                pj.cover_df(spark, polys, zoom=0, planar_size=size).collect()}
-        driver = {(p.poly_id, cid, full)
-                  for p in polys for cid, full in pj.cover_cells_planar(p, size)}
-        assert dist == driver
-
-    def test_shuffle_join_arm_matches_broadcast(self, spark):
-        """With auto-broadcast disabled, the large-set branch must take the
-        sort-merge-join arm (cover too 'big' to broadcast) and produce the
-        identical join result — pins the SMJ code path AQE normally hides
-        by broadcasting test-sized covers."""
-        from karta_spark.operators import pip_join as pj
-        rng = np.random.default_rng(31)
-        polys = [pj.PolygonSpec(f"s{i:03d}", self._star(
-            rng.uniform(-150, 150), rng.uniform(-55, 55), rng.uniform(2, 7)),
-            crs="lonlat") for i in range(pj.DISTRIBUTED_COVER_THRESHOLD + 10)]
-        # concentrate points so one cell is hot (the skew shape a 100 TB
-        # corpus produces); correctness must be distribution-independent
-        pts = [(j, float(x), float(y)) for j, (x, y) in enumerate(zip(
-            np.concatenate([rng.uniform(-170, 170, 1500),
-                            polys[0].outer[0, 0] + rng.uniform(-1, 1, 1500)]),
-            np.concatenate([rng.uniform(-70, 70, 1500),
-                            polys[0].outer[0, 1] + rng.uniform(-1, 1, 1500)])))]
-        df = spark.createDataFrame(pts, "pid long, x double, y double")
-        baseline = {(r["pid"], r["poly_id"]) for r in
-                    pj.point_in_polygon_join(df, polys, zoom=6).collect()}
-        old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        try:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-            forced = {(r["pid"], r["poly_id"]) for r in
-                      pj.point_in_polygon_join(df, polys, zoom=6).collect()}
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        assert forced == baseline
-        assert len(baseline) > 500  # hot-cell points actually landed in polys
-
-    def test_expr_poly_cap_routes_large_sets_to_kernel(self, spark):
-        """> MAX_EXPR_POLYS expression-able polygons must not compile a
-        giant CASE chain; results stay identical either way."""
-        from karta_spark.operators import pip_join as pj
-        rng = np.random.default_rng(17)
-        tri = lambda cx, cy: np.array(
-            [[cx - 2, cy - 2], [cx + 2, cy - 2], [cx, cy + 2.5]])
-        polys = [pj.PolygonSpec(f"t{i:02d}", tri(rng.uniform(-100, 100),
-                                                 rng.uniform(-50, 50)),
-                                crs="lonlat")
-                 for i in range(pj.MAX_EXPR_POLYS + 5)]
-        assert all(pj._expr_able(p) for p in polys)
-        pts = spark.createDataFrame(
-            [(j, float(x), float(y)) for j, (x, y) in enumerate(zip(
-                rng.uniform(-110, 110, 2000), rng.uniform(-60, 60, 2000)))],
-            "pid long, x double, y double")
-        got = {(r["pid"], r["poly_id"]) for r in
-               pj.point_in_polygon_join(pts, polys, zoom=6).collect()}
-        xs, ys = (np.array(a) for a in zip(
-            *[(r["x"], r["y"]) for r in pts.orderBy("pid").collect()]))
-        want = {(j, p.poly_id) for p in polys
-                for j in np.flatnonzero(p.contains(xs, ys))}
-        assert got == want
-
-    def test_table_pip_join_matches_broadcast_path(self, spark):
-        """The big-big variant (polygon side a DataFrame) must produce the
-        identical join result as the broadcast-list path."""
-        from karta_spark.operators import pip_join as pj
-        rng = np.random.default_rng(41)
-        polys = [pj.PolygonSpec(f"s{i:03d}", self._star(
-            rng.uniform(-150, 150), rng.uniform(-55, 55), rng.uniform(2, 7)),
-            crs="lonlat") for i in range(60)]
-        pts = spark.createDataFrame(
-            [(j, float(x), float(y)) for j, (x, y) in enumerate(zip(
-                rng.uniform(-170, 170, 3000), rng.uniform(-70, 70, 3000)))],
-            "pid long, x double, y double")
-        want = {(r["pid"], r["poly_id"]) for r in
-                pj.point_in_polygon_join(pts, polys, zoom=6).collect()}
-        poly_df = spark.createDataFrame(
-            [(p.poly_id, [{"x": float(x), "y": float(y)} for x, y in p.outer])
-             for p in polys],
-            "poly_id string, vertices array<struct<x double, y double>>")
-        got = {(r["pid"], r["poly_id"]) for r in
-               pj.point_in_polygon_join_table(pts, poly_df, zoom=6, small_table_threshold=None).collect()}
-        assert got == want and len(want) > 100
-
-    # probed ground truth (sphere_contains — the reference's azimuth-swing
-    # semantics): cap=(lons 0..315 @80) contains the north polar region;
-    # srev=(lons 240,120,0 @-75, reversed orientation) contains the
-    # complement-side region incl. points far from its vertex bbox — the
-    # case that proves no cell cover can index polar rings.
-    _CAP = [(float(a), 80.0) for a in range(0, 360, 45)]
-    _SREV = [(float(a), -75.0) for a in (240, 120, 0)]
-    _POLAR_PTS = [(0, 45.0, 85.0), (1, 45.0, 75.0), (2, -120.0, 89.0),
-                  (3, 10.0, -80.0), (4, 10.0, -60.0)]
-    _POLAR_WANT = {(0, "cap"), (2, "cap"),
-                   (1, "srev"), (3, "srev"), (4, "srev")}
-
-    def test_broadcast_pip_join_polar_ring(self, spark):
-        """Latent bug fix: polar rings' contained region is not bounded by
-        the vertex bbox (points poleward of — or nowhere near — the
-        vertices were silently dropped by the cover join); they now take a
-        dense spherical-kernel arm."""
-        from karta_spark.operators import pip_join as pj
-        pts = spark.createDataFrame(self._POLAR_PTS,
-                                    "pid long, x double, y double")
-        got = {(r["pid"], r["poly_id"]) for r in pj.point_in_polygon_join(
-            pts, [pj.PolygonSpec("cap", np.array(self._CAP), crs="lonlat"),
-                  pj.PolygonSpec("srev", np.array(self._SREV), crs="lonlat")],
-            zoom=4).collect()}
-        assert got == self._POLAR_WANT
-
-    def test_table_pip_join_polar_ring(self, spark):
-        """Same memberships through the table variant's polar arm
-        (executor-side detection + broadcast dense cross-join)."""
-        from karta_spark.operators import pip_join as pj
-        poly_df = spark.createDataFrame(
-            [("cap", [{"x": x, "y": y} for x, y in self._CAP]),
-             ("srev", [{"x": x, "y": y} for x, y in self._SREV])],
-            "poly_id string, vertices array<struct<x double, y double>>")
-        pts = spark.createDataFrame(self._POLAR_PTS,
-                                    "pid long, x double, y double")
-        got = {(r["pid"], r["poly_id"]) for r in
-               pj.point_in_polygon_join_table(pts, poly_df, zoom=4, small_table_threshold=None).collect()}
-        assert got == self._POLAR_WANT
-
-    def test_contains_flags_polar_no_bbox_gate(self, spark):
-        """contains_flags had the same vertex-bbox trap for polar rings."""
-        from karta_spark.operators import pip_join as pj
-        pts = spark.createDataFrame(self._POLAR_PTS,
-                                    "pid long, x double, y double")
-        got = {r["pid"]: r["contained"] for r in pj.contains_flags(
-            pts, pj.PolygonSpec("cap", np.array(self._CAP), crs="lonlat")
-        ).collect()}
-        assert got == {0: True, 1: False, 2: True, 3: False, 4: False}
-
-    def test_winding_rows_kernel_bit_identical(self):
-        """winding_contains_rows vs winding_number over variable rings,
-        boundary points included."""
-        from karta_spark.functions.kernels import (
-            winding_contains, winding_contains_rows)
-        rng = np.random.default_rng(13)
-        rings = []
-        for _ in range(60):
-            k = int(rng.integers(3, 25))
-            ang = np.sort(rng.uniform(0, 2 * np.pi, k))
-            rad = rng.uniform(0.5, 3.0, k)
-            cx, cy = rng.uniform(-5, 5, 2)
-            rings.append(np.column_stack(
-                [cx + rad * np.cos(ang), cy + rad * np.sin(ang)]))
-        n = 4000
-        rid = rng.integers(0, len(rings), n)
-        px = rng.uniform(-9, 9, n)
-        py = rng.uniform(-9, 9, n)
-        px[:40] = [rings[r][0, 0] for r in rid[:40]]  # exact vertices
-        py[:40] = [rings[r][0, 1] for r in rid[:40]]
-        got = winding_contains_rows(
-            px, py, [rings[r][:, 0] for r in rid], [rings[r][:, 1] for r in rid])
-        for j in range(len(rings)):
-            m = rid == j
-            assert (got[m] == winding_contains(px[m], py[m], rings[j])).all(), j
-
-    def test_1k_polygon_cover_wall_time(self):
-        import time
-        from karta_spark.operators.pip_join import PolygonSpec, cover_cells
-        rng = np.random.default_rng(3)
-        t0 = time.monotonic()
-        total = 0
-        for i in range(1000):
-            cx, cy = rng.uniform(-150, 150), rng.uniform(-55, 55)
-            p = PolygonSpec(f"w{i}", self._star(cx, cy, 6.0, k=24), crs="lonlat")
-            total += len(cover_cells(p, 7))
-        dt = time.monotonic() - t0
-        assert total > 10_000  # real covers, not trivial ones
-        assert dt < 20.0, f"1k-polygon cover took {dt:.1f}s"
-
-
 class TestAffineMatrixFit:
     """Least-squares affine_matrix (reference geometry.py:1833-1852) as a
     single distributed aggregation + Cramer solve."""

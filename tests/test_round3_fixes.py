@@ -23,7 +23,10 @@ class TestMarkEdgesCappedBranch:
     def _run(self, ring, ny, nx):
         from karta_spark.operators.pip_join import _mark_edges
         mark = np.zeros((ny, nx), dtype=bool)
-        _mark_edges(mark, (ring,), lambda x, y: (x, y))
+        k = len(ring)
+        _, i, j = _mark_edges(ring[:, 0], ring[:, 1], np.roll(ring[:, 0], -1),
+                              np.roll(ring[:, 1], -1), np.full(k, ny), np.full(k, nx))
+        mark[i, j] = True
         return mark
 
     def test_long_vertical_edge_marks_every_crossed_cell(self):

@@ -98,10 +98,12 @@ sections.append(("q48 spherical geodesic area (canonical-configuration trig "
                  "as one codegen'd expression over the segments window)",
                  plan_of(m.q48_geodesic_area(spark, sf), 30)))
 
-# 11. q50 large polygon set: executor-built cover (MapInPandas), single
-# cover join (no per-branch re-execution), packed Arrow winding kernel
-sections.append(("q50 many-polygon PIP (distributed cover -> single "
-                 "AQE-decided join -> pair-batched packed winding kernel)",
+# 11. q50 large polygon set: one-pass driver cover (LocalTableScan),
+# broadcast cover join per branch — full cells skip Python, boundary rows
+# go through the packed Arrow winding kernel
+sections.append(("q50 many-polygon PIP (driver cover -> broadcast join; "
+                 "full cells pass, boundary rows -> pair-batched packed "
+                 "winding kernel)",
                  plan_of(m.q50_pip_many_polys(spark, sf), 35)))
 
 # 12. q51 decontamination: gram explode both sides, broadcast semi-join —
