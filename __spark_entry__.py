@@ -1427,7 +1427,7 @@ def q49_ivf_static(spark, sf_dir):
 def _q50_tris():
     """120 seeded triangles — deliberately MORE than MAX_EXPR_POLYS=48 so
     the gate exercises the many-polygon machinery: one-pass driver cover,
-    broadcast cover join, pair-batched packed winding kernel."""
+    broadcast cover join, y-banded edge winding kernel."""
     rng = np.random.default_rng(50)
     tris = []
     for i in range(120):
@@ -1443,7 +1443,7 @@ def _q50_tris():
 
 def q50_pip_many_polys(spark, sf_dir):
     """Per-polygon containment counts against 120 seeded triangles — the
-    large-polygon-set PIP path (broadcast cover + packed Arrow kernel)
+    large-polygon-set PIP path (broadcast cover + banded Arrow kernel)
     under the oracle: the SQL twin recomputes every triangle's membership
     with the literal winding form."""
     c = with_coords(_t(spark, sf_dir, "customer"), "c_custkey")

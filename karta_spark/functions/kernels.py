@@ -7,7 +7,8 @@ results are bit-for-bit identical:
 
 - ``winding_contains``   ← reference karta/vector/contains.pyx:13-42
   (winding number; boundary points count as inside, see reference
-  tests/vector_predicate_tests.py:165-170)
+  tests/vector_predicate_tests.py:165-170); ``banded_contains`` is the
+  same test for many polygons at once over a y-banded edge index
 - ``isleft``             ← contains.pyx:6-11 (cross-product form)
 - ``segment_intersections`` ← karta/vector/intersection.pyx:606-622 primitive,
   brute pairing as in ``all_intersections`` intersection.pyx:41-68
@@ -26,6 +27,7 @@ UDF shape (pandas_udf, applyInPandas, mapInPandas) and unit-tested directly.
 from __future__ import annotations
 
 import math
+from dataclasses import dataclass
 
 import numpy as np
 
@@ -71,6 +73,7 @@ def winding_contains(px, py, ring) -> np.ndarray:
     return winding_number(px, py, ring) != 0
 
 
+# only perfbench's PipRefine.microbench uses this; the refine is banded_contains
 def winding_contains_packed(px, py, V) -> np.ndarray:
     """Pair-batched winding test: point i is tested against its OWN ring
     ``V[i]`` where V is (n, K+1, 2) — rings pre-closed (V[i, k] repeats
@@ -101,6 +104,161 @@ def polygon_contains(px, py, outer, holes=()) -> np.ndarray:
     for hole in holes or ():
         if len(hole):
             inside &= ~winding_contains(px, py, np.asarray(hole))
+    return inside
+
+
+def ragged(counts):
+    """Flat enumeration of ragged ranges: ``(owner, k)`` for every
+    ``0 <= k < counts[owner]``, owners ascending — the one expansion the
+    cover and banded kernels use in place of per-polygon / per-edge Python
+    loops."""
+    counts = np.asarray(counts, dtype=np.int64)
+    owner = np.repeat(np.arange(counts.size), counts)
+    return owner, np.arange(owner.size) - (np.cumsum(counts) - counts)[owner]
+
+
+def ring_edges(verts):
+    """Concatenate (K,2) rings into one implicitly closed edge list:
+    returns ``(ring, nxt, x, y)`` — edge i runs from vertex
+    ``(x[i], y[i])`` to ``(x[nxt[i]], y[nxt[i]])`` and belongs to ring
+    ``ring[i]`` (edges in ring order, winding_number's modulo rule)."""
+    klen = np.array([len(v) for v in verts], dtype=np.int64)
+    V = (np.concatenate([np.asarray(v, dtype=np.float64).reshape(-1, 2)
+                         for v in verts]) if verts else np.empty((0, 2)))
+    er, ek = ragged(klen)
+    nxt = (np.cumsum(klen) - klen)[er] + (ek + 1) % klen[er]
+    return er, nxt, V[:, 0], V[:, 1]
+
+
+# a band table may list at most this many edges per polygon edge (an edge
+# spanning several bands is listed in each); zigzag rings halve their band
+# count until they fit
+BAND_TABLE_CAP = 8
+
+
+@dataclass(frozen=True)
+class EdgeBands:
+    """CSR y-band index of a polygon set (``edge_bands``): polygon p owns
+    bands ``base[p] .. base[p] + nb[p] - 1`` of height ``h[p]`` from
+    ``ylo[p]``; band g lists edges ``edge[off[g] .. off[g+1] - 1]`` of the
+    flat ``x0, y0, x1, y1, ring`` arrays (``ring`` = 0 for the outer ring,
+    k for hole k); ``nrings[p]`` counts polygon p's rings.  Listings are
+    int32 edge ids, so an edge spanning several bands is stored once."""
+
+    ylo: np.ndarray
+    h: np.ndarray
+    nb: np.ndarray
+    base: np.ndarray
+    off: np.ndarray
+    edge: np.ndarray
+    x0: np.ndarray
+    y0: np.ndarray
+    x1: np.ndarray
+    y1: np.ndarray
+    ring: np.ndarray
+    nrings: np.ndarray
+
+
+def _band(v, ylo, h, nb):
+    """``clip(floor((v - ylo) / h), 0, nb - 1)``, NaN to band 0.  Monotone
+    in ``v``: an edge listed from band(min y) to band(max y) is in the
+    band of every y its half-open span holds."""
+    with np.errstate(over="ignore"):  # a huge v / tiny h clips to nb - 1
+        f = np.floor((v - ylo) / h)
+    return np.fmin(np.fmax(f, 0.0), nb - 1).astype(np.int64)
+
+
+def edge_bands(polys) -> EdgeBands:
+    """Build the y-banded edge index of ``polys`` — a sequence of
+    ``(outer, holes)`` ring pairs — for ``banded_contains``.
+
+    Each polygon's y-extent is cut into ``ceil(edges / 4)`` bands and every
+    edge is listed in each band from ``band(min y)`` to ``band(max y)``.
+    A ring whose edges span many bands (a zigzag) would make the table
+    quadratic, so a polygon listing more than ``BAND_TABLE_CAP`` x its
+    edge count halves its band count until it fits.  Horizontal and NaN-y
+    edges never add winding and are not listed; a polygon without a
+    finite, positive y-extent gets one band.  One numpy pass over every
+    edge of every ring — no per-polygon loop."""
+    rings = [(j, k, r) for j, (outer, holes) in enumerate(polys)
+             for k, r in enumerate((outer, *holes))]
+    P = len(polys)
+    nrings = np.bincount(np.array([j for j, _, _ in rings], dtype=np.int64),
+                         minlength=P)
+    er, nxt, x, y = ring_edges([r for _, _, r in rings])
+    ep = np.array([j for j, _, _ in rings], dtype=np.int64)[er]
+    lr = np.array([k for _, k, _ in rings], dtype=np.int64)[er]
+    x0, y0, x1, y1 = x, y, x[nxt], y[nxt]
+    emin, emax = np.minimum(y0, y1), np.maximum(y0, y1)
+    keep = np.flatnonzero(emin < emax)
+    ep, lr, emin, emax = ep[keep], lr[keep], emin[keep], emax[keep]
+    x0, y0, x1, y1 = x0[keep], y0[keep], x1[keep], y1[keep]
+
+    ylo = np.full(P, np.inf)
+    yhi = np.full(P, -np.inf)
+    np.minimum.at(ylo, ep, emin)
+    np.maximum.at(yhi, ep, emax)
+    ne = np.bincount(ep, minlength=P)
+    span = yhi - ylo
+    ok = np.isfinite(span) & (span > 0)
+    nb = np.where(ok, np.maximum(-(-ne // 4), 1), 1)
+    while True:
+        h = np.where(ok, span / nb, 1.0)
+        nb = np.where(h > 0, nb, 1)  # a subnormal span: one band
+        h = np.where(h > 0, h, 1.0)
+        b0 = _band(emin, ylo[ep], h[ep], nb[ep])
+        b1 = _band(emax, ylo[ep], h[ep], nb[ep])
+        size = np.bincount(ep, weights=b1 - b0 + 1, minlength=P)
+        over = size > BAND_TABLE_CAP * ne
+        if not over.any():
+            break
+        nb = np.where(over, np.maximum(nb // 2, 1), nb)
+
+    base = np.cumsum(nb) - nb
+    q, k = ragged(b1 - b0 + 1)
+    g = base[ep[q]] + b0[q] + k
+    off = np.zeros(int(nb.sum()) + 1, dtype=np.int64)
+    np.cumsum(np.bincount(g, minlength=off.size - 1), out=off[1:])
+    return EdgeBands(ylo=ylo, h=h, nb=nb, base=base, off=off,
+                     edge=q[np.argsort(g)].astype(np.int32),
+                     x0=x0, y0=y0, x1=x1, y1=y1, ring=lr.astype(np.int32),
+                     nrings=nrings)
+
+
+def banded_contains(pidx, px, py, bands: EdgeBands) -> np.ndarray:
+    """Point i in polygon ``pidx[i]`` of an ``edge_bands`` index.
+
+    Each point meets only the edges listed in its own y-band; every other
+    edge's half-open ``[min y, max y)`` span misses the point's y and adds
+    exactly 0 winding.  The surviving (point, edge) pairs run
+    winding_number's ``isleft`` algebra and up/down rules, one bincount per
+    (point, ring) sums them, and a point is inside when its outer winding
+    is non-zero and no hole's is — ``polygon_contains`` bit for bit."""
+    pidx = np.asarray(pidx, dtype=np.int64)
+    px = np.asarray(px, dtype=np.float64)
+    py = np.asarray(py, dtype=np.float64)
+    g = bands.base[pidx] + _band(py, bands.ylo[pidx], bands.h[pidx],
+                                 bands.nb[pidx])
+    start = bands.off[g]
+    q, k = ragged(bands.off[g + 1] - start)
+    e = bands.edge[start[q] + k]
+    qx, qy = px[q], py[q]
+    x0, y0, x1, y1 = bands.x0[e], bands.y0[e], bands.x1[e], bands.y1[e]
+    left = (x1 - x0) * (qy - y0) - (qx - x0) * (y1 - y0)
+    up = (y0 <= qy) & (qy < y1) & (left > 0)
+    down = (y0 > qy) & (qy >= y1) & (left < 0)
+    # winding per (point, ring): point i's rings start at rbase[i]
+    nr = bands.nrings[pidx]
+    rbase = np.cumsum(nr) - nr
+    key = rbase[q] + bands.ring[e]
+    m = int(nr.sum())
+    wind = (np.bincount(key[up], minlength=m)
+            - np.bincount(key[down], minlength=m))
+    rr, rl = ragged(nr)
+    nz = wind != 0
+    inside = np.zeros(pidx.size, dtype=bool)
+    inside[rr[nz & (rl == 0)]] = True  # in the outer ring ...
+    inside[rr[nz & (rl > 0)]] = False  # ... and in no hole
     return inside
 
 

@@ -17,9 +17,10 @@ as a Spark plan:
    no shuffle of the point table at all;
 4. full-cell hits leave the join as they are; boundary candidates are
    refined by a compiled winding CASE (up to MAX_EXPR_POLYS small
-   polygons) or by the vectorized winding-number kernel
-   (kernels.winding_contains — bit-identical to contains.pyx:13-42) inside
-   an Arrow-batched pandas UDF.
+   polygons) or, for every other non-polar polygon, by one y-banded edge
+   kernel (kernels.banded_contains over an ``edge_bands`` index built once
+   per join on the driver — bit-identical to contains.pyx:13-42) inside an
+   Arrow-batched pandas UDF.  Polar rings take a dense spherical arm.
 
 ``point_in_polygon_join_table`` takes a polygon set too large for the
 driver as a DataFrame and runs the same cover kernel per Arrow batch on
@@ -45,10 +46,13 @@ from pyspark.sql.types import BooleanType
 
 from karta_spark.functions import cells
 from karta_spark.functions.kernels import (
+    banded_contains,
+    edge_bands,
     ispolar,
     polygon_contains,
+    ragged,
+    ring_edges,
     sphere_contains,
-    winding_contains_packed,
 )
 
 
@@ -88,15 +92,6 @@ class PolygonSpec:
         )
 
 
-def _ragged(counts):
-    """Flat enumeration of ragged ranges: ``(owner, k)`` for every
-    ``0 <= k < counts[owner]``, owners ascending — the one expansion the
-    cover kernel uses in place of per-polygon / per-edge Python loops."""
-    counts = np.asarray(counts, dtype=np.int64)
-    owner = np.repeat(np.arange(counts.size), counts)
-    return owner, np.arange(owner.size) - (np.cumsum(counts) - counts)[owner]
-
-
 def _mark_edges(ax, ay, bx, by, ny, nx):
     """Conservatively mark every grid cell an edge might pass through.
 
@@ -111,7 +106,7 @@ def _mark_edges(ax, ay, bx, by, ny, nx):
     # an absurdly long edge vs cell size keeps 4096 pieces (coarse fallback)
     n_pieces = np.minimum(np.maximum(1, np.ceil(2.0 * np.maximum(
         np.abs(bx - ax), np.abs(by - ay)))).astype(np.int64), 4096)
-    e, s = _ragged(n_pieces)
+    e, s = ragged(n_pieces)
     k = n_pieces[e]
     t0, t1 = s / k, (s + 1) / k
     dx, dy = (bx - ax)[e], (by - ay)[e]
@@ -129,7 +124,7 @@ def _mark_edges(ax, ay, bx, by, ny, nx):
     # Fill the whole bbox rectangle for those rare wide pieces.
     wide = np.flatnonzero((i1 - i0 > 1) | (j1 - j0 > 1))
     w = j1[wide] - j0[wide] + 1
-    q, r = _ragged((i1[wide] - i0[wide] + 1) * w)
+    q, r = ragged((i1[wide] - i0[wide] + 1) * w)
     return (np.concatenate([e, e, e, e, e[wide][q]]),
             np.concatenate([i0, i0, i1, i1, i0[wide][q] + r // w[q]]),
             np.concatenate([j0, j1, j0, j1, j0[wide][q] + r % w[q]]))
@@ -209,11 +204,7 @@ def cover_arrays(polys: list[PolygonSpec], zoom: int,
                     verts.append(ring)
     ring_poly = np.array(ring_poly, dtype=np.int64)
     ring_hole = np.array(ring_hole, dtype=bool)
-    klen = np.array([len(v) for v in verts], dtype=np.int64)
-    V = np.concatenate(verts) if verts else np.empty((0, 2))
-    er, ek = _ragged(klen)
-    nxt = (np.cumsum(klen) - klen)[er] + (ek + 1) % klen[er]
-    x0, y0 = V[:, 0], V[:, 1]
+    er, nxt, x0, y0 = ring_edges(verts)
     x1, y1 = x0[nxt], y0[nxt]
     ep = ring_poly[er]
 
@@ -233,7 +224,7 @@ def cover_arrays(polys: list[PolygonSpec], zoom: int,
 
     # corner-lattice rows: the distinct tile rows of all polygons, sorted;
     # polygon p's rows are the consecutive run starting at u0[p]
-    rp, ri = _ragged((ny + 1) * (ncell > 0))
+    rp, ri = ragged((ny + 1) * (ncell > 0))
     tyu = np.unique(gy0[rp] + ri)
     u0 = np.searchsorted(tyu, gy0)
     ty = tyu.astype(np.float64)
@@ -249,7 +240,7 @@ def cover_arrays(polys: list[PolygonSpec], zoom: int,
     lo = np.maximum(a, u0[ep])
     hi = np.minimum(b, u0[ep] + ny[ep] + 1)
     w = nx[ep] + 1
-    q, k = _ragged(np.maximum(hi - lo, 0) * w)
+    q, k = ragged(np.maximum(hi - lo, 0) * w)
     row = lo[q] + k // w[q]
     col = k % w[q]
     tx = (gx0[ep[q]] + col).astype(np.float64)
@@ -263,14 +254,14 @@ def cover_arrays(polys: list[PolygonSpec], zoom: int,
     key = rco[er[q]] + (row - u0[ep[q]]) * w[q] + col
     wind = np.bincount(key[hit], weights=np.where(up[hit], 1.0, -1.0),
                        minlength=int(nrc.sum()))
-    rr, rl = _ragged(nrc)
+    rr, rl = ragged(nrc)
     nz = wind != 0
     pc = cco[ring_poly[rr]] + rl
     inside = np.zeros(ncor.sum(), dtype=bool)
     inside[pc[nz & ~ring_hole[rr]]] = True  # in the outer ring ...
     inside[pc[nz & ring_hole[rr]]] = False  # ... and in no hole
 
-    cp, ck = _ragged(ncell)
+    cp, ck = ragged(ncell)
     ci, cj = ck // nx[cp], ck % nx[cp]
     c00 = cco[cp] + ci * (nx[cp] + 1) + cj
     c10 = c00 + nx[cp] + 1
@@ -344,13 +335,11 @@ def _expr_able(poly: PolygonSpec) -> bool:
 # abandoned for the Arrow kernel (codegen size, broadcast-closure instead)
 MAX_EXPR_POLYS = 48
 
-# rings up to this many vertices (hole-free, non-polar) join the packed
-# (n, K+1, 2) pair-batched winding pass inside the refine UDF; padding
-# cost grows with the largest packed ring, so huge rings stay on the
-# per-polygon slice path
+# largest ring _pack_rings pads
 PACK_MAX_VERTS = 96
 
 
+# only perfbench's PipRefine.microbench uses this; the refine is banded_contains
 def _pack_rings(polys: list[PolygonSpec]):
     """Pad small hole-free non-polar rings into one (P, Kmax+1, 2) array
     for the pair-batched winding kernel. Returns (poly_id -> row index
@@ -410,6 +399,15 @@ def auto_zoom(polys: list[PolygonSpec], target_cells: int = 256,
     return max(1, min(max_zoom, z))
 
 
+def _polar_udf(spec: PolygonSpec):
+    """Dense spherical refine of one polar polygon (``spec.contains``)."""
+    @F.pandas_udf(BooleanType())
+    def polar_refine(px: pd.Series, py: pd.Series) -> pd.Series:
+        return pd.Series(spec.contains(
+            px.to_numpy(dtype=np.float64), py.to_numpy(dtype=np.float64)))
+    return polar_refine
+
+
 def point_in_polygon_join(
     points: DataFrame,
     polys: list[PolygonSpec],
@@ -456,7 +454,7 @@ def point_in_polygon_join(
     if len(expr_polys) > MAX_EXPR_POLYS:
         # a per-polygon compiled CASE chain over thousands of polygons would
         # produce an unbounded codegen method; large sets go through the
-        # grouped-argsort Arrow kernel instead (one pass, O(n log n)/batch)
+        # banded Arrow kernel instead (one pass per batch)
         udf_polys = udf_polys + expr_polys
         expr_polys = []
 
@@ -483,44 +481,18 @@ def point_in_polygon_join(
             cand.where(F.col("full") | refine_case).drop("full", "cell_id"))
 
     if udf_polys:
-        packed = _pack_rings(udf_polys)
-        # packed-row lookup by polygon index (-1 = not packable)
-        pack_row = np.full(len(udf_polys), -1, dtype=np.int64)
-        pk_R = np.empty((0, 1, 2))
-        if packed is not None:
-            pk_index, pk_R = packed
-            for j, p in enumerate(udf_polys):
-                pack_row[j] = pk_index.get(p.poly_id, -1)
-        poly_list = list(udf_polys)
+        bands = edge_bands([(p.outer, p.holes) for p in udf_polys])
         cover = cover_df(spark, udf_polys, zoom, planar_size, with_pidx=True)
 
         @F.pandas_udf(BooleanType())
         def refine(pidx: pd.Series, px: pd.Series, py: pd.Series) -> pd.Series:
-            # small hole-free rings ride ONE pair-batched vectorized pass
-            # (winding_contains_packed); the rest get one argsort +
-            # contiguous slice per distinct polygon — never a per-row loop.
-            # Keyed on the int polygon index: the poly_id string never
-            # crosses the Arrow pipe (serialization-bound on this box)
-            pxv = px.to_numpy(dtype=np.float64)
-            pyv = py.to_numpy(dtype=np.float64)
-            pidv = pidx.to_numpy(dtype=np.int64)
-            pr = pack_row[pidv]
-            out = np.zeros(pidv.size, dtype=bool)
-            rows = np.flatnonzero(pr >= 0)
-            if rows.size:
-                out[rows] = winding_contains_packed(pxv[rows], pyv[rows],
-                                                    pk_R[pr[rows]])
-            rest = np.flatnonzero(pr < 0)
-            order = rest[np.argsort(pidv[rest], kind="stable")]
-            if order.size == 0:
-                return pd.Series(out)
-            sorted_pids = pidv[order]
-            bounds = np.flatnonzero(
-                np.r_[True, sorted_pids[1:] != sorted_pids[:-1], True])
-            for b0, b1 in zip(bounds[:-1], bounds[1:]):
-                idx = order[b0:b1]
-                out[idx] = poly_list[sorted_pids[b0]].contains(pxv[idx], pyv[idx])
-            return pd.Series(out)
+            # every polygon, holes and ring size alike, in one banded pass
+            # over the batch — no per-polygon or per-edge loop.  Keyed on
+            # the int polygon index: the poly_id string never crosses the
+            # Arrow pipe (serialization-bound on this box)
+            return pd.Series(banded_contains(
+                pidx.to_numpy(dtype=np.int64), px.to_numpy(dtype=np.float64),
+                py.to_numpy(dtype=np.float64), bands))
 
         # broadcast join: scanning the candidate set twice is cheap (no
         # shuffle) and full-cell hits never serialize to Python at all —
@@ -531,13 +503,6 @@ def point_in_polygon_join(
         branches.append(cand.where(F.col("full")).unionByName(boundary_hits)
                         .drop("full", "cell_id", "pidx"))
 
-    def _polar_udf(spec):
-        @F.pandas_udf(BooleanType())
-        def polar_refine(px: pd.Series, py: pd.Series) -> pd.Series:
-            return pd.Series(spec.contains(
-                px.to_numpy(dtype=np.float64), py.to_numpy(dtype=np.float64)))
-        return polar_refine
-
     for p in polar_polys:
         # dense arm: every point through the spherical kernel — correct for
         # the unbounded polar contained-region, parallel, no index
@@ -545,6 +510,9 @@ def point_in_polygon_join(
             points.where(_polar_udf(p)(F.col(lon), F.col(lat)))
             .withColumn("poly_id", F.lit(p.poly_id)))
 
+    if not branches:  # no polygons: no pairs, same columns
+        branches.append(points.where(F.lit(False))
+                        .withColumn("poly_id", F.lit(None).cast("string")))
     result = branches[0]
     for b in branches[1:]:
         result = result.unionByName(b)
@@ -565,7 +533,8 @@ def contains_flags(
     queries and mask-style ops; bypasses the cover (bbox gate only).
 
     Small non-polar polygons compile to a pure Catalyst winding expression
-    (zero Python); others use the numpy kernel behind a bbox gate."""
+    (zero Python); other non-polar polygons run ``banded_contains`` behind
+    a bbox gate, and polar rings the spherical kernel on every row."""
     xmin, ymin, xmax, ymax = poly.bbox()
     in_bbox = (
         (F.col(lon) >= xmin) & (F.col(lon) <= xmax)
@@ -579,15 +548,18 @@ def contains_flags(
             .otherwise(F.lit(False)),
         )
 
-    @F.pandas_udf(BooleanType())
-    def refine(px: pd.Series, py: pd.Series) -> pd.Series:
-        return pd.Series(poly.contains(
-            px.to_numpy(dtype=np.float64), py.to_numpy(dtype=np.float64)))
-
-    if poly.crs == "lonlat" and poly.polar:
+    if poly.polar:
         # no bbox gate: a polar ring's contained region is not bounded by
         # its vertex bbox (see point_in_polygon_join's polar arm) — dense
-        return points.withColumn(flag, refine(F.col(lon), F.col(lat)))
+        return points.withColumn(flag, _polar_udf(poly)(F.col(lon), F.col(lat)))
+
+    bands = edge_bands([(poly.outer, poly.holes)])
+
+    @F.pandas_udf(BooleanType())
+    def refine(px: pd.Series, py: pd.Series) -> pd.Series:
+        return pd.Series(banded_contains(
+            np.zeros(len(px), dtype=np.int64), px.to_numpy(dtype=np.float64),
+            py.to_numpy(dtype=np.float64), bands))
 
     # hard-filter the bbox slice before the Arrow kernel: Spark evaluates a
     # pandas UDF inside F.when() on EVERY row regardless of the branch
@@ -745,7 +717,7 @@ def point_in_polygon_join_table(
     def polar_refine(px: pd.Series, py: pd.Series, pid: pd.Series,
                      rx: pd.Series, ry: pd.Series) -> pd.Series:
         # one sphere_contains call per distinct ring in the batch
-        # (argsort-sliced, same trick as the packed refine)
+        # (argsort-sliced)
         out = np.zeros(len(px), dtype=bool)
         pxv = px.to_numpy(dtype=np.float64)
         pyv = py.to_numpy(dtype=np.float64)

@@ -10,7 +10,10 @@ import pytest
 
 from karta_spark.functions import cells
 from karta_spark.functions.kernels import (
+    BAND_TABLE_CAP,
+    banded_contains,
     convex_hull,
+    edge_bands,
     ispolar,
     polygon_contains,
     polyline_intersection_points,
@@ -152,6 +155,132 @@ class TestContains:
         hole = np.array([(2, 2), (4, 2), (3, 6)], dtype=float)
         got = polygon_contains([3.0, 8.0], [3.0, 8.0], outer, [hole])
         assert list(got) == [False, True]
+
+
+def _star_ring(rng, k, cx, cy, r, cw=False):
+    ang = np.sort(rng.uniform(0, 2 * np.pi, k))
+    ang = ang[::-1] if cw else ang
+    rad = r * rng.uniform(0.3, 1.0, k)
+    return np.column_stack([cx + rad * np.cos(ang), cy + rad * np.sin(ang)])
+
+
+def _ring_points(rings):
+    """Every vertex and every edge midpoint of *rings*."""
+    pts = [np.empty((0, 2))]
+    for r in rings:
+        r = np.asarray(r, dtype=np.float64).reshape(-1, 2)
+        pts += [r, (r + np.roll(r, -1, axis=0)) / 2.0]
+    return np.concatenate(pts)
+
+
+class TestBandedContains:
+    """banded_contains over an edge_bands index must equal polygon_contains
+    point for point: the band filter only drops edges whose half-open
+    ``[min y, max y)`` span misses the point's y."""
+
+    def _check(self, polys, pidx, px, py):
+        bands = edge_bands(polys)
+        got = banded_contains(pidx, px, py, bands)
+        assert got.dtype == bool and got.shape == np.shape(px)
+        for j, (outer, holes) in enumerate(polys):
+            m = pidx == j
+            want = polygon_contains(px[m], py[m], outer, holes)
+            assert (got[m] == want).all(), j
+        return bands, got
+
+    def _probe(self, rng, polys, n_random):
+        """Points on each polygon's vertices and edge midpoints, on its band
+        boundaries (its y-extent ends among them) and uniform over its
+        bbox — every polygon index mixed in one shuffled batch."""
+        bands = edge_bands(polys)
+        pidx, px, py = [], [], []
+        for j, (outer, holes) in enumerate(polys):
+            on = _ring_points((outer, *holes))
+            cuts = bands.ylo[j] + bands.h[j] * np.arange(bands.nb[j] + 1)
+            cuts = cuts[np.isfinite(cuts)]
+            box = on if len(on) else np.zeros((1, 2))
+            (x0, y0), (x1, y1) = box.min(axis=0) - 1, box.max(axis=0) + 1
+            qx = np.r_[on[:, 0], rng.uniform(x0, x1, cuts.size),
+                       rng.uniform(x0, x1, n_random)]
+            qy = np.r_[on[:, 1], cuts, rng.uniform(y0, y1, n_random)]
+            pidx.append(np.full(qx.size, j))
+            px.append(qx)
+            py.append(qy)
+        order = rng.permutation(sum(a.size for a in pidx))
+        return (np.concatenate(pidx)[order], np.concatenate(px)[order],
+                np.concatenate(py)[order])
+
+    def test_star_rings_with_and_without_holes(self):
+        rng = np.random.default_rng(71)
+        polys = []
+        for j in range(40):
+            k = int(rng.integers(3, 401)) if j > 1 else (3, 400)[j]
+            cx, cy, r = rng.uniform(-50, 50), rng.uniform(-50, 50), rng.uniform(1, 9)
+            outer = _star_ring(rng, k, cx, cy, r, cw=j % 2 == 1)
+            holes = tuple(_star_ring(rng, int(rng.integers(3, 40)), cx, cy,
+                                     0.25 * r, cw=h % 2 == 0)
+                          for h in range(j % 3))
+            polys.append((outer, holes))
+        bands, got = self._check(polys, *self._probe(rng, polys, 400))
+        assert got.any() and not got.all()
+        assert bands.nb.max() > 50  # many bands: the filter is exercised
+
+    def test_degenerate_rings(self):
+        rng = np.random.default_rng(72)
+        square = np.array([(0, 0), (4, 0), (4, 4), (0, 4)], dtype=float)
+        stairs = np.array([(0, 0), (3, 0), (3, 1), (2, 1), (2, 2), (1, 2),
+                           (1, 3), (0, 3)], dtype=float)
+        repeated = np.array([(0, 0), (0, 0), (2, 0), (4, 0), (4, 0), (4, 2),
+                             (4, 4), (2, 4), (0, 4), (0, 2), (0, 0)], dtype=float)
+        polys = [
+            (square, ()),
+            (stairs, (np.empty((0, 2)),)),
+            (repeated, (np.array([(1.0, 1.0), (3.0, 1.0), (2.0, 3.0)]),)),
+            (square, (square[::-1],)),                       # hole == outer
+            (np.array([(1.0, 1.0)]), ()),                    # 1 vertex
+            (np.array([(0.0, 0.0), (2.0, 3.0)]), ()),        # 2 vertices
+            (square, (np.array([(1.0, 1.0), (3.0, 3.0)]),)),  # 2-vertex hole
+            (np.array([(0, 2), (5, 2), (9, 2)], dtype=float), ()),  # flat
+            (np.empty((0, 2)), ()),                          # no outer ring
+            (np.array([(0, 0), (1, 1e-310), (2, 0)], dtype=float), ()),
+        ]
+        self._check(polys, *self._probe(rng, polys, 300))
+
+    def test_nonfinite_points_and_empty_batch(self):
+        rng = np.random.default_rng(73)
+        polys = [(_star_ring(rng, 200, 0.0, 0.0, 5.0), ()),
+                 (_star_ring(rng, 30, 20.0, 0.0, 3.0),
+                  (_star_ring(rng, 12, 20.0, 0.0, 1.0),))]
+        special = np.array([np.nan, np.inf, -np.inf, 0.0, 1.0, -4.0])
+        px, py = (a.ravel() for a in np.meshgrid(special, special))
+        pidx = np.arange(px.size) % 2
+        self._check(polys, pidx, px, py)
+        bands = edge_bands(polys)
+        empty = np.empty(0)
+        assert banded_contains(empty.astype(np.int64), empty, empty,
+                               bands).shape == (0,)
+        none = edge_bands([])
+        assert none.off.tolist() == [0]
+
+    def test_zigzag_ring_is_capped(self):
+        """Every edge of a zigzag spans the whole y-extent: one band per
+        four edges would list each edge in every band (quadratic), so the
+        band count halves until the table holds at most BAND_TABLE_CAP
+        listings per edge — 400 edges: 100 -> 50 -> 25 -> 12 -> 6 bands."""
+        rng = np.random.default_rng(74)
+        k = 400
+        zig = np.column_stack([np.arange(k, dtype=float) / 10.0,
+                               np.where(np.arange(k) % 2 == 0, 0.0, 10.0)])
+        zig[0, 1] = 10.0 * (k % 2 == 1)
+        zig[-1] = (zig[-2, 0], -1.0)
+        star = _star_ring(rng, 400, 70.0, 0.0, 5.0)
+        polys = [(zig, ()), (star, ())]
+        bands = edge_bands(polys)
+        per_poly = np.diff(bands.off)
+        n0 = int(per_poly[:bands.nb[0]].sum())
+        assert bands.nb[0] == 6 and n0 <= BAND_TABLE_CAP * k
+        assert bands.nb[1] == 100  # the star is not over the cap
+        self._check(polys, *self._probe(rng, polys, 2000))
 
 
 class TestIsPolar:

@@ -352,6 +352,45 @@ class TestBatchedCover:
         ).collect()}
         assert got == {0: True, 1: False, 2: True, 3: False, 4: False}
 
+    def test_empty_polygon_list_join(self, spark):
+        pts = spark.createDataFrame([(0, 1.0, 2.0)], "pid long, x double, y double")
+        for keep_flag, extra in ((False, []), (True, ["contained"])):
+            out = pj.point_in_polygon_join(pts, [], keep_flag=keep_flag)
+            assert out.columns == ["pid", "x", "y", "poly_id", *extra]
+            assert out.schema["poly_id"].dataType.simpleString() == "string"
+            assert out.count() == 0
+
+    def test_empty_polygon_table_join(self, spark):
+        pts = spark.createDataFrame([(0, 1.0, 2.0)], "pid long, x double, y double")
+        poly_df = spark.createDataFrame(
+            [], "region string, vertices array<struct<x double, y double>>")
+        for threshold in (256, None):
+            out = pj.point_in_polygon_join_table(
+                pts, poly_df, poly_id="region", small_table_threshold=threshold)
+            assert sorted(out.columns) == ["pid", "region", "x", "y"]
+            assert out.schema["region"].dataType.simpleString() == "string"
+            assert out.count() == 0
+
+    def test_contains_flags_banded_polygon(self, spark):
+        """A polygon past MAX_EXPR_EDGES, with a hole, flags every point as
+        polygon_contains does — vertices and bbox edges included."""
+        from karta_spark.functions.kernels import polygon_contains
+        rng = np.random.default_rng(57)
+        outer = _star(10.0, 20.0, 6.0, k=90)
+        hole = _star(10.0, 20.0, 1.5, k=12)[::-1]
+        poly = PolygonSpec("big", outer, (hole,), crs="lonlat")
+        assert not pj._expr_able(poly)
+        xs = np.r_[rng.uniform(3, 17, 3000), outer[:, 0], hole[:, 0], 4.0]
+        ys = np.r_[rng.uniform(13, 27, 3000), outer[:, 1], hole[:, 1], 20.0]
+        pts = spark.createDataFrame(
+            [(j, float(x), float(y)) for j, (x, y) in enumerate(zip(xs, ys))],
+            "pid long, x double, y double")
+        got = {r["pid"]: r["contained"] for r in
+               pj.contains_flags(pts, poly).collect()}
+        want = polygon_contains(xs, ys, outer, (hole,))
+        assert [got[j] for j in range(xs.size)] == want.tolist()
+        assert 0 < want.sum() < xs.size
+
     def test_winding_rows_kernel_bit_identical(self):
         """winding_contains_rows vs winding_number over variable rings,
         boundary points included."""

@@ -100,9 +100,9 @@ sections.append(("q48 spherical geodesic area (canonical-configuration trig "
 
 # 11. q50 large polygon set: one-pass driver cover (LocalTableScan),
 # broadcast cover join per branch — full cells skip Python, boundary rows
-# go through the packed Arrow winding kernel
+# go through the banded Arrow winding kernel
 sections.append(("q50 many-polygon PIP (driver cover -> broadcast join; "
-                 "full cells pass, boundary rows -> pair-batched packed "
+                 "full cells pass, boundary rows -> y-banded edge "
                  "winding kernel)",
                  plan_of(m.q50_pip_many_polys(spark, sf), 35)))
 
