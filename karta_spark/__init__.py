@@ -17,5 +17,3 @@ Everything here is plain public PySpark 4.x + numpy/pandas/pyarrow.
 """
 
 __version__ = "0.1.0"
-
-from karta_spark.session import get_spark  # noqa: F401

@@ -7,6 +7,15 @@ variables for local testing:
 - Arrow on (all our refine kernels are pandas/Arrow UDFs)
 - shuffle partitions sized from cores locally; on a real cluster this is
   overridden by AQE's coalescing + `spark.sql.adaptive.coalescePartitions`.
+- Python workers start from `karta_spark.worker_daemon` on `local*`
+  masters: it drops Spark's pyspark/py4j/spark-core archives from the
+  worker's `sys.path` when the same pyspark is installed as a directory,
+  so no task re-reads those archives in `importlib.invalidate_caches()`
+  (0.18-0.37 s per task on 4 cores) and workers import pyspark's cached
+  bytecode instead of compiling it from the zip.  The package's parent
+  directory joins `spark.executorEnv.PYTHONPATH` so the daemon imports
+  from any working directory.  Other masters keep Spark's `pyspark.daemon`:
+  the driver's checkout is not the executors' filesystem.
 """
 
 from __future__ import annotations
@@ -14,6 +23,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -50,6 +61,11 @@ def get_spark(
         .config("spark.driver.extraJavaOptions", "-XX:-DontCompileHugeMethods")
         .config("spark.executor.extraJavaOptions", "-XX:-DontCompileHugeMethods")
     )
+    if master.startswith("local"):
+        builder = (
+            builder.config("spark.python.daemon.module", "karta_spark.worker_daemon")
+            .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -43,3 +43,26 @@ def test_summarize_missing_metric_and_single_run():
     assert out["rows_per_s"]["base"] == {"median": 3.0, "q1": 3.0, "q3": 3.0, "n": 1}
     assert "head" not in out["rows_per_s"] and out["rows_per_s"]["pairs"] == 0
     assert out["ok_frac"] == {"better": "higher", "pairs": 0, "head_wins": 0}
+
+
+def test_run_pairs_interleaves_every_workload_and_records_sections():
+    calls = []
+
+    def fake_run(checkout, workload, seed, seconds):
+        side = "base" if checkout == "BASE" else "head"
+        calls.append((seed, workload, side))
+        return {"correct": True, "attempted": 2, "failed": 0,
+                "metrics": {"rows_per_s": seed + (1.0 if side == "head" else 0.0)}}
+
+    runs = ab.run_pairs(["pip_tile", "image_enrich"], [5, 6], "BASE", 3, run=fake_run)
+    assert calls == [(5, "pip_tile", "base"), (5, "pip_tile", "head"),
+                     (5, "image_enrich", "base"), (5, "image_enrich", "head"),
+                     (6, "pip_tile", "head"), (6, "pip_tile", "base"),
+                     (6, "image_enrich", "head"), (6, "image_enrich", "base")]
+    rec = ab.record("HEAD~1", "5-6", 3, runs, {"rows_per_s": "higher"})
+    assert list(rec["workloads"]) == ["pip_tile", "image_enrich"]
+    for section in rec["workloads"].values():
+        assert len(section["runs"]) == 4
+        assert section["metrics"]["rows_per_s"]["pairs"] == 2
+        assert section["metrics"]["rows_per_s"]["head_wins"] == 2
+    assert (rec["base"], rec["seeds"], rec["seconds"]) == ("HEAD~1", "5-6", 3)

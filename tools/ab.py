@@ -2,14 +2,16 @@
 against this checkout's working tree.
 
     python tools/ab.py --base HEAD~1 --workload pip_refine --seeds 501-510
+    python tools/ab.py --base HEAD~1 --workload pip_tile,pip_refine,image_enrich --seeds 501-510
 
-The base revision is checked out in a temporary ``git worktree`` (removed
-when done).  For every seed, ``perfbench/run.py --trace 0`` runs once in
-each checkout for BENCHMARK.json's ``run_seconds``, alternating which side
-runs first.  One JSON record goes to standard output: per end-to-end
-metric (from BENCHMARK.json) the median and quartiles of each side and the
-number of seeds the working tree won, plus every run's ``correct`` /
-``attempted`` / ``failed``.
+The base revision is extracted with ``git archive`` into a temporary
+directory (removed when done).  For every seed and every workload,
+``perfbench/run.py --trace 0`` runs once in each checkout for
+BENCHMARK.json's ``run_seconds``, alternating which side runs first from
+seed to seed.  One JSON record goes to standard output with one section
+per workload: per end-to-end metric (from BENCHMARK.json) the median and
+quartiles of each side and the number of seeds the working tree won, plus
+every run's ``correct`` / ``attempted`` / ``failed``.
 """
 
 from __future__ import annotations
@@ -81,39 +83,50 @@ def run_once(checkout: str, workload: str, seed: int, seconds: float) -> dict:
             "metrics": {k: v["value"] for k, v in res["metrics"].items()}}
 
 
+def run_pairs(workloads, seeds, base_dir, seconds, run=run_once) -> dict:
+    """Run every workload once per side for each seed, alternating which
+    side runs first from seed to seed; the runs, keyed by workload."""
+    runs = {w: [] for w in workloads}
+    sides = [("base", base_dir), ("head", ROOT)]
+    for i, seed in enumerate(seeds):
+        for workload in workloads:
+            for side, checkout in (sides if i % 2 == 0 else sides[::-1]):
+                res = run(checkout, workload, seed, seconds)
+                runs[workload].append({"seed": seed, "side": side, **res})
+                print(f"ab: {workload} seed {seed} {side}: "
+                      f"correct={res['correct']}", file=sys.stderr)
+    return runs
+
+
+def record(base, seeds, seconds, runs, better) -> dict:
+    """The JSON record: one section (summary and runs) per workload."""
+    return {"base": base, "seeds": seeds, "seconds": seconds,
+            "workloads": {w: {"metrics": summarize(r, better), "runs": r}
+                          for w, r in runs.items()}}
+
+
 def main(argv=None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--base", required=True, help="git revision to compare against")
-    ap.add_argument("--workload", required=True)
+    ap.add_argument("--workload", required=True,
+                    help="workload name, or a comma-separated list of them")
     ap.add_argument("--seeds", required=True, help="inclusive range a-b")
     args = ap.parse_args(argv)
+    workloads = [w for w in args.workload.split(",") if w]
 
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         bench = json.load(f)
     better = {m["name"]: m["better"] for m in bench["end_to_end"]}
     seconds = bench["run_seconds"]
-    tmp = tempfile.mkdtemp(prefix="karta-ab-")
-    base_dir = os.path.join(tmp, "base")
-    subprocess.run(["git", "worktree", "add", "--detach", base_dir, args.base],
-                   cwd=ROOT, check=True, capture_output=True)
-    runs = []
+    base_dir = tempfile.mkdtemp(prefix="karta-ab-")
     try:
-        for i, seed in enumerate(parse_seeds(args.seeds)):
-            sides = [("base", base_dir), ("head", ROOT)]
-            for side, checkout in (sides if i % 2 == 0 else sides[::-1]):
-                res = run_once(checkout, args.workload, seed, seconds)
-                runs.append({"seed": seed, "side": side, **res})
-                print(f"ab: seed {seed} {side}: correct={res['correct']}",
-                      file=sys.stderr)
+        archive = subprocess.run(["git", "archive", args.base], cwd=ROOT,
+                                 check=True, capture_output=True).stdout
+        subprocess.run(["tar", "-x", "-C", base_dir], input=archive, check=True)
+        runs = run_pairs(workloads, parse_seeds(args.seeds), base_dir, seconds)
     finally:
-        subprocess.run(["git", "worktree", "remove", "--force", base_dir],
-                       cwd=ROOT, capture_output=True)
-        shutil.rmtree(tmp, ignore_errors=True)
-        subprocess.run(["git", "worktree", "prune"], cwd=ROOT, capture_output=True)
-    print(json.dumps({
-        "workload": args.workload, "base": args.base, "seeds": args.seeds,
-        "seconds": seconds, "metrics": summarize(runs, better), "runs": runs,
-    }))
+        shutil.rmtree(base_dir, ignore_errors=True)
+    print(json.dumps(record(args.base, args.seeds, seconds, runs, better)))
     return 0
 
 
