@@ -790,10 +790,9 @@ def q32_raster_sample_cells(spark, sf_dir):
     li = with_coords(li, "key")
     grid = gridpoints(li, GRID_T, pz="l_quantity").select(
         "cell_i", "cell_j", F.col("value").alias("cell_value"))
-    from karta_spark.raster.gridpoints import round_half_even
-    from karta_spark.raster.sampling import position_exprs
+    from karta_spark.raster.sampling import position_sql, round_half_even
     c = with_coords(_t(spark, sf_dir, "customer"), "c_custkey")
-    i, j = position_exprs(GRID_T, F.col("x"), F.col("y"))
+    i, j = position_sql(GRID_T, "x", "y")
     c = c.withColumn("cell_i", round_half_even(i).cast("int")) \
          .withColumn("cell_j", round_half_even(j).cast("int"))
     return (

@@ -46,6 +46,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 LINEAGE_SCHEMA = ("stage string, part_id long, row_count long, "
                   "wall_ms double, finished_at double")
@@ -81,7 +82,9 @@ def run_stage(
     """Materialize *df* as the checkpoint for *stage*, recording lineage.
 
     Returns the re-read (checkpointed) DataFrame, so downstream stages read
-    columnar parquet instead of recomputing the plan."""
+    columnar parquet instead of recomputing the plan.  Its schema is the
+    written one, with *partition_by* columns moved last and typed as
+    written (not as their directory names would be inferred)."""
     spark = df.sparkSession
     data_path = os.path.join(root, stage, "data")
     lineage_path = os.path.join(root, stage, "_lineage")
@@ -111,7 +114,12 @@ def run_stage(
 
     with open(_marker(root, stage), "w") as f:
         f.write(json.dumps({"stage": stage, "completed_at": time.time()}))
-    return spark.read.parquet(data_path)
+    # read back with the written schema, partition columns last as a
+    # partitioned read lists them: Spark infers no schema, which would
+    # cost a footer-reading job per stage
+    parts = {c.lower(): k for k, c in enumerate(partition_by or (), 1)}
+    fields = sorted(df.schema.fields, key=lambda f: parts.get(f.name.lower(), 0))
+    return spark.read.schema(StructType(fields)).parquet(data_path)
 
 
 def resume_or_run(build, root: str, stage: str,

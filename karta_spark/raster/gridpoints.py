@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from karta_spark.raster.sampling import position_exprs, round_half_even
+from karta_spark.raster.sampling import position_sql, quote, round_half_even
 
 
 def gridpoints(
@@ -28,7 +28,7 @@ def gridpoints(
     fill is a presentation concern — see tiles_from_cells).  Points whose
     cell index is not an int (null, NaN, infinite or far-off coordinates)
     are dropped."""
-    i, j = position_exprs(transform, F.col(px), F.col(py))
+    i, j = position_sql(transform, quote(px), quote(py))
     return (
         points
         .withColumns({"cell_i": round_half_even(i).try_cast("int"),

@@ -16,27 +16,60 @@ indices so boundary semantics match the reference kernels bit-for-bit
 (nearest: banker's round then bounds-check, grid.py:830-892; bilinear:
 split-index bounds, crfuncs.pyx; ``kernels.sample_nearest`` /
 ``kernels.sample_bilinear`` are the numpy twins the tests compare with).
+
+The expressions are built as SQL text, one ``selectExpr`` per projection,
+because each ``Column`` call is a py4j round trip: built from chained
+``Column`` calls the join took 1,500-1,900 round trips (400-600 with
+PySpark's call-site capture off, see session.py), as SQL text ~70.
+The position, banker's-rounding and split math is written once, as the
+SQL-text helpers below (``gridpoints`` and the q32 gate wrap them with
+``F.expr``).  Doubles enter the text through ``sql_double``, which round
+trips every value exactly, and every operator is parenthesised in the
+order the numpy kernels apply it, so Catalyst gets the same expression
+trees — and the same bits — as the equivalent ``Column`` chain.
 """
 
 from __future__ import annotations
+
+import math
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def position_exprs(transform, x: Column, y: Column):
-    """Fractional (i, j) as Catalyst expressions (crfuncs.pyx:12-33)."""
+def sql_double(v) -> str:
+    """*v* as an exact SQL double literal: ``repr`` (the shortest text that
+    reads back as the same double) with the ``D`` suffix, parenthesised
+    when negative so it can follow a minus sign (``--`` starts an SQL
+    comment); NaN and +-inf go through a CAST."""
+    v = float(v)
+    if math.isnan(v):
+        return "CAST('NaN' AS DOUBLE)"
+    if math.isinf(v):
+        return "CAST('%sInfinity' AS DOUBLE)" % ("-" if v < 0 else "")
+    return f"({v!r}D)" if math.copysign(1.0, v) < 0 else f"{v!r}D"
+
+
+def quote(name: str) -> str:
+    """A column name as an SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def position_sql(transform, x: str, y: str) -> tuple[str, str]:
+    """Fractional (i, j) of SQL expressions *x*, *y* as SQL text
+    (crfuncs.pyx:12-33)."""
     x0, y0, dx, dy, sx, sy = (float(v) for v in transform)
-    denom = dx * dy - sx * sy
-    j = (F.lit(dy) * x - dy * x0 + sx * y0 - F.lit(sx) * y) / denom
-    i = (y - F.lit(y0) - j * sy) / dy
-    return i - 0.5, j - 0.5
+    d = sql_double
+    j = (f"(((({d(dy)} * {x}) - {d(dy * x0)}) + {d(sx * y0)}) - ({d(sx)} * {y}))"
+         f" / {d(dx * dy - sx * sy)}")
+    i = f"(({y} - {d(y0)}) - (({j}) * {d(sy)})) / {d(dy)}"
+    return f"(({i}) - 0.5D)", f"(({j}) - 0.5D)"
 
 
-def round_half_even(c: Column) -> Column:
-    """np.round (banker's) to integer as a Catalyst expression.
+def round_half_even_sql(p: str) -> str:
+    """np.round (banker's) of SQL expression *p* to an integer, as SQL text.
 
-    Float-algebra form instead of F.bround: Spark's BRound allocates a
+    Float-algebra form instead of bround: Spark's BRound allocates a
     BigDecimal per row (measured r8: 0.6 s of the 1.0 s q11 aggregate at
     6M rows); this CASE form is pure double/long codegen.  Exactness: the
     fraction f = p - floor(p) is computed EXACTLY for every double p —
@@ -50,18 +83,30 @@ def round_half_even(c: Column) -> Column:
 
     Null for null, NaN, infinite and beyond-long input: floor() saturates
     there, so r + 1 would raise under ANSI (and NaN > 0.5 holds in Spark)."""
-    r = F.floor(c)
-    f = c - r
-    return F.when(F.abs(c) < float(2 ** 63),
-                  F.when(f > 0.5, r + 1).when(f < 0.5, r).otherwise(r + F.pmod(r, 2)))
+    r = f"FLOOR({p})"
+    f = f"({p} - {r})"
+    return (f"(CASE WHEN abs({p}) < {sql_double(2 ** 63)} THEN"
+            f" CASE WHEN {f} > 0.5D THEN ({r} + 1) WHEN {f} < 0.5D THEN {r}"
+            f" ELSE ({r} + pmod({r}, 2)) END END)")
 
 
-def _split_low(v: Column) -> Column:
+def round_half_even(p) -> Column:
+    """``round_half_even_sql`` as a Column; *p* is SQL text or a plain
+    column reference (``F.col(name)``)."""
+    if not isinstance(p, str):
+        node = p._jc.node()
+        if node.getClass().getSimpleName() != "UnresolvedAttribute":
+            raise TypeError(f"expected SQL text or a column reference, got {p}")
+        p = node.sql()
+    return F.expr(round_half_even_sql(p))
+
+
+def _split_low_sql(v: str) -> str:
     """Lower bilinear neighbor of global position *v* (crfuncs.pyx:49-67,
     ``kernels._split_index``): floor(v), or v-1 at a nonzero integer v;
     the upper neighbor is always this plus one."""
-    fl = F.floor(v)
-    return F.when((fl == v) & (v != 0), fl - 1).otherwise(fl)
+    fl = f"FLOOR({v})"
+    return f"(CASE WHEN ({fl} = {v}) AND ({v} != 0) THEN ({fl} - 1) ELSE {fl} END)"
 
 
 def sample_join(
@@ -97,11 +142,10 @@ def sample_join(
                               px="_gx", py="_gy", tile=tile, value_col=value_col)
             return out.drop("_gx", "_gy")
     # one task over the scalar columns: a single-stage job, no exchange
-    meta = tiles.coalesce(1).agg(
-        F.first("gny").alias("gny"), F.first("gnx").alias("gnx"),
-        F.first("nodata").alias("nodata"), F.min("halo").alias("halo"),
-        F.max("ny").alias("tny"), F.max("nx").alias("tnx"),
-        F.count("*").alias("n_tiles")).first()
+    meta = tiles.coalesce(1).selectExpr(
+        "first(gny) AS gny", "first(gnx) AS gnx", "first(nodata) AS nodata",
+        "min(halo) AS halo", "max(ny) AS tny", "max(nx) AS tnx",
+        "count(*) AS n_tiles").first()
     gny, gnx = int(meta["gny"]), int(meta["gnx"])
     # tiles_from_cells tables carry their NaN nodata as null
     nodata = float("nan") if meta["nodata"] is None else float(meta["nodata"])
@@ -116,53 +160,46 @@ def sample_join(
     # both methods answer every position outside [-1, n] with nodata, so
     # a null, NaN, infinite or off-grid one becomes -2: the integer math
     # below then stays small and cannot overflow under ANSI
-    i, j = position_exprs(transform, F.col(px), F.col(py))
-    pts = points.select("*", *(
-        F.when((c >= -1) & (c <= n), c).otherwise(-2.0).alias(name)
+    i, j = position_sql(transform, quote(px), quote(py))
+    pts = points.selectExpr("*", *(
+        f"CASE WHEN ({c} >= -1) AND ({c} <= {n}) THEN {c} ELSE (-2.0D) END AS {name}"
         for c, n, name in ((i, gny, "_i"), (j, gnx, "_j"))))
-    low = _split_low if use_bilinear else round_half_even  # np.round is banker's
-    pts = pts.withColumns({
-        "_r": low(F.col("_i")), "_c": low(F.col("_j")),
-        "_ti": (F.greatest(F.lit(0), F.least(F.lit(gny - 1), F.floor("_i"))) / size).cast("int"),
-        "_tj": (F.greatest(F.lit(0), F.least(F.lit(gnx - 1), F.floor("_j"))) / size).cast("int"),
-    })
-    t = tiles.select(
-        F.col("tile_i").alias("_ti"), F.col("tile_j").alias("_tj"),
-        (F.col("i0") - F.col("halo")).alias("_oi"),
-        (F.col("j0") - F.col("halo")).alias("_oj"),
-        (F.col("nx") + 2 * F.col("halo")).alias("_w"), "block",
-    )
+    low = _split_low_sql if use_bilinear else round_half_even_sql  # np.round is banker's
+    pts = pts.selectExpr(
+        "*", f"{low('_i')} AS _r", f"{low('_j')} AS _c",
+        f"CAST(greatest(0, least({gny - 1}, FLOOR(_i))) / {size} AS INT) AS _ti",
+        f"CAST(greatest(0, least({gnx - 1}, FLOOR(_j))) / {size} AS INT) AS _tj")
+    t = tiles.selectExpr("tile_i AS _ti", "tile_j AS _tj", "i0 - halo AS _oi",
+                         "j0 - halo AS _oj", "nx + halo * 2 AS _w", "block")
 
-    r, c, w = F.col("_r"), F.col("_c"), F.col("_w")
-    at = (r - F.col("_oi")) * w + (c - F.col("_oj"))  # flat index in the halo'd block
+    at = "(((_r - _oi) * _w) + (_c - _oj))"  # flat index in the halo'd block
     if use_bilinear:
         # the kernel's exact product and sum order, weights in float64
-        gi, gj = F.col("_i"), F.col("_j")
-        wi0, wi1, wj0, wj1 = (r + 1) - gi, gi - r, (c + 1) - gj, gj - c
-        val = (F.get("block", at) * wi0 * wj0
-               + F.get("block", at + w) * wi1 * wj0
-               + F.get("block", at + 1) * wi0 * wj1
-               + F.get("block", at + w + 1) * wi1 * wj1)
-        ok = (r >= 0) & (r + 1 < gny) & (c >= 0) & (c + 1 < gnx)
+        wi0, wi1, wj0, wj1 = "((_r + 1) - _i)", "(_i - _r)", "((_c + 1) - _j)", "(_j - _c)"
+        val = (f"((((get(block, {at}) * {wi0}) * {wj0})"
+               f" + ((get(block, ({at} + _w)) * {wi1}) * {wj0}))"
+               f" + ((get(block, ({at} + 1)) * {wi0}) * {wj1}))"
+               f" + ((get(block, (({at} + _w) + 1)) * {wi1}) * {wj1})")
+        ok = f"((((_r >= 0) AND ((_r + 1) < {gny})) AND (_c >= 0)) AND ((_c + 1) < {gnx}))"
     else:
-        val = F.get("block", at)
-        ok = (r >= 0) & (r < gny) & (c >= 0) & (c < gnx)
+        val = f"get(block, {at})"
+        ok = f"((((_r >= 0) AND (_r < {gny})) AND (_c >= 0)) AND (_c < {gnx}))"
 
     def no_nan(v):
         # a NaN sample leaves as SQL NULL; a NaN cell that a tile table
         # stores as a null element gathers null already
-        return F.nanvl(v, F.lit(None).cast("double")).alias(value_col)
+        return f"nanvl({v}, CAST(NULL AS DOUBLE)) AS {quote(value_col)}"
 
-    keep = [F.col(f"`{f.name}`") for f in points.schema.fields]
-    out = pts.join(t, ["_ti", "_tj"]).select(
-        *keep, no_nan(F.when(ok, val).otherwise(nodata)))
+    keep = [quote(c) for c in points.columns]
+    out = pts.join(t, ["_ti", "_tj"]).selectExpr(
+        *keep, no_nan(f"CASE WHEN {ok} THEN {val} ELSE {sql_double(nodata)} END"))
     n_ti, n_tj = -(-gny // size), -(-gnx // size)
     if int(meta["n_tiles"]) < n_ti * n_tj:
         # a sparse table (tiles_from_cells keeps only tiles with data):
         # points keyed to an absent tile get nodata; clamped keys always
         # hit in a dense table, which is therefore scanned once
         miss = pts.join(t.select("_ti", "_tj"), ["_ti", "_tj"], "left_anti")
-        out = out.unionByName(miss.select(*keep, no_nan(F.lit(nodata))))
+        out = out.unionByName(miss.selectExpr(*keep, no_nan(sql_double(nodata))))
     return out
 
 

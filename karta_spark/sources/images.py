@@ -456,17 +456,18 @@ DECODE_STATS_SCHEMA = StructType([
 ])
 
 
-def expected_caption_expr(image_id_col) -> F.Column:
+def expected_caption_expr() -> F.Column:
     """The reference caption regenerated JVM-side from the image index
-    (image_id = 'img%012d'): mirrors caption_for_index with array literals +
-    element_at — the caption byte-equality invariant costs zero Python."""
-    i = F.substring(image_id_col, 4, 12).cast("long")
-    words = F.array(*[F.lit(w) for w in _WORDS])
+    (image_id = 'img%012d'): mirrors caption_for_index with an array
+    literal + element_at — the caption byte-equality invariant costs zero
+    Python.  One SQL expression, so building it takes one py4j call."""
+    i = "CAST(substring(image_id, 4, 12) AS BIGINT)"
+    words = "array(%s)" % ", ".join(f"'{w}'" for w in _WORDS)
     n = len(_WORDS)
-    return F.concat(
-        F.lit("caption "), i.cast("string"), F.lit(" "),
-        F.element_at(words, (i % n + 1).cast("int")), F.lit(" "),
-        F.element_at(words, ((i * 7 + 3) % n + 1).cast("int")))
+    return F.expr(
+        f"concat('caption ', CAST({i} AS STRING), ' ',"
+        f" element_at({words}, CAST((({i} % {n}) + 1) AS INT)), ' ',"
+        f" element_at({words}, CAST((((({i} * 7) + 3) % {n}) + 1) AS INT)))")
 
 
 def verify_images(images: DataFrame, min_psnr: float = 40.0) -> DataFrame:
@@ -478,7 +479,7 @@ def verify_images(images: DataFrame, min_psnr: float = 40.0) -> DataFrame:
     Single pass: the caption flag is computed as a Catalyst column BEFORE
     the decode kernel and carried through it — a join-back against the
     (possibly expensive, lazy) source would re-run its lineage."""
-    cap_ok = F.col("caption") == expected_caption_expr(F.col("image_id"))
+    cap_ok = F.col("caption") == expected_caption_expr()
     stats = decode_stats(images.withColumn("caption_ok", cap_ok),
                          passthrough=("caption_ok",))
     return (

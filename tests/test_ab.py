@@ -66,3 +66,28 @@ def test_run_pairs_interleaves_every_workload_and_records_sections():
         assert section["metrics"]["rows_per_s"]["pairs"] == 2
         assert section["metrics"]["rows_per_s"]["head_wins"] == 2
     assert (rec["base"], rec["seeds"], rec["seconds"]) == ("HEAD~1", "5-6", 3)
+
+
+def test_steal_share_per_run_and_side_medians():
+    # cumulative (busy, steal) ticks: each run adds 90 busy and 10, 30,
+    # 0, 20 ticks of steal in turn
+    steps = iter([(0, 0), (90, 10), (90, 10), (180, 40), (180, 40), (270, 40),
+                  (270, 40), (360, 60)])
+
+    def fake_run(checkout, workload, seed, seconds):
+        return {"correct": True, "attempted": 1, "failed": 0,
+                "metrics": {"rows_per_s": 1.0}}
+
+    runs = ab.run_pairs(["pip_tile"], [1, 2], "BASE", 3, run=fake_run,
+                        ticks=lambda: next(steps))
+    got = [(r["seed"], r["side"], r["steal_share"]) for r in runs["pip_tile"]]
+    assert got == [(1, "base", 0.1), (1, "head", 0.25), (2, "head", 0.0),
+                   (2, "base", 20 / 110)]
+    rec = ab.record("HEAD~1", "1-2", 3, runs, {"rows_per_s": "higher"})
+    share = rec["workloads"]["pip_tile"]["steal_share"]
+    assert share["base"] == (0.1 + 20 / 110) / 2 and share["head"] == 0.125
+
+
+def test_cpu_ticks_reads_proc_stat():
+    busy, steal = ab.cpu_ticks()
+    assert busy > 0 and steal >= 0

@@ -139,6 +139,33 @@ class TestExactLineage:
         _assert_exact(rows, {})
         assert lineage.stage_complete(root, "empty")
 
+    def test_returned_schema_is_the_written_one(self, spark, tmp_path):
+        """Plain, append, partition_by and empty writes come back with the
+        written columns, every one nullable as a parquet read makes it;
+        partition columns go last and keep their written type (a directory
+        name alone would read k back as int)."""
+        root = str(tmp_path / "ck")
+        out = lineage.run_stage(_tagged(spark, 10, 2, s="a", d=1.5), root, "plain")
+        assert [(f.name, f.dataType.simpleString(), f.nullable) for f in out.schema] == [
+            ("id", "bigint", True), ("p", "int", True), ("s", "string", True),
+            ("d", "double", True)]
+        lineage.run_stage(_tagged(spark, 10, 2, w=0), root, "ap")
+        out = lineage.run_stage(_tagged(spark, 6, 3, w=1), root, "ap", mode="append")
+        assert out.schema.simpleString() == "struct<id:bigint,p:int,w:int>"
+        assert out.count() == 16
+        pb = (_tagged(spark, 100, 4).withColumn("k", F.col("id") % 3)
+              .withColumn("z", F.lit("q")))
+        out = lineage.run_stage(pb, root, "pb", partition_by=["K"])
+        assert out.schema.simpleString() == "struct<id:bigint,p:int,z:string,k:bigint>"
+        assert sorted(r["k"] for r in out.select("k").distinct().collect()) == [0, 1, 2]
+        out = lineage.run_stage(_tagged(spark, 0, 3), root, "empty")
+        assert out.schema.simpleString() == "struct<id:bigint,p:int>"
+        # no file at all: there is nothing a schema could be inferred from
+        out = lineage.run_stage(_tagged(spark, 0, 3, k=1), root, "empty_pb",
+                                partition_by=["k"])
+        assert out.schema.simpleString() == "struct<id:bigint,p:int,k:int>"
+        assert out.count() == 0
+
     def test_task_retry_counted_once(self, tmp_path):
         """Attempt 0 of partition 1 fails mid-write; local[2,2] retries it.
         Only the committed attempt's file is counted."""
@@ -184,8 +211,9 @@ class TestExactLineage:
 
 class TestLineageJobs:
     def test_range_stage_jobs_and_plan(self, spark, tmp_path):
-        """A spark.range stage costs two Spark jobs — the write and the
-        re-read's schema inference — and its write plan has no Python."""
+        """A spark.range stage costs one Spark job, the write: the re-read
+        takes the written schema instead of inferring one from the
+        footers.  The write plan has no Python."""
         sc = spark.sparkContext
         group = "lineage-jobs-%d" % id(tmp_path)
         sc.setJobGroup(group, "run_stage job count")
@@ -195,7 +223,7 @@ class TestLineageJobs:
             sc.setLocalProperty("spark.jobGroup.id", None)
         sc._jsc.sc().listenerBus().waitUntilEmpty()
         jobs = set(sc.statusTracker().getJobIdsForGroup(group))
-        assert len(jobs) == 2
+        assert len(jobs) == 1
 
         store = spark._jsparkSession.sharedState().statusStore()
         execs = store.executionsList()

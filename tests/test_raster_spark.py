@@ -232,6 +232,107 @@ class TestSampleJoinPlan:
             sampling.sample_join(pts, bare, T1)
 
 
+class TestSampleJoinSkewed:
+    """Skewed transforms, as in the reference's sampling goldens
+    (grid_tests.py:220-313): non-zero sx, sy, a north-up negative dy and
+    negative origin terms.  Bit-equal to the numpy kernels at the
+    positions the closed-form inverse affine gives, in the same order."""
+
+    Z = TestSampleJoinEdges.Z
+    T = (-4.25, 3.5, 0.75, -0.6, 0.13, -0.09)
+
+    @pytest.mark.parametrize("tile", [3, 16])
+    def test_bit_equal_to_kernels(self, spark, tile):
+        x0, y0, dx, dy, sx, sy = self.T
+        rng = np.random.default_rng(23)
+        # forward affine of every quarter-cell position around the grid,
+        # random points, and non-finite coordinates
+        ii, jj = np.mgrid[-1.5:8.0:0.25, -1.5:10.0:0.25].reshape(2, -1)
+        xs = np.concatenate([x0 + (jj + 0.5) * dx + (ii + 0.5) * sx,
+                             rng.uniform(-6.0, 7.0, 300), [np.nan, np.inf, 0.0]])
+        ys = np.concatenate([y0 + (ii + 0.5) * dy + (jj + 0.5) * sy,
+                             rng.uniform(-2.0, 5.0, 300), [0.0, 1.0, -np.inf]])
+        rows = [(k, float(x), float(y)) for k, (x, y) in enumerate(zip(xs, ys))]
+        pts = spark.createDataFrame(rows, "pid long, x double, y double")
+        g = tiles.grid_to_df(spark, "g", self.Z, self.T, nodata=-9999.0, tile=tile)
+        with np.errstate(invalid="ignore", over="ignore"):
+            j = (dy * xs - dy * x0 + sx * y0 - sx * ys) / (dx * dy - sx * sy)
+            gi, gj = (ys - y0 - j * sy) / dy - 0.5, j - 0.5
+            for method, kernel in (("bilinear", sample_bilinear), ("nearest", sample_nearest)):
+                got = {r["pid"]: r["value"] for r in
+                       sampling.sample_join(pts, g, self.T, method=method).collect()}
+                want = kernel(gi, gj, self.Z, -9999.0)
+                assert len(got) == len(rows)
+                assert sum(w != -9999.0 for w in want) > 200  # most are on the grid
+                for k, (pid, x, y) in enumerate(rows):
+                    assert _bits(got[pid]) == _bits(want[k]), (method, x, y, got[pid], want[k])
+
+
+class TestSqlText:
+    VALUES = [-0.0, 0.0, 5e-324, -5e-324, 1e300, -1e300, 0.1, -1 / 3, 2.0 ** 63,
+              1.7976931348623157e308, -2.2250738585072014e-308, math.pi * 1e-310]
+
+    def test_double_literals_round_trip(self, spark):
+        lits = [sampling.sql_double(v) for v in self.VALUES]
+        row = spark.range(1).selectExpr(*(f"{t} AS c{k}" for k, t in enumerate(lits))).first()
+        for k, v in enumerate(self.VALUES):
+            assert _bits(row[k]) == _bits(v) and math.copysign(1.0, row[k]) == math.copysign(1.0, v)
+        special = spark.range(1).selectExpr(
+            *(sampling.sql_double(v) for v in (float("nan"), float("inf"), -float("inf")))).first()
+        assert math.isnan(special[0]) and special[1] == float("inf") and special[2] == -float("inf")
+
+    def test_negative_literal_after_a_minus_sign(self, spark):
+        # "1.0D--5.0D" would be 1.0 followed by a comment
+        neg = sampling.sql_double(-5.0)
+        assert neg.startswith("(")
+        assert spark.range(1).selectExpr(f"1.0D-{neg}").first()[0] == 6.0
+        assert spark.range(1).selectExpr(f"1.0D-{sampling.sql_double(-0.0)}").first()[0] == 1.0
+
+    @pytest.mark.parametrize("nodata", [float("inf"), -float("inf"), float("nan")])
+    def test_non_finite_nodata(self, spark, nodata):
+        g = tiles.grid_to_df(spark, "g", np.ones((6, 6)), T1, nodata=nodata, tile=4)
+        got = sample_at(spark, g, T1, [(2.0, 2.0), (40.0, 2.0), (2.0, -7.0)], "bilinear")
+        assert got[0] == 1.0
+        want = None if math.isnan(nodata) else nodata  # NaN leaves as NULL
+        assert got[1:] == [want, want]
+
+
+class TestSampleJoinBuildCost:
+    def test_one_job_and_few_py4j_round_trips(self, spark, monkeypatch):
+        """Building the plan runs only the metadata query and makes at most
+        150 py4j round trips (one Column call each made ~1,500)."""
+        import py4j.clientserver as cs
+
+        g = tiles.grid_to_df(spark, "g", np.ones((64, 64)), T1, tile=16).cache()
+        g.count()
+        pts = spark.createDataFrame([(0, 1.0, 1.0)], "pid long, x double, y double")
+        sc = spark.sparkContext
+        group = "sample-join-build"
+        calls = []
+        send = cs.ClientServerConnection.send_command
+
+        def counted(self, command):
+            calls.append(1)
+            return send(self, command)
+
+        try:
+            for method in ("bilinear", "nearest"):
+                sc.setJobGroup(group + method, "sample_join build")
+                calls.clear()
+                monkeypatch.setattr(cs.ClientServerConnection, "send_command", counted)
+                out = sampling.sample_join(pts, g, T1, method=method)
+                monkeypatch.undo()
+                n_calls = len(calls)
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                sc._jsc.sc().listenerBus().waitUntilEmpty()
+                assert len(sc.statusTracker().getJobIdsForGroup(group + method)) == 1
+                assert 0 < n_calls <= 150, n_calls
+                assert out.first()["value"] == 1.0
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            g.unpersist()
+
+
 class TestSampleCrsTransform:
     def test_points_reprojected_to_grid_crs(self, spark):
         """reference grid.py:1018-1021: sample() converts query points to

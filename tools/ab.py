@@ -12,6 +12,13 @@ seed to seed.  One JSON record goes to standard output with one section
 per workload: per end-to-end metric (from BENCHMARK.json) the median and
 quartiles of each side and the number of seeds the working tree won, plus
 every run's ``correct`` / ``attempted`` / ``failed``.
+
+Each run also records its host-steal share, ``steal / (busy + steal)`` over
+the machine's ``/proc/stat`` CPU ticks from the run's start to its end:
+the share of CPU time that a shared host's hypervisor took from runnable
+virtual CPUs.  Each workload's section carries the median share per side,
+to tell a pair measured under other tenants' load from a real difference;
+no run is dropped for it.
 """
 
 from __future__ import annotations
@@ -67,6 +74,13 @@ def summarize(runs: list[dict], better: dict[str, str]) -> dict:
     return out
 
 
+def cpu_ticks() -> tuple[int, int]:
+    """(busy, steal) clock ticks summed over the machine's CPUs."""
+    with open("/proc/stat") as f:
+        user, nice, system, _, _, irq, softirq, steal = map(int, f.readline().split()[1:9])
+    return user + nice + system + irq + softirq, steal
+
+
 def run_once(checkout: str, workload: str, seed: int, seconds: float) -> dict:
     proc = subprocess.run(
         [sys.executable, "perfbench/run.py", "--workload", workload,
@@ -83,25 +97,38 @@ def run_once(checkout: str, workload: str, seed: int, seconds: float) -> dict:
             "metrics": {k: v["value"] for k, v in res["metrics"].items()}}
 
 
-def run_pairs(workloads, seeds, base_dir, seconds, run=run_once) -> dict:
+def run_pairs(workloads, seeds, base_dir, seconds, run=run_once, ticks=cpu_ticks) -> dict:
     """Run every workload once per side for each seed, alternating which
-    side runs first from seed to seed; the runs, keyed by workload."""
+    side runs first from seed to seed; the runs, keyed by workload, each
+    with its host-steal share."""
     runs = {w: [] for w in workloads}
     sides = [("base", base_dir), ("head", ROOT)]
     for i, seed in enumerate(seeds):
         for workload in workloads:
             for side, checkout in (sides if i % 2 == 0 else sides[::-1]):
+                before = ticks()
                 res = run(checkout, workload, seed, seconds)
-                runs[workload].append({"seed": seed, "side": side, **res})
+                busy, steal = (t - t0 for t, t0 in zip(ticks(), before))
+                runs[workload].append({"seed": seed, "side": side, **res,
+                                       "steal_share": steal / (busy + steal)
+                                       if busy + steal else 0.0})
                 print(f"ab: {workload} seed {seed} {side}: "
                       f"correct={res['correct']}", file=sys.stderr)
     return runs
 
 
+def steal_medians(runs: list[dict]) -> dict:
+    """Median host-steal share of each side's runs."""
+    return {side: statistics.median(r["steal_share"] for r in runs if r["side"] == side)
+            for side in ("base", "head") if any(r["side"] == side for r in runs)}
+
+
 def record(base, seeds, seconds, runs, better) -> dict:
-    """The JSON record: one section (summary and runs) per workload."""
+    """The JSON record: one section (summary, steal medians and runs) per
+    workload."""
     return {"base": base, "seeds": seeds, "seconds": seconds,
-            "workloads": {w: {"metrics": summarize(r, better), "runs": r}
+            "workloads": {w: {"metrics": summarize(r, better),
+                              "steal_share": steal_medians(r), "runs": r}
                           for w, r in runs.items()}}
 
 
