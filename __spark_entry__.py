@@ -1469,11 +1469,10 @@ SELECT poly_id, n_inside FROM u WHERE n_inside > 0
 
 
 def q54_pip_table_join(spark, sf_dir):
-    """Big-big PIP: the SAME 120 seeded triangles as q50, but as a
-    distributed polygon TABLE (poly_id, vertices) — nothing broadcast,
-    nothing in a UDF closure: executor-built cover, AQE-decided cell join,
-    per-row flat winding kernel over variable rings.  Same oracle as q50
-    (the join semantics are identical; only the physical path differs)."""
+    """Table-variant PIP: the SAME 120 seeded triangles as q50, but as a
+    polygon TABLE (poly_id, vertices).  point_in_polygon_join_table
+    collects the table into PolygonSpecs, so the plan is q50's; same
+    oracle as q50."""
     c = with_coords(_t(spark, sf_dir, "customer"), "c_custkey")
     poly_df = spark.createDataFrame(
         [(pid, [{"x": float(x), "y": float(y)} for x, y in v])
@@ -3759,73 +3758,6 @@ FROM px GROUP BY 1
 """
 
 
-def _q95_polys():
-    return [("diamond", [(0.0, 1.5), (2.0, 3.5), (4.0, 1.5), (2.0, -0.5)]),
-            ("quad", [(-60.0, -30.0), (-40.0, -30.0),
-                      (-40.0, -10.0), (-60.0, -10.0)])]
-
-
-def q95_salted_pip_hot_cell(spark, sf_dir):
-    """Hot-cell-salted big-big PIP join (round 7): 20% of the corpus
-    piles onto ONE coordinate (the phash-pileup shape the north rule
-    names), and the cell-keyed shuffle join in
-    point_in_polygon_join_table runs with salt_threshold — the
-    data-driven histogram salt map (operators/skew.py:24) fans the hot
-    cell out k = ceil(count/threshold) ways, point rows pick a stable
-    hash salt, cover rows explode x k, and the join key becomes
-    (cell_id, salt).  SURVEY §4's skew row demands exactly this
-    explicit salting rather than leaving the pileup to AQE.
-
-    Value-oracle-exact: the salted plan must produce byte-identical
-    join results to the unsalted semantics, so the oracle is the same
-    winding-number SQL twin as q50/q54 over the formula-derived points;
-    a salting bug (dropped salt arm, wrong fan-out, hash drift between
-    the two sides) changes n_inside/sum_doc and fails the hash gate.
-    Salted==unsalted is additionally pinned by
-    tests/test_pip_salting.py."""
-    d = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").cast("long").alias("doc_id"))
-    pts = d.select(
-        "doc_id",
-        F.when(F.col("doc_id") % 5 == 0, F.lit(2.0))
-         .otherwise(((F.col("doc_id") * 37) % 320) - 160 + 0.5)
-         .cast("double").alias("x"),
-        F.when(F.col("doc_id") % 5 == 0, F.lit(1.5))
-         .otherwise(((F.col("doc_id") * 53) % 140) - 70 + 0.25)
-         .cast("double").alias("y"))
-    poly_df = spark.createDataFrame(
-        [(pid, [{"x": float(x), "y": float(y)} for x, y in ring])
-         for pid, ring in _q95_polys()],
-        "poly_id string, vertices array<struct<x double, y double>>")
-    joined = pip_join.point_in_polygon_join_table(
-        pts, poly_df, zoom=5, small_table_threshold=None,
-        salt_threshold=20)
-    return joined.groupBy("poly_id").agg(
-        F.count("*").cast("long").alias("n_inside"),
-        F.sum("doc_id").alias("sum_doc"))
-
-
-def _q95_sql():
-    arms = "\nUNION ALL\n".join(
-        f"SELECT '{pid}' AS poly_id, CAST(count(*) AS BIGINT) AS n_inside, "
-        f"CAST(sum(doc_id) AS BIGINT) AS sum_doc "
-        f"FROM pts WHERE {winding_sql(np.array(ring), 'x', 'y')}"
-        for pid, ring in _q95_polys())
-    return f"""
-WITH pts AS (
-  SELECT CAST(doc_id AS BIGINT) AS doc_id,
-         CAST(CASE WHEN doc_id % 5 = 0 THEN 2.0
-              ELSE ((doc_id * 37) % 320) - 160 + 0.5 END AS DOUBLE) AS x,
-         CAST(CASE WHEN doc_id % 5 = 0 THEN 1.5
-              ELSE ((doc_id * 53) % 140) - 70 + 0.25 END AS DOUBLE) AS y
-  FROM documents
-), u AS (
-{arms}
-)
-SELECT poly_id, n_inside, sum_doc FROM u WHERE n_inside > 0
-"""
-
-
 def q96_ivf_trained_determinism(spark, sf_dir):
     """Trained-IVF replica stability (round 7): train_centroids is now
     CONTENT-deterministic (similarity.py — rows sampled by
@@ -5664,7 +5596,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q92_multipage_document_census": q92_multipage_document_census,
         "q93_gopher_rules": q93_gopher_rules,
         "q94_vp8_lossy_census": q94_vp8_lossy_census,
-        "q95_salted_pip_hot_cell": q95_salted_pip_hot_cell,
         "q96_ivf_trained_determinism": q96_ivf_trained_determinism,
         "q97_oblique_stere_grid": q97_oblique_stere_grid,
         "q98_eqdc_conus": q98_eqdc_conus,
@@ -5771,7 +5702,6 @@ def oracle_sql() -> dict[str, str]:
         "q92_multipage_document_census": Q92_SQL,
         "q93_gopher_rules": _q93_sql(),
         "q94_vp8_lossy_census": Q94_SQL,
-        "q95_salted_pip_hot_cell": _q95_sql(),
         "q96_ivf_trained_determinism": Q96_SQL,
         "q97_oblique_stere_grid": _q97_sql(),
         "q98_eqdc_conus": _q98_sql(),

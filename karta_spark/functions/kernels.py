@@ -607,30 +607,6 @@ def polylines_intersection_points_target(xs_seq, ys_seq, closed: bool,
     return (np.concatenate(owners), np.concatenate(pxs), np.concatenate(pys))
 
 
-def winding_contains_rows(px, py, xs_seq, ys_seq) -> np.ndarray:
-    """Row-aligned winding test for VARIABLE-size rings: point i against
-    its own ring (xs_seq[i], ys_seq[i]) — rings implicitly closed, exactly
-    winding_number's modulo-edge rule.  No padding: all rings' segments
-    are flattened (_flat_segments closed=True) and every per-segment
-    winding contribution lands in one bincount per row.  Same per-edge
-    algebra as winding_number, so results are bit-identical."""
-    n = len(px)
-    px = np.asarray(px, dtype=np.float64)
-    py = np.asarray(py, dtype=np.float64)
-    if n == 0:
-        return np.zeros(0, dtype=bool)
-    sx0, sy0, sx1, sy1, owner = _flat_segments(xs_seq, ys_seq, closed=True)
-    if not len(sx0):
-        return np.zeros(n, dtype=bool)
-    opx, opy = px[owner], py[owner]
-    left = (sx1 - sx0) * (opy - sy0) - (opx - sx0) * (sy1 - sy0)
-    up = (sy0 <= opy) & (opy < sy1) & (left > 0)
-    down = (sy0 > opy) & (opy >= sy1) & (left < 0)
-    cnt = (np.bincount(owner[up], minlength=n)
-           - np.bincount(owner[down], minlength=n))
-    return cnt != 0
-
-
 def polyline_intersection_points(a, b, a_closed=False, b_closed=False):
     """All pairwise intersection points between two vertex strings.
 

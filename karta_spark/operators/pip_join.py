@@ -22,14 +22,14 @@ as a Spark plan:
    per join on the driver — bit-identical to contains.pyx:13-42) inside an
    Arrow-batched pandas UDF.  Polar rings take a dense spherical arm.
 
-``point_in_polygon_join_table`` takes a polygon set too large for the
-driver as a DataFrame and runs the same cover kernel per Arrow batch on
-executors.
+``point_in_polygon_join_table`` takes the polygon set as a DataFrame,
+collects it, and runs this same plan: there is one PIP join path.
 
 Scale notes (100 TB): the big side is never shuffled — the join is
 broadcast; the refine UDF sees only boundary-cell candidates (a thin
-O(perimeter) slice); hot cells can additionally be salted (operators.skew)
-when the polygon side must itself be distributed.
+O(perimeter) slice).  The polygon side is bounded by its cover, which the
+driver builds and holds: ``cover_arrays`` refuses a set whose cover runs
+past ``MAX_COVER_CELLS`` cells instead of running the driver out of memory.
 """
 
 from __future__ import annotations
@@ -165,6 +165,14 @@ def _planar_grid(poly: PolygonSpec, size: float):
             math.floor(ymax / size) - y0 + 1)
 
 
+# Cover cells one cover_arrays call may build.  The build peaks at ~310
+# bytes of driver memory per cell (see cover_df), so 16M cells is ~5 GB: a
+# third of a 16 GB driver, far past every cover the gates, bench.py and
+# perfbench build.  A set that needs more is refused rather than left to
+# run the driver out of memory.
+MAX_COVER_CELLS = 16_000_000
+
+
 def cover_arrays(polys: list[PolygonSpec], zoom: int,
                  planar_size: float | None = None):
     """Classified cell cover of a whole polygon set in one numpy pass.
@@ -181,13 +189,21 @@ def cover_arrays(polys: list[PolygonSpec], zoom: int,
     exactly 0 winding, so the counts — and the per-(corner, edge) ``isleft``
     algebra — are those of ``kernels.winding_number``, and the cover is
     bit-identical to testing each polygon's lattice with
-    ``PolygonSpec.contains``."""
+    ``PolygonSpec.contains``.
+
+    Raises ``ValueError`` before any per-cell work when the cover would
+    hold more than ``MAX_COVER_CELLS`` cells."""
     planar = planar_size is not None
     grid = (np.array([_planar_grid(p, planar_size) if planar
                       else _lonlat_grid(p, zoom) for p in polys], dtype=np.int64)
             .reshape(-1, 4))
     gx0, gy0, nx, ny = grid.T
     ncell = nx * ny
+    if ncell.sum() > MAX_COVER_CELLS:
+        raise ValueError(
+            f"polygon cover of {int(ncell.sum())} cells exceeds "
+            f"MAX_COVER_CELLS={MAX_COVER_CELLS}; use a coarser zoom "
+            "(or a larger planar_size)")
     ncor = (nx + 1) * (ny + 1) * (ncell > 0)
     cco = np.cumsum(ncor) - ncor  # polygon p's corners start at cco[p]
     n = float(2 ** zoom)
@@ -371,10 +387,8 @@ def cover_df(spark: SparkSession, polys: list[PolygonSpec], zoom: int,
     4 cores, the build peaks at ~310 bytes of Python memory and ~1 us per
     cover cell, and the broadcast is ~110 bytes per cell (10k seeded star
     polygons at auto_zoom: 3.1M cells, 2.9 s, 1.1 GB peak, 336 MB
-    broadcast).  A set whose cover runs past a few million cells — the
-    same 10k polygons at z12 are 11.6M cells and a 3.6 GB build — belongs
-    in ``point_in_polygon_join_table``, which builds the cover per Arrow
-    batch of the polygon table on executors."""
+    broadcast).  The same 10k polygons at z12 are 11.6M cells and a 3.6 GB
+    build; ``cover_arrays`` refuses covers past ``MAX_COVER_CELLS``."""
     pidx, cid, full = cover_arrays(polys, zoom, planar_size)
     names = np.array([p.poly_id for p in polys], dtype=object)[pidx]
     out = {"poly_id": pa.array(names, pa.string()), "cell_id": cid, "full": full}
@@ -580,166 +594,20 @@ def point_in_polygon_join_table(
     lat: str = "y",
     poly_id: str = "poly_id",
     vertices: str = "vertices",
-    small_table_threshold: int | None = 256,
-    max_polar_rings: int | None = 10_000,
-    salt_threshold: int | None = None,
 ) -> DataFrame:
-    """Big-big PIP join: the polygon side is itself a distributed DataFrame
-    (poly_id, vertices array<struct<x double, y double>> — outer rings,
-    lonlat), not a driver-side list.  The scale shape the broadcast variant
-    can't reach: millions of polygons, nothing driver-side, nothing in a
-    UDF closure.
+    """``point_in_polygon_join`` against a polygon *table* (poly_id,
+    vertices array<struct<x double, y double>> — outer rings, lonlat).
 
-    ``small_table_threshold``: the distributed-cover machinery carries
-    fixed costs (mapInPandas cover stage, AQE shuffle join) that dominate
-    tiny inputs.  When the polygon table has at most this many rows (probed
-    with a limit+collect — one cheap early-stopping scan), the specs are
-    collected and routed through the broadcast arm
-    (point_in_polygon_join) — identical semantics, pinned by the
-    equality test; None disables the probe.
-
-    Plan:
-    1. polygon table -> classified cover rows via mapInPandas (same
-       full/boundary classification as the broadcast path);
-    2. points ⋈ cover on cell_id — both sides big, so the join strategy is
-       AQE's call (shuffle on cell_id, skew-split enabled);
-    3. boundary candidates join their polygon's coordinate arrays on
-       poly_id and run the flat per-segment winding kernel
-       (kernels.winding_contains_rows — variable ring sizes, no padding,
-       bit-identical to winding_number); full-cell hits skip Python.
-
-    Polar rings (detected executor-side) bypass the cover — their
-    contained region under the reference's azimuth-swing semantics is not
-    bounded by the vertex bbox, so no cell cover can index them.  They
-    broadcast into a dense cross-join arm refined by the spherical kernel
-    (assumes polar rings are a small minority of the table — the realistic
-    shape; a corpus of millions of polar rings has no indexable form).
-    ``max_polar_rings`` guards that assumption: the polar side is counted
-    before the cross-join and the operator fails loudly above the
-    threshold instead of silently planning an O(points x polar) join
-    (None disables the guard and accepts the cross-join at any size).
-
-    A (point, polygon) pair appears at most once (the point has ONE cell)."""
-    from karta_spark.functions.kernels import ispolar as _ispolar
-    from karta_spark.functions.kernels import sphere_contains, winding_contains_rows
-
-    if small_table_threshold is not None:
-        head = polys.select(poly_id, vertices).limit(
-            small_table_threshold + 1).collect()
-        if len(head) <= small_table_threshold:
-            specs = [
-                PolygonSpec(
-                    r[0],
-                    np.array([[v.x, v.y] for v in r[1]], dtype=np.float64),
-                    (), "lonlat")
-                for r in head
-            ]
-            out = point_in_polygon_join(points, specs, zoom=zoom,
-                                        lon=lon, lat=lat)
-            return (out if poly_id == "poly_id"
-                    else out.withColumnRenamed("poly_id", poly_id))
-
-    spark = points.sparkSession
-    xs_col = F.transform(vertices, lambda v: v.x)
-    ys_col = F.transform(vertices, lambda v: v.y)
-
-    @F.pandas_udf(BooleanType())
-    def is_polar(rx: pd.Series, ry: pd.Series) -> pd.Series:
-        return pd.Series([
-            bool(_ispolar(np.column_stack(
-                [np.asarray(x, dtype=np.float64),
-                 np.asarray(y, dtype=np.float64)])))
-            for x, y in zip(rx, ry)])
-
-    ring_all = polys.select(F.col(poly_id).alias("_pid"),
-                            xs_col.alias("_rx"), ys_col.alias("_ry"))
-    ring_all = ring_all.withColumn("_polar", is_polar(F.col("_rx"), F.col("_ry")))
-    ring = ring_all.where(~F.col("_polar")).drop("_polar")
-    polar_ring = ring_all.where(F.col("_polar")).drop("_polar")
-    if max_polar_rings is not None:
-        n_polar = polar_ring.count()
-        if n_polar > max_polar_rings:
-            raise ValueError(
-                f"point_in_polygon_join_table: {n_polar} polar rings exceed "
-                f"max_polar_rings={max_polar_rings}; the polar arm is a "
-                "broadcast cross-join (polar containment has no cell-index "
-                "form), so a polar-heavy table would plan an "
-                "O(points x polar_rings) join. Split the polar rings out "
-                "and process them in batches, or pass max_polar_rings=None "
-                "to accept the cross-join.")
-
-    def build(batches):
-        for pdf in batches:
-            pids = pdf["_pid"].to_numpy(dtype=object)
-            pidx, cids, fulls = cover_arrays([
-                PolygonSpec(pid, np.column_stack(
-                    [np.asarray(rx, dtype=np.float64),
-                     np.asarray(ry, dtype=np.float64)]), (), "lonlat")
-                for pid, rx, ry in zip(pids, pdf["_rx"], pdf["_ry"])], zoom)
-            yield pd.DataFrame({"_pid": pids[pidx], "cell_id": cids,
-                                "full": fulls})
-
-    cover = ring.select("_pid", "_rx", "_ry").mapInPandas(
-        build, "_pid string, cell_id long, full boolean")
-
-    pts = points.withColumn("cell_id", cells.tile_id_clamped(lon, lat, zoom))
-    if salt_threshold is not None:
-        # explicit data-driven hot-cell salting (north rule / SURVEY §4):
-        # a phash pileup can put a large fraction of the corpus into ONE
-        # cell, and AQE's skew split only helps after that reducer's
-        # input is already materialized.  operators/skew.py histograms
-        # the point side, fans hot cells out k = ceil(count/threshold)
-        # ways (point rows pick a stable hash salt, cover rows explode
-        # x k), and the join key becomes (cell_id, salt).  Costs one
-        # extra aggregation scan of the points — opt in where the corpus
-        # is known to pile up.
-        from karta_spark.operators import skew
-        cand = skew.salted_join(pts, cover, threshold=salt_threshold,
-                                cell="cell_id", broadcast_small=False)
-    else:
-        cand = pts.join(cover, "cell_id", "inner")
-    full_hits = cand.where(F.col("full")).drop("full", "cell_id")
-    boundary = (cand.where(~F.col("full")).drop("full", "cell_id")
-                .join(ring, "_pid"))
-
-    @F.pandas_udf(BooleanType())
-    def refine(px: pd.Series, py: pd.Series, rx: pd.Series, ry: pd.Series) -> pd.Series:
-        return pd.Series(winding_contains_rows(
-            px.to_numpy(dtype=np.float64), py.to_numpy(dtype=np.float64),
-            list(rx), list(ry)))
-
-    boundary_hits = (boundary
-                     .where(refine(F.col(lon), F.col(lat),
-                                   F.col("_rx"), F.col("_ry")))
-                     .drop("_rx", "_ry"))
-
-    @F.pandas_udf(BooleanType())
-    def polar_refine(px: pd.Series, py: pd.Series, pid: pd.Series,
-                     rx: pd.Series, ry: pd.Series) -> pd.Series:
-        # one sphere_contains call per distinct ring in the batch
-        # (argsort-sliced)
-        out = np.zeros(len(px), dtype=bool)
-        pxv = px.to_numpy(dtype=np.float64)
-        pyv = py.to_numpy(dtype=np.float64)
-        pids = pid.to_numpy()
-        order = np.argsort(pids, kind="stable")
-        sp = pids[order]
-        bounds = np.flatnonzero(np.r_[True, sp[1:] != sp[:-1], True])
-        for b0, b1 in zip(bounds[:-1], bounds[1:]):
-            idx = order[b0:b1]
-            ringv = np.column_stack(
-                [np.asarray(rx.iloc[idx[0]], dtype=np.float64),
-                 np.asarray(ry.iloc[idx[0]], dtype=np.float64)])
-            out[idx] = sphere_contains(pxv[idx], pyv[idx], ringv)
-        return pd.Series(out)
-
-    polar_hits = (points.crossJoin(F.broadcast(polar_ring))
-                  .where(polar_refine(F.col(lon), F.col(lat), F.col("_pid"),
-                                      F.col("_rx"), F.col("_ry")))
-                  .drop("_rx", "_ry"))
-
-    return (full_hits.unionByName(boundary_hits).unionByName(polar_hits)
-            .withColumnRenamed("_pid", poly_id))
+    The table is collected in one Spark job and its rows become
+    ``PolygonSpec``s, so the plan and the scale bound (``MAX_COVER_CELLS``)
+    are those of the list variant; the output names the polygon column
+    *poly_id*."""
+    specs = [PolygonSpec(pid, np.array([[v.x, v.y] for v in ring],
+                                       dtype=np.float64), (), "lonlat")
+             for pid, ring in polys.select(poly_id, vertices).collect()]
+    out = point_in_polygon_join(points, specs, zoom=zoom, lon=lon, lat=lat)
+    return (out if poly_id == "poly_id"
+            else out.withColumnRenamed("poly_id", poly_id))
 
 
 def winding_sql(outer: np.ndarray, x_expr: str, y_expr: str) -> str:

@@ -11,7 +11,8 @@ catalog via ``spark.table``):
     <root>/<stage>/_lineage/       (stage, part_id, row_count, wall_ms,
                                     finished_at) one row per partition that
                                     committed a file in the last write
-    <root>/<stage>/_SUCCESS_STAGE  stage-complete marker
+    <root>/<stage>/_SUCCESS_STAGE  stage-complete marker, holding the
+                                    written schema
 
 ``run_stage`` checkpoints with a plain ``df.write.parquet`` — no Python runs
 in the write — and counts rows from committed footers: the driver lists the
@@ -29,9 +30,11 @@ lineage parquet itself with pyarrow, so *root* must be driver-visible —
 the same contract as the ``_SUCCESS_STAGE`` marker.
 
 ``resume_or_run`` returns the checkpointed DataFrame when the stage marker
-exists — a killed pipeline restarted with the same root skips completed
-stages entirely; partial stages re-run only missing partitions via an
-anti-join on lineage part_ids when the source is partition-stable.
+exists, read with the schema the marker records — a killed pipeline
+restarted with the same root skips completed stages entirely, with no
+schema-inference job and the column types of the first run; partial
+stages re-run only missing partitions via an anti-join on lineage
+part_ids when the source is partition-stable.
 """
 
 from __future__ import annotations
@@ -112,25 +115,30 @@ def run_stage(
     os.makedirs(lineage_path)
     pq.write_table(table, os.path.join(lineage_path, "part-00000.parquet"))
 
-    with open(_marker(root, stage), "w") as f:
-        f.write(json.dumps({"stage": stage, "completed_at": time.time()}))
     # read back with the written schema, partition columns last as a
     # partitioned read lists them: Spark infers no schema, which would
     # cost a footer-reading job per stage
     parts = {c.lower(): k for k, c in enumerate(partition_by or (), 1)}
-    fields = sorted(df.schema.fields, key=lambda f: parts.get(f.name.lower(), 0))
-    return spark.read.schema(StructType(fields)).parquet(data_path)
+    schema = StructType(sorted(df.schema.fields,
+                               key=lambda f: parts.get(f.name.lower(), 0)))
+    with open(_marker(root, stage), "w") as f:
+        f.write(json.dumps({"stage": stage, "completed_at": time.time(),
+                            "schema": schema.jsonValue()}))
+    return spark.read.schema(schema).parquet(data_path)
 
 
 def resume_or_run(build, root: str, stage: str,
                   spark: SparkSession | None = None, **kwargs) -> DataFrame:
     """If *stage* already checkpointed under *root*, read it back; otherwise
     call ``build()`` and checkpoint the result. ``build`` is a zero-arg
-    callable returning a DataFrame."""
-    data_path = os.path.join(root, stage, "data")
+    callable returning a DataFrame.  A resumed stage is read with the
+    schema ``run_stage`` recorded in the marker, so it has the columns and
+    types the first run returned."""
     if stage_complete(root, stage):
+        with open(_marker(root, stage)) as f:
+            schema = StructType.fromJson(json.load(f)["schema"])
         s = spark or SparkSession.getActiveSession()
-        return s.read.parquet(data_path)
+        return s.read.schema(schema).parquet(os.path.join(root, stage, "data"))
     return run_stage(build(), root, stage, **kwargs)
 
 

@@ -130,7 +130,7 @@ def merge_grids(
 
     tdict = {"x0": T[0], "y0": T[1], "dx": T[2], "dy": T[3], "sx": T[4], "sy": T[5]}
 
-    def assemble(key, pdf: pd.DataFrame):
+    def assemble(key, pdf):
         band, ti, tj = int(key[0]), int(key[1]), int(key[2])
         i0, j0 = ti * tile, tj * tile
         tny = min(tile, ny - i0)
@@ -158,7 +158,7 @@ def mosaic(grids: DataFrame, weights: dict[str, float] | None = None,
     """
     w = weights or {}
 
-    def combine(key, pdf: pd.DataFrame):
+    def combine(key, pdf):
         r0 = pdf.iloc[0]
         nd = float(r0["nodata"])
         acc = None

@@ -136,7 +136,7 @@ def tiles_from_cells(
         F.explode(F.filter(F.array(*targets), lambda s: s.isNotNull())).alias("_t"),
     ).select(F.col("_t.ti").alias("ti"), F.col("_t.tj").alias("tj"), "gi", "gj", "v")
 
-    def assemble(key, pdf: pd.DataFrame):
+    def assemble(key, pdf):
         ti, tj = int(key[0]), int(key[1])
         i0, j0 = ti * tile, tj * tile
         tny = min(tile, gny - i0)

@@ -233,3 +233,26 @@ class TestLineageJobs:
         writes = [p for p in plans if "InsertIntoHadoopFsRelationCommand" in p]
         assert len(writes) == 1
         assert not any("MapInPandas" in p or "PythonUDF" in p for p in plans)
+
+    def test_resume_keeps_the_written_schema_without_a_job(self, spark, tmp_path):
+        """A resumed stage comes back with the schema the first run
+        returned (partition column k stays bigint, not the int a directory
+        name infers) and reading it back runs no Spark job."""
+        root = str(tmp_path / "ck")
+
+        def build():
+            return _tagged(spark, 100, 4, s="a").withColumn("k", F.col("id") % 3)
+
+        first = lineage.resume_or_run(build, root, "s", spark, partition_by=["k"])
+        assert first.schema["k"].dataType.simpleString() == "bigint"
+        sc = spark.sparkContext
+        group = "lineage-resume-%d" % id(tmp_path)
+        sc.setJobGroup(group, "resume_or_run job count")
+        try:
+            again = lineage.resume_or_run(build, root, "s", spark)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        assert again.schema == first.schema
+        assert sorted(again.collect()) == sorted(first.collect())

@@ -11,6 +11,7 @@ import math
 import time
 
 import numpy as np
+import pytest
 
 from karta_spark.functions import cells
 from karta_spark.operators import pip_join as pj
@@ -285,8 +286,8 @@ class TestBatchedCover:
         assert got == want
 
     def test_table_pip_join_matches_broadcast_path(self, spark):
-        """The big-big variant (polygon side a DataFrame) must produce the
-        identical join result as the broadcast-list path."""
+        """The table variant (polygon side a DataFrame) produces the
+        identical join result as the list variant."""
         rng = np.random.default_rng(41)
         polys = [PolygonSpec(f"s{i:03d}", _star(
             rng.uniform(-150, 150), rng.uniform(-55, 55), rng.uniform(2, 7)),
@@ -302,7 +303,7 @@ class TestBatchedCover:
              for p in polys],
             "poly_id string, vertices array<struct<x double, y double>>")
         got = {(r["pid"], r["poly_id"]) for r in
-               pj.point_in_polygon_join_table(pts, poly_df, zoom=6, small_table_threshold=None).collect()}
+               pj.point_in_polygon_join_table(pts, poly_df, zoom=6).collect()}
         assert got == want and len(want) > 100
 
     # probed ground truth (sphere_contains — the reference's azimuth-swing
@@ -331,8 +332,8 @@ class TestBatchedCover:
         assert got == self._POLAR_WANT
 
     def test_table_pip_join_polar_ring(self, spark):
-        """Same memberships through the table variant's polar arm
-        (executor-side detection + broadcast dense cross-join)."""
+        """Same memberships through the table variant: the collected rings
+        are detected polar and take the list variant's dense arm."""
         poly_df = spark.createDataFrame(
             [("cap", [{"x": x, "y": y} for x, y in self._CAP]),
              ("srev", [{"x": x, "y": y} for x, y in self._SREV])],
@@ -340,8 +341,23 @@ class TestBatchedCover:
         pts = spark.createDataFrame(self._POLAR_PTS,
                                     "pid long, x double, y double")
         got = {(r["pid"], r["poly_id"]) for r in
-               pj.point_in_polygon_join_table(pts, poly_df, zoom=4, small_table_threshold=None).collect()}
+               pj.point_in_polygon_join_table(pts, poly_df, zoom=4).collect()}
         assert got == self._POLAR_WANT
+
+    def test_table_pip_join_five_polar_rings(self, spark):
+        """Five rings around the north pole through the table variant: the
+        lat-85 point is inside every one, the lat-40 point in none."""
+        rings = [[{"x": float(lo), "y": 80.0}
+                  for lo in (np.arange(0.0, 360.0, 45.0) + i) % 360.0 - 180.0]
+                 for i in range(5)]
+        poly_df = spark.createDataFrame(
+            [(f"p{i}", r) for i, r in enumerate(rings)],
+            "poly_id string, vertices array<struct<x double, y double>>")
+        pts = spark.createDataFrame([(0, 10.0, 85.0), (1, -120.0, 40.0)],
+                                    "pid long, x double, y double")
+        rows = pj.point_in_polygon_join_table(pts, poly_df, zoom=4).collect()
+        assert sorted((r.pid, r.poly_id) for r in rows) == [
+            (0, f"p{i}") for i in range(5)]
 
     def test_contains_flags_polar_no_bbox_gate(self, spark):
         """contains_flags had the same vertex-bbox trap for polar rings."""
@@ -364,12 +380,10 @@ class TestBatchedCover:
         pts = spark.createDataFrame([(0, 1.0, 2.0)], "pid long, x double, y double")
         poly_df = spark.createDataFrame(
             [], "region string, vertices array<struct<x double, y double>>")
-        for threshold in (256, None):
-            out = pj.point_in_polygon_join_table(
-                pts, poly_df, poly_id="region", small_table_threshold=threshold)
-            assert sorted(out.columns) == ["pid", "region", "x", "y"]
-            assert out.schema["region"].dataType.simpleString() == "string"
-            assert out.count() == 0
+        out = pj.point_in_polygon_join_table(pts, poly_df, poly_id="region")
+        assert sorted(out.columns) == ["pid", "region", "x", "y"]
+        assert out.schema["region"].dataType.simpleString() == "string"
+        assert out.count() == 0
 
     def test_contains_flags_banded_polygon(self, spark):
         """A polygon past MAX_EXPR_EDGES, with a hole, flags every point as
@@ -390,32 +404,6 @@ class TestBatchedCover:
         want = polygon_contains(xs, ys, outer, (hole,))
         assert [got[j] for j in range(xs.size)] == want.tolist()
         assert 0 < want.sum() < xs.size
-
-    def test_winding_rows_kernel_bit_identical(self):
-        """winding_contains_rows vs winding_number over variable rings,
-        boundary points included."""
-        from karta_spark.functions.kernels import (
-            winding_contains, winding_contains_rows)
-        rng = np.random.default_rng(13)
-        rings = []
-        for _ in range(60):
-            k = int(rng.integers(3, 25))
-            ang = np.sort(rng.uniform(0, 2 * np.pi, k))
-            rad = rng.uniform(0.5, 3.0, k)
-            cx, cy = rng.uniform(-5, 5, 2)
-            rings.append(np.column_stack(
-                [cx + rad * np.cos(ang), cy + rad * np.sin(ang)]))
-        n = 4000
-        rid = rng.integers(0, len(rings), n)
-        px = rng.uniform(-9, 9, n)
-        py = rng.uniform(-9, 9, n)
-        px[:40] = [rings[r][0, 0] for r in rid[:40]]  # exact vertices
-        py[:40] = [rings[r][0, 1] for r in rid[:40]]
-        got = winding_contains_rows(
-            px, py, [rings[r][:, 0] for r in rid], [rings[r][:, 1] for r in rid])
-        for j in range(len(rings)):
-            m = rid == j
-            assert (got[m] == winding_contains(px[m], py[m], rings[j])).all(), j
 
     def test_1k_polygon_cover_wall_time(self):
         rng = np.random.default_rng(3)
@@ -546,11 +534,11 @@ class TestCoverPlan:
     """A 120-polygon join (q50's shape: more polygons than MAX_EXPR_POLYS)
     builds its cover on the driver and broadcasts it."""
 
-    def test_plan_builds_without_jobs_and_broadcasts_the_cover(self, spark):
-        import re
+    @staticmethod
+    def _triangles_and_points(spark, n=120):
         rng = np.random.default_rng(50)
         polys = []
-        for i in range(120):
+        for i in range(n):
             cx, cy, r = rng.uniform(-150, 150), rng.uniform(-55, 55), rng.uniform(2, 8)
             ang = rng.uniform(0, 2 * np.pi) + np.array([0.0, 2.0, 4.0]) * np.pi / 3.0
             polys.append(PolygonSpec(f"t{i:03d}", np.column_stack(
@@ -559,16 +547,27 @@ class TestCoverPlan:
         pts = spark.createDataFrame(
             [(j, float(x), float(y)) for j, (x, y) in enumerate(zip(xs, ys))],
             "pid long, x double, y double")
+        return polys, xs, ys, pts
 
+    @staticmethod
+    def _plan_jobs(spark, build):
+        """Spark jobs that run while *build()* constructs a plan."""
         sc = spark.sparkContext
-        group = "pip-plan-%d" % id(self)
-        sc.setJobGroup(group, "point_in_polygon_join plan construction")
+        group = "pip-plan-%d" % id(build)
+        sc.setJobGroup(group, "pip join plan construction")
         try:
-            joined = pj.point_in_polygon_join(pts, polys, zoom=6)
+            out = build()
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         sc._jsc.sc().listenerBus().waitUntilEmpty()
-        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+    def test_plan_builds_without_jobs_and_broadcasts_the_cover(self, spark):
+        import re
+        polys, xs, ys, pts = self._triangles_and_points(spark)
+        joined, jobs = self._plan_jobs(
+            spark, lambda: pj.point_in_polygon_join(pts, polys, zoom=6))
+        assert jobs == []
 
         out = joined.select("pid", "poly_id")
         got = {(r["pid"], r["poly_id"]) for r in out.collect()}
@@ -582,3 +581,42 @@ class TestCoverPlan:
         assert not re.search(r"(?<!Broadcast)Exchange ", plan), plan
         assert "BroadcastHashJoin" in plan
         assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
+
+    def test_table_plan_runs_one_job(self, spark):
+        """The table variant's plan costs one Spark job, the polygon
+        collect, at any table size."""
+        polys, xs, ys, pts = self._triangles_and_points(spark, 300)
+        poly_df = spark.createDataFrame(
+            [(p.poly_id, [{"x": float(x), "y": float(y)} for x, y in p.outer])
+             for p in polys],
+            "poly_id string, vertices array<struct<x double, y double>>")
+        joined, jobs = self._plan_jobs(
+            spark, lambda: pj.point_in_polygon_join_table(pts, poly_df, zoom=6))
+        assert len(jobs) == 1
+        assert joined.count() == sum(int(p.contains(xs, ys).sum()) for p in polys)
+
+
+class TestCoverLimit:
+    """``MAX_COVER_CELLS`` bounds the driver cover, checked before any
+    per-cell work."""
+
+    SQUARE = PolygonSpec("sq", np.array(
+        [[0.0, 0.0], [10.0, 0.0], [10.0, 10.0], [0.0, 10.0]]), crs="lonlat")
+
+    def test_limit_raises_before_the_build(self, spark, monkeypatch):
+        n = pj.cover_arrays([self.SQUARE], 6)[1].size
+        monkeypatch.setattr(pj, "MAX_COVER_CELLS", n)
+        assert pj.cover_arrays([self.SQUARE], 6)[1].size == n
+
+        def built(*args, **kwargs):
+            raise AssertionError("cover built past MAX_COVER_CELLS")
+
+        monkeypatch.setattr(pj, "MAX_COVER_CELLS", n - 1)
+        monkeypatch.setattr(pj, "ring_edges", built)
+        monkeypatch.setattr(pj, "ragged", built)
+        with pytest.raises(ValueError, match=(
+                rf"{n} cells exceeds MAX_COVER_CELLS={n - 1}; use a coarser zoom")):
+            pj.cover_arrays([self.SQUARE], 6)
+        pts = spark.createDataFrame([(0, 5.0, 5.0)], "pid long, x double, y double")
+        with pytest.raises(ValueError, match="use a coarser zoom"):
+            pj.point_in_polygon_join(pts, [self.SQUARE], zoom=6)

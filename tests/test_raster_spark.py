@@ -465,6 +465,20 @@ class TestMergeAlgebra:
         assert vals[2, 8] == pytest.approx(2.5)
         assert vals[4, 5] == pytest.approx(2.33333333333)
 
+    def test_apply_in_pandas_paths_infer_no_type_hints(self, spark):
+        """merge_grids, mosaic and tiles_from_cells (through resize) hand
+        applyInPandas unannotated functions, so pyspark does not warn that
+        it cannot infer their eval type."""
+        import warnings
+        g1 = tiles.grid_to_df(spark, "g1", np.ones((8, 8)), (10, 20, 1, 1, 0, 0))
+        g2 = tiles.grid_to_df(spark, "g2", 2 * np.ones((4, 6)), (7, 22, 1, 1, 0, 0))
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            algebra.merge_grids([g1, g2])
+            algebra.mosaic(g1.unionByName(g1.withColumn("grid_id", F.lit("h"))))
+            tiles.resize(g1, (10.0, 20.0, 14.0, 24.0), tile=4)
+        assert not [w for w in caught if "Cannot infer the eval type" in str(w.message)]
+
     def test_grid_add_sub(self, spark):
         a = tiles.grid_to_df(spark, "a", np.full((4, 4), 3.0), T1)
         b = tiles.grid_to_df(spark, "b", np.full((4, 4), 1.5), T1)

@@ -126,30 +126,6 @@ class TestMarkEdgesCappedBranch:
             max_bucket=None).collect())
         assert on == off and len(on) >= 1
 
-    def test_table_pip_small_input_routing(self, spark):
-        """VERDICT r2 #6: a small polygon table routes through the broadcast
-        arm (fixed-cost skip) with identical rows to the distributed arm."""
-        from karta_spark.operators import pip_join as pj
-        rng = np.random.default_rng(21)
-        tris = []
-        for i in range(12):
-            cx, cy = rng.uniform(-140, 140), rng.uniform(-50, 50)
-            ang = rng.uniform(0, 2 * np.pi, 3)
-            tris.append((f"t{i:02d}",
-                         [{"x": float(cx + 6 * np.cos(a)),
-                           "y": float(cy + 6 * np.sin(a))} for a in np.sort(ang)]))
-        poly_df = spark.createDataFrame(
-            tris, "poly_id string, vertices array<struct<x double, y double>>")
-        pts = spark.createDataFrame(
-            [(j, float(x), float(y)) for j, (x, y) in enumerate(zip(
-                rng.uniform(-160, 160, 2000), rng.uniform(-65, 65, 2000)))],
-            "pid long, x double, y double")
-        fast = {(r["pid"], r["poly_id"]) for r in pj.point_in_polygon_join_table(
-            pts, poly_df, zoom=6).collect()}            # default: routed
-        dist = {(r["pid"], r["poly_id"]) for r in pj.point_in_polygon_join_table(
-            pts, poly_df, zoom=6, small_table_threshold=None).collect()}
-        assert fast == dist and len(fast) >= 5
-
     def test_short_edges_unchanged(self):
         # normal (uncapped) path still marks the supercover
         ny = nx = 16

@@ -53,46 +53,6 @@ class TestFromProj4Strictness:
             assert crs.from_proj4(crs.to_proj4(named)) is named
 
 
-class TestPolarRingGuard:
-    """VERDICT r3 item 6: the polar arm of point_in_polygon_join_table is
-    a broadcast cross-join; a polar-heavy table must fail loudly."""
-
-    @staticmethod
-    def _polar_ring(lon0):
-        # a ring encircling the north pole (azimuth swings a full turn)
-        lons = (np.arange(0.0, 360.0, 45.0) + lon0) % 360.0 - 180.0
-        return [{"x": float(lo), "y": 80.0} for lo in lons]
-
-    def test_polar_heavy_table_raises(self, spark):
-        from karta_spark.operators.pip_join import point_in_polygon_join_table
-        import pandas as pd
-        polys = spark.createDataFrame(
-            [(f"p{i}", self._polar_ring(i)) for i in range(5)],
-            "poly_id string, vertices array<struct<x double, y double>>")
-        pts = spark.createDataFrame(pd.DataFrame(
-            {"pid": [0, 1], "x": [10.0, -120.0], "y": [85.0, 40.0]}))
-        with pytest.raises(ValueError, match="polar rings exceed"):
-            point_in_polygon_join_table(
-                pts, polys, zoom=4, small_table_threshold=None,
-                max_polar_rings=3)
-
-    def test_guard_disabled_still_runs(self, spark):
-        from karta_spark.operators.pip_join import point_in_polygon_join_table
-        import pandas as pd
-        polys = spark.createDataFrame(
-            [(f"p{i}", self._polar_ring(i)) for i in range(5)],
-            "poly_id string, vertices array<struct<x double, y double>>")
-        pts = spark.createDataFrame(pd.DataFrame(
-            {"pid": [0, 1], "x": [10.0, -120.0], "y": [85.0, 40.0]}))
-        out = point_in_polygon_join_table(
-            pts, polys, zoom=4, small_table_threshold=None,
-            max_polar_rings=None)
-        rows = out.collect()
-        # the lat-85 point is inside every polar ring; lat-40 in none
-        assert sorted({r.pid for r in rows}) == [0]
-        assert len(rows) == 5
-
-
 class TestNgramAutoStrategy:
     """VERDICT r3 item 5: strategy='auto' picks grouped for small corpora,
     two_pass above NGRAM_GROUPED_MAX_DOCS, and both agree exactly."""

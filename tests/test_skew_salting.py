@@ -37,3 +37,12 @@ class TestSalting:
         salts = skew.salt_map(hist, threshold=100).collect()
         hot = {r["cell_id"]: r["n_salt"] for r in salts}
         assert top["cell_id"] in hot and hot[top["cell_id"]] >= 5
+
+    def test_salt_map_fans_out_only_the_hot_cell(self, spark):
+        # 500 of 2000 rows in cell 7, every other row in a cell of its own
+        pts = spark.range(2000).withColumn(
+            "cell_id", F.when(F.col("id") % 4 == 0, F.lit(7)).otherwise(
+                F.col("id") + 10000))
+        m = {r["cell_id"]: r["n_salt"] for r in
+             skew.salt_map(skew.cell_histogram(pts), threshold=100).collect()}
+        assert m == {7: 5}  # 500 rows / 100 -> fan-out 5

@@ -1,132 +1,25 @@
-import sys, io, os, re
+"""Regenerate PLANS.md, the formatted physical plans of the headline operators.
+
+    python tools/gen_plans.py              # rewrite every section
+    python tools/gen_plans.py --only q50   # only sections whose title holds "q50"
+
+``--only`` rewrites the plan of each ``## `` section whose title contains the
+substring and leaves every other byte of PLANS.md as it is; a matching
+section that PLANS.md does not have yet is appended.
+"""
+import argparse
+import io
+import os
+import re
+import sys
+from contextlib import redirect_stdout
+
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
-from contextlib import redirect_stdout
-from karta_spark.session import get_spark
-from pyspark.sql import functions as F
-import __spark_entry__ as m
-
-spark = get_spark("plans", master="local[8]")
+PLANS = os.path.join(ROOT, "PLANS.md")
 sf = "/root/testdata/sf0.01"
 
-def plan_of(df, maxlines=40):
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain("formatted")
-    txt = buf.getvalue()
-    # keep the tree + the scan/filter/join node details, drop long column lists
-    lines = txt.splitlines()
-    out = []
-    for ln in lines:
-        if len(out) > maxlines: 
-            out.append("   ... (truncated)")
-            break
-        if len(ln) > 200: ln = ln[:200] + " ..."
-        out.append(ln)
-    return "\n".join(out)
-
-sections = []
-
-# 1. flagship PIP join
-from karta_spark.sources import images, tables
-pts = images.with_lonlat(images.synth_images(spark, 100, partitions=2))
-from karta_spark.operators import pip_join
-flag = pip_join.point_in_polygon_join(pts, m.FLAGSHIP_POLYS, zoom=7)
-sections.append(("Flagship PIP join (cell-cover broadcast + compiled winding filter)", plan_of(flag, 30)))
-
-# 2. q07 dense PIP flags (pure expression)
-sections.append(("q07 dense containment flags (zero-Python winding expression)", plan_of(m.q07_pip_heptagon(spark, sf), 25)))
-
-# 3. q02 star join (broadcast dims)
-sections.append(("q02 star-schema revenue join (broadcast dimensions)", plan_of(m.q02_revenue_by_nation(spark, sf), 45)))
-
-# 4. q11 gridpoints hash agg
-sections.append(("q11 gridpoints (partial+final hash aggregate, no UDF)", plan_of(m.q11_gridpoints(spark, sf), 25)))
-
-# 5. pushdown evidence
-filtered = spark.read.parquet(f"{sf}/lineitem.parquet").where(F.col("l_quantity") > 45).select("l_orderkey", "l_quantity")
-sections.append(("Parquet scan with predicate pushdown + column pruning", plan_of(filtered, 20)))
-
-# 6. q38 projected-CRS chain: Krueger series forward+inverse as one
-# codegen'd projection over the scan — zero Python, zero shuffle
-sections.append(("q38 UTM forward+inverse (projection math fully inside "
-                 "whole-stage codegen)", plan_of(m.q38_utm_reproject(spark, sf), 25)))
-
-# 7. nearest_vertex: distributed top-1 (TakeOrderedAndProject), the fix for
-# the round-1 single-task global window
-from karta_spark.operators import knn
-nv = knn.nearest_vertex(
-    spark.read.parquet(f"{sf}/customer.parquet")
-    .selectExpr("c_custkey AS point_id",
-                "CAST(c_custkey AS DOUBLE) AS x", "CAST(c_nationkey AS DOUBLE) AS y"),
-    10.0, 10.0)
-sections.append(("nearest_vertex (TakeOrderedAndProject — per-partition "
-                 "top-1 + driver merge, no global sort)", plan_of(nv, 15)))
-
-# 8. q21 minhash: Arrow signature kernel, band buckets, grouped
-# posting-list candidates, Catalyst exact-Jaccard verify
-sections.append(("q21 MinHash LSH (Arrow signature kernel -> band buckets "
-                 "-> one groupBy + HOF pair explosion -> array-set verify)",
-                 plan_of(m.q21_minhash_pairs(spark, sf), 45)))
-
-# 9. q47 stratified sample: hash-threshold prefilter keeps the per-stratum
-# window tiny; the count agg and the window both shuffle on the same key
-sections.append(("q47 stratified sample (hash-threshold prefilter before "
-                 "the per-stratum window)", plan_of(m.q47_stratified_sample(spark, sf), 35)))
-
-# 10b. q65 lcc reprojection: conic forward+inverse entirely in codegen
-sections.append(("q65 Lambert conformal conic forward+inverse (Clarke 1866 "
-                 "ellipsoid constants folded driver-side, per-row math all "
-                 "inside WholeStageCodegen — no Python, no shuffle)",
-                 plan_of(m.q65_lcc_stateplane(spark, sf), 25)))
-
-# 10c. q66 repeated spans: gram posexplode -> df hash agg -> equi-join ->
-# per-doc window; no all-pairs, no position explosion
-sections.append(("q66 repeated-substring spans (map-side gram explode, one "
-                 "doc-frequency hash agg, equi-join flag-back, per-doc lag "
-                 "window for interval union)",
-                 plan_of(m.q66_repeated_spans(spark, sf), 45)))
-
-# 10d. q67 MODIS tiles: sinusoidal forward + integer grid math, one
-# partial+final hash aggregate
-sections.append(("q67 MODIS hNNvNN tile census (sinusoidal forward fully "
-                 "inside codegen, map-side partial aggregation)",
-                 plan_of(m.q67_modis_tiles(spark, sf), 25)))
-
-# 10. q48 geodesic area: closed-form trig fully inside codegen
-sections.append(("q48 spherical geodesic area (canonical-configuration trig "
-                 "as one codegen'd expression over the segments window)",
-                 plan_of(m.q48_geodesic_area(spark, sf), 30)))
-
-# 11. q50 large polygon set: one-pass driver cover (LocalTableScan),
-# broadcast cover join per branch — full cells skip Python, boundary rows
-# go through the banded Arrow winding kernel
-sections.append(("q50 many-polygon PIP (driver cover -> broadcast join; "
-                 "full cells pass, boundary rows -> y-banded edge "
-                 "winding kernel)",
-                 plan_of(m.q50_pip_many_polys(spark, sf), 35)))
-
-# 12. q51 decontamination: gram explode both sides, broadcast semi-join —
-# the benchmark gram set ships to executors, the corpus never shuffles
-sections.append(("q51 benchmark decontamination (distinct-gram explode -> "
-                 "broadcast LeftSemi on the gram)",
-                 plan_of(m.q51_decontaminate(spark, sf), 35)))
-
-# 13. q61 sequence packing: the window cumsum partitions by SHARD — no
-# single-partition global window anywhere in the plan
-sections.append(("q61 sequence packing (shard-partitioned window cumsum — "
-                 "parallelism = shard count, no global window)",
-                 plan_of(m.q61_sequence_packing(spark, sf), 30)))
-
-# 14. q62 token-budget mixture: whole hash-range buckets below the
-# boundary pass with no window; only the boundary bucket's sliver is
-# windowed (broadcast joins against the tiny driver-side boundary table)
-sections.append(("q62 token-budget mixture (bucketed two-pass: windowless "
-                 "bulk + boundary-bucket sliver window)",
-                 plan_of(m.q62_token_budget_mixture(spark, sf), 40)))
-
-with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
-    f.write("""# PLANS — physical plan review (.explain) of the headline operators
+HEADER = """# PLANS — physical plan review (.explain) of the headline operators
 
 Generated against sf0.01 on local[8] (`python tools/gen_plans.py` regenerates).
 What to look for, per the scale contract:
@@ -141,8 +34,159 @@ What to look for, per the scale contract:
 - **partial hash aggregate before the exchange** in groupBy plans
   (map-side combine), so the gridpoints shuffle carries cells, not points.
 
-""")
-    for title, plan in sections:
-        f.write(f"## {title}\n\n```\n{plan}\n```\n\n")
-print("written")
-spark.stop()
+"""
+
+
+def plan_of(df, maxlines=40):
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain("formatted")
+    txt = buf.getvalue()
+    # keep the tree + the scan/filter/join node details, drop long column lists
+    lines = txt.splitlines()
+    out = []
+    for ln in lines:
+        if len(out) > maxlines:
+            out.append("   ... (truncated)")
+            break
+        if len(ln) > 200: ln = ln[:200] + " ..."
+        out.append(ln)
+    return "\n".join(out)
+
+
+def sections(spark):
+    """(title, build, maxlines) per section; ``build()`` returns the
+    DataFrame whose plan the section shows, and runs only when called."""
+    from pyspark.sql import functions as F
+    import __spark_entry__ as m
+    from karta_spark.operators import knn, pip_join
+    from karta_spark.sources import images
+
+    def flagship():
+        pts = images.with_lonlat(images.synth_images(spark, 100, partitions=2))
+        return pip_join.point_in_polygon_join(pts, m.FLAGSHIP_POLYS, zoom=7)
+
+    def q(name):
+        return lambda: getattr(m, name)(spark, sf)
+
+    return [
+        ("Flagship PIP join (cell-cover broadcast + compiled winding filter)",
+         flagship, 30),
+        ("q07 dense containment flags (zero-Python winding expression)",
+         q("q07_pip_heptagon"), 25),
+        ("q02 star-schema revenue join (broadcast dimensions)",
+         q("q02_revenue_by_nation"), 45),
+        ("q11 gridpoints (partial+final hash aggregate, no UDF)",
+         q("q11_gridpoints"), 25),
+        # pushdown evidence
+        ("Parquet scan with predicate pushdown + column pruning",
+         lambda: spark.read.parquet(f"{sf}/lineitem.parquet")
+         .where(F.col("l_quantity") > 45).select("l_orderkey", "l_quantity"), 20),
+        # projected-CRS chain: Krueger series forward+inverse as one
+        # codegen'd projection over the scan — zero Python, zero shuffle
+        ("q38 UTM forward+inverse (projection math fully inside "
+         "whole-stage codegen)", q("q38_utm_reproject"), 25),
+        # distributed top-1 (TakeOrderedAndProject), the fix for the
+        # single-task global window
+        ("nearest_vertex (TakeOrderedAndProject — per-partition "
+         "top-1 + driver merge, no global sort)",
+         lambda: knn.nearest_vertex(
+             spark.read.parquet(f"{sf}/customer.parquet")
+             .selectExpr("c_custkey AS point_id",
+                         "CAST(c_custkey AS DOUBLE) AS x",
+                         "CAST(c_nationkey AS DOUBLE) AS y"),
+             10.0, 10.0), 15),
+        # Arrow signature kernel, band buckets, grouped posting-list
+        # candidates, Catalyst exact-Jaccard verify
+        ("q21 MinHash LSH (Arrow signature kernel -> band buckets "
+         "-> one groupBy + HOF pair explosion -> array-set verify)",
+         q("q21_minhash_pairs"), 45),
+        # hash-threshold prefilter keeps the per-stratum window tiny; the
+        # count agg and the window both shuffle on the same key
+        ("q47 stratified sample (hash-threshold prefilter before "
+         "the per-stratum window)", q("q47_stratified_sample"), 35),
+        ("q65 Lambert conformal conic forward+inverse (Clarke 1866 "
+         "ellipsoid constants folded driver-side, per-row math all "
+         "inside WholeStageCodegen — no Python, no shuffle)",
+         q("q65_lcc_stateplane"), 25),
+        # gram posexplode -> df hash agg -> equi-join -> per-doc window;
+        # no all-pairs, no position explosion
+        ("q66 repeated-substring spans (map-side gram explode, one "
+         "doc-frequency hash agg, equi-join flag-back, per-doc lag "
+         "window for interval union)", q("q66_repeated_spans"), 45),
+        ("q67 MODIS hNNvNN tile census (sinusoidal forward fully "
+         "inside codegen, map-side partial aggregation)",
+         q("q67_modis_tiles"), 25),
+        ("q48 spherical geodesic area (canonical-configuration trig "
+         "as one codegen'd expression over the segments window)",
+         q("q48_geodesic_area"), 30),
+        # one-pass driver cover (LocalTableScan), broadcast cover join per
+        # branch — full cells skip Python, boundary rows go through the
+        # banded Arrow winding kernel
+        ("q50 many-polygon PIP (driver cover -> broadcast join; "
+         "full cells pass, boundary rows -> y-banded edge "
+         "winding kernel)", q("q50_pip_many_polys"), 35),
+        # gram explode both sides, broadcast semi-join — the benchmark
+        # gram set ships to executors, the corpus never shuffles
+        ("q51 benchmark decontamination (distinct-gram explode -> "
+         "broadcast LeftSemi on the gram)", q("q51_decontaminate"), 35),
+        # the window cumsum partitions by SHARD — no single-partition
+        # global window anywhere in the plan
+        ("q61 sequence packing (shard-partitioned window cumsum — "
+         "parallelism = shard count, no global window)",
+         q("q61_sequence_packing"), 30),
+        # whole hash-range buckets below the boundary pass with no window;
+        # only the boundary bucket's sliver is windowed
+        ("q62 token-budget mixture (bucketed two-pass: windowless "
+         "bulk + boundary-bucket sliver window)",
+         q("q62_token_budget_mixture"), 40),
+    ]
+
+
+def _block(title, plan):
+    return f"## {title}\n\n```\n{plan}\n```\n"
+
+
+def regenerate(path, secs, plan_of, only=None):
+    """Write the plans of *secs* to *path*: all of them under the header,
+    or, with *only*, just the sections whose title contains it, spliced
+    into the existing file.  Returns the titles written."""
+    if only is None:
+        with open(path, "w") as f:
+            f.write(HEADER + "".join(_block(t, plan_of(build(), n)) + "\n"
+                                     for t, build, n in secs))
+        return [t for t, _, _ in secs]
+    picked = [(t, build, n) for t, build, n in secs if only in t]
+    if not picked:
+        raise SystemExit(f"no section title contains {only!r}")
+    with open(path) as f:
+        text = f.read()
+    for title, build, n in picked:
+        block = _block(title, plan_of(build(), n))
+        # only the heading and its plan block; what follows them stays
+        pat = re.compile(rf"^## {re.escape(title)}\n\n```\n.*?\n```\n",
+                         re.M | re.S)
+        text, hit = pat.subn(lambda _: block, text, count=1)
+        if not hit:
+            text = text.rstrip("\n") + "\n\n" + block + "\n"
+    with open(path, "w") as f:
+        f.write(text)
+    return [t for t, _, _ in picked]
+
+
+def main():
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--only", metavar="TITLE_SUBSTRING",
+                    help="regenerate only the sections whose title holds it")
+    args = ap.parse_args()
+    from karta_spark.session import get_spark
+    spark = get_spark("plans", master="local[8]")
+    try:
+        for title in regenerate(PLANS, sections(spark), plan_of, args.only):
+            print("written:", title)
+    finally:
+        spark.stop()
+
+
+if __name__ == "__main__":
+    main()
