@@ -465,8 +465,8 @@ FROM documents
 
 
 def q17_ngram_jaccard(spark, sf_dir):
-    """Word-trigram Jaccard near-dup pairs (threshold 0.2) — exact, via
-    the grouped posting-list plan (dedup.ngram pipeline, word grams)."""
+    """Word-trigram Jaccard near-dup pairs (threshold 0.2, gram df cap 50)
+    — exact, via dedup.ngram_jaccard_pairs."""
     # tokens materialized as a named column: referencing the raw split()
     # inside the lambda makes Catalyst re-evaluate the split per element
     # (measured 2.6x slower); shingles are hashed to int64 so the gram
@@ -480,44 +480,8 @@ def q17_ngram_jaccard(spark, sf_dir):
     gram = F.transform(idx, lambda i: F.xxhash64(F.concat_ws(
         " ", F.element_at(F.col("toks"), i), F.element_at(F.col("toks"), i + 1),
         F.element_at(F.col("toks"), i + 2))))
-    sh = d.select(F.col("doc_id").alias("id"),
-                  F.explode(F.array_distinct(gram)).alias("gram"))
-    # hot-shingle document-frequency cap (df > 50): one stop-trigram shared
-    # by f docs makes an f^2 candidate bucket — quadratic at corpus scale.
-    # Sizes and intersections are both computed on the capped set so the
-    # Jaccard stays a true Jaccard (mirrored in the SQL twin).
-    # Grouped single-scan plan (dedup.ngram_jaccard_pairs 'grouped'):
-    # groupBy(gram) -> sorted posting list, df filter, localCheckpoint the
-    # small grouped table, HOF pair explosion — no self-join, and the
-    # tokenize/explode subtree runs ONCE instead of 4x (r2 regression:
-    # 3.6-3.9 s -> 2.7 s at sf0.1).
-    grp = (sh.groupBy("gram").agg(F.array_sort(F.collect_list("id")).alias("ids"))
-           .where(F.size("ids") <= 50).select("ids").localCheckpoint())
-    ids = F.col("ids")
-    # pairs packed into ONE long (a*2^32 + b; ids sorted so a < b, and
-    # the synthetic doc_ids are far below 2^32): a flat array<long>
-    # materializes ~25% faster than array<struct> through the explode +
-    # hash-agg (measured 1.24 s vs 1.54 s on this stage at sf0.1)
-    pairs = F.flatten(F.transform(ids, lambda x, i:
-        F.transform(F.slice(ids, i + F.lit(2), F.size(ids)),
-                    lambda y: x * F.lit(4294967296) + y)))
-    inter = (grp.select(F.explode(pairs).alias("p"))
-             .groupBy("p").agg(F.count("*").alias("inter"))
-             .select(F.shiftrightunsigned("p", 32).alias("id_a"),
-                     F.col("p").bitwiseAND(F.lit(4294967295)).alias("id_b"),
-                     "inter"))
-    sizes = grp.select(F.explode("ids").alias("id")).groupBy("id").agg(
-        F.count("*").alias("sz"))
-    return (
-        inter
-        .join(sizes.select(F.col("id").alias("id_a"), F.col("sz").alias("sz_a")), "id_a")
-        .join(sizes.select(F.col("id").alias("id_b"), F.col("sz").alias("sz_b")), "id_b")
-        .withColumn("jaccard", F.round(
-            F.col("inter").cast("double")
-            / (F.col("sz_a") + F.col("sz_b") - F.col("inter")), 6))
-        .where(F.col("jaccard") >= 0.2)
-        .select("id_a", "id_b", "jaccard")
-    )
+    # the df cap (df > 50 dropped) is mirrored in the SQL twin
+    return dedup.ngram_jaccard_pairs(d, "doc_id", gram, threshold=0.2, max_df=50)
 
 
 Q17_SQL = """
@@ -572,14 +536,7 @@ SELECT query_id, vec_id, round(cosine, 6) AS cosine, rank FROM ranked WHERE rank
 
 def q19_embedding_neardup(spark, sf_dir):
     e = _t(spark, sf_dir, "embeddings")
-    a = e.select(F.col("label"), F.col("vec_id").alias("id_a"), F.col("embedding").alias("v_a"))
-    b = e.select(F.col("label"), F.col("vec_id").alias("id_b"), F.col("embedding").alias("v_b"))
-    return (
-        a.join(b, ["label"]).where(F.col("id_a") < F.col("id_b"))
-        .withColumn("cosine", F.round(similarity.cosine_expr("v_a", "v_b"), 6))
-        .where(F.col("cosine") >= 0.25)
-        .select("id_a", "id_b", "cosine")
-    )
+    return dedup.embedding_near_dup_pairs(e, "embedding", "vec_id", "label", 0.25)
 
 
 Q19_SQL = """

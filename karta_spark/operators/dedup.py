@@ -4,12 +4,14 @@ First-class large-scale-pipeline ops (not in the reference, which has only
 point-set duplicate bucketing at quadtree build, quadtree.pyx:88-95):
 
 - exact dedup           — hash groupBy, keep lowest id
-- n-gram Jaccard pairs  — explode distinct shingles, self-join, exact
-                          |A∩B| / |A∪B| — fully SQL-expressible (oracle-able)
+- n-gram Jaccard pairs  — explode distinct grams, one groupBy into per-gram
+                          id lists, HOF pair explosion (no self-join), exact
+                          |A∩B| / |A∪B| — fully SQL-expressible (q17's oracle)
 - MinHash + LSH         — numpy signature kernel in a pandas UDF, banded
                           bucket join, exact-Jaccard verify of candidates
 - SimHash               — 64-bit token-hash sketch + hamming-band join
-- embedding near-dup    — cosine over a normalized vector column
+- embedding near-dup    — exact cosine of every pair within a block key
+                          (q19's oracle)
 
 All shuffles are keyed on content hashes (uniform by construction — no skew
 salting needed); candidate generation never crosses buckets, so the O(n^2)
@@ -22,7 +24,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, LongType
+from pyspark.sql.types import ArrayType, IntegralType, LongType
 
 
 def exact_dedup(df: DataFrame, cols: list[str], id_col: str) -> DataFrame:
@@ -39,110 +41,72 @@ def duplicate_groups(df: DataFrame, cols: list[str], id_col: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# character n-gram Jaccard (exact)
+# n-gram Jaccard (exact)
 # ---------------------------------------------------------------------------
 
-def ngrams(col, n: int = 3):
-    """Distinct character n-grams of a string column — pure Catalyst
-    (sequence + transform + substring), no UDF."""
-    idx = F.sequence(F.lit(1), F.greatest(F.length(col) - (n - 1), F.lit(0)))
-    return F.array_distinct(F.transform(idx, lambda i: col.substr(i, F.lit(n))))
+_ID_LIMIT = 4294967296  # 2^32: a pair packs into one long as a * 2^32 + b
 
 
-#: corpora at or below this row count default to the measured-faster
-#: 'grouped' plan; above it the scale-safe 'two_pass' plan is the default
-#: (its agg buffers never materialize an uncapped posting list).
-NGRAM_GROUPED_MAX_DOCS = 1_000_000
+def ngram_jaccard_pairs(df: DataFrame, id_col: str, grams, threshold: float,
+                        max_df: int | None = None) -> DataFrame:
+    """Exact pairwise Jaccard of the gram sets (id_a < id_b), rounded to
+    6 digits and kept when the ROUNDED value is >= threshold: that is the
+    filter the SQL oracle of the q17 gate applies, so a pair whose exact
+    Jaccard lies just under the threshold but rounds onto it is kept.
 
+    ``grams`` is an array Column over *df*; what a gram is (a character
+    n-gram, a hashed word trigram) is the caller's choice.  ``max_df``
+    caps gram document frequency: a stop-gram shared by f documents makes
+    f^2 candidate pairs, so grams in more than max_df documents are dropped
+    BEFORE sizes and intersections, and the result is the exact Jaccard of
+    the capped sets.
 
-def ngram_jaccard_pairs(
-    df: DataFrame, text_col: str, id_col: str, n: int = 3, threshold: float = 0.5,
-    max_df: int | None = None, strategy: str = "auto",
-) -> DataFrame:
-    """Exact pairwise n-gram Jaccard >= threshold (id_a < id_b).
-
-    ``max_df`` caps shingle document frequency (classic near-dup practice):
-    a stop-shingle shared by f documents makes an f^2 candidate bucket —
-    one shingle in 1% of a real corpus is quadratic death.  Shingles with
-    df > max_df are dropped BEFORE sizes and intersections, so the result
-    is the exact Jaccard of the capped shingle sets (both sides of the
-    comparison see the same universe).
-
-    strategy='auto' (default): pick by corpus size — 'grouped' up to
-    NGRAM_GROUPED_MAX_DOCS rows, 'two_pass' beyond, so the scale-safe
-    plan is the default where the grouped caveat bites.  NOTE: this runs
-    one extra BOUNDED action, ``df.limit(MAX+1).count()`` — it stops
-    scanning once MAX+1 rows exist, so its cost is capped at ~1M rows of
-    upstream recompute regardless of corpus size, but if df is an
-    expensive uncached pipeline you may prefer to cache df first or pass
-    an explicit strategy to skip the probe entirely.
-
-    strategy='grouped': ONE scan of the corpus -> groupBy(gram)
-    collects the sorted doc-id list per shingle, df-filter, localCheckpoint
-    the (small) grouped table, then derive BOTH pair intersections (HOF
-    pair explosion, no self-join) and set sizes from it.  Measured ~25%
-    faster than the 4x-recompute two-pass plan at sf0.1 (2.7 s vs 3.6 s).
-    Caveat: collect_list materializes a gram's full posting list before the
-    df filter drops it — a degenerate gram present in millions of docs
-    builds that array in the agg buffer.  For adversarial corpora use
-    strategy='two_pass', which computes df first and never collects an
-    uncapped list.
-
-    strategy='two_pass': explode distinct shingles -> broadcast anti-join
-    against the hot-shingle set -> self equi-join on shingle -> count
-    intersections -> join set sizes -> Jaccard filter.  Every step is a
-    hash agg/join on a content key; nothing materializes a posting list."""
-    if strategy == "auto":
-        # bounded probe, NOT a full count: LocalLimit short-circuits each
-        # partition, so at most MAX+1 rows of the upstream plan recompute
-        probe = df.limit(NGRAM_GROUPED_MAX_DOCS + 1).count()
-        strategy = ("grouped" if probe <= NGRAM_GROUPED_MAX_DOCS
-                    else "two_pass")
-    if strategy not in ("grouped", "two_pass"):
-        raise ValueError(f"unknown strategy {strategy!r}")
-    sh = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(ngrams(F.col(text_col), n)).alias("gram"),
-    )
-    if strategy == "grouped":
-        grp = sh.groupBy("gram").agg(F.array_sort(F.collect_list("id")).alias("ids"))
-        if max_df is not None:
-            grp = grp.where(F.size("ids") <= max_df)
-        grp = grp.select("ids").localCheckpoint()
-        ids = F.col("ids")
-        pairs = F.flatten(F.transform(ids, lambda x, i:
-            F.transform(F.slice(ids, i + F.lit(2), F.size(ids)),
-                        lambda y: F.struct(x.alias("id_a"), y.alias("id_b")))))
-        inter = (grp.select(F.explode(pairs).alias("p"))
-                 .groupBy(F.col("p.id_a").alias("id_a"),
-                          F.col("p.id_b").alias("id_b"))
-                 .agg(F.count("*").alias("inter")))
-        sizes = grp.select(F.explode("ids").alias("id")).groupBy("id").agg(
-            F.count("*").alias("sz"))
-    else:
-        if max_df is not None:
-            # the HOT set is the tiny one (few shingles exceed the cap) —
-            # anti-join against it broadcast, instead of semi-joining the
-            # huge rare-shingle complement
-            hot = (sh.groupBy("gram").agg(F.count("*").alias("_df"))
-                   .where(F.col("_df") > max_df).select("gram"))
-            sh = sh.join(F.broadcast(hot), "gram", "left_anti")
-        sizes = sh.groupBy("id").agg(F.count("*").alias("sz"))
-        a = sh.alias("a")
-        b = sh.alias("b")
-        inter = (
-            a.join(b, (F.col("a.gram") == F.col("b.gram")) & (F.col("a.id") < F.col("b.id")))
-            .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-            .agg(F.count("*").alias("inter"))
-        )
-    out = (
-        inter.join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("sz", "sz_a"), "id_a")
-        .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("sz", "sz_b"), "id_b")
-        .withColumn("jaccard", F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")))
+    Plan: ONE scan explodes the distinct grams, groupBy(gram) collects each
+    gram's sorted id list, lists longer than max_df are dropped and the
+    small grouped table is localCheckpoint-ed -- the one Spark action that
+    building this plan runs.  A HOF pair explosion over each list gives the
+    intersections (no self-join), and the lists' members give the set sizes.
+    collect_list builds a gram's whole id list before the max_df filter
+    drops it, so one gram in millions of documents builds a list that long.
+    A pair travels as one long, a * 2^32 + b, so ids must be integral and
+    in [0, 2^32): a non-integral *id_col* raises ValueError here, and an id
+    outside that range fails the query."""
+    dt = df.schema[id_col].dataType
+    if not isinstance(dt, IntegralType):
+        raise ValueError(f"id column {id_col!r} is {dt.simpleString()}, "
+                         "not an integral type")
+    raw = F.col(id_col)
+    checked = F.when((raw < 0) | (raw >= _ID_LIMIT), F.raise_error(F.concat(
+        F.lit(f"{id_col} outside [0, 2^32): "), raw.cast("string")))).otherwise(raw)
+    sh = df.select(checked.alias("id"), F.explode(F.array_distinct(grams)).alias("gram"))
+    grp = sh.groupBy("gram").agg(F.array_sort(F.collect_list("id")).alias("ids"))
+    if max_df is not None:
+        grp = grp.where(F.size("ids") <= max_df)
+    grp = grp.select("ids").localCheckpoint()
+    ids = F.col("ids")
+    # ids are sorted, so a < b; a flat array<long> materializes ~25% faster
+    # than array<struct> through the explode + hash agg (1.24 s vs 1.54 s
+    # on this stage of q17 at sf0.1)
+    pairs = F.flatten(F.transform(ids, lambda x, i:
+        F.transform(F.slice(ids, i + F.lit(2), F.size(ids)),
+                    lambda y: x * F.lit(_ID_LIMIT) + y)))
+    inter = (grp.select(F.explode(pairs).alias("p"))
+             .groupBy("p").agg(F.count("*").alias("inter"))
+             .select(F.shiftrightunsigned("p", 32).alias("id_a"),
+                     F.col("p").bitwiseAND(F.lit(_ID_LIMIT - 1)).alias("id_b"),
+                     "inter"))
+    sizes = grp.select(F.explode("ids").alias("id")).groupBy("id").agg(
+        F.count("*").alias("sz"))
+    return (
+        inter
+        .join(sizes.select(F.col("id").alias("id_a"), F.col("sz").alias("sz_a")), "id_a")
+        .join(sizes.select(F.col("id").alias("id_b"), F.col("sz").alias("sz_b")), "id_b")
+        .withColumn("jaccard", F.round(
+            F.col("inter").cast("double")
+            / (F.col("sz_a") + F.col("sz_b") - F.col("inter")), 6))
         .where(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -636,94 +600,19 @@ WHERE {_hamming_sql("ba", "bb")} <= {max_hamming}
 # embedding cosine near-dup
 # ---------------------------------------------------------------------------
 
-def _band_signatures(df: DataFrame, vec_col: str, dim: int,
-                     nbits: int, bands: int, seed: int, out: str = "_sig") -> DataFrame:
-    """array<int> of *bands* independent random-hyperplane sign sketches
-    (nbits each) per vector — one Arrow pass for all bands."""
-    rng = np.random.default_rng(seed)
-    H = rng.standard_normal((bands * nbits, dim))
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def sig(vecs: pd.Series) -> pd.Series:
-        M = np.array([np.asarray(v, dtype=np.float64) for v in vecs])
-        bits = (M @ H.T) > 0  # (n, bands*nbits)
-        vals = np.zeros((len(M), bands), dtype=np.int64)
-        for b in range(bands):
-            for k in range(nbits):
-                vals[:, b] |= bits[:, b * nbits + k].astype(np.int64) << k
-        return pd.Series(list(vals))
-
-    return df.withColumn(out, sig(F.col(vec_col)))
-
-
-def embedding_near_dup_candidates(
-    df: DataFrame, vec_col: str, id_col: str, dim: int,
-    nbits: int = 10, bands: int = 12, seed: int = 7,
-    max_bucket: int | None = 4096,
-) -> DataFrame:
-    """(id_a, id_b) candidate pairs sharing >= 1 LSH band bucket.
-
-    Banded random-hyperplane LSH: a pair at cosine s collides in one
-    nbits-band with probability (1 - acos(s)/pi)^nbits; across b bands the
-    miss probability is (1-p^nbits)^b — ~1e-4 at s=0.95 with the defaults,
-    vanishing for true near-dups (s ~ 0.99+).  Candidate generation is an
-    equi-join on (band, bucket): no row ever crosses a bucket, so the
-    pair count is bounded per bucket instead of O(n^2) global."""
-    sigs = _band_signatures(df, vec_col, dim, nbits, bands, seed)
-    banded = sigs.select(
-        F.col(id_col).alias("id"),
-        F.posexplode("_sig").alias("band", "bucket"),
-    )
-    # grouped posting-list candidates (see minhash_lsh_pairs): one
-    # groupBy + HOF pair explosion with the oversized guard as a size
-    # filter — replaces localCheckpoint + anti-join + self-join, and the
-    # signature UDF now feeds a single consumer
-    size_ok = F.size(F.col("ids")) >= 2
-    if max_bucket is not None:
-        size_ok = size_ok & (F.size(F.col("ids")) <= max_bucket)
-    grp = (banded.groupBy("band", "bucket")
-           .agg(F.array_sort(F.collect_list("id")).alias("ids"))
-           .where(size_ok).select("ids"))
-    ids = F.col("ids")
-    pair_structs = F.flatten(F.transform(ids, lambda x, i: F.transform(
-        F.slice(ids, i + F.lit(2), F.size(ids)),
-        lambda y: F.struct(x.alias("id_a"), y.alias("id_b")))))
-    return (grp.select(F.explode(pair_structs).alias("p"))
-            .select("p.id_a", "p.id_b").distinct())
-
-
-def embedding_near_dup_pairs(
-    df: DataFrame, vec_col: str, id_col: str, threshold: float = 0.95,
-    method: str = "lsh", dim: int | None = None,
-    nbits: int = 10, bands: int = 12, seed: int = 7,
-    max_bucket: int | None = 4096,
-) -> DataFrame:
-    """Pairs with cosine similarity >= threshold.
-
-    method="lsh" (default, the scale path): banded hyperplane-LSH candidate
-    generation + exact-cosine verify on candidates only — never materializes
-    the O(n^2) cross product.  method="exact" is the all-pairs self-join
-    twin: exact at any threshold, for small tables and oracle checks."""
+def embedding_near_dup_pairs(df: DataFrame, vec_col: str, id_col: str,
+                             block_col: str, threshold: float) -> DataFrame:
+    """Pairs (id_a < id_b) in the same *block_col* value whose cosine,
+    rounded to 6 digits, is >= threshold -- the rounded value is what the
+    q19 gate's SQL oracle filters on.  The block is the equi-join key, so
+    the comparison costs the sum of squared block sizes, not the corpus
+    squared."""
     from karta_spark.operators.similarity import cosine_expr
-    if method == "exact":
-        a = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("v_a"))
-        b = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("v_b"))
-        return (
-            a.join(b, F.col("id_a") < F.col("id_b"))
-            .withColumn("cosine", cosine_expr("v_a", "v_b"))
-            .where(F.col("cosine") >= threshold)
-            .select("id_a", "id_b", "cosine")
-        )
-    if dim is None:
-        first = df.select(F.size(vec_col)).first()
-        dim = int(first[0]) if first else 0
-    cand = embedding_near_dup_candidates(df, vec_col, id_col, dim, nbits,
-                                     bands, seed, max_bucket=max_bucket)
-    vecs = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
+    a = df.select(F.col(block_col), F.col(id_col).alias("id_a"), F.col(vec_col).alias("v_a"))
+    b = df.select(F.col(block_col), F.col(id_col).alias("id_b"), F.col(vec_col).alias("v_b"))
     return (
-        cand.join(vecs.select(F.col("id").alias("id_a"), F.col("v").alias("v_a")), "id_a")
-        .join(vecs.select(F.col("id").alias("id_b"), F.col("v").alias("v_b")), "id_b")
-        .withColumn("cosine", cosine_expr("v_a", "v_b"))
+        a.join(b, [block_col]).where(F.col("id_a") < F.col("id_b"))
+        .withColumn("cosine", F.round(cosine_expr("v_a", "v_b"), 6))
         .where(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "cosine")
     )

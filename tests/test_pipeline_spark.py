@@ -165,12 +165,6 @@ class TestDedup:
         assert any(4 <= h <= 8 for _, _, h in got) or (100, 101) in {
             (a, b) for a, b, _ in got}
 
-    def test_ngram_jaccard_exact(self, spark):
-        got = {(r["id_a"], r["id_b"]): r["jaccard"] for r in
-               dedup.ngram_jaccard_pairs(self._docs(spark), "text", "doc_id",
-                                         n=3, threshold=0.5).collect()}
-        assert got[(0, 3)] == pytest.approx(1.0)
-
 
 P31 = 2**31 - 1
 # every edge case the kernels must hash like the SQL twins: null, empty,

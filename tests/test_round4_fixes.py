@@ -53,53 +53,6 @@ class TestFromProj4Strictness:
             assert crs.from_proj4(crs.to_proj4(named)) is named
 
 
-class TestNgramAutoStrategy:
-    """VERDICT r3 item 5: strategy='auto' picks grouped for small corpora,
-    two_pass above NGRAM_GROUPED_MAX_DOCS, and both agree exactly."""
-
-    def _docs(self, spark):
-        import pandas as pd
-        base = "the quick brown fox jumps over the lazy dog "
-        rows = []
-        for i in range(30):
-            rows.append((i, base + f"variant {i % 7}"))
-        return spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "text"]))
-
-    def test_auto_equals_both_explicit_strategies(self, spark):
-        from karta_spark.operators import dedup
-
-        def norm(df):
-            return sorted((r.id_a, r.id_b, round(r.jaccard, 12))
-                          for r in df.collect())
-
-        docs = self._docs(spark)
-        got_auto = norm(dedup.ngram_jaccard_pairs(docs, "text", "doc_id",
-                                                  threshold=0.5))
-        got_g = norm(dedup.ngram_jaccard_pairs(docs, "text", "doc_id",
-                                               threshold=0.5, strategy="grouped"))
-        got_t = norm(dedup.ngram_jaccard_pairs(docs, "text", "doc_id",
-                                               threshold=0.5, strategy="two_pass"))
-        assert got_auto == got_g == got_t
-        assert len(got_auto) > 0
-
-    def test_auto_threshold_boundary(self, spark, monkeypatch):
-        from karta_spark.operators import dedup
-        docs = self._docs(spark)
-        # force the corpus over the threshold: auto must take two_pass
-        monkeypatch.setattr(dedup, "NGRAM_GROUPED_MAX_DOCS", 10)
-        got = sorted((r.id_a, r.id_b) for r in dedup.ngram_jaccard_pairs(
-            docs, "text", "doc_id", threshold=0.5).collect())
-        want = sorted((r.id_a, r.id_b) for r in dedup.ngram_jaccard_pairs(
-            docs, "text", "doc_id", threshold=0.5, strategy="two_pass").collect())
-        assert got == want
-
-    def test_unknown_strategy_raises(self, spark):
-        from karta_spark.operators import dedup
-        with pytest.raises(ValueError, match="strategy"):
-            dedup.ngram_jaccard_pairs(self._docs(spark), "text", "doc_id",
-                                      strategy="bogus")
-
-
 class TestOversizedBucketStats:
     """ADVICE r3 (low): the degenerate-bucket guard's recall loss must be
     auditable — oversized_bucket_stats reports what the guard drops."""

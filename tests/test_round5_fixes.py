@@ -142,34 +142,6 @@ class TestPseudoMercatorWkt:
         assert c.kind == "merc" and c.params[1] == 110.0
 
 
-class TestNgramAutoProbe:
-    """ADVICE r4 (low): strategy='auto' must not run a FULL count —
-    the probe is bounded by limit(MAX+1)."""
-
-    def test_auto_still_correct_small(self, spark):
-        import pandas as pd
-        from karta_spark.operators.dedup import ngram_jaccard_pairs
-        df = spark.createDataFrame(pd.DataFrame({
-            "doc_id": [1, 2, 3],
-            "body": ["abcdefg", "abcdefx", "zzzzzzz"]}))
-        out = ngram_jaccard_pairs(df, "body", "doc_id", n=3, threshold=0.3)
-        rows = {(r["id_a"], r["id_b"]) for r in out.collect()}
-        assert rows == {(1, 2)}
-
-    def test_probe_is_bounded(self, spark):
-        # the probe plan must contain a GlobalLimit, not a full agg-count
-        import pandas as pd
-        from karta_spark.operators import dedup
-        df = spark.createDataFrame(pd.DataFrame({
-            "doc_id": [1], "body": ["abc"]}))
-        probe = df.limit(dedup.NGRAM_GROUPED_MAX_DOCS + 1)
-        # analyzed plan (optimizer folds the limit into a LocalRelation
-        # for in-memory test data; on a real scan it survives as
-        # GlobalLimit/LocalLimit and short-circuits the read)
-        plan = probe._jdf.queryExecution().analyzed().toString()
-        assert "GlobalLimit" in plan
-
-
 class TestLambertConformalConic:
     """VERDICT r4 items 2+4: +proj=lcc (Snyder 15, 1- and 2-SP,
     ellipsoidal) with the triple backend, and non-WGS84 ellipsoid

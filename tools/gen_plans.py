@@ -1,11 +1,11 @@
 """Regenerate PLANS.md, the formatted physical plans of the headline operators.
 
-    python tools/gen_plans.py              # rewrite every section
+    python tools/gen_plans.py              # every generated section
     python tools/gen_plans.py --only q50   # only sections whose title holds "q50"
 
-``--only`` rewrites the plan of each ``## `` section whose title contains the
-substring and leaves every other byte of PLANS.md as it is; a matching
-section that PLANS.md does not have yet is appended.
+Each run rewrites the plan of the generated ``## `` sections it picks and
+leaves every other byte of PLANS.md as it is, hand-written sections
+included; a picked section that PLANS.md does not have yet is appended.
 """
 import argparse
 import io
@@ -18,23 +18,6 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 PLANS = os.path.join(ROOT, "PLANS.md")
 sf = "/root/testdata/sf0.01"
-
-HEADER = """# PLANS — physical plan review (.explain) of the headline operators
-
-Generated against sf0.01 on local[8] (`python tools/gen_plans.py` regenerates).
-What to look for, per the scale contract:
-
-- **BroadcastHashJoin** on every small side (cover cells, dimensions) — the
-  big point/fact table is never shuffled for these joins.
-- **`* ` / `[codegen id : N]` markers** — whole-stage codegen spans cover
-  the full pipeline including the compiled winding CASE filter (with
-  `-XX:-DontCompileHugeMethods` so HotSpot actually JITs them).
-- **PushedFilters / ReadSchema** on parquet scans — predicate pushdown and
-  column pruning reach the reader.
-- **partial hash aggregate before the exchange** in groupBy plans
-  (map-side combine), so the gridpoints shuffle carries cells, not points.
-
-"""
 
 
 def plan_of(df, maxlines=40):
@@ -140,6 +123,15 @@ def sections(spark):
         ("q62 token-budget mixture (bucketed two-pass: windowless "
          "bulk + boundary-bucket sliver window)",
          q("q62_token_budget_mixture"), 40),
+        # the localCheckpoint-ed gram -> sorted id list table is the scan
+        # (ExistingRDD) under both the pair and the set-size aggregates
+        ("q17 n-gram Jaccard (localCheckpoint-ed per-gram id lists -> "
+         "HOF pair explosion packed into one long -> pair and size "
+         "hash aggregates, broadcast size joins)",
+         q("q17_ngram_jaccard"), 30),
+        ("q19 embedding near-dup (label-blocked broadcast self-join, "
+         "rounded cosine filter in the join condition)",
+         q("q19_embedding_neardup"), 20),
     ]
 
 
@@ -148,15 +140,12 @@ def _block(title, plan):
 
 
 def regenerate(path, secs, plan_of, only=None):
-    """Write the plans of *secs* to *path*: all of them under the header,
-    or, with *only*, just the sections whose title contains it, spliced
-    into the existing file.  Returns the titles written."""
-    if only is None:
-        with open(path, "w") as f:
-            f.write(HEADER + "".join(_block(t, plan_of(build(), n)) + "\n"
-                                     for t, build, n in secs))
-        return [t for t, _, _ in secs]
-    picked = [(t, build, n) for t, build, n in secs if only in t]
+    """Splice the plans of *secs* (with *only*, just the sections whose
+    title contains it) into *path*: each section's heading and plan block
+    are rewritten in place, a section the file does not have yet is
+    appended, and every other byte -- hand-written sections included --
+    stays.  Returns the titles written."""
+    picked = [(t, build, n) for t, build, n in secs if only is None or only in t]
     if not picked:
         raise SystemExit(f"no section title contains {only!r}")
     with open(path) as f:
