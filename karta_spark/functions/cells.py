@@ -131,18 +131,6 @@ def planar_cell_id(x: Column, y: Column, size: float) -> Column:
     return cx * (1 << 29) + cy
 
 
-def planar_cell_py(x: float, y: float, size: float) -> int:
-    cx = int(math.floor(x / size)) + _PLANAR_OFFSET
-    cy = int(math.floor(y / size)) + _PLANAR_OFFSET
-    return cx * (1 << 29) + cy
-
-
-def planar_cell_bbox_py(cx: int, cy: int, size: float):
-    x0 = (cx - _PLANAR_OFFSET) * size
-    y0 = (cy - _PLANAR_OFFSET) * size
-    return (x0, y0, x0 + size, y0 + size)
-
-
 # ---------------------------------------------------------------------------
 # deterministic geolocation of arbitrary keyed rows (FIXTURES.md §1 rule)
 # ---------------------------------------------------------------------------
@@ -173,14 +161,6 @@ def lat_from_phash(phash: Column) -> Column:
     range, FIXTURES.md §1)."""
     hi = (phash / F.lit(4294967296).cast("long")).cast("long") % F.lit(2147483648).cast("long")
     return (hi.cast("double") / 2147483648.0 * 170.0 - 85.0)
-
-
-def phash_from_key_sql(key_expr: str) -> str:
-    """DuckDB-SQL twin of phash_from_key (int64-overflow-safe for keys < 2^31)."""
-    return (
-        f"(CAST(({key_expr} * {_LAT_MULT}) % 2147483648 AS BIGINT) * 4294967296"
-        f" + CAST(({key_expr} * {_LON_MULT}) % 4294967296 AS BIGINT))"
-    )
 
 
 def lon_from_key_sql(key_expr: str) -> str:

@@ -269,17 +269,6 @@ def _band_buckets(sigs: DataFrame, num_perm: int, bands: int) -> DataFrame:
     ).select("id", "bb.band", "bb.bucket")
 
 
-def banded_minhash(df: DataFrame, text_col: str, id_col: str,
-                   num_perm: int = 64, bands: int = 16, shingle: int = 3,
-                   seed: int = 42) -> DataFrame:
-    """(id, band, bucket) banded MinHash bucket rows — the LSH key table
-    (kernel signatures; also the persistent state of the streaming
-    near-dup operator, O(bands) rows per doc)."""
-    return _band_buckets(
-        minhash_signatures(df, text_col, id_col, num_perm, shingle, seed),
-        num_perm, bands)
-
-
 def minhash_lsh_pairs(
     df: DataFrame, text_col: str, id_col: str,
     num_perm: int = 64, bands: int = 16, shingle: int = 3,

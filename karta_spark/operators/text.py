@@ -10,23 +10,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-STOPWORDS = {
-    "en": ("the", "and", "of", "to", "in", "is", "that", "with"),
-    "de": ("der", "die", "das", "und", "ist", "nicht", "mit", "ein"),
-    "fr": ("le", "la", "les", "et", "est", "dans", "que", "pour"),
-}
-
-_PUNCT = "[.,;:!?'\"()\\[\\]{}-]"
-
 
 def token_count(col: Column) -> Column:
     """Whitespace token count; empty/blank strings count 0."""
     t = F.trim(col)
     return F.when(F.length(t) == 0, F.lit(0)).otherwise(F.size(F.split(t, r"\s+")))
-
-
-def char_count(col: Column) -> Column:
-    return F.length(col)
 
 
 # GPT-2-style pre-tokenizer pattern (the public regex from the GPT-2 BPE
@@ -52,35 +40,10 @@ def bpe_token_count_sql(col_expr: str) -> str:
             f"'{pat}'))")
 
 
-def punct_ratio(col: Column) -> Column:
-    """Fraction of characters that are common ASCII punctuation."""
-    removed = F.length(F.regexp_replace(col, _PUNCT, ""))
-    return F.when(F.length(col) == 0, F.lit(0.0)).otherwise(
-        (F.length(col) - removed).cast("double") / F.length(col))
-
-
-def upper_ratio(col: Column) -> Column:
-    removed = F.length(F.regexp_replace(col, "[A-Z]", ""))
-    return F.when(F.length(col) == 0, F.lit(0.0)).otherwise(
-        (F.length(col) - removed).cast("double") / F.length(col))
-
-
 def digit_ratio(col: Column) -> Column:
     removed = F.length(F.regexp_replace(col, "[0-9]", ""))
     return F.when(F.length(col) == 0, F.lit(0.0)).otherwise(
         (F.length(col) - removed).cast("double") / F.length(col))
-
-
-def stopword_hits(col: Column, lang: str = "en") -> Column:
-    """Number of stopword occurrences (word-boundary matches, lowercased)."""
-    lower = F.lower(col)
-    total = F.lit(0)
-    for w in STOPWORDS[lang]:
-        pat = r"\b" + w + r"\b"
-        # occurrences = (len - len(without)) / len(word); word-boundary safe
-        cnt = (F.length(lower) - F.length(F.regexp_replace(lower, pat, ""))) / len(w)
-        total = total + cnt.cast("int")
-    return total
 
 
 def mean_token_len(col: Column) -> Column:
@@ -88,35 +51,6 @@ def mean_token_len(col: Column) -> Column:
     no_space = F.length(F.regexp_replace(t, r"\s+", ""))
     return F.when(token_count(col) == 0, F.lit(0.0)).otherwise(
         no_space.cast("double") / token_count(col))
-
-
-def quality_score(col: Column) -> Column:
-    """Deterministic [0,1] quality heuristic: rewards moderate length and
-    wordiness, penalizes punctuation/digit soup. (Gopher-rules-style
-    filters, reduced to oracle-expressible arithmetic.)"""
-    ntok = token_count(col)
-    len_score = F.least(ntok.cast("double") / 100.0, F.lit(1.0))
-    mtl = mean_token_len(col)
-    token_ok = F.when((mtl >= 3.0) & (mtl <= 12.0), F.lit(1.0)).otherwise(F.lit(0.5))
-    clean = F.lit(1.0) - F.least(punct_ratio(col) * 4.0 + digit_ratio(col) * 2.0, F.lit(1.0))
-    return (len_score * 0.4 + token_ok * 0.3 + clean * 0.3)
-
-
-def lang_id(col: Column) -> Column:
-    """Argmax of per-language stopword hits; ties + zero -> 'unknown'.
-
-    Scope: a deterministic stopword-list heuristic — reliable on prose in
-    the bundled languages, not a fastText/CLD substitute (no subword
-    model, no short-string robustness).  It exists so language bucketing
-    is pure Catalyst and oracle-replicable; swap in a real classifier via
-    a pandas UDF when accuracy matters more than plan purity."""
-    scores = {lang: stopword_hits(col, lang) for lang in STOPWORDS}
-    best = F.greatest(*scores.values())
-    out = F.lit("unknown")
-    # later branches win ties in reverse order -> apply in fixed order, first wins
-    for lang in reversed(list(STOPWORDS)):
-        out = F.when((scores[lang] == best) & (best > 0), F.lit(lang)).otherwise(out)
-    return out
 
 
 # (language, [signature regexes], [keyword tokens]) — ordered by
@@ -768,23 +702,6 @@ def bloom_contaminated_ids(df: DataFrame, bench: DataFrame,
     return contaminated_ids(cand_docs, bench, text_col, id_col, n)
 
 
-def text_profile(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """One row per document with the full feature set."""
-    c = F.col(text_col)
-    return df.select(
-        F.col(id_col),
-        token_count(c).alias("n_tokens"),
-        char_count(c).alias("n_chars"),
-        F.round(punct_ratio(c), 6).alias("punct_ratio"),
-        F.round(upper_ratio(c), 6).alias("upper_ratio"),
-        F.round(digit_ratio(c), 6).alias("digit_ratio"),
-        F.round(mean_token_len(c), 6).alias("mean_token_len"),
-        F.round(quality_score(c), 6).alias("quality"),
-        lang_id(c).alias("lang_pred"),
-        fingerprint(c).alias("fingerprint"),
-    )
-
-
 def pack_token_spans(df: DataFrame, token_col, id_col: str = "doc_id",
                      budget: int = 2048, shards: int = 64,
                      shard_by: str = "hash") -> DataFrame:
@@ -1036,11 +953,6 @@ def pii_redact_sql(col_expr: str) -> str:
         esc = pat.replace("'", "''")
         out = f"regexp_replace({out}, '{esc}', '{token}', 'g')"
     return out
-
-
-def pii_flag_sql(col_expr: str, which: str) -> str:
-    pat = dict((n, p) for n, p, _ in _PII_PATTERNS)[which]
-    return f"regexp_matches({col_expr}, '{pat}')"
 
 
 # ---------------------------------------------------------------------------
@@ -1581,7 +1493,6 @@ LEFT JOIN agg a ON a.{id_col} = d.{id_col}
 # RE2-safe (no lookaround) so DuckDB runs the identical rules.
 # ---------------------------------------------------------------------------
 
-_C4_BLOCKLIST = ("lorem ipsum", "javascript must be enabled", "{")
 _TERMINAL = r'[.!?"]$'
 
 

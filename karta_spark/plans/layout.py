@@ -55,10 +55,6 @@ def write_cell_partitioned(
     df.write.mode(mode).partitionBy("cell_coarse").parquet(path)
 
 
-def read_cells(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
 def bbox_scan(spark: SparkSession, path: str, bbox: tuple,
               coarse_zoom: int = 4, fine_zoom: int = 12,
               lon: str = "x", lat: str = "y") -> DataFrame:

@@ -212,41 +212,6 @@ def mulaw_decode_bytes(b: np.ndarray) -> np.ndarray:
     return np.where(u & 0x80, 0x84 - t, t - 0x84).astype(np.int16)
 
 
-def _law_encoder(decode_fn):
-    """Exact table-based encoder: nearest decoded level wins, so
-    encode(decode(b)) == b for every byte (mu-law's duplicate zero code
-    collapses to its first occurrence)."""
-    table = decode_fn(np.arange(256, dtype=np.uint8)).astype(np.int32)
-    # for duplicate levels (mu-law's two zeros) prefer the HIGHER byte
-    # (0xFF, the industry silence code): sort by (level, -byte)
-    order = np.lexsort((-np.arange(256), table))
-    levels = table[order]
-    uniq, first = np.unique(levels, return_index=True)
-    uniq_bytes = order[first].astype(np.uint8)
-
-    def enc(x: np.ndarray) -> np.ndarray:
-        x = np.asarray(x, dtype=np.int32).ravel()
-        pos = np.searchsorted(uniq, x)
-        pos = np.clip(pos, 1, len(uniq) - 1)
-        lo, hi = uniq[pos - 1], uniq[pos]
-        pick = np.where((x - lo) <= (hi - x), pos - 1, pos)
-        return uniq_bytes[pick]
-    return enc
-
-
-def mulaw_encode(x: np.ndarray) -> np.ndarray:
-    """int16-scale linear -> u8 (nearest mu-law level, exact inverse
-    of mulaw_decode_bytes on representable values)."""
-    global _MULAW_ENC
-    if _MULAW_ENC is None:
-        _MULAW_ENC = _law_encoder(mulaw_decode_bytes)
-    return _MULAW_ENC(x)
-
-
-_MULAW_ENC = None
-_ALAW_ENC = None
-
-
 def alaw_decode_bytes(b: np.ndarray) -> np.ndarray:
     a = (np.asarray(b, dtype=np.uint8).astype(np.int32)) ^ 0x55
     mant = a & 0x0F
@@ -254,15 +219,6 @@ def alaw_decode_bytes(b: np.ndarray) -> np.ndarray:
     t = np.where(seg == 0, (mant << 4) + 8,
                  ((mant << 4) + 0x108) << np.maximum(seg - 1, 0))
     return np.where(a & 0x80, t, -t).astype(np.int16)
-
-
-def alaw_encode(x: np.ndarray) -> np.ndarray:
-    """int16-scale linear -> u8 (nearest A-law level, exact inverse of
-    alaw_decode_bytes — A-law is a true bijection over all 256 bytes)."""
-    global _ALAW_ENC
-    if _ALAW_ENC is None:
-        _ALAW_ENC = _law_encoder(alaw_decode_bytes)
-    return _ALAW_ENC(x)
 
 
 def encode_g711_wav(law_bytes: np.ndarray, sample_rate: int,
@@ -305,49 +261,6 @@ def _ima_step(pred: int, index: int, nib: int):
     pred = max(-32768, min(32767, pred))
     index = max(0, min(88, index + int(_IMA_INDEX[nib & 7])))
     return pred, index
-
-
-def ima_adpcm_encode_wav(samples: np.ndarray, sample_rate: int,
-                         samples_per_block: int = 505) -> bytes:
-    """Mono int16 -> IMA ADPCM WAV (format 0x11, low-nibble-first)."""
-    x = np.asarray(samples, dtype=np.int16).astype(np.int32).ravel()
-    spb = samples_per_block
-    if (spb - 1) % 8:
-        raise ValueError("samples_per_block must be 8k+1")
-    block_align = 4 + (spb - 1) // 2
-    out = bytearray()
-    index = 0
-    for start in range(0, len(x), spb):
-        blk = x[start:start + spb]
-        pred = int(blk[0])
-        out += struct.pack("<hBB", pred, index, 0)
-        nibs = []
-        for s in blk[1:]:
-            step = int(_IMA_STEPS[index])
-            diff = int(s) - pred
-            nib = 8 if diff < 0 else 0
-            diff = abs(diff)
-            if diff >= step:
-                nib |= 4
-                diff -= step
-            if diff >= step >> 1:
-                nib |= 2
-                diff -= step >> 1
-            if diff >= step >> 2:
-                nib |= 1
-            pred, index = _ima_step(pred, index, nib)
-            nibs.append(nib)
-        while len(nibs) < spb - 1:
-            nibs.append(0)  # pad final short block
-        for k in range(0, len(nibs), 2):
-            out.append(nibs[k] | (nibs[k + 1] << 4))
-    data = bytes(out)
-    fmt = struct.pack("<HHIIHHHH", 0x11, 1, sample_rate,
-                      sample_rate * block_align // spb, block_align, 4,
-                      2, spb)
-    body = (b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-            + b"data" + struct.pack("<I", len(data)) + data)
-    return b"RIFF" + struct.pack("<I", len(body)) + body
 
 
 def _ima_adpcm_decode(body: bytes, block_align: int, spb: int) -> np.ndarray:

@@ -160,7 +160,6 @@ _BLOCKSIZE_CODES = {192: 1, 576: 2, 1152: 3, 2304: 4, 4608: 5,
 _RATE_CODES = {88200: 1, 176400: 2, 192000: 3, 8000: 4, 16000: 5,
                22050: 6, 24000: 7, 32000: 8, 44100: 9, 48000: 10,
                96000: 11}
-_SSIZE_CODES = {8: 1, 12: 2, 16: 4, 20: 5, 24: 6, 32: 7}
 
 
 def _decode_residual(r: _BitReader, blocksize: int, order: int

@@ -237,13 +237,6 @@ def phash_for_index(i: np.ndarray) -> np.ndarray:
     return hi * (1 << 32) + lo
 
 
-def lonlat_for_phash(phash: np.ndarray):
-    phash = np.asarray(phash, dtype=np.int64)
-    lon = (phash % (1 << 32)).astype(np.float64) / (1 << 32) * 360.0 - 180.0
-    lat = ((phash >> 32) % (1 << 31)).astype(np.float64) / (1 << 31) * 170.0 - 85.0
-    return lon, lat
-
-
 def pixels_for_phash(phash: int, w: int = 16, h: int = 16) -> np.ndarray:
     """Deterministic RGB pixels seeded by phash (verifiable on decode).
 

@@ -26,10 +26,6 @@ def load(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFr
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
-def load_all(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
-    return {t: load(spark, t, sf_dir) for t in TABLES}
-
-
 def with_coords(df: DataFrame, key: str, prefix: str = "") -> DataFrame:
     """Add deterministic (phash, x=lon, y=lat) derived from integer *key*.
 

@@ -201,7 +201,6 @@ DC_PRED, V_PRED, H_PRED, TM_PRED, B_PRED = 0, 1, 2, 3, 4
 (B_DC_PRED, B_TM_PRED, B_VE_PRED, B_HE_PRED, B_LD_PRED,
  B_RD_PRED, B_VR_PRED, B_VL_PRED, B_HD_PRED, B_HU_PRED) = range(10)
 
-YMODE_TREE = (-DC_PRED, 2, 4, 6, -V_PRED, -H_PRED, -TM_PRED, -B_PRED)
 KF_YMODE_TREE = (-B_PRED, 2, 4, 6, -DC_PRED, -V_PRED, -H_PRED, -TM_PRED)
 KF_YMODE_PROB = (145, 156, 163, 128)
 
@@ -1800,13 +1799,6 @@ def encode_vp8(rgb: np.ndarray, q_index: int = 8, filter_level: int = 0,
     for p in parts:
         out += p
     return bytes(out)
-
-
-def vp8_reconstruction(rgb: np.ndarray, **kw) -> np.ndarray:
-    """Encode then decode (filter_level forced to 0): the exact pixel
-    output a decoder produces, for bit-equality tests."""
-    kw = dict(kw, filter_level=0)
-    return decode_vp8(encode_vp8(rgb, **kw))
 
 
 # ---------------------------------------------------------------------------

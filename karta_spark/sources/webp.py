@@ -506,9 +506,6 @@ def _decode_image_stream(br: _BitReader, xsize: int, ysize: int,
 # inverse transforms
 # ---------------------------------------------------------------------------
 
-def _avg2(a, b):
-    return ((a.astype(np.uint16) + b.astype(np.uint16)) >> 1).astype(np.uint8)
-
 
 def _px_bytes(v):
     """uint32 scalar -> int16 array [a, r, g, b]."""

@@ -10,9 +10,9 @@ import pytest
 
 from karta_spark.sources.av import (
     _IMA_INDEX, _IMA_STEPS, _ima_adpcm_decode, _ima_step,
-    alaw_decode_bytes, alaw_encode, decode_wav, encode_g711_wav,
-    ima_adpcm_encode_wav, mulaw_decode_bytes, mulaw_encode,
+    alaw_decode_bytes, decode_wav, encode_g711_wav, mulaw_decode_bytes,
 )
+from tests.encoders import alaw_encode, ima_adpcm_encode_wav, mulaw_encode
 
 
 class TestG711Tables:

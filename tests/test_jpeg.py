@@ -1,10 +1,21 @@
-"""Baseline JPEG codec tests (sources/jpeg.py) — the lossy arm of the
-BASELINE decode invariant (PSNR >= 40 dB), previously a Pillow-gated stub.
+"""JPEG codec tests (sources/jpeg.py) — the lossy arm of the BASELINE
+decode invariant (PSNR >= 40 dB), previously a Pillow-gated stub — and
+the decode of 12-bit, lossless and Adobe CMYK/YCCK streams written by
+the encoders in tests/encoders.py.
+
+12-bit SOF1 DC category 16: T.81 F.1.2.1.1 defines it as DIFF = 32768
+with NO appended magnitude bits — encoder and decoder are each pinned
+independently (not just a roundtrip, which a symmetric bug would pass).
+A 4-component JPEG without an Adobe APP14 marker decodes without ink
+inversion (libjpeg convention: only Adobe-marked streams are inverted).
 """
+
+import struct as st
 
 import numpy as np
 import pytest
 
+from karta_spark.sources import jpeg as J
 from karta_spark.sources.images import decode_image, make_row, pixels_for_phash, psnr
 from karta_spark.sources.jpeg import (
     decode_jpeg_baseline,
@@ -12,6 +23,7 @@ from karta_spark.sources.jpeg import (
     scaled_quant,
     QUANT_LUM,
 )
+from tests import encoders as E
 
 
 class TestCodec:
@@ -505,3 +517,298 @@ class TestFourOneOne:
         base = encode_jpeg_baseline(a, 92, subsampling=sub)
         assert np.array_equal(decode_jpeg_baseline(prog),
                               decode_jpeg_baseline(base))
+
+
+class TestJpeg12Bit:
+    """12-bit extended sequential (SOF1, T.81 extended precision) —
+    VERDICT r4 missing-item 5's first named shape; GDAL reads these via
+    libjpeg-12 (reference _gdal.py:114-188)."""
+
+    @staticmethod
+    def _image12(h=40, w=56, seed=5):
+        rng = np.random.default_rng(seed)
+        yy, xx = np.mgrid[0:h, 0:w]
+        return np.clip(2048 + 1500 * np.sin(xx / 6.0) * np.cos(yy / 7.0)
+                       + rng.normal(0, 30, (h, w)),
+                       0, 4095).round().astype(np.uint16)
+
+    def test_roundtrip_psnr(self):
+        from tests.encoders import encode_jpeg12
+        A = self._image12()
+        back = decode_jpeg_baseline(encode_jpeg12(A, 95))
+        assert back.dtype == np.uint16
+        assert back.shape == A.shape
+        mse = np.mean((back.astype(float) - A.astype(float)) ** 2)
+        assert 10 * np.log10(4095.0 ** 2 / mse) >= 40.0
+
+    def test_range_exceeds_8bit(self):
+        """Decoded values actually use the 12-bit range (a silently
+        8-bit-clamped decode would fail this)."""
+        from tests.encoders import encode_jpeg12
+        A = self._image12()
+        back = decode_jpeg_baseline(encode_jpeg12(A, 95))
+        assert int(back.max()) > 255
+
+    def test_rejects_out_of_range(self):
+        from tests.encoders import encode_jpeg12
+        with pytest.raises(ValueError, match="0..4095"):
+            encode_jpeg12(np.full((8, 8), 5000, dtype=np.uint16))
+
+    def test_unsupported_precision_still_raises(self):
+        """A stream claiming precision 10 must raise (only 8/12)."""
+        from tests.encoders import encode_jpeg12
+        s = bytearray(encode_jpeg12(self._image12(16, 16), 90))
+        i = s.index(b"\xff\xc1")
+        s[i + 4] = 10  # patch SOF precision byte
+        with pytest.raises(NotImplementedError, match="precision 10"):
+            decode_jpeg_baseline(bytes(s))
+
+    def test_8bit_paths_unchanged(self):
+        from karta_spark.sources.jpeg import (
+            decode_jpeg_baseline, encode_jpeg_baseline)
+        A = (self._image12() >> 4).astype(np.uint8)
+        back = decode_jpeg_baseline(encode_jpeg_baseline(A, 95))
+        assert back.dtype == np.uint8
+
+
+class TestJpegLossless:
+    """Lossless JPEG (SOF3, T.81 Annex H): predictive coding, exact
+    roundtrip, precisions 2..16 — the JPEGProc=14 format of old-style
+    JPEG-in-TIFF aerial archives (reference reads via GDAL)."""
+
+    @pytest.mark.parametrize("prec,pred", [
+        (8, 1), (8, 2), (8, 3), (8, 4), (8, 5), (8, 6), (8, 7),
+        (12, 1), (12, 4), (16, 7), (10, 6), (2, 1)])
+    def test_exact_roundtrip(self, prec, pred):
+        from tests.encoders import encode_jpeg_lossless
+        rng = np.random.default_rng(prec * 10 + pred)
+        A = rng.integers(0, 1 << prec, (23, 31)).astype(np.uint16)
+        back = decode_jpeg_baseline(
+            encode_jpeg_lossless(A, predictor=pred, precision=prec))
+        assert back.dtype == (np.uint8 if prec <= 8 else np.uint16)
+        assert np.array_equal(back.astype(np.int64), A.astype(np.int64))
+
+    def test_smooth_image_compresses(self):
+        """Predictive coding on smooth content must beat raw size."""
+        from tests.encoders import encode_jpeg_lossless
+        yy, xx = np.mgrid[0:64, 0:64]
+        A = (100 + xx + yy // 2).astype(np.uint16)
+        s = encode_jpeg_lossless(A, predictor=4, precision=9)
+        assert len(s) < A.size * 2 * 0.5
+
+    def test_gradient_predictors_agree(self):
+        """All 7 predictors reconstruct the same exact image."""
+        from tests.encoders import encode_jpeg_lossless
+        yy, xx = np.mgrid[0:17, 0:19]
+        A = ((xx * 7 + yy * 3) % 251).astype(np.uint16)
+        outs = [decode_jpeg_baseline(
+            encode_jpeg_lossless(A, predictor=p, precision=8))
+            for p in range(1, 8)]
+        for o in outs[1:]:
+            assert np.array_equal(o, outs[0])
+
+
+class TestCmykJpeg:
+    """Adobe 4-component CMYK/YCCK JPEG (APP14) — the print-origin shape
+    web corpora carry; GDAL/libjpeg surface it as 4 bands (reference
+    reads via GDAL, _gdal.py:114-188)."""
+
+    @staticmethod
+    def _cmyk(h=40, w=48):
+        yy, xx = np.mgrid[0:h, 0:w]
+        return np.stack([
+            np.clip(128 + 90 * np.sin(xx / 7.0), 0, 255),
+            np.clip(128 + 90 * np.cos(yy / 6.0), 0, 255),
+            np.clip(100 + 60 * np.sin((xx + yy) / 9.0), 0, 255),
+            np.clip(40 + 30 * np.cos(xx / 11.0), 0, 255),
+        ], axis=2).round().astype(np.uint8)
+
+    @pytest.mark.parametrize("transform", [0, 2])
+    def test_roundtrip_psnr(self, transform):
+        from tests.encoders import encode_jpeg_cmyk
+        A = self._cmyk()
+        back = decode_jpeg_baseline(
+            encode_jpeg_cmyk(A, 95, transform=transform))
+        assert back.shape == A.shape and back.dtype == np.uint8
+        mse = np.mean((back.astype(float) - A.astype(float)) ** 2)
+        assert 10 * np.log10(255.0 ** 2 / mse) >= 40.0
+
+    def test_constant_image_exact_channels(self):
+        """Constant CMYK decodes to the same constants (catches APP14
+        transform-byte misplacement and channel-order bugs exactly)."""
+        from tests.encoders import encode_jpeg_cmyk
+        A = np.zeros((16, 16, 4), np.uint8)
+        A[:, :] = (200, 100, 50, 30)
+        back = decode_jpeg_baseline(encode_jpeg_cmyk(A, 100, transform=2))
+        assert np.abs(back.astype(int) - A.astype(int)).max() <= 2
+
+    def test_cmyk_to_rgb(self):
+        from karta_spark.sources.jpeg import cmyk_to_rgb
+        pure_cyan = np.zeros((2, 2, 4), np.uint8)
+        pure_cyan[:, :, 0] = 255
+        rgb = cmyk_to_rgb(pure_cyan)
+        assert tuple(rgb[0, 0]) == (0, 255, 255)
+        black = np.zeros((1, 1, 4), np.uint8)
+        black[:, :, 3] = 255
+        assert tuple(cmyk_to_rgb(black)[0, 0]) == (0, 0, 0)
+
+    def test_bad_transform_rejected(self):
+        from tests.encoders import encode_jpeg_cmyk
+        with pytest.raises(ValueError, match="transform"):
+            encode_jpeg_cmyk(self._cmyk(), transform=1)
+
+    def test_rgb_paths_unaffected(self):
+        from karta_spark.sources.jpeg import (
+            decode_jpeg_baseline, encode_jpeg_baseline)
+        A = self._cmyk()[:, :, :3]
+        back = decode_jpeg_baseline(encode_jpeg_baseline(A, 95))
+        assert back.shape == A.shape
+
+
+def _build_cat16_stream():
+    """Hand-build a 12-bit SOF1 grayscale 8x16 stream whose second block
+    arrives via DC category 16 (no appended bits): block DCs -16384 then
+    +16384 (diff exactly 32768), quant all-ones (quality 100)."""
+    q = J.scaled_quant(J.QUANT_LUM, 100)
+    assert (q == 1).all()
+    out = bytearray(b"\xFF\xD8")
+    out += b"\xFF\xDB" + st.pack(">HB", 67, 0) \
+        + bytes(int(v) for v in q.reshape(-1)[J.ZIGZAG])
+    sof = st.pack(">BHHB", 12, 8, 16, 1) + bytes([1, 0x11, 0])
+    out += b"\xFF\xC1" + st.pack(">H", 2 + len(sof)) + sof
+    for cls, tid, bits, vals in ((0, 0, E._DC12_BITS, E._DC12_VALS),
+                                 (1, 0, E._AC12_BITS, E._AC12_VALS)):
+        body = st.pack("B", (cls << 4) | tid) + bytes(bits) + bytes(vals)
+        out += b"\xFF\xC4" + st.pack(">H", 2 + len(body)) + body
+    sos = bytes([1, 1, 0x00, 0, 63, 0])
+    out += b"\xFF\xDA" + st.pack(">H", 2 + len(sos)) + sos
+    return out
+
+
+def _independent_entropy_cat16():
+    """Write the two-block entropy segment with an independent bit
+    writer: DC(-16384) = category 15 + 15 bits, EOB, then DC code for
+    category 16 with NO appended bits, EOB."""
+    state = {"acc": 0, "n": 0, "buf": bytearray()}
+
+    def put(code, ln):
+        state["acc"] = (state["acc"] << ln) | code
+        state["n"] += ln
+        while state["n"] >= 8:
+            state["n"] -= 8
+            b = (state["acc"] >> state["n"]) & 0xFF
+            state["buf"].append(b)
+            if b == 0xFF:
+                state["buf"].append(0x00)
+        state["acc"] &= (1 << state["n"]) - 1
+
+    eob = E._ENC_AC12[0x00]
+    # block 1: diff -16384 -> category 15, appended = diff + 2^15 - 1
+    c, ln = E._ENC_DC12[15]
+    put(c, ln)
+    put(-16384 + (1 << 15) - 1, 15)
+    put(*eob)
+    # block 2: diff +32768 -> category 16, NO appended bits
+    c, ln = E._ENC_DC12[16]
+    put(c, ln)
+    put(*eob)
+    if state["n"]:
+        pad = 8 - state["n"]
+        put((1 << pad) - 1, pad)
+    return bytes(state["buf"])
+
+
+class TestJpeg12DCCategory16:
+    def test_decoder_reads_no_appended_bits(self):
+        """Decoder pinned against an independently written stream: if it
+        consumed 16 phantom bits it would swallow the second EOB."""
+        data = _build_cat16_stream() + _independent_entropy_cat16() \
+            + b"\xFF\xD9"
+        dec = J.decode_jpeg_baseline(bytes(data))
+        assert dec.shape == (8, 16) and dec.dtype == np.uint16
+        # DC -16384 -> flat 2048 - 2048 = 0; +16384 -> 4096 clipped 4095
+        assert (dec[:, :8] == 0).all()
+        assert (dec[:, 8:] == 4095).all()
+
+    def test_encoder_emits_no_appended_bits(self):
+        """_encode_blocks output must be byte-identical to the
+        independent writer for the same category-16 block pair."""
+        coefs = np.zeros((2, 64), np.int64)
+        coefs[0, 0] = -16384
+        coefs[1, 0] = 16384
+        w = J._BitWriter()
+        J._encode_blocks(w, coefs, E._ENC_DC12, E._ENC_AC12, 0)
+        w.flush()
+        assert bytes(w.buf) == _independent_entropy_cat16()
+
+
+class TestCmykNoAdobePassthrough:
+    def test_no_app14_decodes_uninverted(self):
+        rng = np.random.default_rng(7)
+        a = rng.integers(0, 256, (16, 16, 4), dtype=np.uint8)
+        enc = E.encode_jpeg_cmyk(a, 98, transform=0)
+        i = enc.find(b"\xFF\xEE")
+        assert i > 0
+        (seglen,) = st.unpack(">H", enc[i + 2:i + 4])
+        stripped = enc[:i] + enc[i + 2 + seglen:]
+        dec_adobe = J.decode_jpeg_baseline(enc)
+        dec_plain = J.decode_jpeg_baseline(stripped)
+        # same stored samples: Adobe path un-inverts, plain passes through
+        assert np.array_equal(dec_plain, 255 - dec_adobe)
+
+
+class TestProgressive12Bit:
+    """12-bit PROGRESSIVE JPEG (SOF2 precision 12) — the last cell of
+    the mode matrix (sequential-12, progressive-8 and lossless were
+    covered).  Pin: progressive streams must decode BIT-IDENTICALLY to
+    the sequential SOF1-12 stream of the same image (same quantized
+    coefficients, different entropy layout), for both the spectral-
+    selection-only and successive-approximation scan scripts."""
+
+    @pytest.mark.parametrize("successive", [True, False])
+    def test_bitexact_vs_sequential_12bit(self, successive):
+        rng = np.random.default_rng(5)
+        img = rng.integers(0, 4096, size=(41, 57)).astype(np.uint16)
+        seq = J.decode_jpeg_baseline(E.encode_jpeg12(img, 90))
+        pro = J.decode_jpeg_baseline(
+            E.encode_jpeg12_progressive(img, 90, successive=successive))
+        assert pro.dtype == np.uint16 and pro.shape == (41, 57)
+        np.testing.assert_array_equal(pro, seq)
+
+    def test_smooth_content_and_q100(self):
+        x, y = np.meshgrid(np.arange(64), np.arange(48))
+        img = (2048 + 1800 * np.sin(x / 5.0) * np.cos(y / 7.0)
+               ).astype(np.uint16)
+        for q in (100, 75):
+            seq = J.decode_jpeg_baseline(E.encode_jpeg12(img, q))
+            pro = J.decode_jpeg_baseline(E.encode_jpeg12_progressive(img, q))
+            np.testing.assert_array_equal(pro, seq)
+
+    def test_dc_category16_progressive_stream(self):
+        """Hand-built SOF2-12 stream whose second block carries a
+        DC-category-16 code (DIFF=32768, NO appended bits per T.81
+        F.1.2.1.1) — unreachable from the DCT encoder (max |diff| is
+        32760) but emitted by libjpeg-12's table range; the progressive
+        DC decode must consume zero magnitude bits."""
+        import struct as st
+        out = bytearray()
+        out += b"\xFF\xD8"
+        out += b"\xFF\xDB" + st.pack(">HB", 67, 0) + bytes([1] * 64)
+        sof = st.pack(">BHHB", 12, 8, 16, 1) + bytes([1, 0x11, 0])
+        out += b"\xFF\xC2" + st.pack(">H", 2 + len(sof)) + sof
+        body = st.pack("B", 0x00) + bytes(E._DC12_BITS) + bytes(E._DC12_VALS)
+        out += b"\xFF\xC4" + st.pack(">H", 2 + len(body)) + body
+        out += b"\xFF\xDA" + st.pack(">H", 8) + bytes([1, 1, 0x00, 0, 0, 0])
+        wtr = J._BitWriter()
+        c, ln = E._ENC_DC12[0]
+        wtr.write(c, ln)                    # block 0: diff 0
+        c, ln = E._ENC_DC12[16]
+        wtr.write(c, ln)                    # block 1: DIFF=32768, no bits
+        wtr.flush()
+        out += wtr.buf
+        out += b"\xFF\xD9"
+        img = J.decode_jpeg_baseline(bytes(out))
+        assert img.shape == (8, 16) and img.dtype == np.uint16
+        # block 0: DC 0 -> mid gray 2048; block 1: DC 32768 -> clamps top
+        assert np.all(img[:, :8] == 2048)
+        assert np.all(img[:, 8:] == 4095)

@@ -491,45 +491,3 @@ class TestLayout:
         want = pts.where((F.col("x") >= bbox[0]) & (F.col("x") <= bbox[2])
                          & (F.col("y") >= bbox[1]) & (F.col("y") <= bbox[3])).count()
         assert q.count() == want and want > 0
-
-
-class TestStreamingCheckpoint:
-    def test_foreach_batch_resume(self, spark, tmp_path):
-        import time as _time
-        from karta_spark.streaming import stream_ops
-        root = str(tmp_path / "stream_root")
-        ck = str(tmp_path / "stream_ck")
-        rate = (spark.readStream.format("rate")
-                .option("rowsPerSecond", "200").load()
-                .select("timestamp", "value"))
-        q = stream_ops.run_foreach_batch_checkpoint(rate, root, "ingest", ck)
-        try:
-            deadline = _time.time() + 30
-            while _time.time() < deadline:
-                q.processAllAvailable()
-                try:
-                    n1 = spark.read.parquet(f"{root}/ingest/data").count()
-                    if n1 > 0:
-                        break
-                except Exception:
-                    pass
-                _time.sleep(1)
-        finally:
-            q.stop()
-        n1 = spark.read.parquet(f"{root}/ingest/data").count()
-        assert n1 > 0
-        # restart from the same checkpoint: offsets resume, no data loss
-        rate2 = (spark.readStream.format("rate")
-                 .option("rowsPerSecond", "200").load()
-                 .select("timestamp", "value"))
-        q2 = stream_ops.run_foreach_batch_checkpoint(rate2, root, "ingest", ck)
-        try:
-            _time.sleep(3)
-            q2.processAllAvailable()
-        finally:
-            q2.stop()
-        df = spark.read.parquet(f"{root}/ingest/data")
-        n2 = df.count()
-        assert n2 >= n1
-        # values unique per rate-source offset: restart did not duplicate
-        assert df.select("value").distinct().count() == n2

@@ -137,52 +137,6 @@ class TestLshBucketCaps:
         assert on == off and len(on) == 1
 
 
-class TestStreamingReservoir:
-    """applyInPandasWithState custom stateful op: per-stratum reservoir."""
-
-    def _run(self, spark, tmp_path, tag, batches, k=4):
-        import shutil
-        src = tmp_path / f"src_{tag}"
-        ckpt = tmp_path / f"ckpt_{tag}"
-        src.mkdir()
-        from karta_spark.streaming.stream_ops import streaming_reservoir_sample
-        schema = "lang string, doc_id string"
-        stream = spark.readStream.schema(schema).json(str(src))
-        res = streaming_reservoir_sample(stream, ["lang"], "doc_id", k=k)
-        name = f"reservoir_{tag}"
-        q = (res.writeStream.format("memory").queryName(name)
-             .option("checkpointLocation", str(ckpt))
-             .outputMode("update").start())
-        try:
-            for bi, rows in enumerate(batches):
-                with open(src / f"b{bi}.json", "w") as f:
-                    for lang, did in rows:
-                        f.write(f'{{"lang": "{lang}", "doc_id": "{did}"}}\n')
-                q.processAllAvailable()
-        finally:
-            q.stop()
-        pdf = spark.table(name).toPandas()
-        # last emission per group = rows with the max n_seen per lang
-        last = pdf.loc[pdf.groupby("lang")["n_seen"].transform("max") == pdf["n_seen"]]
-        return {lang: (sorted(g["doc_id"]), int(g["n_seen"].iloc[0]))
-                for lang, g in last.groupby("lang")}
-
-    def test_reservoir_bound_counts_and_determinism(self, spark, tmp_path):
-        batches = [
-            [("en", f"e{i}") for i in range(10)] + [("fr", "f0")],
-            [("en", f"e{10+i}") for i in range(10)] + [("fr", "f1")],
-            [("en", f"e{20+i}") for i in range(5)],
-        ]
-        got1 = self._run(spark, tmp_path, "a", batches)
-        got2 = self._run(spark, tmp_path, "b", batches)
-        assert got1 == got2                     # replay-deterministic
-        en_ids, en_seen = got1["en"]
-        assert en_seen == 25 and len(en_ids) == 4
-        assert set(en_ids) <= {f"e{i}" for i in range(25)}
-        fr_ids, fr_seen = got1["fr"]
-        assert fr_seen == 2 and fr_ids == ["f0", "f1"]  # under-full keeps all
-
-
 class TestScanlineMaskParity:
     """Reference mask_poly goldens (grid_tests.py:481-556), bit-exact via
     the scanline replica — counts and value-sums, kernel and tiled path."""
@@ -606,4 +560,3 @@ class TestDatumShift:
         out = kcrs.reproject(df, "lonlat_nad27", "lonlat_nad83").collect()[0]
         assert abs(out.x - self.GOLDEN_OUT[0]) < 5e-4
         assert abs(out.y - self.GOLDEN_OUT[1]) < 5e-4
-

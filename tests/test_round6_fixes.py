@@ -3,21 +3,12 @@
 1. repeated_spans: docs shorter than L must emit nothing (Spark's
    sequence(1, 0) counts DOWN, so the unfiltered plan produced two
    spurious gram rows per short doc and diverged from the DuckDB twin).
-2. 12-bit SOF1 DC category 16: T.81 F.1.2.1.1 defines it as
-   DIFF = 32768 with NO appended magnitude bits — both encoder and
-   decoder, each pinned independently (not just a roundtrip, which a
-   symmetric bug would pass).
-3. 4-component JPEG without an Adobe APP14 marker decodes without ink
-   inversion (libjpeg convention: only Adobe-marked streams are
-   inverted).
-"""
-import struct as st
 
+The JPEG findings of this round are in test_jpeg.py.
+"""
 import numpy as np
 import pandas as pd
 import pytest
-
-from karta_spark.sources import jpeg as J
 
 
 class TestRepeatedSpansShortDocs:
@@ -52,98 +43,6 @@ class TestRepeatedSpansShortDocs:
         assert set(out) == {3, 4}
         for i, d in out.items():
             assert d <= len(texts[i - 1])
-
-
-def _build_cat16_stream():
-    """Hand-build a 12-bit SOF1 grayscale 8x16 stream whose second block
-    arrives via DC category 16 (no appended bits): block DCs -16384 then
-    +16384 (diff exactly 32768), quant all-ones (quality 100)."""
-    q = J.scaled_quant(J.QUANT_LUM, 100)
-    assert (q == 1).all()
-    out = bytearray(b"\xFF\xD8")
-    out += b"\xFF\xDB" + st.pack(">HB", 67, 0) \
-        + bytes(int(v) for v in q.reshape(-1)[J.ZIGZAG])
-    sof = st.pack(">BHHB", 12, 8, 16, 1) + bytes([1, 0x11, 0])
-    out += b"\xFF\xC1" + st.pack(">H", 2 + len(sof)) + sof
-    for cls, tid, bits, vals in ((0, 0, J._DC12_BITS, J._DC12_VALS),
-                                 (1, 0, J._AC12_BITS, J._AC12_VALS)):
-        body = st.pack("B", (cls << 4) | tid) + bytes(bits) + bytes(vals)
-        out += b"\xFF\xC4" + st.pack(">H", 2 + len(body)) + body
-    sos = bytes([1, 1, 0x00, 0, 63, 0])
-    out += b"\xFF\xDA" + st.pack(">H", 2 + len(sos)) + sos
-    return out
-
-
-def _independent_entropy_cat16():
-    """Write the two-block entropy segment with an independent bit
-    writer: DC(-16384) = category 15 + 15 bits, EOB, then DC code for
-    category 16 with NO appended bits, EOB."""
-    state = {"acc": 0, "n": 0, "buf": bytearray()}
-
-    def put(code, ln):
-        state["acc"] = (state["acc"] << ln) | code
-        state["n"] += ln
-        while state["n"] >= 8:
-            state["n"] -= 8
-            b = (state["acc"] >> state["n"]) & 0xFF
-            state["buf"].append(b)
-            if b == 0xFF:
-                state["buf"].append(0x00)
-        state["acc"] &= (1 << state["n"]) - 1
-
-    eob = J._ENC_AC12[0x00]
-    # block 1: diff -16384 -> category 15, appended = diff + 2^15 - 1
-    c, ln = J._ENC_DC12[15]
-    put(c, ln)
-    put(-16384 + (1 << 15) - 1, 15)
-    put(*eob)
-    # block 2: diff +32768 -> category 16, NO appended bits
-    c, ln = J._ENC_DC12[16]
-    put(c, ln)
-    put(*eob)
-    if state["n"]:
-        pad = 8 - state["n"]
-        put((1 << pad) - 1, pad)
-    return bytes(state["buf"])
-
-
-class TestJpeg12DCCategory16:
-    def test_decoder_reads_no_appended_bits(self):
-        """Decoder pinned against an independently written stream: if it
-        consumed 16 phantom bits it would swallow the second EOB."""
-        data = _build_cat16_stream() + _independent_entropy_cat16() \
-            + b"\xFF\xD9"
-        dec = J.decode_jpeg_baseline(bytes(data))
-        assert dec.shape == (8, 16) and dec.dtype == np.uint16
-        # DC -16384 -> flat 2048 - 2048 = 0; +16384 -> 4096 clipped 4095
-        assert (dec[:, :8] == 0).all()
-        assert (dec[:, 8:] == 4095).all()
-
-    def test_encoder_emits_no_appended_bits(self):
-        """_encode_blocks output must be byte-identical to the
-        independent writer for the same category-16 block pair."""
-        coefs = np.zeros((2, 64), np.int64)
-        coefs[0, 0] = -16384
-        coefs[1, 0] = 16384
-        w = J._BitWriter()
-        J._encode_blocks(w, coefs, J._ENC_DC12, J._ENC_AC12, 0)
-        w.flush()
-        assert bytes(w.buf) == _independent_entropy_cat16()
-
-
-class TestCmykNoAdobePassthrough:
-    def test_no_app14_decodes_uninverted(self):
-        rng = np.random.default_rng(7)
-        a = rng.integers(0, 256, (16, 16, 4), dtype=np.uint8)
-        enc = J.encode_jpeg_cmyk(a, 98, transform=0)
-        i = enc.find(b"\xFF\xEE")
-        assert i > 0
-        (seglen,) = st.unpack(">H", enc[i + 2:i + 4])
-        stripped = enc[:i] + enc[i + 2 + seglen:]
-        dec_adobe = J.decode_jpeg_baseline(enc)
-        dec_plain = J.decode_jpeg_baseline(stripped)
-        # same stored samples: Adobe path un-inverts, plain passes through
-        assert np.array_equal(dec_plain, 255 - dec_adobe)
 
 
 class TestTrueMercator:
@@ -1019,63 +918,6 @@ class TestEpsgLookup:
         from karta_spark.functions import crs as C
         with pytest.raises(ValueError, match="native registry"):
             C.from_epsg(27200)  # New Zealand Map Grid: not implemented
-
-
-class TestProgressive12Bit:
-    """12-bit PROGRESSIVE JPEG (SOF2 precision 12) — the last cell of
-    the mode matrix (sequential-12, progressive-8 and lossless were
-    covered).  Pin: progressive streams must decode BIT-IDENTICALLY to
-    the sequential SOF1-12 stream of the same image (same quantized
-    coefficients, different entropy layout), for both the spectral-
-    selection-only and successive-approximation scan scripts."""
-
-    @pytest.mark.parametrize("successive", [True, False])
-    def test_bitexact_vs_sequential_12bit(self, successive):
-        rng = np.random.default_rng(5)
-        img = rng.integers(0, 4096, size=(41, 57)).astype(np.uint16)
-        seq = J.decode_jpeg_baseline(J.encode_jpeg12(img, 90))
-        pro = J.decode_jpeg_baseline(
-            J.encode_jpeg12_progressive(img, 90, successive=successive))
-        assert pro.dtype == np.uint16 and pro.shape == (41, 57)
-        np.testing.assert_array_equal(pro, seq)
-
-    def test_smooth_content_and_q100(self):
-        x, y = np.meshgrid(np.arange(64), np.arange(48))
-        img = (2048 + 1800 * np.sin(x / 5.0) * np.cos(y / 7.0)
-               ).astype(np.uint16)
-        for q in (100, 75):
-            seq = J.decode_jpeg_baseline(J.encode_jpeg12(img, q))
-            pro = J.decode_jpeg_baseline(J.encode_jpeg12_progressive(img, q))
-            np.testing.assert_array_equal(pro, seq)
-
-    def test_dc_category16_progressive_stream(self):
-        """Hand-built SOF2-12 stream whose second block carries a
-        DC-category-16 code (DIFF=32768, NO appended bits per T.81
-        F.1.2.1.1) — unreachable from the DCT encoder (max |diff| is
-        32760) but emitted by libjpeg-12's table range; the progressive
-        DC decode must consume zero magnitude bits."""
-        import struct as st
-        out = bytearray()
-        out += b"\xFF\xD8"
-        out += b"\xFF\xDB" + st.pack(">HB", 67, 0) + bytes([1] * 64)
-        sof = st.pack(">BHHB", 12, 8, 16, 1) + bytes([1, 0x11, 0])
-        out += b"\xFF\xC2" + st.pack(">H", 2 + len(sof)) + sof
-        body = st.pack("B", 0x00) + bytes(J._DC12_BITS) + bytes(J._DC12_VALS)
-        out += b"\xFF\xC4" + st.pack(">H", 2 + len(body)) + body
-        out += b"\xFF\xDA" + st.pack(">H", 8) + bytes([1, 1, 0x00, 0, 0, 0])
-        wtr = J._BitWriter()
-        c, ln = J._ENC_DC12[0]
-        wtr.write(c, ln)                    # block 0: diff 0
-        c, ln = J._ENC_DC12[16]
-        wtr.write(c, ln)                    # block 1: DIFF=32768, no bits
-        wtr.flush()
-        out += wtr.buf
-        out += b"\xFF\xD9"
-        img = J.decode_jpeg_baseline(bytes(out))
-        assert img.shape == (8, 16) and img.dtype == np.uint16
-        # block 0: DC 0 -> mid gray 2048; block 1: DC 32768 -> clamps top
-        assert np.all(img[:, :8] == 2048)
-        assert np.all(img[:, 8:] == 4095)
 
 
 class TestKrovak:
