@@ -1671,77 +1671,6 @@ WHERE bit_count(xor(a.phash, b.phash)) <= 4
 """
 
 
-def q51_decontaminate(spark, sf_dir):
-    """Benchmark decontamination (training-pipeline op): documents sharing
-    any word 5-gram with the held-out set (doc_id % 17 == 0 plays the
-    benchmark) are flagged; output is every non-benchmark doc with its
-    contamination flag.  Spark plan: distinct-gram explode both sides ->
-    broadcast semi-join on the gram; the oracle recomputes the same gram
-    sets with list slicing."""
-    d = _t(spark, sf_dir, "documents")
-    bench = d.where(F.col("doc_id") % 17 == 0)
-    corpus = d.where(F.col("doc_id") % 17 != 0)
-    bad = text.contaminated_ids(corpus, bench, "text", "doc_id", n=5)
-    return (corpus.join(bad.withColumnRenamed("id", "doc_id")
-                        .withColumn("contaminated", F.lit(True)),
-                        "doc_id", "left")
-            .select("doc_id",
-                    F.coalesce("contaminated", F.lit(False)).alias("contaminated")))
-
-
-Q51_SQL = r"""
-WITH toks AS (
-  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t FROM documents
-), doc_g AS (
-  SELECT DISTINCT doc_id, array_to_string(t[CAST(i AS INT):CAST(i+4 AS INT)], ' ') AS g
-  FROM toks, UNNEST(range(1, len(t) - 3)) AS u(i)
-  WHERE doc_id % 17 <> 0 AND len(t) >= 5
-), bench_g AS (
-  SELECT DISTINCT array_to_string(t[CAST(i AS INT):CAST(i+4 AS INT)], ' ') AS g
-  FROM toks, UNNEST(range(1, len(t) - 3)) AS u(i)
-  WHERE doc_id % 17 = 0 AND len(t) >= 5
-), bad AS (
-  SELECT DISTINCT doc_id FROM doc_g WHERE g IN (SELECT g FROM bench_g)
-)
-SELECT d.doc_id, (bad.doc_id IS NOT NULL) AS contaminated
-FROM documents d LEFT JOIN bad ON d.doc_id = bad.doc_id
-WHERE d.doc_id % 17 <> 0
-"""
-
-
-def q53_repetition_filter(spark, sf_dir):
-    """Intra-document repetition (Gopher-style quality rule): fraction of
-    word bigrams that repeat an earlier bigram in the same doc, plus the
-    filter verdict at the 0.2 threshold — pure Catalyst; the oracle
-    recomputes the bigram multiset with list slicing."""
-    d = _t(spark, sf_dir, "documents")
-    rr = text.repetition_ratio(F.col("text"), n=2)
-    return d.select(
-        "doc_id", F.round(rr, 6).alias("rep_ratio"),
-        (rr <= 0.2).alias("keep"))
-
-
-Q53_SQL = r"""
-WITH toks AS (
-  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t FROM documents
-), grams AS (
-  SELECT doc_id,
-         len(t) - 1 AS total,
-         CASE WHEN len(t) < 2 THEN 0
-              ELSE (SELECT count(DISTINCT array_to_string(
-                        t[CAST(i AS INT):CAST(i+1 AS INT)], ' '))
-                    FROM UNNEST(range(1, len(t))) AS u(i)) END AS n_distinct
-  FROM toks
-), ratio AS (
-  SELECT doc_id,
-         CASE WHEN total < 1 THEN 0.0
-              ELSE 1.0 - CAST(n_distinct AS DOUBLE) / total END AS rr
-  FROM grams
-)
-SELECT doc_id, round(rr, 6) AS rep_ratio, rr <= 0.2 AS keep FROM ratio
-"""
-
-
 def q52_cluster_representatives(spark, sf_dir):
     """Duplicate-cluster representative selection (training-pipeline op):
     after q17 near-dup pairs collapse to clusters (q42 machinery), keep
@@ -2023,79 +1952,6 @@ FROM w GROUP BY win
 """
 
 
-def q61_sequence_packing(spark, sf_dir):
-    """GPT-style sequence packing census (round 4): shard the documents
-    table (portable id%16 shard), concatenate each shard's whitespace
-    token stream in id order, slice into fixed 512-token training
-    sequences (text.pack_token_spans — window cumsum partitioned by
-    shard, no global window), then census per shard: docs, total
-    tokens, sequences produced, boundary-spanning docs.
-
-    Value-oracle-exact: pure integer window algebra, identical in
-    DuckDB (pack_token_spans_sql)."""
-    d = _t(spark, sf_dir, "documents")
-    spans = text.pack_token_spans(
-        d, text.token_count(F.col("text")), id_col="doc_id",
-        budget=512, shards=16, shard_by="mod")
-    return (spans.groupBy("shard")
-            .agg(F.count("*").cast("long").alias("n_docs"),
-                 F.sum(F.col("tok_end") - F.col("tok_start")).alias("n_tokens"),
-                 (F.max("seq_last") + 1).alias("n_seqs"),
-                 F.sum(F.when(F.col("n_seqs_spanned") > 1, 1)
-                       .otherwise(0)).cast("long").alias("n_spanning")))
-
-
-def _q61_sql():
-    from karta_spark.operators.text import pack_token_spans_sql
-    tok = ("CASE WHEN len(trim(text)) = 0 THEN 0 "
-           "ELSE len(regexp_split_to_array(trim(text), '\\s+')) END")
-    inner = pack_token_spans_sql("documents", tok, "doc_id",
-                                 budget=512, shards=16)
-    return f"""
-WITH spans AS ({inner})
-SELECT shard, CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(sum(tok_end - tok_start) AS BIGINT) AS n_tokens,
-       CAST(max(seq_last) + 1 AS BIGINT) AS n_seqs,
-       CAST(sum(CASE WHEN n_seqs_spanned > 1 THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_spanning
-FROM spans GROUP BY shard
-"""
-
-
-def q62_token_budget_mixture(spark, sf_dir):
-    """Dataset-mixture primitive (round 4): per-source 'take documents
-    until the token budget' with deterministic portable-hash priority
-    (text.token_budget_sample — two-pass bucketed plan: whole hash-range
-    buckets below each source's boundary are kept windowless, only the
-    boundary bucket runs the exact running-total window).  Census per
-    source: docs kept + tokens kept.
-
-    Value-oracle-exact: the DuckDB twin is the plain per-source window
-    cumsum over the SAME seeded affine hash order — any bucket-boundary
-    or hash-order bug moves a count."""
-    d = _t(spark, sf_dir, "documents")
-    kept = text.token_budget_sample(
-        d, "source", text.token_count(F.col("text")), budgets=600,
-        id_col="doc_id", seed=13, n_buckets=64)
-    return (kept.groupBy("source")
-            .agg(F.count("*").cast("long").alias("n_docs"),
-                 F.sum("n_tokens").alias("n_tokens")))
-
-
-def _q62_sql():
-    from karta_spark.operators.text import token_budget_sample_sql
-    tok = ("CASE WHEN len(trim(text)) = 0 THEN 0 "
-           "ELSE len(regexp_split_to_array(trim(text), '\\s+')) END")
-    inner = token_budget_sample_sql("documents", "source", tok, 600,
-                                    "doc_id", seed=13)
-    return f"""
-WITH kept AS ({inner})
-SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(sum(n_tokens) AS BIGINT) AS n_tokens
-FROM kept GROUP BY source
-"""
-
-
 def q63_jpeg_tiff_census(spark, sf_dir):
     """JPEG-in-TIFF chain census (round 4): synthesize a smooth
     closed-form grid, write it as a TILED compression-7 GeoTIFF (each
@@ -2133,67 +1989,6 @@ def q63_jpeg_tiff_census(spark, sf_dir):
 
 Q63_SQL = """
 SELECT CAST(48 * 64 AS BIGINT) AS n_cells, CAST(48 * 64 AS BIGINT) AS n_ok
-"""
-
-
-def q64_pii_redaction(spark, sf_dir):
-    """PII scrub census (round 4): plant deterministic emails (docs with
-    doc_id%3==0) and phone numbers (%3==1) into the documents text, run
-    text.redact_pii (portable RE2-safe regex chain, pure Catalyst), and
-    census per plant-class: docs, characters removed, docs fully clean
-    after the scrub.
-
-    Value-oracle-exact: DuckDB constructs the identical strings (concat/
-    lpad) and runs the IDENTICAL patterns through regexp_replace, so any
-    pattern/semantics divergence between the engines moves a count."""
-    d = _t(spark, sf_dir, "documents")
-    i3 = F.pmod(F.col("doc_id"), F.lit(3))
-    planted = (
-        F.when(i3 == 0, F.concat(
-            F.col("text"), F.lit(" contact user"),
-            F.col("doc_id").cast("string"), F.lit("@example.com")))
-        .when(i3 == 1, F.concat(
-            F.col("text"), F.lit(" call 555-"),
-            F.lpad(F.pmod(F.col("doc_id"), F.lit(1000)).cast("string"), 3, "0"),
-            F.lit("-"),
-            F.lpad(F.pmod(F.col("doc_id"), F.lit(10000)).cast("string"), 4, "0")))
-        .otherwise(F.col("text")))
-    red = text.redact_pii(planted)
-    still = (red.rlike(text.PII_EMAIL) | red.rlike(text.PII_PHONE)
-             | red.rlike(text.PII_IPV4))
-    return (d.select(i3.cast("long").alias("plant"),
-                     (F.length(planted) - F.length(red)).alias("_rm"),
-                     (~still).cast("long").alias("_clean"))
-            .groupBy("plant")
-            .agg(F.count("*").cast("long").alias("n_docs"),
-                 F.sum("_rm").cast("long").alias("chars_removed"),
-                 F.sum("_clean").alias("n_clean")))
-
-
-def _q64_sql():
-    from karta_spark.operators.text import (
-        PII_EMAIL, PII_IPV4, PII_PHONE, pii_redact_sql)
-    planted = ("""CASE doc_id % 3
-      WHEN 0 THEN text || ' contact user' || CAST(doc_id AS VARCHAR)
-                  || '@example.com'
-      WHEN 1 THEN text || ' call 555-'
-                  || lpad(CAST(doc_id % 1000 AS VARCHAR), 3, '0') || '-'
-                  || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')
-      ELSE text END""")
-    red = pii_redact_sql("planted")
-    still = (f"(regexp_matches(red, '{PII_EMAIL}') OR "
-             f"regexp_matches(red, '{PII_PHONE}') OR "
-             f"regexp_matches(red, '{PII_IPV4}'))")
-    return f"""
-WITH p AS (
-  SELECT doc_id % 3 AS plant, {planted} AS planted FROM documents
-), r AS (
-  SELECT plant, planted, {red} AS red FROM p
-)
-SELECT CAST(plant AS BIGINT) AS plant, CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(sum(length(planted) - length(red)) AS BIGINT) AS chars_removed,
-       CAST(sum(CASE WHEN NOT {still} THEN 1 ELSE 0 END) AS BIGINT) AS n_clean
-FROM r GROUP BY plant
 """
 
 
@@ -2240,27 +2035,6 @@ SELECT c_custkey, round(px, 4) AS sp_x, round(py, 4) AS sp_y,
        (abs({lo} - x) < 1e-7 AND abs({la} - y) < 1e-7) AS rt_ok
 FROM proj
 """
-
-
-def q66_repeated_spans(spark, sf_dir):
-    """Exact repeated-substring spans (round 5): per document, positions
-    and distinct characters covered by 20-grams that recur in >= 2
-    distinct documents — the substring-level dedup signal (clip/drop
-    duplicated spans in training corpora).  Gram extraction map-side,
-    doc-frequency one hash agg, flag-back an equi-join, coverage a
-    per-doc lag window; the hashed=True variant (xxhash64 keys) is the
-    100 TB plan, the oracle runs the unhashed twin."""
-    d = _t(spark, sf_dir, "documents")
-    # hashed=False: the library default (xxhash64 keys, the 100 TB
-    # plan) gives identical results, but the gate runs the raw-gram
-    # plan so the DuckDB twin is textually identical
-    return text.repeated_spans(d, "text", "doc_id", L=20, min_docs=2,
-                               hashed=False)
-
-
-def _q66_sql():
-    return text.repeated_spans_sql("documents", "text", "doc_id",
-                                   L=20, min_docs=2)
 
 
 def q67_modis_tiles(spark, sf_dir):
@@ -2334,25 +2108,6 @@ SELECT c_custkey, round(px, 4) AS wm_x, round(py, 4) AS wm_y,
        (abs({lo} - x) < 1e-7 AND abs({la} - y) < 1e-7) AS rt_ok
 FROM proj
 """
-
-
-def q69_clip_repeated_spans(spark, sf_dir):
-    """Exact-substring dedup CLIP output (round 6): every document with
-    its cross-document repeated 20-gram spans physically removed —
-    (id, clean_text, removed_chars), clean docs byte-identical.  The
-    Spark plan merges flagged positions into [start, end] intervals
-    (per-doc lag window + running group sum) and cuts them with one
-    Catalyst aggregate fold; the DuckDB twin is an INDEPENDENT
-    per-character covered-set anti-join + ordered string_agg, so the
-    value hash crosses two different formulations."""
-    d = _t(spark, sf_dir, "documents")
-    return text.clip_repeated_spans(d, "text", "doc_id", L=20,
-                                    min_docs=2, hashed=False)
-
-
-def _q69_sql():
-    return text.clip_repeated_spans_sql("documents", "text", "doc_id",
-                                        L=20, min_docs=2)
 
 
 def q70_aeqd_range_rings(spark, sf_dir):
@@ -2626,76 +2381,6 @@ FROM proj
 """
 
 
-def q76_url_canonical_dedup(spark, sf_dir):
-    """URL canonicalization dedup census (round 6): plant four
-    deterministic variants of each base URL over the documents table
-    (scheme/host case, default :443 port, trailing + duplicate
-    slashes, utm_*/fbclid tracking params, fragments), canonicalize
-    with text.canonical_url (pure Catalyst: regexp components +
-    filter/array_sort HOFs — the standard web-corpus dedup key), and
-    verify EVERY row lands on its expected base plus the dup-group
-    census.  DuckDB runs the step-identical SQL chain
-    (canonical_url_sql), so any normalization divergence between
-    engines moves n_match or n_canon and fails the hash gate."""
-    from karta_spark.operators import text as T
-    d = _t(spark, sf_dir, "documents")
-    g = (F.col("doc_id") / 4).cast("long")
-    v = F.pmod(F.col("doc_id"), F.lit(4))
-    gs = g.cast("string")
-    url = (
-        F.when(v == 0, F.concat(F.lit("https://site"), gs,
-                                F.lit(".example.com/p/q?id="), gs))
-        .when(v == 1, F.concat(F.lit("HTTPS://SITE"), gs,
-                               F.lit(".EXAMPLE.COM:443/p/q/?id="), gs))
-        .when(v == 2, F.concat(F.lit("https://site"), gs,
-                               F.lit(".example.com/p//q?utm_source=feed&id="),
-                               gs))
-        .otherwise(F.concat(F.lit("https://site"), gs,
-                            F.lit(".example.com/p/q?id="), gs,
-                            F.lit("&utm_campaign=x#top"))))
-    expected = F.concat(F.lit("https://site"), gs,
-                        F.lit(".example.com/p/q?id="), gs)
-    canon = T.canonical_url(url)
-    return (d.select(canon.alias("canon"), expected.alias("want"))
-            .agg(F.count("*").cast("long").alias("n_urls"),
-                 F.countDistinct("canon").cast("long").alias("n_canon"),
-                 F.sum((F.col("canon") == F.col("want")).cast("long"))
-                 .alias("n_match")))
-
-
-def _q76_sql():
-    from karta_spark.operators.text import canonical_url_sql
-    return f"""
-WITH planted AS (
-  SELECT doc_id // 4 AS g, doc_id % 4 AS v,
-         CASE doc_id % 4
-           WHEN 0 THEN 'https://site' || CAST(doc_id // 4 AS VARCHAR)
-                       || '.example.com/p/q?id='
-                       || CAST(doc_id // 4 AS VARCHAR)
-           WHEN 1 THEN 'HTTPS://SITE' || CAST(doc_id // 4 AS VARCHAR)
-                       || '.EXAMPLE.COM:443/p/q/?id='
-                       || CAST(doc_id // 4 AS VARCHAR)
-           WHEN 2 THEN 'https://site' || CAST(doc_id // 4 AS VARCHAR)
-                       || '.example.com/p//q?utm_source=feed&id='
-                       || CAST(doc_id // 4 AS VARCHAR)
-           ELSE 'https://site' || CAST(doc_id // 4 AS VARCHAR)
-                || '.example.com/p/q?id=' || CAST(doc_id // 4 AS VARCHAR)
-                || '&utm_campaign=x#top'
-         END AS url,
-         'https://site' || CAST(doc_id // 4 AS VARCHAR)
-           || '.example.com/p/q?id=' || CAST(doc_id // 4 AS VARCHAR)
-           AS want
-  FROM documents
-)
-SELECT CAST(count(*) AS BIGINT) AS n_urls,
-       CAST(count(DISTINCT {canonical_url_sql('url')}) AS BIGINT)
-         AS n_canon,
-       CAST(sum(CASE WHEN {canonical_url_sql('url')} = want
-                     THEN 1 ELSE 0 END) AS BIGINT) AS n_match
-FROM planted
-"""
-
-
 def q77_png_variants_census(spark, sf_dir):
     """Full-PNG IHDR-matrix census (round 6): per documents row,
     synthesize a closed-form image in one of six real-world PNG shapes
@@ -2832,66 +2517,6 @@ SELECT CAST(fs AS BIGINT) AS frame_sampled,
                      + (71*ki + 2) % 256 END) AS BIGINT) AS sum_rgb,
        CAST(count(*) AS BIGINT) AS n_px_match
 FROM val GROUP BY fs
-"""
-
-
-def q79_html_extraction(spark, sf_dir):
-    """HTML -> text extraction (round 6): wrap every documents row in a
-    deterministic HTML page (title, style + script blocks with tag
-    traps inside, heading, body paragraph, href link, comment, named
-    entities), run text.html_to_text / html_title / extract_links (pure
-    Catalyst regexp chain, JVM-side), and return the CLEANED TEXT
-    ITSELF plus title and link census per row.  The first step of every
-    crawl-corpus pipeline (WARC -> WET production); the reference has
-    no text layer (beyond-reference op).
-
-    Value-oracle-exact: DuckDB builds the identical page and runs the
-    step-identical RE2 chain (html_to_text_sql), so the full cleaned
-    string is hash-compared row by row — any tag-strip, entity,
-    block-newline, or whitespace-normalization divergence between
-    engines fails the gate."""
-    from karta_spark.operators.text import (
-        extract_links, html_title, html_to_text,
-    )
-    d = _t(spark, sf_dir, "documents")
-    did = F.col("doc_id").cast("string")
-    html = F.concat(
-        F.lit("<html><head><title>Doc "), did,
-        F.lit("</title><style>p{margin:0}</style>"
-              "<script>var x=\"<b>trap</b>\";</script></head>"
-              "<body><h1>Doc "), did,
-        F.lit("</h1><p>"), F.col("text"),
-        F.lit("</p><a href=\"https://ex.org/"), did,
-        F.lit("?x=1\">see</a><br><!-- hidden --><div>tail&nbsp;"), did,
-        F.lit(" &amp; &lt;end&gt;</div></body></html>"))
-    links = extract_links(html)
-    return (d.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        html_to_text(html).alias("clean"),
-        html_title(html).alias("title"),
-        F.size(links).cast("long").alias("n_links"),
-        F.element_at(links, 1).alias("first_link"))
-        .orderBy("doc_id"))
-
-
-def _q79_sql():
-    from karta_spark.operators.text import (
-        extract_links_sql, html_title_sql, html_to_text_sql,
-    )
-    html = """('<html><head><title>Doc ' || CAST(doc_id AS VARCHAR)
- || '</title><style>p{margin:0}</style>'
- || '<script>var x="<b>trap</b>";</script></head><body><h1>Doc '
- || CAST(doc_id AS VARCHAR) || '</h1><p>' || text
- || '</p><a href="https://ex.org/' || CAST(doc_id AS VARCHAR)
- || '?x=1">see</a><br><!-- hidden --><div>tail&nbsp;'
- || CAST(doc_id AS VARCHAR) || ' &amp; &lt;end&gt;</div></body></html>')"""
-    return f"""
-SELECT CAST(doc_id AS BIGINT) AS doc_id,
-       {html_to_text_sql(html)} AS clean,
-       {html_title_sql(html)} AS title,
-       CAST(len({extract_links_sql(html)}) AS BIGINT) AS n_links,
-       list_extract({extract_links_sql(html)}, 1) AS first_link
-FROM documents ORDER BY doc_id
 """
 
 
@@ -3099,58 +2724,6 @@ SELECT win, CAST(count(*) AS BIGINT) AS n_cells,
        CAST(min(v) AS BIGINT) AS min_v,
        CAST(max(v) AS BIGINT) AS max_v
 FROM w GROUP BY win
-"""
-
-
-def q83_line_dedup(spark, sf_dir):
-    """C4-rule line-level corpus dedup (round 6): plant boilerplate
-    around every documents row — a subscribe banner and a CMS footer on
-    every page (corpus df = N), plus a 'copyright site<k>' line with
-    k = doc_id % 130 so ids 110..129 sit exactly AT the max_df=3
-    threshold (kept) while the rest exceed it (removed) — then run
-    text.dedup_lines (posexplode -> ONE corpus line-frequency hash agg
-    -> equi-join back -> per-doc sort_array reassembly; hashed=True
-    ships 8-byte xxhash64 shuffle keys, the 100 TB setting) and return
-    the CLEANED TEXT ITSELF per row.
-
-    Value-oracle-exact: DuckDB runs the identical algebra with raw-line
-    keys (dedup_lines_sql), so the full reassembled strings hash-compare
-    row by row — an off-by-one at the df threshold, a line-order slip
-    in reassembly, or an exempt-blank-line bug fails the gate."""
-    from karta_spark.operators.text import dedup_lines
-    d = _t(spark, sf_dir, "documents")
-    nl = F.lit("\n")
-    planted = d.select(
-        F.col("doc_id"),
-        F.concat(F.lit("SUBSCRIBE TO OUR NEWSLETTER"), nl,
-                 F.col("text"), nl,
-                 F.lit("copyright site"),
-                 F.pmod(F.col("doc_id"), F.lit(130)).cast("string"), nl,
-                 F.lit("Powered by ExampleCMS")).alias("text"))
-    return (dedup_lines(planted, max_df=3, hashed=True)
-            .orderBy("doc_id")
-            .select(F.col("doc_id").cast("long").alias("doc_id"),
-                    "text",
-                    F.col("n_lines_kept").cast("long").alias("n_kept"),
-                    F.col("n_lines_removed").cast("long")
-                    .alias("n_removed")))
-
-
-def _q83_sql():
-    from karta_spark.operators.text import dedup_lines_sql
-    inner = dedup_lines_sql("planted", max_df=3)
-    return f"""
-WITH planted AS (
-  SELECT doc_id,
-         'SUBSCRIBE TO OUR NEWSLETTER' || chr(10) || text || chr(10)
-         || 'copyright site' || CAST(doc_id % 130 AS VARCHAR) || chr(10)
-         || 'Powered by ExampleCMS' AS text
-  FROM documents
-), dl AS ({inner})
-SELECT CAST(doc_id AS BIGINT) AS doc_id, text,
-       CAST(n_lines_kept AS BIGINT) AS n_kept,
-       CAST(n_lines_removed AS BIGINT) AS n_removed
-FROM dl ORDER BY doc_id
 """
 
 
@@ -3503,54 +3076,6 @@ FROM per GROUP BY 1
 """
 
 
-def q91_c4_clean(spark, sf_dir):
-    """C4 line/page cleaning rules (round 6, Raffel et al. 2020 §2.2):
-    plant lines with known verdicts around every documents row — a
-    2-word fragment (dropped: < 3 words), a proper planted sentence
-    (kept), a 'lorem ipsum' line and a curly-brace CSS line (both
-    blocklisted) — run text.c4_clean (terminal-punctuation + min-words
-    + blocklist line filter, min-sentences page verdict; a pure
-    Catalyst PROJECTION, no shuffle), and return the cleaned text
-    itself plus all rule counters per row.
-
-    Value-oracle-exact: DuckDB applies the identical RE2-safe rules
-    (c4_clean_sql), so the kept-line strings hash-compare row by row."""
-    from karta_spark.operators.text import c4_clean
-    d = _t(spark, sf_dir, "documents")
-    planted = d.select(
-        F.col("doc_id"),
-        F.concat(F.col("text"),
-                 F.lit("\nBuy now\nThis planted sentence stays in doc "),
-                 F.col("doc_id").cast("string"),
-                 F.lit(".\nplenty of lorem ipsum filler text here.\n"
-                       ".menu { display: none }")).alias("text"))
-    return (c4_clean(planted)
-            .orderBy("doc_id")
-            .select(F.col("doc_id").cast("long").alias("doc_id"),
-                    "text",
-                    "n_lines_kept", "n_lines_dropped", "n_sentences",
-                    "kept"))
-
-
-def _q91_sql():
-    from karta_spark.operators.text import c4_clean_sql
-    inner = c4_clean_sql("planted")
-    return f"""
-WITH planted AS (
-  SELECT doc_id,
-         text || chr(10) || 'Buy now' || chr(10)
-         || 'This planted sentence stays in doc '
-         || CAST(doc_id AS VARCHAR) || '.' || chr(10)
-         || 'plenty of lorem ipsum filler text here.' || chr(10)
-         || '.menu {{ display: none }}' AS text
-  FROM documents
-), cleaned AS ({inner})
-SELECT CAST(doc_id AS BIGINT) AS doc_id, text,
-       n_lines_kept, n_lines_dropped, n_sentences, kept
-FROM cleaned ORDER BY doc_id
-"""
-
-
 def q92_multipage_document_census(spark, sf_dir):
     """Multi-page scanned-document census (round 6): write a 4-page
     CCITT-G4 document (chained IFDs, the layout fax archives and
@@ -3632,37 +3157,6 @@ SELECT CAST(p AS BIGINT) AS page,
        CAST(count(*) AS BIGINT) AS n_px
 FROM per GROUP BY p
 """
-
-
-def q93_gopher_rules(spark, sf_dir):
-    """Gopher quality-rule audit (round 6, Rae et al. 2021 table A1):
-    evaluate all seven published rules per documents row — word-count
-    bounds, mean word length, symbol-to-word ratio, bullet-line and
-    ellipsis-line fractions, alphabetic-word fraction, stop-word
-    presence — as named booleans plus the AND verdict
-    (text.gopher_quality, a pure Catalyst projection; completes the
-    canonical published-filter trio beside C4's line rules q91 and the
-    Gopher repetition rule q53).
-
-    Value-oracle-exact: DuckDB evaluates the identical RE2-safe
-    algebra per row (gopher_quality_sql); all 500x8 booleans are
-    hash-compared."""
-    from karta_spark.operators.text import gopher_quality
-    d = _t(spark, sf_dir, "documents")
-    rules = gopher_quality(F.col("text"), min_words=30)
-    return (d.select(F.col("doc_id").cast("long").alias("doc_id"),
-                     *[v.alias(k if k != "pass" else "pass_all")
-                       for k, v in rules.items()])
-            .orderBy("doc_id"))
-
-
-def _q93_sql():
-    from karta_spark.operators.text import gopher_quality_sql
-    rules = gopher_quality_sql("text", min_words=30)
-    cols = ", ".join(f"{v} AS {(k if k != 'pass' else 'pass_all')}"
-                     for k, v in rules.items())
-    return (f"SELECT CAST(doc_id AS BIGINT) AS doc_id, {cols} "
-            f"FROM documents ORDER BY doc_id")
 
 
 def q94_vp8_lossy_census(spark, sf_dir):
@@ -4519,94 +4013,6 @@ FROM s
 """
 
 
-def q107_bloom_decontaminate(spark, sf_dir):
-    """Bloom-filter benchmark decontamination (round 7): the 100 TB
-    shape of q51 — when the benchmark gram set outgrows a broadcast
-    semi-join, a CONSTANT-size Bloom bitset (8M bits here) probes
-    every corpus gram Arrow-batched, then the exact gram join verifies
-    ONLY the candidate docs (operators/text.py
-    bloom_contaminated_ids).  Zero false negatives by construction,
-    false positives removed by the verify phase, so the output is
-    bit-identical to the exact path at any scale.
-
-    Value-oracle-exact: DuckDB recomputes the exact gram-overlap
-    answer (the q51 shape, benchmark = doc_id % 13); a Bloom build
-    (bit_or word aggregation), probe kernel, or verify slip flips a
-    contamination flag and fails the hash gate."""
-    d = _t(spark, sf_dir, "documents")
-    bench = d.where(F.col("doc_id") % 13 == 0)
-    corpus = d.where(F.col("doc_id") % 13 != 0)
-    bad = text.bloom_contaminated_ids(corpus, bench, "text", "doc_id",
-                                      n=5, m_bits=1 << 23, k=5)
-    return (corpus.join(bad.withColumnRenamed("id", "doc_id")
-                        .withColumn("contaminated", F.lit(True)),
-                        "doc_id", "left")
-            .select("doc_id",
-                    F.coalesce("contaminated",
-                               F.lit(False)).alias("contaminated")))
-
-
-Q107_SQL = r"""
-WITH toks AS (
-  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t FROM documents
-), doc_g AS (
-  SELECT DISTINCT doc_id, array_to_string(t[CAST(i AS INT):CAST(i+4 AS INT)], ' ') AS g
-  FROM toks, UNNEST(range(1, len(t) - 3)) AS u(i)
-  WHERE doc_id % 13 <> 0 AND len(t) >= 5
-), bench_g AS (
-  SELECT DISTINCT array_to_string(t[CAST(i AS INT):CAST(i+4 AS INT)], ' ') AS g
-  FROM toks, UNNEST(range(1, len(t) - 3)) AS u(i)
-  WHERE doc_id % 13 = 0 AND len(t) >= 5
-), bad AS (
-  SELECT DISTINCT doc_id FROM doc_g WHERE g IN (SELECT g FROM bench_g)
-)
-SELECT d.doc_id, (bad.doc_id IS NOT NULL) AS contaminated
-FROM documents d LEFT JOIN bad ON d.doc_id = bad.doc_id
-WHERE d.doc_id % 13 <> 0
-"""
-
-
-def q109_bpe_roundtrip(spark, sf_dir):
-    """BPE tokenizer roundtrip census (round 7): train 60 merges over
-    the documents corpus (operators/bpe.py — word counting is the one
-    distributed pass; the merge loop runs on the bounded distinct-word
-    table, the production-trainer split; deterministic under any
-    partitioning by count-desc/lexicographic tie-break), encode every
-    document Arrow-batched, detokenize in PURE CATALYST
-    (array_join + the </w> marker), and verify lossless reconstruction
-    per document.
-
-    Value-oracle-exact: the decoded text must equal the whitespace-
-    normalized original, so DuckDB regenerates n_chars_decoded with
-    regexp_replace and pins roundtrip_ok/tokens_ge_words TRUE — any
-    merge-table, encoder, or marker slip breaks a row."""
-    from karta_spark.operators import bpe
-    d = _t(spark, sf_dir, "documents")
-    merges = bpe.train_bpe(d, "text", n_merges=60)
-    enc = bpe.encode_texts(d, "text", "doc_id", merges)
-    dec = F.trim(F.regexp_replace(F.array_join("tokens", ""),
-                                  "</w>", " "))
-    norm = F.trim(F.regexp_replace(F.trim(F.col("text")), r"\s+", " "))
-    n_words = F.size(F.split(F.trim(F.col("text")), r"\s+"))
-    return (enc.withColumnRenamed("id", "doc_id")
-            .join(d.select("doc_id", "text"), "doc_id")
-            .select("doc_id",
-                    F.length(dec).cast("long").alias("n_chars_decoded"),
-                    (dec == norm).alias("roundtrip_ok"),
-                    (F.col("n_tokens") >= n_words.cast("long"))
-                    .alias("tokens_ge_words")))
-
-
-Q109_SQL = r"""
-SELECT doc_id,
-       CAST(length(regexp_replace(trim(text), '\s+', ' ', 'g'))
-            AS BIGINT) AS n_chars_decoded,
-       TRUE AS roundtrip_ok,
-       TRUE AS tokens_ge_words
-FROM documents
-"""
-
-
 def q110_image_quality_census(spark, sf_dir):
     """Image quality-filter statistics (round 7): the LAION-style
     corpus gate for image training data — brightness (mean luma),
@@ -4683,60 +4089,6 @@ FROM mom m JOIN lmom lm ON lm.i = m.i JOIN ent e ON e.i = m.i
 """
 
 
-def q113_main_content_extraction(spark, sf_dir):
-    """Boilerplate removal census (round 7): the crawl-quality step
-    between raw HTML→text (q79) and the C4/Gopher filters — block
-    text-density extraction (operators/text.py main_content, the
-    jusText/readability heuristic family: split on block tags, drop
-    short and link-dense blocks).  40 synthetic pages with closed-form
-    article paragraphs wrapped in nav/cookie-banner/footer boilerplate
-    are extracted DISTRIBUTED; per page the kept-block count and
-    content length must equal the designed article exactly.
-
-    Value-oracle-exact: paragraph text lengths are closed form, so
-    DuckDB regenerates content_chars — a block-split, link-density,
-    entity, or whitespace slip moves a length and fails the gate."""
-    from karta_spark.operators.text import main_content
-    rows = []
-    for d in range(40):
-        paras = []
-        for p in range((d % 4) + 1):
-            body = "word " * (20 + (d * 3 + p) % 7)
-            paras.append(f"<p>doc {d} paragraph {p} {body}</p>")
-        html = (
-            "<html><head><title>T</title><style>b{x}</style>"
-            "<script>var n = 1;</script></head><body>"
-            '<nav><a href="/">Home</a> <a href="/a">About</a> '
-            '<a href="/c">Contact</a></nav>'
-            '<div class="cookie">Accept cookies</div>'
-            "<article>" + "".join(paras) + "</article>"
-            '<footer><a href="/tos">Terms</a> | '
-            '<a href="/priv">Privacy</a></footer></body></html>')
-        rows.append((d, html))
-    df = spark.createDataFrame(rows, "doc_id long, html string")
-    out = main_content(df, "html", "doc_id")
-    return out.select(F.col("id").alias("doc_id"),
-                      F.col("n_blocks_kept").cast("long")
-                      .alias("n_blocks_kept"),
-                      F.length("content").cast("long")
-                      .alias("content_chars"))
-
-
-Q113_SQL = """
-WITH paras AS (
-  SELECT d, p,
-         length('doc ' || d || ' paragraph ' || p || ' ')
-           + 5 * (20 + (d*3 + p) % 7) - 1 AS plen
-  FROM range(40) t(d), range(4) r(p)
-  WHERE p < (d % 4) + 1
-)
-SELECT CAST(d AS BIGINT) AS doc_id,
-       CAST(count(*) AS BIGINT) AS n_blocks_kept,
-       CAST(sum(plen) + count(*) - 1 AS BIGINT) AS content_chars
-FROM paras GROUP BY d
-"""
-
-
 def q114_tile_render_census(spark, sf_dir):
     """Tile-pyramid rendering census (round 7): the SERVING end of the
     tiling engine — a point table rendered into slippy-map PNG heatmap
@@ -4807,68 +4159,6 @@ SELECT CAST(2 AS INT) AS z, tx, ty,
        CAST(max(cnt) AS BIGINT) AS max_count,
        TRUE AS png_ok
 FROM lit GROUP BY tx, ty
-"""
-
-
-_Q115_SNIPPETS = [
-    ("def main(argv):\n    import sys\n    return 0\n", "python"),
-    ("#!/usr/bin/env python3\nimport os\nprint(os.sep)\n", "python"),
-    ("const x = 1;\nconst f = (a) => { return a; };\n", "javascript"),
-    ("package com.example.app;\npublic class Main { public static "
-     "void main(String[] a) { System.out.println(1); } }", "java"),
-    ("#include <stdio.h>\nint main(void) { return 0; }\n", "c"),
-    ("package main\nfunc Run() { x := 1; _ = x }\n", "go"),
-    ("use std::io;\nfn main() { let mut x = 1; }\n", "rust"),
-    ("SELECT a, b FROM t WHERE x > 1", "sql"),
-    ("#!/bin/bash\nexport FOO=1\necho hi\n", "shell"),
-    ("<!DOCTYPE html><html><body><p>x</p></body></html>", "html"),
-    ("The quick brown fox jumps over the lazy dog. It was bright.",
-     "prose"),
-    ("we discussed the function of the committee and its import",
-     "prose"),
-]
-
-
-def q115_code_language_routing(spark, sf_dir):
-    """Code-vs-prose corpus routing (round 7): training pipelines
-    split code from natural language before choosing tokenizers and
-    quality filters; operators/text.py code_language classifies by
-    per-language signature-regex hit counts — PURE CATALYST (zero
-    shuffle at any scale), with an RE2-safe chain the DuckDB twin
-    (code_language_sql) runs verbatim.
-
-    Value-oracle-exact: 120 rows cycle 12 designed snippets (9
-    languages + 2 prose foils using code-ish words); BOTH engines
-    classify the regenerated literal strings, so any regex or
-    threshold divergence flips a lang and fails the hash gate."""
-    from karta_spark.operators.text import code_language
-    rows = [(i, _Q115_SNIPPETS[i % 12][0] + f"\nzz{i}")
-            for i in range(120)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    return (df.select("doc_id",
-                      code_language(F.col("text")).alias("lang"))
-            .groupBy("lang")
-            .agg(F.count("*").cast("long").alias("n_docs"),
-                 F.min("doc_id").alias("first_doc")))
-
-
-def _q115_sql():
-    from karta_spark.operators.text import code_language_sql
-    branches = " ".join(
-        "WHEN {} THEN '{}'".format(k, s.replace("'", "''")
-                                   .replace("\n", "' || chr(10) || '"))
-        for k, (s, _) in enumerate(_Q115_SNIPPETS))
-    return f"""
-WITH docs AS (
-  SELECT CAST(i AS BIGINT) AS doc_id,
-         (CASE i % 12 {branches} END) || chr(10) || 'zz' || i AS text
-  FROM range(120) t(i)
-), langs AS (
-  SELECT doc_id, {code_language_sql('text')} AS lang FROM docs
-)
-SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(min(doc_id) AS BIGINT) AS first_doc
-FROM langs GROUP BY lang
 """
 
 
@@ -5052,113 +4342,6 @@ FROM (VALUES (10), (30), (50), (70), (85), (95), (100)) t(q)
 """
 
 
-def q121_mojibake_repair(spark, sf_dir):
-    """Mojibake repair census (round 7): UTF-8-read-as-latin-1 damage
-    ('café' -> 'cafÃ©') is the most common encoding corruption in
-    crawled corpora; operators/text.py fix_mojibake repairs it by the
-    ftfy-style roundtrip criterion (re-encode cp1252/latin-1, accept
-    only valid-UTF-8 decodes), plus NFC and control stripping.  Sixty
-    closed-form accented strings are BROKEN Spark-side (encode utf-8 /
-    decode latin-1 — half of them twice) and repaired distributed; the
-    output strings hash-compare against DuckDB's regenerated CLEAN
-    text.
-
-    Any repair-criterion, double-pass, or normalization slip changes a
-    string and fails the hash gate."""
-    import pandas as pd
-    from karta_spark.operators.text import fix_mojibake_texts
-
-    def synth(batches):
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"]:
-                i = int(i)
-                clean = (f"café {i} número – äöü € "
-                         + "x" * (i % 7))
-                broken = clean.encode("utf-8").decode("latin-1")
-                if i % 2:
-                    broken = broken.encode("utf-8").decode("latin-1")
-                rows.append((i, broken))
-            yield pd.DataFrame(rows, columns=["doc_id", "text"])
-
-    docs = spark.range(60).repartition(4).mapInPandas(
-        synth, "doc_id long, text string")
-    out = fix_mojibake_texts(docs, "text", "doc_id")
-    return out.select(F.col("id").alias("doc_id"), "text", "changed")
-
-
-Q121_SQL = """
-SELECT CAST(i AS BIGINT) AS doc_id,
-       'café ' || i || ' número – äöü € ' || repeat('x', i % 7) AS text,
-       TRUE AS changed
-FROM range(60) t(i)
-"""
-
-
-def q122_blocklist_filter(spark, sf_dir):
-    """Aho–Corasick blocklist filter (round 7): the C4-style badwords
-    / blocked-URL step at the pattern counts where a regex union dies
-    — the broadcast automaton scans each document ONCE regardless of
-    pattern count (operators/text.py AhoCorasick, verified against
-    brute force by a 300-case fuzz test).  Blocked terms are planted
-    into the documents table by a closed form; matching runs over the
-    automaton, the oracle re-derives every hit with substring
-    contains() on the identically-regenerated text.
-
-    Value-oracle-exact: per-doc hit count, hit-id sum, and blocked
-    flag — a goto/failure-link or output-merge slip changes a hit set
-    and fails the hash gate."""
-    from karta_spark.operators.text import blocklist_hits
-    pats = ["blockedterm0", "blockedterm1", "blockedterm2",
-            "zzneverzz"]
-    d = _t(spark, sf_dir, "documents")
-    planted = d.select(
-        "doc_id",
-        F.concat(
-            F.col("text"),
-            F.when(F.col("doc_id") % 7 == 0,
-                   F.concat(F.lit(" blockedterm"),
-                            (F.col("doc_id") % 3).cast("string")))
-            .otherwise(F.lit("")),
-            F.when(F.col("doc_id") % 11 == 0,
-                   F.lit(" BLOCKEDTERM1")).otherwise(F.lit("")))
-        .alias("text"))
-    out = blocklist_hits(planted, "text", "doc_id", pats)
-    return out.select(
-        F.col("id").alias("doc_id"), F.col("n_hits").cast("long")
-        .alias("n_hits"),
-        F.coalesce(F.aggregate("hit_ids", F.lit(0).cast("long"),
-                               lambda a, x: a + x.cast("long")),
-                   F.lit(0).cast("long")).alias("hit_id_sum"),
-        "blocked")
-
-
-Q122_SQL = """
-WITH planted AS (
-  SELECT doc_id,
-         lower(text
-               || CASE WHEN doc_id % 7 = 0
-                       THEN ' blockedterm' || (doc_id % 3)
-                       ELSE '' END
-               || CASE WHEN doc_id % 11 = 0
-                       THEN ' BLOCKEDTERM1' ELSE '' END) AS t
-  FROM documents
-), hits AS (
-  SELECT doc_id,
-         [k FOR k IN [0, 1, 2, 3]
-            IF contains(t, CASE k WHEN 0 THEN 'blockedterm0'
-                                  WHEN 1 THEN 'blockedterm1'
-                                  WHEN 2 THEN 'blockedterm2'
-                                  ELSE 'zzneverzz' END)] AS ids
-  FROM planted
-)
-SELECT doc_id, CAST(len(ids) AS BIGINT) AS n_hits,
-       CAST(coalesce(list_sum(ids), 0) AS BIGINT) AS hit_id_sum,
-       len(ids) > 0 AS blocked
-FROM hits
-"""
-
-
 def q123_semantic_dedup(spark, sf_dir):
     """SemDeDup semantic deduplication (round 7, Abbas et al. 2023):
     cluster the embeddings table on the exact-integer static codebook
@@ -5209,110 +4392,6 @@ WITH v AS (
 SELECT v.id AS vec_id, CAST(v.cluster AS BIGINT) AS cluster,
        (dup.id IS NULL) AS kept
 FROM v LEFT JOIN dup ON v.id = dup.id
-"""
-
-
-def q124_lm_perplexity_filter(spark, sf_dir):
-    """Char-trigram LM perplexity filtering (round 7): the KenLM-style
-    quality signal — train an add-1 trigram model on the reference
-    slice (doc_id % 17 == 0, the q51 benchmark convention) in one
-    distributed pass, score every other document's mean NLL via a
-    broadcast join.  Log-probs are INTEGER MICRO-NATS, so per-doc
-    sums are exact and partition-order-free (no float-summation
-    nondeterminism — the discipline that makes this oracle-exact).
-
-    DuckDB retrains and rescores with the identical algebra: any
-    smoothing, normalization, gram-window, or unseen-bucket slip moves
-    an nll and fails the hash gate."""
-    d = _t(spark, sf_dir, "documents")
-    ref = d.where(F.col("doc_id") % 17 == 0)
-    rest = d.where(F.col("doc_id") % 17 != 0)
-    model, default = text.train_char_lm(ref, "text", n=3, k=1.0)
-    out = text.lm_nll(rest, "text", "doc_id", model, default, n=3)
-    return out.select(F.col("id").alias("doc_id"), "n_grams", "nll")
-
-
-Q124_SQL = r"""
-WITH norm AS (
-  SELECT doc_id,
-         regexp_replace(lower(trim(text)), '\s+', ' ', 'g') AS t
-  FROM documents
-), ref_g AS (
-  SELECT substr(t, CAST(i AS INT), 3) AS gram
-  FROM norm, UNNEST(range(1, length(t) - 1)) u(i)
-  WHERE doc_id % 17 = 0
-), counts AS (
-  SELECT gram, count(*) AS c FROM ref_g GROUP BY gram
-), tot AS (
-  SELECT sum(c) AS total, count(*) AS v FROM counts
-), model AS (
-  SELECT gram,
-         CAST(round(ln((c + 1.0) / (total + 1.0 * (v + 1))) * 1e6, 0)
-              AS BIGINT) AS logp_micro
-  FROM counts, tot
-), dflt AS (
-  SELECT CAST(round(ln(1.0 / (total + 1.0 * (v + 1))) * 1e6, 0)
-              AS BIGINT) AS d
-  FROM tot
-), doc_g AS (
-  SELECT doc_id, substr(t, CAST(i AS INT), 3) AS gram
-  FROM norm, UNNEST(range(1, length(t) - 1)) u(i)
-  WHERE doc_id % 17 <> 0
-), scored AS (
-  SELECT g.doc_id, coalesce(m.logp_micro, (SELECT d FROM dflt)) AS lp
-  FROM doc_g g LEFT JOIN model m ON g.gram = m.gram
-)
-SELECT doc_id, CAST(count(*) AS BIGINT) AS n_grams,
-       round(CAST(-sum(lp) AS DOUBLE) / count(*) / 1e6, 6) AS nll
-FROM scored GROUP BY doc_id
-"""
-
-
-def q126_sentence_segmentation(spark, sf_dir):
-    """Sentence segmentation census (round 7): the chunking step
-    before sequence packing (q61) — rule-based splitting with
-    abbreviation / initial / decimal protection (operators/text.py
-    split_sentences; fixed rules so replicas chunk identically).
-    Fifty documents built from closed-form sentences, WITH planted
-    'Dr.' abbreviations and decimals that must NOT split, segmented
-    distributed and censused per doc.
-
-    Value-oracle-exact: the designed sentence count and per-sentence
-    lengths are closed form, so DuckDB regenerates both — a boundary,
-    abbreviation, or decimal-guard slip changes a count and fails."""
-    from karta_spark.operators.text import sentence_split
-    rows = []
-    for d in range(50):
-        sents = []
-        for k in range((d % 4) + 2):
-            sents.append(f"Sentence {k} of doc {d} has "
-                         + "w" * ((d * 3 + k * 5) % 9 + 1)
-                         + (" by Dr. Smith near 3.14 yes." if k % 2
-                            else " plain words."))
-        rows.append((d, " ".join(sents)))
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = sentence_split(df, "text", "doc_id")
-    return (out.groupBy(F.col("id").alias("doc_id"))
-            .agg(F.count("*").cast("long").alias("n_sentences"),
-                 F.sum(F.col("n_chars").cast("long"))
-                 .alias("total_chars")))
-
-
-Q126_SQL = """
-WITH s AS (
-  SELECT d, k,
-         length('Sentence ' || k || ' of doc ' || d || ' has ')
-           + (d*3 + k*5) % 9 + 1
-           + length(CASE WHEN k % 2 = 1
-                         THEN ' by Dr. Smith near 3.14 yes.'
-                         ELSE ' plain words.' END) AS slen
-  FROM range(50) t(d), range(5) r(k)
-  WHERE k < (d % 4) + 2
-)
-SELECT CAST(d AS BIGINT) AS doc_id,
-       CAST(count(*) AS BIGINT) AS n_sentences,
-       CAST(sum(slen) AS BIGINT) AS total_chars
-FROM s GROUP BY d
 """
 
 
@@ -5511,9 +4590,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q48_geodesic_area": q48_geodesic_area,
         "q49_ivf_static": q49_ivf_static,
         "q50_pip_many_polys": q50_pip_many_polys,
-        "q51_decontaminate": q51_decontaminate,
         "q52_cluster_representatives": q52_cluster_representatives,
-        "q53_repetition_filter": q53_repetition_filter,
         "q54_pip_table_join": q54_pip_table_join,
         "q55_nad27_reproject": q55_nad27_reproject,
         "q56_scanline_mask_census": q56_scanline_mask_census,
@@ -5521,37 +4598,27 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q58_phash_neardup": q58_phash_neardup,
         "q59_jpeg_modes_census": q59_jpeg_modes_census,
         "q60_geotiff_window_census": q60_geotiff_window_census,
-        "q61_sequence_packing": q61_sequence_packing,
-        "q62_token_budget_mixture": q62_token_budget_mixture,
         "q63_jpeg_tiff_census": q63_jpeg_tiff_census,
-        "q64_pii_redaction": q64_pii_redaction,
         "q65_lcc_stateplane": q65_lcc_stateplane,
-        "q66_repeated_spans": q66_repeated_spans,
         "q67_modis_tiles": q67_modis_tiles,
         "q68_world_mercator": q68_world_mercator,
-        "q69_clip_repeated_spans": q69_clip_repeated_spans,
         "q70_aeqd_range_rings": q70_aeqd_range_rings,
         "q71_g4_document_census": q71_g4_document_census,
         "q72_etrs89_laea_grid": q72_etrs89_laea_grid,
         "q73_rso_borneo": q73_rso_borneo,
         "q74_rd_new_grid": q74_rd_new_grid,
         "q75_krovak_sjtsk": q75_krovak_sjtsk,
-        "q76_url_canonical_dedup": q76_url_canonical_dedup,
         "q77_png_variants_census": q77_png_variants_census,
         "q78_gif_frame_sampling": q78_gif_frame_sampling,
-        "q79_html_extraction": q79_html_extraction,
         "q80_webp_variants_census": q80_webp_variants_census,
         "q81_g711_audio_census": q81_g711_audio_census,
         "q82_webp_cog_census": q82_webp_cog_census,
-        "q83_line_dedup": q83_line_dedup,
         "q86_webdataset_census": q86_webdataset_census,
         "q87_exif_gps_tiles": q87_exif_gps_tiles,
         "q88_apng_frame_sampling": q88_apng_frame_sampling,
         "q89_geohash_census": q89_geohash_census,
         "q90_robust_ingest_census": q90_robust_ingest_census,
-        "q91_c4_clean": q91_c4_clean,
         "q92_multipage_document_census": q92_multipage_document_census,
-        "q93_gopher_rules": q93_gopher_rules,
         "q94_vp8_lossy_census": q94_vp8_lossy_census,
         "q96_ivf_trained_determinism": q96_ivf_trained_determinism,
         "q97_oblique_stere_grid": q97_oblique_stere_grid,
@@ -5562,21 +4629,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q104_flac_audio_census": q104_flac_audio_census,
         "q105_zipshard_census": q105_zipshard_census,
         "q106_audio_metadata_census": q106_audio_metadata_census,
-        "q107_bloom_decontaminate": q107_bloom_decontaminate,
-        "q109_bpe_roundtrip": q109_bpe_roundtrip,
         "q110_image_quality_census": q110_image_quality_census,
-        "q113_main_content_extraction": q113_main_content_extraction,
         "q114_tile_render_census": q114_tile_render_census,
-        "q115_code_language_routing": q115_code_language_routing,
         "q116_pq_adc_topk": q116_pq_adc_topk,
         "q117_simplify_dp": q117_simplify_dp,
         "q118_snapshot_time_travel": q118_snapshot_time_travel,
         "q120_jpeg_quality_estimate": q120_jpeg_quality_estimate,
-        "q121_mojibake_repair": q121_mojibake_repair,
-        "q122_blocklist_filter": q122_blocklist_filter,
         "q123_semantic_dedup": q123_semantic_dedup,
-        "q124_lm_perplexity_filter": q124_lm_perplexity_filter,
-        "q126_sentence_segmentation": q126_sentence_segmentation,
         "q127_subtitle_census": q127_subtitle_census,
         "q128_audio_segments": q128_audio_segments,
         "q129_snapshot_compaction": q129_snapshot_compaction,
@@ -5617,9 +4676,7 @@ def oracle_sql() -> dict[str, str]:
         "q48_geodesic_area": _q48_sql(),
         "q49_ivf_static": similarity.ivf_static_sql(k=5, dim=64, nprobe=2),
         "q50_pip_many_polys": _q50_sql(),
-        "q51_decontaminate": Q51_SQL,
         "q52_cluster_representatives": _q52_sql(),
-        "q53_repetition_filter": Q53_SQL,
         "q54_pip_table_join": _q50_sql(),
         "q55_nad27_reproject": _q55_sql(),
         "q56_scanline_mask_census": _q56_sql(),
@@ -5627,37 +4684,27 @@ def oracle_sql() -> dict[str, str]:
         "q58_phash_neardup": Q58_SQL,
         "q59_jpeg_modes_census": Q59_SQL,
         "q60_geotiff_window_census": Q60_SQL,
-        "q61_sequence_packing": _q61_sql(),
-        "q62_token_budget_mixture": _q62_sql(),
         "q63_jpeg_tiff_census": Q63_SQL,
-        "q64_pii_redaction": _q64_sql(),
         "q65_lcc_stateplane": _q65_sql(),
-        "q66_repeated_spans": _q66_sql(),
         "q67_modis_tiles": _q67_sql(),
         "q68_world_mercator": _q68_sql(),
-        "q69_clip_repeated_spans": _q69_sql(),
         "q70_aeqd_range_rings": _q70_sql(),
         "q71_g4_document_census": Q71_SQL,
         "q72_etrs89_laea_grid": _q72_sql(),
         "q73_rso_borneo": _q73_sql(),
         "q74_rd_new_grid": _q74_sql(),
         "q75_krovak_sjtsk": _q75_sql(),
-        "q76_url_canonical_dedup": _q76_sql(),
         "q77_png_variants_census": Q77_SQL,
         "q78_gif_frame_sampling": _q78_sql(),
-        "q79_html_extraction": _q79_sql(),
         "q80_webp_variants_census": Q80_SQL,
         "q81_g711_audio_census": Q81_SQL,
         "q82_webp_cog_census": Q82_SQL,
-        "q83_line_dedup": _q83_sql(),
         "q86_webdataset_census": Q86_SQL,
         "q87_exif_gps_tiles": Q87_SQL,
         "q88_apng_frame_sampling": _q88_sql(),
         "q89_geohash_census": Q89_SQL,
         "q90_robust_ingest_census": Q90_SQL,
-        "q91_c4_clean": _q91_sql(),
         "q92_multipage_document_census": Q92_SQL,
-        "q93_gopher_rules": _q93_sql(),
         "q94_vp8_lossy_census": Q94_SQL,
         "q96_ivf_trained_determinism": Q96_SQL,
         "q97_oblique_stere_grid": _q97_sql(),
@@ -5668,21 +4715,13 @@ def oracle_sql() -> dict[str, str]:
         "q104_flac_audio_census": Q104_SQL,
         "q105_zipshard_census": Q105_SQL,
         "q106_audio_metadata_census": Q106_SQL,
-        "q107_bloom_decontaminate": Q107_SQL,
-        "q109_bpe_roundtrip": Q109_SQL,
         "q110_image_quality_census": _q110_sql(),
-        "q113_main_content_extraction": Q113_SQL,
         "q114_tile_render_census": _q114_sql(),
-        "q115_code_language_routing": _q115_sql(),
         "q116_pq_adc_topk": similarity.pq_adc_sql(k=5, dim=64, m=8),
         "q117_simplify_dp": Q117_SQL,
         "q118_snapshot_time_travel": Q118_SQL,
         "q120_jpeg_quality_estimate": Q120_SQL,
-        "q121_mojibake_repair": Q121_SQL,
-        "q122_blocklist_filter": Q122_SQL,
         "q123_semantic_dedup": _q123_sql(),
-        "q124_lm_perplexity_filter": Q124_SQL,
-        "q126_sentence_segmentation": Q126_SQL,
         "q127_subtitle_census": Q127_SQL,
         "q128_audio_segments": Q128_SQL,
         "q129_snapshot_compaction": Q129_SQL,

@@ -56,14 +56,17 @@ def winding_number(px: np.ndarray, py: np.ndarray, ring: np.ndarray) -> np.ndarr
     ring = np.asarray(ring, dtype=np.float64)
     cnt = np.zeros(px.shape, dtype=np.int64)
     k = len(ring)
-    for i in range(k):
-        x0, y0 = ring[i, 0], ring[i, 1]
-        x1, y1 = ring[(i + 1) % k, 0], ring[(i + 1) % k, 1]
-        left = isleft(px, py, x0, y0, x1, y1)
-        up = (y0 <= py) & (py < y1) & (left > 0)
-        down = (y0 > py) & (py >= y1) & (left < 0)
-        cnt += up.astype(np.int64)
-        cnt -= down.astype(np.int64)
+    # a non-finite point gives a NaN cross product (inf - inf), which
+    # compares false: the answer is right, so the warning is noise
+    with np.errstate(invalid="ignore"):
+        for i in range(k):
+            x0, y0 = ring[i, 0], ring[i, 1]
+            x1, y1 = ring[(i + 1) % k, 0], ring[(i + 1) % k, 1]
+            left = isleft(px, py, x0, y0, x1, y1)
+            up = (y0 <= py) & (py < y1) & (left > 0)
+            down = (y0 > py) & (py >= y1) & (left < 0)
+            cnt += up.astype(np.int64)
+            cnt -= down.astype(np.int64)
     return cnt
 
 
@@ -244,7 +247,8 @@ def banded_contains(pidx, px, py, bands: EdgeBands) -> np.ndarray:
     e = bands.edge[start[q] + k]
     qx, qy = px[q], py[q]
     x0, y0, x1, y1 = bands.x0[e], bands.y0[e], bands.x1[e], bands.y1[e]
-    left = (x1 - x0) * (qy - y0) - (qx - x0) * (y1 - y0)
+    with np.errstate(invalid="ignore"):  # non-finite point: NaN, as in winding_number
+        left = (x1 - x0) * (qy - y0) - (qx - x0) * (y1 - y0)
     up = (y0 <= qy) & (qy < y1) & (left > 0)
     down = (y0 > qy) & (qy >= y1) & (left < 0)
     # winding per (point, ring): point i's rings start at rbase[i]

@@ -1,5 +1,5 @@
 """The n-gram Jaccard and embedding near-dup operators that the q17 and q19
-gates call (karta_spark.operators.dedup)."""
+gates call, and cluster_representatives (karta_spark.operators.dedup)."""
 
 from collections import Counter
 
@@ -137,3 +137,20 @@ def test_embedding_near_dup_matches_bruteforce(spark):
                 "cosine")
     assert set(got) == want and len(want) >= 15  # the planted pairs are > 0.999
     assert all(c == pytest.approx(cos[a, b], abs=2e-6) for (a, b), c in got.items())
+
+
+class TestClusterRepresentatives:
+    def test_cluster_representatives_golden(self, spark):
+        """Highest score wins per cluster; ties break to lowest id;
+        singletons represent themselves."""
+        from karta_spark.operators import dedup as D
+        docs = spark.createDataFrame(
+            [(1, 10.0), (2, 30.0), (3, 30.0), (7, 5.0), (9, 1.0)],
+            "doc_id long, score double")
+        pairs = spark.createDataFrame(
+            [(1, 2), (2, 3)], "id_a long, id_b long")  # cluster {1,2,3}
+        got = {(r["canonical_id"], r["rep_id"], r["n_members"]) for r in
+               D.cluster_representatives(docs, pairs, "doc_id",
+                                         F.col("score")).collect()}
+        # cluster {1,2,3}: scores 10/30/30 -> tie between 2 and 3 -> 2
+        assert got == {(1, 2, 3), (7, 7, 1), (9, 9, 1)}

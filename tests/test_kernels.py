@@ -246,6 +246,7 @@ class TestBandedContains:
         ]
         self._check(polys, *self._probe(rng, polys, 300))
 
+    @pytest.mark.filterwarnings("error::RuntimeWarning")
     def test_nonfinite_points_and_empty_batch(self):
         rng = np.random.default_rng(73)
         polys = [(_star_ring(rng, 200, 0.0, 0.0, 5.0), ()),

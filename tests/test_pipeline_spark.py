@@ -268,127 +268,6 @@ class TestSimHashKernel:
             assert "".join(str((int(v) >> k) & 1) for k in range(64)) == rows[i], i
 
 
-class TestTextPipeline:
-    def test_tfidf_top_terms(self, spark):
-        """A term unique to one doc outranks corpus-wide terms there."""
-        from karta_spark.operators import text as T
-        d = spark.createDataFrame(
-            [(0, "common zebra zebra"), (1, "common common common"),
-             (2, "common word word")],
-            "doc_id long, text string")
-        got = {(r["doc_id"], r["rank"]): r["term"]
-               for r in T.tfidf_top_terms(d, "text", "doc_id", k=2).collect()}
-        assert got[(0, 1)] == "zebra"
-        assert got[(2, 1)] == "word"
-        assert got[(1, 1)] == "common"
-
-    def test_decontaminate_planted_overlap(self, spark):
-        """A doc sharing a 5-gram with the benchmark is dropped; others
-        survive; <5-token docs can never contaminate."""
-        from karta_spark.operators import text as T
-        bench = spark.createDataFrame(
-            [(100, "the quick brown fox jumps over the lazy dog")],
-            "doc_id long, text string")
-        corpus = spark.createDataFrame(
-            [(0, "prefix words quick brown fox jumps over suffix"),  # leaked
-             (1, "completely unrelated text about spark engines here"),
-             (2, "quick brown fox jumps"),  # only 4 tokens -> no 5-gram
-             (3, "the quick brown fox JUMPS over nothing shared")],  # case-sensitive miss
-            "doc_id long, text string")
-        kept = {r["doc_id"] for r in T.decontaminate(
-            corpus, bench, "text", "doc_id", n=5).collect()}
-        assert kept == {1, 2, 3}
-        bad = {r["id"] for r in T.contaminated_ids(
-            corpus, bench, "text", "doc_id", n=5).collect()}
-        assert bad == {0}
-
-    def test_repetition_ratio_goldens(self, spark):
-        """1 - distinct/total bigrams; short docs -> 0.0 exactly."""
-        from karta_spark.operators import text as T
-        d = spark.createDataFrame(
-            [(0, "a b a b a b"),       # bigrams: ab ba ab ba ab -> 2/5 distinct
-             (1, "all words are different here"),
-             (2, "single"), (3, ""), (4, "x x x x")],  # xx xx xx -> 1/3
-            "doc_id long, text string")
-        got = {r["doc_id"]: round(r["rr"], 6) for r in d.select(
-            "doc_id", T.repetition_ratio(F.col("text")).alias("rr")).collect()}
-        assert got[0] == round(1 - 2 / 5, 6)
-        assert got[1] == 0.0
-        assert got[2] == 0.0 and got[3] == 0.0
-        assert got[4] == round(1 - 1 / 3, 6)
-
-    def test_cluster_representatives_golden(self, spark):
-        """Highest score wins per cluster; ties break to lowest id;
-        singletons represent themselves."""
-        from karta_spark.operators import dedup as D
-        docs = spark.createDataFrame(
-            [(1, 10.0), (2, 30.0), (3, 30.0), (7, 5.0), (9, 1.0)],
-            "doc_id long, score double")
-        pairs = spark.createDataFrame(
-            [(1, 2), (2, 3)], "id_a long, id_b long")  # cluster {1,2,3}
-        got = {(r["canonical_id"], r["rep_id"], r["n_members"]) for r in
-               D.cluster_representatives(docs, pairs, "doc_id",
-                                         F.col("score")).collect()}
-        # cluster {1,2,3}: scores 10/30/30 -> tie between 2 and 3 -> 2
-        assert got == {(1, 2, 3), (7, 7, 1), (9, 9, 1)}
-
-    def test_stratified_sample_deterministic_cap(self, spark):
-        """Exactly `cap` rows per stratum, identical across partition
-        layouts (hash order, not partition order)."""
-        from karta_spark.operators import text as T
-        rows = [(i, "a" if i % 3 else "b") for i in range(90)]
-        d2 = spark.createDataFrame(rows, "doc_id long, grp string").repartition(2)
-        d7 = spark.createDataFrame(rows, "doc_id long, grp string").repartition(7)
-        s2 = sorted((r["grp"], r["doc_id"]) for r in
-                    T.stratified_sample(d2, ["grp"], "doc_id", cap=10).collect())
-        s7 = sorted((r["grp"], r["doc_id"]) for r in
-                    T.stratified_sample(d7, ["grp"], "doc_id", cap=10).collect())
-        assert s2 == s7
-        from collections import Counter
-        assert Counter(g for g, _ in s2) == {"a": 10, "b": 10}
-
-    def test_stratified_sample_null_stratum_and_big_ids(self, spark):
-        """NULL is a valid stratum key (prefilter joins must be null-safe,
-        not silently dropping the group) and huge ids (> 2^32, the
-        web-scale case) hash without int64 overflow, matching the DuckDB
-        twin exactly."""
-        import duckdb
-        from karta_spark.operators import text as T
-        base = 4_600_000_000_000_000_000  # ~2^62: a*id would overflow
-        rows = [(base + i * 7, "a" if i % 3 == 0 else None) for i in range(60)]
-        d = spark.createDataFrame(rows, "doc_id long, grp string")
-        key = lambda t: (t[0] is None, t[0] or "", t[1], t[2])  # noqa: E731
-        want = sorted(((r["grp"], r["doc_id"], r["rank"]) for r in
-                       T.stratified_sample(d, ["grp"], "doc_id", cap=10,
-                                           prefilter=False).collect()), key=key)
-        got = sorted(((r["grp"], r["doc_id"], r["rank"]) for r in
-                      T.stratified_sample(d, ["grp"], "doc_id", cap=10).collect()),
-                     key=key)
-        assert got == want
-        assert sum(1 for g, _, _ in got if g is None) == 10  # NULL stratum kept
-        con = duckdb.connect()
-        con.register("documents", d.toPandas())
-        sql = T.stratified_sample_sql("documents", ["grp"], "doc_id", cap=10)
-        oracle = sorted((tuple(t) for t in con.execute(sql).fetchall()), key=key)
-        assert got == oracle
-
-    def test_stratified_sample_prefilter_exact(self, spark):
-        """The hash-threshold prefilter (the 100TB path) returns exactly the
-        unfiltered result, including when the sliver comes up short and the
-        verified fallback reruns the stratum (safety deliberately ~0)."""
-        from karta_spark.operators import text as T
-        rows = [(i, "a" if i % 3 else "b") for i in range(90)]
-        d = spark.createDataFrame(rows, "doc_id long, grp string")
-        want = sorted((r["grp"], r["doc_id"], r["rank"]) for r in
-                      T.stratified_sample(d, ["grp"], "doc_id", cap=10,
-                                          prefilter=False).collect())
-        for safety in (4.0, 0.05):  # 0.05 -> sliver < cap -> fallback path
-            got = sorted((r["grp"], r["doc_id"], r["rank"]) for r in
-                         T.stratified_sample(d, ["grp"], "doc_id", cap=10,
-                                             safety=safety).collect())
-            assert got == want, f"safety={safety}"
-
-
 class TestSimilarity:
     def _vectors(self, spark, n=200, dim=16):
         rng = np.random.default_rng(5)

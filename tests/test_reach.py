@@ -15,7 +15,7 @@ reach = importlib.util.module_from_spec(_spec)
 sys.modules[_spec.name] = reach  # dataclasses look the module up
 _spec.loader.exec_module(reach)
 
-UNREACHED_LINES = 9670
+UNREACHED_LINES = 8295
 DEAD_LINES = 103
 
 SYNTHETIC = {

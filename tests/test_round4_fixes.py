@@ -208,76 +208,6 @@ class TestKnnBroadcastKernel:
         assert a == b
 
 
-class TestPackTokenSpans:
-    """Round-4 training-data op: GPT-style concat-then-chunk sequence
-    packing, sharded (text.pack_token_spans)."""
-
-    def test_single_shard_offsets_and_spanning(self, spark):
-        import pandas as pd
-        from karta_spark.operators import text as T
-        from pyspark.sql import functions as F
-        docs = spark.createDataFrame(pd.DataFrame({
-            "doc_id": [0, 1, 2, 3, 4],
-            "n": [3, 4, 0, 6, 2]}))  # doc 2 empty -> dropped
-        out = {r.doc_id: r for r in T.pack_token_spans(
-            docs, F.col("n"), budget=5, shards=1, shard_by="mod").collect()}
-        assert set(out) == {0, 1, 3, 4}
-        # stream: d0 [0,3) d1 [3,7) d3 [7,13) d4 [13,15); budget 5
-        assert (out[0].tok_start, out[0].tok_end) == (0, 3)
-        assert (out[0].seq_first, out[0].seq_last) == (0, 0)
-        assert (out[1].seq_first, out[1].seq_last) == (0, 1)  # spans 5
-        assert out[1].n_seqs_spanned == 2
-        assert (out[3].seq_first, out[3].seq_last) == (1, 2)  # [7,13) spans 10
-        assert (out[4].seq_first, out[4].seq_last) == (2, 2)
-
-    def test_exact_boundary_does_not_span(self, spark):
-        import pandas as pd
-        from karta_spark.operators import text as T
-        from pyspark.sql import functions as F
-        docs = spark.createDataFrame(pd.DataFrame(
-            {"doc_id": [0, 1], "n": [5, 5]}))
-        out = {r.doc_id: r for r in T.pack_token_spans(
-            docs, F.col("n"), budget=5, shards=1, shard_by="mod").collect()}
-        assert out[0].n_seqs_spanned == 1 and out[1].n_seqs_spanned == 1
-        assert (out[1].seq_first, out[1].seq_last) == (1, 1)
-
-    def test_sharding_partitions_streams(self, spark):
-        import pandas as pd
-        from karta_spark.operators import text as T
-        from pyspark.sql import functions as F
-        docs = spark.createDataFrame(pd.DataFrame(
-            {"doc_id": list(range(10)), "n": [3] * 10}))
-        out = T.pack_token_spans(docs, F.col("n"), budget=4, shards=2,
-                                 shard_by="mod").collect()
-        for r in out:
-            assert r.shard == r.doc_id % 2
-        # each shard has 5 docs x 3 tokens: offsets restart per shard
-        for shard in (0, 1):
-            ends = sorted(r.tok_end for r in out if r.shard == shard)
-            assert ends == [3, 6, 9, 12, 15]
-
-    def test_hash_and_mod_agree_within_shard_algebra(self, spark):
-        # same docs, different shard fn: per-shard stream algebra must be
-        # self-consistent (tok_end increments by n in id order)
-        import pandas as pd
-        from karta_spark.operators import text as T
-        from pyspark.sql import functions as F
-        rng = np.random.default_rng(5)
-        docs = spark.createDataFrame(pd.DataFrame(
-            {"doc_id": list(range(100)),
-             "n": rng.integers(1, 50, 100).tolist()}))
-        for mode in ("hash", "mod"):
-            rows = T.pack_token_spans(docs, F.col("n"), budget=64,
-                                      shards=4, shard_by=mode).collect()
-            by_shard = {}
-            for r in sorted(rows, key=lambda r: (r.shard, r.doc_id)):
-                prev = by_shard.get(r.shard, 0)
-                assert r.tok_start == prev, (mode, r)
-                by_shard[r.shard] = r.tok_end
-        with pytest.raises(ValueError, match="shard_by"):
-            T.pack_token_spans(docs, F.col("n"), shard_by="bogus").collect()
-
-
 class TestPngAllFilters:
     """Round-4: PNG filters 3 (Average) and 4 (Paeth) — real-world
     encoders emit them heavily; previously only 0-2 decoded."""
@@ -341,116 +271,3 @@ class TestPngAllFilters:
         a = rng.integers(0, 256, (7, 11), dtype=np.uint8)
         dec = decode_png(self._encode_with_filters(a, ftypes))
         assert np.array_equal(dec, a), ftypes
-
-
-class TestTokenBudgetSample:
-    """Round-4 mixture primitive: deterministic per-source take-until-
-    token-budget (text.token_budget_sample, two-pass bucketed plan)."""
-
-    def _docs(self, spark, n=120, sources=3):
-        import pandas as pd
-        rng = np.random.default_rng(17)
-        return spark.createDataFrame(pd.DataFrame({
-            "doc_id": np.arange(n),
-            "source": ["s%d" % (i % sources) for i in range(n)],
-            "n": rng.integers(1, 40, n)}))
-
-    @staticmethod
-    def _naive(spark, docs, budget):
-        """Ground truth: plain per-source running-total window."""
-        from pyspark.sql import Window
-        from pyspark.sql import functions as F
-        from karta_spark.operators.text import _portable_affine
-        h, *_ = _portable_affine("doc_id", 13)
-        w = Window.partitionBy("source").orderBy(h.asc(), F.col("doc_id").asc())
-        c = docs.withColumn("_cum", F.sum("n").over(w) - F.col("n"))
-        return {(r.source, r.doc_id) for r in c.where(F.col("_cum") < budget).collect()}
-
-    @pytest.mark.parametrize("budget,n_buckets", [(100, 8), (100, 4096),
-                                                  (5, 16), (10**9, 8)])
-    def test_matches_naive_window(self, spark, budget, n_buckets):
-        from pyspark.sql import functions as F
-        from karta_spark.operators.text import token_budget_sample
-        docs = self._docs(spark)
-        got = {(r.source, r.id) for r in token_budget_sample(
-            docs, "source", F.col("n"), budget, id_col="doc_id",
-            n_buckets=n_buckets).collect()}
-        assert got == self._naive(spark, docs, budget)
-        if budget == 10**9:
-            assert len(got) == 120  # everything fits
-
-    def test_dict_budgets_and_dropped_sources(self, spark):
-        from pyspark.sql import functions as F
-        from karta_spark.operators.text import token_budget_sample
-        docs = self._docs(spark)
-        got = token_budget_sample(
-            docs, "source", F.col("n"), {"s0": 50, "s1": 0},
-            id_col="doc_id").collect()
-        srcs = {r.source for r in got}
-        assert srcs == {"s0"}  # s1 budget<=0 and s2 absent both drop
-        toks = sorted(r.n_tokens for r in got)
-        # inclusive crossing: total >= 50, and removing the largest-kept
-        # crossing doc would go under
-        assert sum(toks) >= 50
-
-    def test_budget_met_inclusively(self, spark):
-        import pandas as pd
-        from pyspark.sql import functions as F
-        from karta_spark.operators.text import token_budget_sample
-        docs = spark.createDataFrame(pd.DataFrame(
-            {"doc_id": [1, 2, 3], "source": ["a"] * 3, "n": [10, 10, 10]}))
-        got = token_budget_sample(docs, "source", F.col("n"), 15,
-                                  id_col="doc_id").collect()
-        # cum_before of docs in hash order: 0, 10, 20 -> first two kept
-        assert len(got) == 2 and sum(r.n_tokens for r in got) == 20
-
-
-class TestPiiRedaction:
-    """Round-4: portable PII scrub (emails/phones/IPv4) — RE2-safe
-    patterns identical across Spark (Java regex) and DuckDB (RE2)."""
-
-    def test_redaction_cases(self, spark):
-        import pandas as pd
-        from pyspark.sql import functions as F
-        from karta_spark.operators import text as T
-        rows = [
-            ("contact john.doe+x@sub.example.co.uk now",
-             "contact <EMAIL> now"),
-            ("call +1 (555) 123-4567 or 555-123-4567",
-             "call <PHONE> or <PHONE>"),
-            ("host 10.0.0.1 bad 999.1.1.1",
-             "host <IP> bad 999.1.1.1"),
-            ("clean text stays clean", "clean text stays clean"),
-        ]
-        df = spark.createDataFrame(pd.DataFrame(rows, columns=["t", "want"]))
-        got = df.select(T.redact_pii(F.col("t")).alias("got"), "want").collect()
-        for r in got:
-            assert r.got == r.want, (r.got, r.want)
-
-    def test_flags(self, spark):
-        import pandas as pd
-        from pyspark.sql import functions as F
-        from karta_spark.operators import text as T
-        df = spark.createDataFrame(pd.DataFrame(
-            {"t": ["a@b.io", "555-123-4567", "1.2.3.4", "none"]}))
-        rows = df.select(*T.pii_flags(F.col("t"))).collect()
-        assert [r.has_email for r in rows] == [True, False, False, False]
-        assert [r.has_phone for r in rows] == [False, True, False, False]
-        assert [r.has_ip for r in rows] == [False, False, True, False]
-
-    def test_duckdb_twin_byte_identical(self, spark):
-        import duckdb
-        import pandas as pd
-        from pyspark.sql import functions as F
-        from karta_spark.operators import text as T
-        texts = ["mail x.y-z@q.museum and 212.555.0100? maybe",
-                 "ip 255.255.255.255 edge", "a@b.c not-an-email@",
-                 "+999 (123) 456-7890 and 12-345-6789"]
-        df = spark.createDataFrame(pd.DataFrame({"t": texts}))
-        got_spark = [r[0] for r in
-                     df.select(T.redact_pii(F.col("t"))).collect()]
-        con = duckdb.connect()
-        got_duck = [con.execute(
-            "SELECT " + T.pii_redact_sql("?::VARCHAR"), [t]).fetchone()[0]
-            for t in texts]
-        assert got_spark == got_duck

@@ -762,88 +762,6 @@ class TestReplicaRecord:
         assert not bad, f"non-green rows: {bad}"
 
 
-class TestRepeatedSpans:
-    """Exact repeated-substring spans (substring-dedup signal): coverage
-    of cross-document repeated L-grams via a per-doc interval-union
-    window — no all-pairs, no position explosion."""
-
-    @staticmethod
-    def _df(spark):
-        import pandas as pd
-        return spark.createDataFrame(pd.DataFrame({
-            "doc_id": [1, 2, 3],
-            "text": [
-                "the quick brown fox jumps over the lazy dog "
-                "ABCDEFGHIJKLMNOPQRSTUV end",
-                "prefix ABCDEFGHIJKLMNOPQRSTUV suffix and the quick "
-                "brown fox jumps over",
-                "totally unrelated content with no repeats here at all",
-            ]}))
-
-    def test_coverage_golden(self, spark):
-        from karta_spark.operators.text import repeated_spans
-        out = {r["id"]: (r["n_flagged"], r["dup_chars"])
-               for r in repeated_spans(self._df(spark), L=20).collect()}
-        # docs 1 and 2 share two 39+/23-char regions; doc 3 clean
-        assert set(out) == {1, 2}
-        assert out[1] == out[2] == (16, 54)
-
-    def test_hashed_variant_identical(self, spark):
-        from karta_spark.operators.text import repeated_spans
-        df = self._df(spark)
-        a = {(r["id"], r["n_flagged"], r["dup_chars"])
-             for r in repeated_spans(df, L=20).collect()}
-        b = {(r["id"], r["n_flagged"], r["dup_chars"])
-             for r in repeated_spans(df, L=20, hashed=True).collect()}
-        assert a == b
-
-    def test_interval_union_no_double_count(self, spark):
-        """Overlapping flagged positions must not double-count chars:
-        two docs sharing one 25-char run with L=20 give 6 flagged
-        positions but only 25 covered chars."""
-        import pandas as pd
-        from karta_spark.operators.text import repeated_spans
-        shared = "XYZABCDEFGHIJKLMNOPQRSTUW"  # 25 chars
-        # distinct separators so the common run is EXACTLY the 25 chars
-        # (a shared space on either side would widen it)
-        df = spark.createDataFrame(pd.DataFrame({
-            "doc_id": [1, 2],
-            "text": ["aaa-" + shared + "-bbb", "ccc_" + shared + "_ddd"]}))
-        out = {r["id"]: (r["n_flagged"], r["dup_chars"])
-               for r in repeated_spans(df, L=20).collect()}
-        assert out[1] == (6, 25)
-        assert out[2] == (6, 25)
-
-    def test_min_docs_threshold(self, spark):
-        import pandas as pd
-        from karta_spark.operators.text import repeated_spans
-        shared = "SHAREDRUNOFCHARACTERSX"
-        df = spark.createDataFrame(pd.DataFrame({
-            "doc_id": [1, 2, 3],
-            "text": ["a " + shared, "b " + shared, "c " + shared]}))
-        assert repeated_spans(df, L=20, min_docs=4).count() == 0
-        assert repeated_spans(df, L=20, min_docs=3).count() == 3
-
-    def test_duckdb_twin_matches(self, spark):
-        import duckdb
-        import pandas as pd
-        from karta_spark.operators.text import (
-            repeated_spans, repeated_spans_sql)
-        rng = np.random.default_rng(11)
-        words = ["alpha", "beta", "gamma", "delta", "shared phrase "
-                 "that recurs verbatim in several documents here"]
-        texts = [" ".join(rng.choice(words, 8)) for _ in range(20)]
-        pdf = pd.DataFrame({"doc_id": range(20), "text": texts})
-        spark_out = {(r["id"], r["n_flagged"], r["dup_chars"])
-                     for r in repeated_spans(
-                         spark.createDataFrame(pdf), L=20).collect()}
-        con = duckdb.connect()
-        con.register("documents", pdf)
-        duck_out = set(map(tuple, con.execute(
-            repeated_spans_sql("documents")).fetchall()))
-        assert spark_out == duck_out
-
-
 class TestEqualAreaEllipsoids:
     """Round-5 follow-on: aea/laea/cea parameterized by ellipsoid (the
     last WGS84-only kinds) — NAD27 Albers is the headline user."""

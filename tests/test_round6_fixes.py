@@ -1,48 +1,10 @@
 """Round-6 regression tests for the ADVICE r5 findings.
 
-1. repeated_spans: docs shorter than L must emit nothing (Spark's
-   sequence(1, 0) counts DOWN, so the unfiltered plan produced two
-   spurious gram rows per short doc and diverged from the DuckDB twin).
-
 The JPEG findings of this round are in test_jpeg.py.
 """
 import numpy as np
 import pandas as pd
 import pytest
-
-
-class TestRepeatedSpansShortDocs:
-    def test_short_dup_docs_emit_nothing(self, spark):
-        from karta_spark.operators.text import repeated_spans
-        df = spark.createDataFrame(pd.DataFrame({
-            "doc_id": [1, 2], "text": ["tiny dup", "tiny dup"]}))
-        assert repeated_spans(df, L=20).count() == 0
-        assert repeated_spans(df, L=20, hashed=True).count() == 0
-
-    def test_empty_and_boundary_docs(self, spark):
-        from karta_spark.operators.text import repeated_spans
-        # empty, L-1 (no gram), exactly L (one gram each -> flagged)
-        df = spark.createDataFrame(pd.DataFrame({
-            "doc_id": [1, 2, 3, 4, 5, 6],
-            "text": ["", "", "a" * 19, "a" * 19, "b" * 20, "b" * 20]}))
-        out = {r["id"]: (r["n_flagged"], r["dup_chars"])
-               for r in repeated_spans(df, L=20).collect()}
-        assert out == {5: (1, 20), 6: (1, 20)}
-
-    def test_mixed_corpus_dup_chars_bounded(self, spark):
-        """Short dup docs must not appear at all, and no doc's dup_chars
-        may exceed its own length (the r5 bug produced 21 > 8)."""
-        from karta_spark.operators.text import repeated_spans
-        texts = ["tiny dup", "tiny dup",
-                 "long shared boilerplate sentence here A",
-                 "long shared boilerplate sentence here B"]
-        df = spark.createDataFrame(pd.DataFrame({
-            "doc_id": [1, 2, 3, 4], "text": texts}))
-        out = {r["id"]: r["dup_chars"]
-               for r in repeated_spans(df, L=20).collect()}
-        assert set(out) == {3, 4}
-        for i, d in out.items():
-            assert d <= len(texts[i - 1])
 
 
 class TestTrueMercator:
@@ -341,107 +303,6 @@ class TestAzimuthalEquidistant:
         from karta_spark.functions import crs
         g = crs.from_proj4("+proj=aeqd +lat_0=13.5 +lon_0=144.75 +guam")
         assert g.kind == "aeqd_guam" and g.params[:2] == (13.5, 144.75)
-
-
-class TestClipRepeatedSpans:
-    """clip_repeated_spans (round 6): documents with cross-document
-    repeated spans physically removed — the clip step of exact-substring
-    dedup.  Interval-merge + Catalyst aggregate fold; verified against
-    hand-computed expectations."""
-
-    def test_planted_boilerplate_removed(self, spark):
-        from karta_spark.operators.text import clip_repeated_spans
-        boiler = "COPYRIGHT 2024 ALL RIGHTS RESERVED."  # 35 chars
-        texts = {
-            1: "unique alpha content. " + boiler,
-            2: boiler + " unique beta content here.",
-            3: "totally clean document with original words only",
-        }
-        df = spark.createDataFrame(pd.DataFrame(
-            {"doc_id": list(texts), "text": list(texts.values())}))
-        out = {r["id"]: (r["clean_text"], r["removed_chars"])
-               for r in clip_repeated_spans(df, L=20).collect()}
-        assert set(out) == {1, 2, 3}
-        # every 20-gram inside the planted span is cross-doc repeated,
-        # so the whole boilerplate run is cut; unique text survives
-        assert boiler not in out[1][0] and boiler not in out[2][0]
-        assert out[1][0].startswith("unique alpha content.")
-        assert out[2][0].endswith("unique beta content here.")
-        assert out[3] == (texts[3], 0)  # clean doc byte-identical
-        for i in (1, 2):
-            assert out[i][1] == len(texts[i]) - len(out[i][0])
-
-    def test_full_doc_duplicate_clips_to_empty(self, spark):
-        from karta_spark.operators.text import clip_repeated_spans
-        dup = "this entire document is duplicated verbatim elsewhere"
-        df = spark.createDataFrame(pd.DataFrame(
-            {"doc_id": [1, 2], "text": [dup, dup]}))
-        out = {r["id"]: (r["clean_text"], r["removed_chars"])
-               for r in clip_repeated_spans(df, L=20).collect()}
-        assert out[1] == ("", len(dup)) and out[2] == ("", len(dup))
-
-    def test_two_disjoint_spans_in_one_doc(self, spark):
-        from karta_spark.operators.text import clip_repeated_spans
-        s1 = "SHARED-HEADER-BLOCK-AAAA"          # 24 chars
-        s2 = "SHARED-FOOTER-BLOCK-ZZZZ"          # 24 chars
-        # middles must diverge at BOTH boundary chars: any character
-        # shared at the same offset from the common block extends the
-        # repeated 20-grams into the middle (exact-substring semantics)
-        mid1 = "Xoriginal-middle-oneY"
-        mid2 = "Qother-middle-entireZ"
-        df = spark.createDataFrame(pd.DataFrame({
-            "doc_id": [1, 2],
-            "text": [s1 + mid1 + s2, s1 + mid2 + s2]}))
-        out = {r["id"]: r["clean_text"]
-               for r in clip_repeated_spans(df, L=20).collect()}
-        assert out[1] == mid1
-        assert out[2] == mid2
-
-    def test_short_and_empty_docs_pass_through(self, spark):
-        from karta_spark.operators.text import clip_repeated_spans
-        df = spark.createDataFrame(pd.DataFrame(
-            {"doc_id": [1, 2, 3], "text": ["tiny dup", "tiny dup", ""]}))
-        out = {r["id"]: (r["clean_text"], r["removed_chars"])
-               for r in clip_repeated_spans(df, L=20).collect()}
-        assert out == {1: ("tiny dup", 0), 2: ("tiny dup", 0), 3: ("", 0)}
-
-    def test_hashed_matches_unhashed(self, spark):
-        from karta_spark.operators.text import clip_repeated_spans
-        texts = ["alpha REPEATED-SPAN-CONTENT-HERE omega",
-                 "beta REPEATED-SPAN-CONTENT-HERE psi",
-                 "gamma lone content without repeats anywhere"]
-        df = spark.createDataFrame(pd.DataFrame(
-            {"doc_id": [1, 2, 3], "text": texts}))
-        a = {(r["id"], r["clean_text"], r["removed_chars"])
-             for r in clip_repeated_spans(df, L=20, hashed=False).collect()}
-        b = {(r["id"], r["clean_text"], r["removed_chars"])
-             for r in clip_repeated_spans(df, L=20, hashed=True).collect()}
-        assert a == b
-
-
-class TestScaleWarningDocstrings:
-    """Lint-style guard (VERDICT r5 task 8): the driver-side utilities
-    must carry their scale warnings so nobody routes cluster-scale data
-    through them, and repeated_spans must document its 100 TB setting."""
-
-    def test_df_to_grid_warns_driver_side(self):
-        from karta_spark.raster.tiles import df_to_grid
-        doc = df_to_grid.__doc__
-        assert "driver-side" in doc and "small grids only" in doc
-        assert "toPandas" in doc
-
-    def test_repeated_spans_100tb_note(self):
-        from karta_spark.operators.text import repeated_spans
-        doc = repeated_spans.__doc__
-        assert "100 TB" in doc and "hashed" in doc
-        assert "slice" in doc  # per-job corpus slice guidance
-
-    def test_hashed_is_default(self):
-        import inspect
-        from karta_spark.operators.text import (repeated_spans,
-                                                clip_repeated_spans)
-        for fn in (repeated_spans, clip_repeated_spans):
-            assert inspect.signature(fn).parameters["hashed"].default is True
 
 
 class TestTypedRasterDtypes:
@@ -1008,105 +869,6 @@ class TestKrovak:
         np.testing.assert_allclose(got["y"], y, atol=1e-6)
 
 
-class TestCanonicalUrl:
-    """URL canonicalization (web-corpus dedup key, round 6): pure
-    Catalyst normalization chain with a step-identical DuckDB twin."""
-
-    CASES = [
-        ("HTTPS://Example.COM:443/a/b/?id=7&utm_source=x#frag",
-         "https://example.com/a/b?id=7"),
-        ("https://example.com/a//b?utm_campaign=y&id=7",
-         "https://example.com/a/b?id=7"),
-        ("http://example.com:80/", "http://example.com/"),
-        ("http://example.com", "http://example.com/"),
-        ("https://example.com/a/b?z=1&a=2", "https://example.com/a/b?a=2&z=1"),
-        ("not a url", "not a url"),
-        ("  ftp://Host.Example/Path/ ", "ftp://host.example/Path"),
-        ("https://example.com:8443/x?fbclid=abc",
-         "https://example.com:8443/x"),  # non-default port kept
-        ("https://example.com/?gclid=1&msclkid=2&mc_eid=3",
-         "https://example.com/"),
-    ]
-
-    def test_spark_semantics(self, spark):
-        from pyspark.sql import functions as F
-        from karta_spark.operators.text import canonical_url
-        df = spark.createDataFrame(
-            pd.DataFrame({"u": [c for c, _ in self.CASES]}))
-        got = [r["c"] for r in
-               df.select(canonical_url(F.col("u")).alias("c")).collect()]
-        assert got == [w for _, w in self.CASES]
-
-    def test_duckdb_twin_identical(self):
-        import duckdb
-        from karta_spark.operators.text import canonical_url_sql
-        sql = canonical_url_sql("u")
-        for raw, want in self.CASES:
-            got = duckdb.sql(
-                f"SELECT {sql} AS c FROM (SELECT '{raw}' AS u)"
-            ).fetchone()[0]
-            assert got == want, (raw, got, want)
-
-
-class TestHtmlExtraction:
-    """html_to_text / html_title / extract_links (round 6): web-corpus
-    WARC->WET step; Catalyst chain with a step-identical DuckDB twin."""
-
-    HTML = ('<html><head><title> T1 &amp; T2 </title>'
-            '<style type="text/css">h1{x:1}</style>'
-            '<SCRIPT>if(a<b){doc.write("<p>evil</p>")}</SCRIPT></head>'
-            '<body><h1 class="x">Head</h1>'
-            '<p>one &lt;two&gt; &quot;three&quot; &#39;four&#39;</p>'
-            '<a href="https://x.example/a?b=1">A</a>\n'
-            "<a class='z' href='/rel/path'>B</a>"
-            '<!-- <p>never</p> --><br/><div>tail&nbsp;end</div></body>')
-    WANT = ('T1 & T2\nHead\none <two> "three" \'four\'\nA\nB\ntail end')
-
-    def test_spark_semantics(self, spark):
-        from pyspark.sql import functions as F
-        from karta_spark.operators.text import (
-            extract_links, html_title, html_to_text,
-        )
-        df = spark.createDataFrame([(self.HTML,)], "h string")
-        row = df.select(
-            html_to_text(F.col("h")).alias("c"),
-            html_title(F.col("h")).alias("t"),
-            extract_links(F.col("h")).alias("l")).collect()[0]
-        assert row["c"] == self.WANT
-        assert row["t"] == "T1 & T2"
-        assert row["l"] == ["https://x.example/a?b=1", "/rel/path"]
-
-    def test_duckdb_twin_identical(self):
-        import duckdb
-        from karta_spark.operators.text import (
-            extract_links_sql, html_title_sql, html_to_text_sql,
-        )
-        duckdb.sql("CREATE OR REPLACE TEMP TABLE th AS SELECT ? AS h",
-                   params=[self.HTML])
-        c, t, links = duckdb.sql(
-            f"SELECT {html_to_text_sql('h')}, {html_title_sql('h')}, "
-            f"{extract_links_sql('h')} FROM th").fetchone()
-        assert c == self.WANT
-        assert t == "T1 & T2"
-        assert links == ["https://x.example/a?b=1", "/rel/path"]
-
-    def test_plain_text_passthrough(self, spark):
-        from pyspark.sql import functions as F
-        from karta_spark.operators.text import html_to_text
-        df = spark.createDataFrame([("no tags here, just words",)],
-                                   "h string")
-        got = df.select(html_to_text(F.col("h")).alias("c")).collect()
-        assert got[0]["c"] == "no tags here, just words"
-
-    def test_numeric_entities_not_decoded(self, spark):
-        # documented scope limit: only the common named entities
-        from pyspark.sql import functions as F
-        from karta_spark.operators.text import html_to_text
-        df = spark.createDataFrame([("<p>&#169; &amp;</p>",)], "h string")
-        got = df.select(html_to_text(F.col("h")).alias("c")).collect()
-        assert got[0]["c"] == "&#169; &"
-
-
 class TestWebpTiffAndFpPredictor:
     """Round 6: WebP compression 50001 (modern COG codec) and the
     floating-point byte predictor (tag 317 = 3, TIFF TechNote 3)."""
@@ -1208,65 +970,6 @@ class TestWebpTiffAndFpPredictor:
             geotiff.write_geotiff_array(
                 str(tmp_path / "x.tif"),
                 np.zeros((4, 4), np.float32), 0, 4, 1, 1, compress="webp")
-
-
-class TestDedupLines:
-    """C4-rule line-level corpus dedup (round 6): drop lines whose
-    corpus-wide occurrence count exceeds max_df; blanks exempt."""
-
-    DOCS = [
-        (0, "SUB\nalpha beta\n\ncopy1\nEND"),
-        (1, "SUB\ngamma delta\ncopy1\nEND"),
-        (2, "SUB\nepsilon\ncopy1\nEND"),
-        (3, "SUB\nSUB\nEND"),  # in-doc repeats count toward df
-    ]
-    WANT = [
-        (0, "alpha beta\n", 2, 3),   # blank line exempt -> kept
-        (1, "gamma delta", 1, 3),
-        (2, "epsilon", 1, 3),
-        (3, "", 0, 3),               # fully-boilerplate doc -> empty
-    ]
-
-    @pytest.mark.parametrize("hashed", [True, False])
-    def test_semantics(self, spark, hashed):
-        from karta_spark.operators.text import dedup_lines
-        df = spark.createDataFrame(self.DOCS, "doc_id long, text string")
-        got = [(r["doc_id"], r["text"], r["n_lines_kept"],
-                r["n_lines_removed"])
-               for r in dedup_lines(df, max_df=2, hashed=hashed)
-               .orderBy("doc_id").collect()]
-        assert got == self.WANT
-
-    def test_duckdb_twin_identical(self, spark):
-        import duckdb
-        import pandas as pd
-        from karta_spark.operators.text import dedup_lines_sql
-        pdl_docs = pd.DataFrame(self.DOCS, columns=["doc_id", "text"])
-        con = duckdb.connect()
-        con.register("dl_docs", pdl_docs)
-        got = [tuple(r) for r in con.sql(
-            dedup_lines_sql("dl_docs", max_df=2)
-            + " ORDER BY doc_id").fetchall()]
-        assert got == self.WANT
-
-    def test_threshold_boundary(self, spark):
-        from karta_spark.operators.text import dedup_lines
-        # 'x' appears exactly max_df times -> kept; 'y' once more -> cut
-        docs = [(i, "x\ny") for i in range(3)] + [(3, "y\nunique")]
-        df = spark.createDataFrame(docs, "doc_id long, text string")
-        got = {r["doc_id"]: r["text"]
-               for r in dedup_lines(df, max_df=3).collect()}
-        assert got[0] == "x"
-        assert got[3] == "unique"
-
-    def test_min_chars_exemption(self, spark):
-        from karta_spark.operators.text import dedup_lines
-        docs = [(i, "ab\nlong enough line") for i in range(5)]
-        df = spark.createDataFrame(docs, "doc_id long, text string")
-        got = dedup_lines(df, max_df=2, min_chars=3).collect()
-        # 'ab' is shorter than min_chars -> exempt despite df=5
-        assert all(r["text"].startswith("ab\n") or r["text"] == "ab"
-                   for r in got)
 
 
 class TestWebDataset:
@@ -1602,50 +1305,6 @@ class TestRobustIngest:
             decode_any(bytes(b))  # any outcome, but never an exception
 
 
-class TestC4Clean:
-    """C4 line/page rules (round 6): terminal punct, min words,
-    blocklist, min sentences — engine-identical."""
-
-    DOCS = [
-        (0, "This is a fine sentence.\nshort.\nAnother good line here!"
-            "\nno punct line\nmenu { display: none }"),
-        (1, 'He said "stop".\nfragment without others'),
-        (2, "Lorem Ipsum dolor sit amet.\nA real one is here. And more."),
-    ]
-
-    def test_semantics(self, spark):
-        from karta_spark.operators.text import c4_clean
-        df = spark.createDataFrame(self.DOCS, "doc_id long, text string")
-        got = {r["doc_id"]: r for r in c4_clean(df).collect()}
-        assert got[0]["text"] == ("This is a fine sentence.\n"
-                                  "Another good line here!")
-        assert got[0]["kept"] is True and got[0]["n_lines_dropped"] == 3
-        assert got[1]["n_sentences"] == 1 and got[1]["kept"] is False
-        assert got[2]["text"] == "A real one is here. And more."
-
-    def test_duckdb_twin_identical(self):
-        import duckdb
-        import pandas as pd
-        from karta_spark.operators.text import c4_clean_sql
-        con = duckdb.connect()
-        con.register("c4_docs", pd.DataFrame(self.DOCS,
-                                             columns=["doc_id", "text"]))
-        rows = {r[0]: r for r in con.sql(
-            c4_clean_sql("c4_docs")).fetchall()}
-        assert rows[0][1] == ("This is a fine sentence.\n"
-                              "Another good line here!")
-        assert rows[1][5] is False
-        assert rows[2][1] == "A real one is here. And more."
-
-    def test_quote_terminal_allowed(self, spark):
-        from karta_spark.operators.text import c4_clean
-        df = spark.createDataFrame(
-            [(0, 'She finished with a quote she liked."')],
-            "doc_id long, text string")
-        got = c4_clean(df, min_sentences=0).collect()[0]
-        assert got["n_lines_kept"] == 1
-
-
 class TestMultipageTiff:
     """Chained-IFD multi-page documents (round 6): fax-archive layout."""
 
@@ -1688,55 +1347,6 @@ class TestMultipageTiff:
             for m, want in zip(metas, pages):
                 got = m.read_chunk(f, 0)[:, :, 0]
                 np.testing.assert_array_equal(got, want)
-
-
-class TestGopherRules:
-    """Gopher quality rules (round 6): Rae et al. 2021 table A1."""
-
-    CASES = [
-        # (text, failing_rules)
-        (" ".join(["the quick brown fox and that dog have fun."] * 8),
-         set()),
-        ("too short.", {"word_count_ok", "stopword_ok"}),
-        (" ".join(["####", "..."] * 40),
-         {"symbol_ratio_ok", "alpha_ok", "stopword_ok",
-          "ellipsis_ok"}),
-        ("\n".join(["- item with the thing of it and that stuff here"]
-                   * 10), {"bullet_ok"}),
-    ]
-
-    def test_rules_spark(self, spark):
-        from pyspark.sql import functions as F
-        from karta_spark.operators.text import gopher_quality
-        df = spark.createDataFrame(
-            [(i, t) for i, (t, _) in enumerate(self.CASES)],
-            "doc_id long, text string")
-        rules = gopher_quality(F.col("text"), min_words=8)
-        rows = df.select("doc_id", *[v.alias(k) for k, v in rules.items()
-                                     if k != "pass"]) \
-            .orderBy("doc_id").collect()
-        for row, (_, failing) in zip(rows, self.CASES):
-            got_fail = {k for k in row.asDict() if k != "doc_id"
-                        and row[k] is False}
-            assert got_fail == failing, (row["doc_id"], got_fail, failing)
-
-    def test_duckdb_twin(self):
-        import duckdb
-        import pandas as pd
-        from karta_spark.operators.text import gopher_quality_sql
-        con = duckdb.connect()
-        con.register("gq_docs", pd.DataFrame(
-            [(i, t) for i, (t, _) in enumerate(self.CASES)],
-            columns=["doc_id", "text"]))
-        rules = gopher_quality_sql("text", min_words=8)
-        cols = ", ".join(f"{v} AS {k}" for k, v in rules.items()
-                         if k != "pass")
-        rows = con.sql(f"SELECT doc_id, {cols} FROM gq_docs "
-                       "ORDER BY doc_id").df()
-        for i, (_, failing) in enumerate(self.CASES):
-            got_fail = {c for c in rows.columns if c != "doc_id"
-                        and rows.iloc[i][c] == False}  # noqa: E712
-            assert got_fail == failing, (i, got_fail, failing)
 
 
 class TestContainerFuzz:

@@ -11,12 +11,9 @@
    algorithm at the exact domain edges: lon=180 / lat=90 get all-1
    bits (easternmost/northernmost cell), and out-of-range inputs must
    not produce negative bits.
-4. clip_repeated_spans with id_col="id" must not raise an ambiguous-
-   reference AnalysisException after its interval join.
 """
 import numpy as np
 import pandas as pd
-import pytest
 
 
 class TestWebpPredictor13:
@@ -136,27 +133,3 @@ class TestGeohashDomainEdges:
         py = [geohash_py(lo, la, 6)
               for lo, la in zip(pdf["lon"], pdf["lat"])]
         assert got == dd == py
-
-
-class TestClipRepeatedSpansIdCol:
-    def test_id_col_named_id(self, spark):
-        from karta_spark.operators.text import clip_repeated_spans
-        df = spark.createDataFrame(pd.DataFrame({
-            "id": [1, 2, 3],
-            "text": ["x" * 25 + " unique one",
-                     "x" * 25 + " unique two",
-                     "nothing shared here at all"]}))
-        out = clip_repeated_spans(df, text_col="text", id_col="id",
-                                  L=20, min_docs=2)
-        rows = {r["id"]: r["removed_chars"] for r in out.collect()}
-        assert set(rows) == {1, 2, 3}
-        assert rows[1] > 0 and rows[2] > 0 and rows[3] == 0
-
-    def test_default_id_col_unchanged(self, spark):
-        from karta_spark.operators.text import clip_repeated_spans
-        df = spark.createDataFrame(pd.DataFrame({
-            "doc_id": [1, 2],
-            "text": ["y" * 30, "y" * 30]}))
-        out = clip_repeated_spans(df, text_col="text", id_col="doc_id",
-                                  L=20, min_docs=2)
-        assert out.count() == 2

@@ -427,106 +427,6 @@ class TestAudioMeta:
             ogg_meta(og[:50])
 
 
-class TestBloomDecontaminate:
-    """Bloom-filter decontamination (operators/text.py): the
-    constant-size scale path must equal the exact gram semi-join."""
-
-    def _corpus(self, spark):
-        import pyspark.sql.functions as F
-        rows = [(i, " ".join(f"w{(i * j * 7) % 97}" for j in range(12))
-                 + (" leak one two three four" if i % 9 == 0 else ""))
-                for i in range(300)]
-        docs = spark.createDataFrame(rows, "doc_id long, text string")
-        return (docs.where(F.col("doc_id") % 30 != 0),
-                docs.where(F.col("doc_id") % 30 == 0))
-
-    def test_verified_equals_exact(self, spark):
-        from karta_spark.operators import text as T
-        corpus, bench = self._corpus(spark)
-        exact = {r.id for r in T.contaminated_ids(
-            corpus, bench, "text", "doc_id", n=5).collect()}
-        bloom = {r.id for r in T.bloom_contaminated_ids(
-            corpus, bench, "text", "doc_id", n=5).collect()}
-        assert bloom == exact and len(exact) > 0
-
-    def test_raw_candidates_are_superset(self, spark):
-        # zero false negatives by Bloom construction, even at a small
-        # m_bits where false positives are likely
-        from karta_spark.operators import text as T
-        corpus, bench = self._corpus(spark)
-        exact = {r.id for r in T.contaminated_ids(
-            corpus, bench, "text", "doc_id", n=5).collect()}
-        raw = {r.id for r in T.bloom_contaminated_ids(
-            corpus, bench, "text", "doc_id", n=5, m_bits=1 << 10,
-            verify=False).collect()}
-        assert exact <= raw
-
-    def test_bitset_is_constant_size(self, spark):
-        from karta_spark.operators.text import build_gram_bloom
-        _, bench = self._corpus(spark)
-        bs = build_gram_bloom(bench, "text", n=5, m_bits=1 << 16)
-        assert bs.nbytes == (1 << 16) // 8
-        assert bs.sum() > 0  # bits actually set
-
-
-class TestBpe:
-    """BPE tokenizer (operators/bpe.py): distributed word counting +
-    driver merge loop over the bounded vocab + distributed encode."""
-
-    def _docs(self, spark):
-        return spark.createDataFrame(
-            [(i, "low lower lowest newer newest wide wider widest "
-              * (1 + i % 3)) for i in range(50)],
-            "doc_id long, text string")
-
-    def test_classic_merge_order(self, spark):
-        # the Sennrich corpus shape: frequent pairs merge first and the
-        # order is fully deterministic (count desc, pair lexicographic)
-        from karta_spark.operators import bpe
-        merges = bpe.train_bpe(self._docs(spark), "text", n_merges=6)
-        assert merges[0] == ("w", "e")  # 'we' appears in 6 of 8 words
-        assert all(isinstance(a, str) and isinstance(b, str)
-                   for a, b in merges)
-
-    def test_roundtrip_lossless(self, spark):
-        from karta_spark.operators import bpe
-        docs = self._docs(spark)
-        merges = bpe.train_bpe(docs, "text", n_merges=30)
-        enc = {r["id"]: r["tokens"] for r in
-               bpe.encode_texts(docs, "text", "doc_id", merges).collect()}
-        for r in docs.collect():
-            want = " ".join(r["text"].split())
-            assert bpe.detokenize(enc[r["doc_id"]]) == want
-
-    def test_partition_independent(self, spark):
-        from karta_spark.operators import bpe
-        docs = self._docs(spark)
-        m1 = bpe.train_bpe(docs, "text", n_merges=25)
-        m2 = bpe.train_bpe(docs.repartition(13), "text", n_merges=25)
-        assert m1 == m2
-
-    def test_whole_words_become_single_tokens(self, spark):
-        from karta_spark.operators import bpe
-        docs = self._docs(spark)
-        merges = bpe.train_bpe(docs, "text", n_merges=60)
-        enc = bpe.encode_texts(docs, "text", "doc_id", merges)
-        r0 = enc.where("id = 0").collect()[0]
-        # enough merges: all 8 distinct words collapse to 1 token each
-        assert r0["n_tokens"] == 8
-        assert r0["tokens"][0] == "low</w>"
-
-    def test_unseen_chars_fall_back_to_chars(self, spark):
-        from karta_spark.operators import bpe
-        docs = self._docs(spark)
-        merges = bpe.train_bpe(docs, "text", n_merges=10)
-        enc = bpe.encode_texts(
-            spark.createDataFrame([(0, "xyzzy")],
-                                  "doc_id long, text string"),
-            "text", "doc_id", merges)
-        toks = enc.collect()[0]["tokens"]
-        assert bpe.detokenize(toks) == "xyzzy"
-
-
 class TestImageQualityStats:
     """LAION-style image quality gate (multimodal.image_quality_stats)."""
 
@@ -572,61 +472,6 @@ class TestImageQualityStats:
         assert out.loc["flat", "entropy"] == 0.0
 
 
-class TestMainContent:
-    """Boilerplate removal (operators/text.py main_content_blocks)."""
-
-    HTML = ("<html><head><style>b{x}</style>"
-            "<script>var x = '<p>fake</p>';</script></head><body>"
-            '<nav><a href="/">Home</a> <a href="/a">About</a> '
-            '<a href="/c">Contact us</a></nav>'
-            '<div class="cookie">Accept cookies</div>'
-            "<article><h1>Short head</h1>"
-            "<p>This is the first real paragraph of the article, long "
-            "enough to keep and mostly prose.</p>"
-            "<p>Second real paragraph with plenty of content words so "
-            "that the density heuristic keeps it too.</p>"
-            '<p>See <a href="/ref">one reference link</a> inside a '
-            "long paragraph which should still be kept because link "
-            "density is low overall here.</p></article>"
-            '<footer><a href="/tos">Terms</a> | '
-            '<a href="/priv">Privacy</a></footer></body></html>')
-
-    def test_keeps_article_drops_boilerplate(self):
-        from karta_spark.operators.text import main_content_blocks
-        blocks = main_content_blocks(self.HTML)
-        assert len(blocks) == 3
-        assert blocks[0].startswith("This is the first real paragraph")
-        joined = "\n".join(blocks)
-        for boiler in ("Home", "Accept cookies", "Terms", "fake"):
-            assert boiler not in joined
-        # inline link text inside a long paragraph survives
-        assert "one reference link" in blocks[2]
-
-    def test_link_dense_long_block_dropped(self):
-        from karta_spark.operators.text import main_content_blocks
-        nav = ("<div>" + " ".join(
-            f'<a href="/{i}">navigation item number {i}</a>'
-            for i in range(8)) + "</div>")
-        assert main_content_blocks(nav) == []
-
-    def test_entities_and_whitespace_normalized(self):
-        from karta_spark.operators.text import main_content_blocks
-        h = ("<p>alpha &amp; beta &lt;gamma&gt;   with\n\nirregular "
-             "spacing kept as single spaces in one block</p>")
-        [b] = main_content_blocks(h)
-        assert b.startswith("alpha & beta <gamma> with irregular")
-        assert "  " not in b
-
-    def test_distributed(self, spark):
-        from karta_spark.operators.text import main_content
-        df = spark.createDataFrame([(1, self.HTML), (2, "<p>tiny</p>")],
-                                   "doc_id long, html string")
-        out = main_content(df, "html", "doc_id").toPandas() \
-            .set_index("id")
-        assert out.loc[1, "n_blocks_kept"] == 3
-        assert out.loc[2, "n_blocks_kept"] == 0  # too short
-
-
 class TestTileRender:
     """Distributed tile rendering (raster/render.py)."""
 
@@ -657,43 +502,6 @@ class TestTileRender:
             [(0.0, 89.0), (0.0, -89.0), (0.0, 10.0)], "lon double, lat double")
         tiles = render_point_tiles(df, "lon", "lat", zoom=0).collect()
         assert len(tiles) == 1 and tiles[0]["n_points"] == 1
-
-
-class TestCodeLanguage:
-    """Code-vs-prose routing (operators/text.py code_language)."""
-
-    def test_classifies_and_twin_matches(self, spark):
-        import duckdb
-        import pyspark.sql.functions as F
-        from karta_spark.operators.text import (code_language,
-                                                code_language_sql)
-        from __spark_entry__ import _Q115_SNIPPETS
-        df = spark.createDataFrame(
-            [(i, s) for i, (s, _) in enumerate(_Q115_SNIPPETS)],
-            "id long, text string")
-        got = {r["id"]: r["lang"] for r in df.select(
-            "id", code_language(F.col("text")).alias("lang")).collect()}
-        for i, (_, want) in enumerate(_Q115_SNIPPETS):
-            assert got[i] == want, (i, got[i], want)
-        con = duckdb.connect()
-        con.execute("CREATE TABLE s(id BIGINT, text VARCHAR)")
-        con.executemany("INSERT INTO s VALUES (?, ?)",
-                        [(i, s) for i, (s, _) in
-                         enumerate(_Q115_SNIPPETS)])
-        for i, lang in con.execute(
-                f"SELECT id, {code_language_sql('text')} FROM s"
-        ).fetchall():
-            assert lang == got[i]
-
-    def test_prose_with_code_words_stays_prose(self, spark):
-        import pyspark.sql.functions as F
-        from karta_spark.operators.text import code_language
-        df = spark.createDataFrame(
-            [(0, "the import of this function is that the class of "
-                 "problems we select from grows")],
-            "id long, text string")
-        assert df.select(code_language(F.col("text")).alias("l")) \
-            .collect()[0]["l"] == "prose"
 
 
 class TestProductQuantization:
@@ -917,87 +725,6 @@ class TestJpegQualityEstimate:
             estimate_jpeg_quality(b"\xff\xd8\xff\xd9")
 
 
-class TestMojibake:
-    CLEAN = "café número – äöü € ok"
-
-    def test_single_and_double_repair(self):
-        from karta_spark.operators.text import fix_mojibake
-        b1 = self.CLEAN.encode("utf-8").decode("latin-1")
-        assert fix_mojibake(b1) == self.CLEAN
-        b2 = b1.encode("utf-8").decode("latin-1")
-        assert fix_mojibake(b2) == self.CLEAN
-
-    def test_cp1252_path(self):
-        from karta_spark.operators.text import fix_mojibake
-        b = self.CLEAN.encode("utf-8").decode("cp1252", errors="replace")
-        assert fix_mojibake(b) == self.CLEAN
-
-    def test_genuine_text_untouched(self):
-        from karta_spark.operators.text import fix_mojibake
-        for s in ("José lives in Zürich", "plain ascii", "Ελληνικά",
-                  "日本語のテキスト"):
-            assert fix_mojibake(s) == s
-
-    def test_control_chars_stripped_nfc_applied(self):
-        import unicodedata
-        from karta_spark.operators.text import fix_mojibake
-        assert fix_mojibake("a\x00b\x07c\nd\te") == "abc\nd\te"
-        decomposed = "café"  # e + combining acute
-        assert fix_mojibake(decomposed) == \
-            unicodedata.normalize("NFC", decomposed)
-
-    def test_distributed(self, spark):
-        from karta_spark.operators.text import fix_mojibake_texts
-        b1 = self.CLEAN.encode("utf-8").decode("latin-1")
-        df = spark.createDataFrame([(0, b1), (1, "plain")],
-                                   "doc_id long, text string")
-        out = {r["id"]: (r["text"], r["changed"])
-               for r in fix_mojibake_texts(df, "text", "doc_id").collect()}
-        assert out[0] == (self.CLEAN, True)
-        assert out[1] == ("plain", False)
-
-
-class TestAhoCorasick:
-    def test_classic_ushers(self):
-        from karta_spark.operators.text import AhoCorasick
-        pats = ["he", "she", "his", "hers"]
-        ac = AhoCorasick(pats)
-        got = sorted((e, pats[p]) for e, p in ac.find("ushers"))
-        assert got == [(4, "he"), (4, "she"), (6, "hers")]
-
-    def test_fuzz_vs_bruteforce(self):
-        import random
-        from karta_spark.operators.text import AhoCorasick
-        rng = random.Random(7)
-        pats = list({"".join(rng.choice("ab")
-                             for _ in range(rng.randint(1, 4)))
-                     for _ in range(12)})
-        ac = AhoCorasick(pats)
-        for _ in range(300):
-            t = "".join(rng.choice("ab")
-                        for _ in range(rng.randint(0, 40)))
-            want = sorted({i for i, p in enumerate(pats) if p in t})
-            assert ac.hit_ids(t) == want
-
-    def test_distributed_blocklist(self, spark):
-        from karta_spark.operators.text import blocklist_hits
-        df = spark.createDataFrame(
-            [(0, "clean text"), (1, "has BadWord inside"),
-             (2, "badword and another badword")],
-            "doc_id long, text string")
-        out = {r["id"]: (r["n_hits"], r["blocked"]) for r in
-               blocklist_hits(df, "text", "doc_id",
-                              ["badword", "another"]).collect()}
-        assert out[0] == (0, False)
-        assert out[1] == (1, True)   # case-insensitive by default
-        assert out[2] == (2, True)
-
-    def test_empty_pattern_rejected(self):
-        from karta_spark.operators.text import AhoCorasick
-        with pytest.raises(ValueError):
-            AhoCorasick(["ok", ""])
-
-
 class TestSemanticDedup:
     def test_planted_duplicates_drop_keep_first(self, spark):
         import numpy as np
@@ -1062,90 +789,6 @@ class TestSemanticDedup:
         uncapped = {r["id"]: r["kept"] for r in semantic_dedup(
             df, "embedding", "vec_id", max_cluster=None, **kw).collect()}
         assert uncapped[0] and not any(uncapped[i] for i in range(1, 20))
-
-
-class TestCharLmPerplexity:
-    """KenLM-style char-n-gram NLL filter (operators/text.py)."""
-
-    def test_gibberish_scores_worse_than_in_domain(self, spark):
-        from karta_spark.operators.text import lm_nll, train_char_lm
-        ref = spark.createDataFrame(
-            [(i, "the quick brown fox jumps over the lazy dog again")
-             for i in range(20)], "doc_id long, text string")
-        model, default = train_char_lm(ref, "text", n=3)
-        probe = spark.createDataFrame(
-            [(0, "the quick brown fox jumps over the dog"),
-             (1, "zxqj vwkp qqzz jxvw kpzx qjvw")],
-            "doc_id long, text string")
-        out = {r["id"]: r["nll"] for r in
-               lm_nll(probe, "text", "doc_id", model, default).collect()}
-        assert out[1] > out[0] + 1.0  # gibberish clearly separated
-
-    def test_partition_invariant_exact(self, spark):
-        # integer micro-nat sums: identical nll under any partitioning
-        from karta_spark.operators.text import lm_nll, train_char_lm
-        ref = spark.createDataFrame(
-            [(i, f"sample reference text number {i} with words")
-             for i in range(30)], "doc_id long, text string")
-        model, default = train_char_lm(ref, "text", n=3)
-        probe = spark.createDataFrame(
-            [(i, f"probe document {i} " + "content " * (i % 5 + 1))
-             for i in range(40)], "doc_id long, text string")
-        a = {r["id"]: r["nll"] for r in
-             lm_nll(probe, "text", "doc_id", model, default).collect()}
-        b = {r["id"]: r["nll"] for r in
-             lm_nll(probe.repartition(13), "text", "doc_id", model,
-                    default).collect()}
-        assert a == b
-
-    def test_unseen_grams_hit_default_bucket(self, spark):
-        import math
-        from karta_spark.operators.text import lm_nll, train_char_lm
-        ref = spark.createDataFrame([(0, "aaaa")],
-                                    "doc_id long, text string")
-        model, default = train_char_lm(ref, "text", n=3)
-        probe = spark.createDataFrame([(0, "zzzz")],
-                                      "doc_id long, text string")
-        r = lm_nll(probe, "text", "doc_id", model, default).collect()[0]
-        assert r["n_grams"] == 2
-        assert abs(r["nll"] - (-default / 1e6)) < 1e-6
-
-
-class TestSentenceSplit:
-    @pytest.mark.parametrize("text,want", [
-        ("First sentence. Second one! Is it? Yes.",
-         ["First sentence.", "Second one!", "Is it?", "Yes."]),
-        ("Dr. Smith met Mr. Jones. They talked.",
-         ["Dr. Smith met Mr. Jones.", "They talked."]),
-        ("Pi is 3.14 exactly. Next sentence.",
-         ["Pi is 3.14 exactly.", "Next sentence."]),
-        # a sentence ENDING in a digit before one STARTING with a digit
-        # is a real boundary — the old prev/next-digit guard wrongly
-        # kept these joined (decimals are already safe: no space follows
-        # a true decimal point)
-        ("Pi is 3.14. 2nd test! Done.",
-         ["Pi is 3.14.", "2nd test!", "Done."]),
-        ("J. Smith wrote it. True story.",
-         ["J. Smith wrote it.", "True story."]),
-        ("no caps after. lowercase stays joined.",
-         ["no caps after. lowercase stays joined."]),
-        ("Ellipsis... And then? Done!",
-         ["Ellipsis...", "And then?", "Done!"]),
-        ("", []),
-    ])
-    def test_rules(self, text, want):
-        from karta_spark.operators.text import split_sentences
-        assert split_sentences(text) == want
-
-    def test_distributed(self, spark):
-        from karta_spark.operators.text import sentence_split
-        df = spark.createDataFrame(
-            [(0, "One here. Two there. Three!"), (1, "")],
-            "doc_id long, text string")
-        out = sentence_split(df, "text", "doc_id").toPandas()
-        assert len(out) == 3 and (out["id"] == 0).all()
-        assert list(out.sort_values("sent_idx")["sentence"]) == \
-            ["One here.", "Two there.", "Three!"]
 
 
 class TestSubtitles:

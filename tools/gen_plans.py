@@ -92,11 +92,6 @@ def sections(spark):
          "ellipsoid constants folded driver-side, per-row math all "
          "inside WholeStageCodegen — no Python, no shuffle)",
          q("q65_lcc_stateplane"), 25),
-        # gram posexplode -> df hash agg -> equi-join -> per-doc window;
-        # no all-pairs, no position explosion
-        ("q66 repeated-substring spans (map-side gram explode, one "
-         "doc-frequency hash agg, equi-join flag-back, per-doc lag "
-         "window for interval union)", q("q66_repeated_spans"), 45),
         ("q67 MODIS hNNvNN tile census (sinusoidal forward fully "
          "inside codegen, map-side partial aggregation)",
          q("q67_modis_tiles"), 25),
@@ -109,20 +104,6 @@ def sections(spark):
         ("q50 many-polygon PIP (driver cover -> broadcast join; "
          "full cells pass, boundary rows -> y-banded edge "
          "winding kernel)", q("q50_pip_many_polys"), 35),
-        # gram explode both sides, broadcast semi-join — the benchmark
-        # gram set ships to executors, the corpus never shuffles
-        ("q51 benchmark decontamination (distinct-gram explode -> "
-         "broadcast LeftSemi on the gram)", q("q51_decontaminate"), 35),
-        # the window cumsum partitions by SHARD — no single-partition
-        # global window anywhere in the plan
-        ("q61 sequence packing (shard-partitioned window cumsum — "
-         "parallelism = shard count, no global window)",
-         q("q61_sequence_packing"), 30),
-        # whole hash-range buckets below the boundary pass with no window;
-        # only the boundary bucket's sliver is windowed
-        ("q62 token-budget mixture (bucketed two-pass: windowless "
-         "bulk + boundary-bucket sliver window)",
-         q("q62_token_budget_mixture"), 40),
         # the localCheckpoint-ed gram -> sorted id list table is the scan
         # (ExistingRDD) under both the pair and the set-size aggregates
         ("q17 n-gram Jaccard (localCheckpoint-ed per-gram id lists -> "
